@@ -546,4 +546,12 @@ class GraftRestClient(
 }
 
 class GraftClientException(val status: Int, message: String)
-    extends RuntimeException(message)
+    extends RuntimeException(message) {
+
+  /** The protocol's typed refusal of the requested response dialect (a
+    * DV or column-mapped table asked for `responseformat=parquet`): the
+    * caller renegotiates in `responseformat=delta`.
+    */
+  def isUnsupportedOperation: Boolean =
+    status == 400 && message.contains("UNSUPPORTED_OPERATION")
+}

@@ -3,6 +3,7 @@ package graft.log
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType, TimestampType}
 
 import graft.model._
 
@@ -22,6 +23,11 @@ object GraftCDF {
   val CHANGE_TYPE = "_change_type"
   val COMMIT_VERSION = "_commit_version"
   val COMMIT_TIMESTAMP = "_commit_timestamp"
+
+  /** `schema` followed by the three CDF metadata columns. */
+  def withCdfColumns(schema: StructType): StructType =
+    schema.add(CHANGE_TYPE, StringType).add(COMMIT_VERSION, LongType)
+      .add(COMMIT_TIMESTAMP, TimestampType)
 
   def isEnabled(meta: Metadata): Boolean =
     meta.configuration.get("enableChangeDataFeed").contains("true") ||
@@ -222,10 +228,8 @@ object GraftCDF {
 
     perVersion match {
       case Nil =>
-        import org.apache.spark.sql.types._
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          schema.add(CHANGE_TYPE, StringType)
-            .add(COMMIT_VERSION, LongType).add(COMMIT_TIMESTAMP, TimestampType))
+          withCdfColumns(schema))
       case dfs => dfs.reduce(_.unionByName(_))
     }
   }

@@ -106,6 +106,16 @@ class GraftLog(val tablePath: String, conf: Configuration) {
     })
   }
 
+  /** Drop memoized commits below `version`: a long-lived holder that has
+    * moved past them bounds the memo to O(recent) versions.
+    */
+  def forgetCommitsBelow(version: Long): Unit =
+    commitCache.synchronized { commitCache.filterInPlace((v, _) => v >= version) }
+
+  /** Versions whose actions are memoized. */
+  private[graft] def memoizedVersions: Seq[Long] =
+    commitCache.synchronized { commitCache.keys.toVector }
+
   /** Commit-file timestamps, monotonized: a commit's timestamp is
     * `max(actions' max ts, prev + 1ms)` so time travel is well-defined even
     * when underlying mtimes are not monotonic (reference

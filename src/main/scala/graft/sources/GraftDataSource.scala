@@ -166,18 +166,13 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
       val schemaJson =
         try client.metadata(share, sc, t)._1.schemaString
         catch {
-          case e: graft.client.GraftClientException
-              if e.status == 400 && e.getMessage.contains("UNSUPPORTED_OPERATION") =>
+          case e: graft.client.GraftClientException if e.isUnsupportedOperation =>
             client.deltaMetadata(share, sc, t)._1.deltaMetadata.schemaString
         }
       val base = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
         .asInstanceOf[StructType]
-      val withCdf = if (parameters.get("readChangeFeed").exists(_.toBoolean)) {
-        import org.apache.spark.sql.types._
-        base.add(graft.log.GraftCDF.CHANGE_TYPE, StringType)
-          .add(graft.log.GraftCDF.COMMIT_VERSION, LongType)
-          .add(graft.log.GraftCDF.COMMIT_TIMESTAMP, TimestampType)
-      } else base
+      val cdf = parameters.get("readChangeFeed").exists(_.toBoolean)
+      val withCdf = if (cdf) graft.log.GraftCDF.withCdfColumns(base) else base
       return (shortName(), schema.getOrElse(withCdf))
     }
     val path = resolvePath(parameters)
@@ -185,12 +180,8 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
       sqlContext.sparkSession.sessionState.newHadoopConf())
     val base = schema.getOrElse {
       val s = log.snapshot(None).schema
-      if (parameters.get("readChangeFeed").exists(_.toBoolean)) {
-        import org.apache.spark.sql.types._
-        s.add(graft.log.GraftCDF.CHANGE_TYPE, StringType)
-          .add(graft.log.GraftCDF.COMMIT_VERSION, LongType)
-          .add(graft.log.GraftCDF.COMMIT_TIMESTAMP, TimestampType)
-      } else s
+      if (parameters.get("readChangeFeed").exists(_.toBoolean)) graft.log.GraftCDF.withCdfColumns(s)
+      else s
     }
     (shortName(), base)
   }
@@ -261,8 +252,7 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
         rel.schema // forces the first /changes RPC — the negotiation probe
         rel
       } catch {
-        case e: graft.client.GraftClientException
-            if e.status == 400 && e.getMessage.contains("UNSUPPORTED_OPERATION") =>
+        case e: graft.client.GraftClientException if e.isUnsupportedOperation =>
           new RemoteDeltaCDFRelation(spark, client, share, schema, table, parameters)
       }
     }
@@ -273,8 +263,7 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
     } catch {
       // tables with advanced reader features refuse responseformat=parquet
       // with the protocol's typed 400 — renegotiate in the delta dialect
-      case e: graft.client.GraftClientException
-          if e.status == 400 && e.getMessage.contains("UNSUPPORTED_OPERATION") =>
+      case e: graft.client.GraftClientException if e.isUnsupportedOperation =>
         return new RemoteDeltaScanRelation(spark, client, share, schema, table, parameters)
     }
     HadoopFsRelation(

@@ -253,11 +253,8 @@ object RemoteDeltaCDF {
 
     perVersion match {
       case Nil =>
-        import org.apache.spark.sql.types._
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          logical.add(GraftCDF.CHANGE_TYPE, StringType)
-            .add(GraftCDF.COMMIT_VERSION, LongType)
-            .add(GraftCDF.COMMIT_TIMESTAMP, TimestampType))
+          GraftCDF.withCdfColumns(logical))
       case dfs => dfs.reduce(_.unionByName(_))
     }
   }

@@ -111,11 +111,8 @@ object RemoteGraftCDF {
     }
     dfs match {
       case Nil =>
-        import org.apache.spark.sql.types._
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          tableSchema.add(GraftCDF.CHANGE_TYPE, StringType)
-            .add(GraftCDF.COMMIT_VERSION, LongType)
-            .add(GraftCDF.COMMIT_TIMESTAMP, TimestampType))
+          GraftCDF.withCdfColumns(tableSchema))
       case list => list.reduce(_.unionByName(_))
     }
   }

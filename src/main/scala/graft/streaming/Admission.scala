@@ -54,4 +54,27 @@ object Admission {
     }
     admitted.result()
   }
+
+  /** Whole-version admission for CDF streams (T10): `units` are
+    * (version, change files, bytes) in version order, admitted greedily
+    * and ATOMICALLY under the caps; at least one version is always
+    * admitted. Stops pulling at the first over-cap version, like [[admit]].
+    */
+  def admitVersions(units: Iterator[(Long, Int, Long)], limit: ReadLimit): Seq[Long] = {
+    val (fileCap, byteCap) = caps(limit)
+    if (fileCap.isEmpty && byteCap.isEmpty) return units.map(_._1).toVector
+    var files = 0
+    var bytes = 0L
+    val admitted = Vector.newBuilder[Long]
+    var n = 0
+    var done = false
+    while (!done && units.hasNext) {
+      val (v, nf, b) = units.next()
+      val over = (fileCap.exists(m => files + nf > m) ||
+        byteCap.exists(m => bytes + b > m)) && n > 0
+      if (over) done = true
+      else { admitted += v; files += nf; bytes += b; n += 1 }
+    }
+    admitted.result()
+  }
 }

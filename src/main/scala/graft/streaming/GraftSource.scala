@@ -1,393 +1,135 @@
 package graft.streaming
 
-import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.connector.read.streaming
-import org.apache.spark.sql.connector.read.streaming.{ReadAllAvailable, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.execution.streaming.{Offset, Source}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.log.{GraftLog, Snapshot}
-import graft.model.{AddFile, RemoveFile}
+import graft.model.{AddFile, ColumnMapping, RemoveFile}
 import graft.sources.GraftDataSource
 
-/** Micro-batch streaming source over a graft table's version history —
-  * the reference's `DeltaSharingSource` re-expressed over the local log
-  * (`client/.../DeltaSharingSource.scala:93-1207`).
+/** Micro-batch streaming source over a LOCAL graft table: the
+  * [[SharedTableSource]] contract read straight from the table's log.
   *
-  * Semantics carried over:
-  *  - snapshot-then-tail (T2): with no `startingVersion` the stream first
-  *    consumes the latest snapshot (`isStartingVersion=true`), then tails
-  *    the change log; `startingVersion=N` starts replay at N.
-  *  - stable in-version ordering (O1): files sort by path within a
-  *    version so offsets are reproducible.
-  *  - admission control (T3): `maxFilesPerTrigger` (default 1000) /
-  *    `maxBytesPerTrigger`; at least one file is always admitted.
-  *  - empty-version sentinels (T5): offsets advance through versions with
-  *    no data files via `index = -1`.
-  *  - change-commit policing (T6): RemoveFile in a tailed version throws
-  *    unless `ignoreChanges`/`ignoreDeletes`; `skipChangeCommits` drops
-  *    such commits entirely.
-  *  - Trigger.AvailableNow (T9): the end version is frozen at
-  *    `prepareForTriggerAvailableNow`.
+  * The transport: files are ordered by path within a version; commits are
+  * read through one [[GraftLog]] whose commit memo is released as Spark
+  * commits offsets; every metadata commit tailed mid-stream must stay
+  * read-compatible with the start schema and keep the column-mapping mode;
+  * files carrying deletion vectors cannot be tailed. Column-mapped tables
+  * stream: batches read the physical snapshot and project back to logical
+  * names. CDF batches come from the batch CDF assembler.
   */
 class GraftSource(
     spark: SparkSession,
     tablePath: String,
     options: Map[String, String])
-    extends Source
-    with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow
-    with Logging {
+    extends SharedTableSource[AddFile](spark, options) {
 
-  import GraftSourceOffset.VERSION_CONSUMED
-
-  private val conf = spark.sessionState.newHadoopConf()
-  // One log instance for the life of the source: its commit cache turns
-  // per-micro-batch replays into in-memory lookups (only new versions hit
-  // the filesystem).
-  private val tableLog = new GraftLog(tablePath, conf)
-
-  /** Replay start: explicit version, or a timestamp resolved to the
-    * earliest version committed at-or-after it (ISO-8601 or epoch millis;
-    * a timestamp past the last commit is an error — reference
-    * `DeltaSharingOptions` startingVersion/startingTimestamp resolution).
-    */
-  private val startingVersion: Option[Long] =
-    (options.get("startingVersion"), options.get("startingTimestamp")) match {
-      case (Some(_), Some(_)) => throw new IllegalArgumentException(
-        "at most one of startingVersion/startingTimestamp may be set")
-      case (Some(v), None) => Some(v.toLong)
-      case (None, Some(ts)) =>
-        Some(tableLog.versionAtOrAfter(graft.server.GraftServer.parseWireTimestamp(ts)))
-      case _ => None
-    }
-
-  /** CDF mode (T10): `option("readChangeFeed", "true")` streams row-level
-    * changes with the 3 CDF metadata columns. Versions are admitted
-    * ATOMICALLY (a commit's update_preimage/postimage rows are never split
-    * across batches — reference `DeltaSharingSource.scala:743-766`), so
-    * offsets advance in whole versions. Without `startingVersion` the
-    * stream tails changes from the table's current version onward.
-    */
-  private val cdfMode: Boolean = options.get("readChangeFeed").exists(_.toBoolean)
-  private val maxFilesPerTrigger: Int =
-    options.get("maxFilesPerTrigger").map(_.toInt).getOrElse(GraftSource.DEFAULT_MAX_FILES)
-  private val maxBytesPerTrigger: Option[Long] = options.get("maxBytesPerTrigger").map(_.toLong)
-  private val ignoreChanges: Boolean = options.get("ignoreChanges").exists(_.toBoolean)
-  private val ignoreDeletes: Boolean = options.get("ignoreDeletes").exists(_.toBoolean)
-  private val skipChangeCommits: Boolean = options.get("skipChangeCommits").exists(_.toBoolean)
-
-  // path-sorted snapshot files, cached: the starting-snapshot phase
-  // resumes from an offset index every trigger, and re-sorting 10^5
-  // files per trigger is avoidable O(n log n) driver work. Only the
-  // SORTED list is retained — caching the Snapshot it came from as well
-  // would pin a second full file list for the stream's lifetime.
-  private val sortedSnapshotCache =
-    scala.collection.mutable.HashMap.empty[Long, IndexedSeq[AddFile]]
+  // One log instance for the life of the source: its commit memo serves
+  // `latestOffset` and `getBatch` of one micro-batch from one read.
+  private val tableLog = new GraftLog(tablePath, spark.sessionState.newHadoopConf())
 
   private val initialSnapshot: Snapshot = tableLog.snapshot(None)
   // DV filtering is a batch-relation feature; tailing adds of a DV table
-  // would emit deleted rows. Column-mapped tables ARE streamable: batches
-  // read the physical snapshot and project back to logical names.
-  graft.model.ColumnMapping.assertNoAdvancedFeatures(
+  // would emit deleted rows
+  ColumnMapping.assertNoAdvancedFeatures(
     initialSnapshot.metadata, s"streaming from $tablePath", allowCm = true)
-  private val cmEnabled = graft.model.ColumnMapping.isEnabled(initialSnapshot.metadata)
-  private val cmMode = graft.model.ColumnMapping.mode(initialSnapshot.metadata)
-  if (graft.model.ColumnMapping.isIdMode(initialSnapshot.metadata))
+  private val cmMode = ColumnMapping.mode(initialSnapshot.metadata)
+  if (ColumnMapping.isIdMode(initialSnapshot.metadata))
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-  private val tableId: String = initialSnapshot.metadata.id
 
-  /** Frozen end version for Trigger.AvailableNow. */
-  @volatile private var frozenEndVersion: Option[Long] = None
+  override protected def tableName: String = tablePath
+  override protected val tableId: String = initialSnapshot.metadata.id
+  override protected val tableSchema: StructType = initialSnapshot.schema
+  override protected def versionAtStart: Long = initialSnapshot.version
+  override protected def latestVersion(): Long = tableLog.latestVersion()
 
-  override def schema: StructType =
-    if (cdfMode) {
-      import org.apache.spark.sql.types._
-      initialSnapshot.schema
-        .add(graft.log.GraftCDF.CHANGE_TYPE, StringType)
-        .add(graft.log.GraftCDF.COMMIT_VERSION, LongType)
-        .add(graft.log.GraftCDF.COMMIT_TIMESTAMP, TimestampType)
-    } else initialSnapshot.schema
+  /** ISO-8601 or epoch millis; a timestamp past the last commit is an error. */
+  override protected def versionAtOrAfter(timestamp: String): Long =
+    tableLog.versionAtOrAfter(graft.server.GraftServer.parseWireTimestamp(timestamp))
 
-  override def prepareForTriggerAvailableNow(): Unit =
-    frozenEndVersion = Some(tableLog.latestVersion())
+  override protected def snapshotFiles(version: Long): Seq[AddFile] =
+    tableLog.snapshot(Some(version)).files.sortBy(_.path)
 
-  override def getDefaultReadLimit: ReadLimit = {
-    // Mirrors the reference's AdmissionLimits.toReadLimit
-    // (DeltaSharingSource.scala:1144-1155): a byte cap gets its own custom
-    // ReadLimit (Spark has no built-in one), composed with the file cap
-    // when both are set. Bytes-only must NOT degrade to allAvailable.
-    val fileLimit = options.get("maxFilesPerTrigger").map(_ => ReadLimit.maxFiles(maxFilesPerTrigger))
-    val byteLimit = maxBytesPerTrigger.map(GraftReadMaxBytes(_))
-    (fileLimit, byteLimit) match {
-      case (Some(f), Some(b)) => ReadLimit.compositeLimit(Array[ReadLimit](f, b))
-      case (None, Some(b))    => b
-      case _                  => ReadLimit.maxFiles(maxFilesPerTrigger)
-    }
-  }
-
-  /** One file (or sentinel) admitted by the stream, in offset order. */
-  private case class IndexedFile(
-      version: Long, index: Long, add: Option[AddFile], isStarting: Boolean) {
-    def bytes: Long = add.map(_.size).getOrElse(0L)
-  }
-
-  /** All files from `from` (exclusive) up to `endVersion` (inclusive),
-    * in offset order, as a LAZY iterator. `from=None` ⇒ start of stream
-    * per options. Laziness is the scale contract: `latestOffset` feeds
-    * this straight into early-stopping admission, so each trigger does
-    * O(admitted) work — an eager walk would rebuild the entire remaining
-    * backlog per trigger, O(backlog²) across a long catch-up (measured:
-    * per-trigger cost grew with the remaining file count at 10^5
-    * actions, MetaProbe `stream` section).
+  /** Commits in `[start, end]`, read one version at a time as the walk
+    * pulls. Bypasses [[GraftLog.changesIterator]], whose commit timestamps
+    * re-read every commit since the checkpoint into the memo.
     */
-  private def filesAfter(
-      from: Option[GraftSourceOffset], endVersion: Long): Iterator[IndexedFile] = {
-
-    // Sentinels are positioned at `(version + 1, -1)` — i.e. "before any
-    // file of the NEXT version" — so they sort strictly after the data
-    // files of the version they close ((v, n-1) < (v+1, -1) < (v+1, 0)).
-    // This is what lets offsets advance through empty/skipped versions
-    // (reference bumps finished versions to (v+1, index=-1) the same way,
-    // `DeltaSharingSource.scala:969-992`).
-
-    def snapshotFiles(version: Long, fromIndex: Long): Iterator[IndexedFile] = {
-      val sorted = sortedSnapshotCache.synchronized {
-        sortedSnapshotCache.getOrElseUpdate(version,
-          tableLog.snapshot(Some(version)).files.sortBy(_.path).toIndexedSeq)
-      }
-      sorted.iterator.zipWithIndex.collect {
-        case (f, i) if i > fromIndex =>
-          IndexedFile(version, i.toLong, Some(f), isStarting = true)
-      } ++ Iterator.single(
-        IndexedFile(version + 1, VERSION_CONSUMED, None, isStarting = false))
-    }
-
-    def changeFiles(fromVersion: Long, fromIndex: Long): Iterator[IndexedFile] = {
-      if (fromVersion > endVersion) return Iterator.empty
-      tableLog.changesIterator(fromVersion, endVersion).flatMap { commit =>
-        val out = Vector.newBuilder[IndexedFile]
-        // T7 schema-drift guard: every metadata commit consumed mid-stream
-        // must stay read-compatible with the analysis-time schema, else
-        // rows would silently decode wrong (reference checks each fetched
-        // Metadata the same way, `DeltaSharingSource.scala:639-644`).
-        commit.actions.collect { case m: graft.model.Metadata => m }.foreach { m =>
-          graft.model.SchemaCompat.assertReadCompatible(
-            schema,
-            org.apache.spark.sql.types.DataType.fromJson(m.schemaString)
-              .asInstanceOf[StructType],
-            s"$tablePath (version ${commit.version})")
-          // features enabled mid-stream are as unreadable as at start; a
-          // column-mapping mode flip would change how later files spell
-          // their columns
-          graft.model.ColumnMapping.assertNoAdvancedFeatures(
-            m, s"streaming from $tablePath (version ${commit.version})",
-            allowCm = true)
-          require(graft.model.ColumnMapping.mode(m) == cmMode,
-            s"streaming from $tablePath: column-mapping mode changed at " +
-              s"version ${commit.version} ($cmMode -> " +
-              s"${graft.model.ColumnMapping.mode(m)})")
-        }
-        commit.actions.foreach {
-          case a: AddFile if a.deletionVector.isDefined =>
-            throw new UnsupportedOperationException(
-              s"streaming from $tablePath (version ${commit.version}) does not " +
-                "support files with deletion vectors")
-          case _ => ()
-        }
-        val adds = commit.actions.collect { case a: AddFile if a.dataChange => a }.sortBy(_.path)
-        val removes = commit.actions.collect { case r: RemoveFile if r.dataChange => r }
-        val dropCommit = removes.nonEmpty && skipChangeCommits
-        if (removes.nonEmpty && !dropCommit && !(ignoreChanges || ignoreDeletes)) {
-          throw new UnsupportedOperationException(
-            s"Detected a data update/delete in version ${commit.version} of table " +
-              s"$tablePath. Streaming sources only support appends; set the " +
-              "'skipChangeCommits' option to skip such commits, or 'ignoreChanges'/" +
-              "'ignoreDeletes' to stream the added files anyway.")
-        }
-        if (!dropCommit) {
-          adds.zipWithIndex.foreach { case (f, i) =>
-            if (commit.version > fromVersion ||
-              (commit.version == fromVersion && i > fromIndex)) {
-              out += IndexedFile(commit.version, i.toLong, Some(f), isStarting = false)
-            }
-          }
-        }
-        out += IndexedFile(commit.version + 1, VERSION_CONSUMED, None, isStarting = false)
-        out.result()
-      }
-    }
-
-    from match {
-      case None =>
-        startingVersion match {
-          case Some(sv) => changeFiles(sv, Long.MinValue)
-          case None =>
-            val snapV = math.min(initialSnapshot.version, endVersion)
-            snapshotFiles(snapV, Long.MinValue) ++
-              changeFiles(snapV + 1, Long.MinValue)
-        }
-      case Some(o) if o.isStartingVersion =>
-        snapshotFiles(o.tableVersion, o.index) ++
-          changeFiles(o.tableVersion + 1, Long.MinValue)
-      case Some(o) if o.index == VERSION_CONSUMED =>
-        changeFiles(o.tableVersion, Long.MinValue)
-      case Some(o) =>
-        changeFiles(o.tableVersion, o.index)
-    }
+  private def versions(start: Long, end: Long): Iterator[(Long, Seq[graft.model.Action])] = {
+    val vs = tableLog.listVersions()
+    require(vs.nonEmpty && start >= vs.head,
+      s"startingVersion($start) before log start ${vs.headOption.getOrElse(-1L)}")
+    vs.iterator.dropWhile(_ < start).takeWhile(_ <= end).map(v => v -> tableLog.readVersion(v))
   }
 
-  private def caps(limit: ReadLimit): (Option[Int], Option[Long]) = Admission.caps(limit)
+  override protected def commits(
+      start: Long, end: Long): Iterator[(Long, Seq[AddFile], Boolean)] =
+    versions(start, end).map { case (v, actions) =>
+      // T7 schema-drift guard: every metadata commit consumed mid-stream
+      // must stay read-compatible with the analysis-time schema, else
+      // rows would silently decode wrong (reference checks each fetched
+      // Metadata the same way, `DeltaSharingSource.scala:639-644`)
+      actions.collect { case m: graft.model.Metadata => m }.foreach { m =>
+        graft.model.SchemaCompat.assertReadCompatible(tableSchema,
+          DataType.fromJson(m.schemaString).asInstanceOf[StructType],
+          s"$tablePath (version $v)")
+        // features enabled mid-stream are as unreadable as at start; a
+        // column-mapping mode flip would change how later files spell
+        // their columns
+        ColumnMapping.assertNoAdvancedFeatures(
+          m, s"streaming from $tablePath (version $v)", allowCm = true)
+        require(ColumnMapping.mode(m) == cmMode,
+          s"streaming from $tablePath: column-mapping mode changed at " +
+            s"version $v ($cmMode -> ${ColumnMapping.mode(m)})")
+      }
+      if (actions.exists { case a: AddFile => a.deletionVector.isDefined; case _ => false })
+        throw new UnsupportedOperationException(
+          s"streaming from $tablePath (version $v) does not support files with deletion vectors")
+      val adds = actions.collect { case a: AddFile if a.dataChange => a }.sortBy(_.path)
+      (v, adds, actions.exists { case r: RemoveFile => r.dataChange; case _ => false })
+    }
 
-  private def admit(files: Iterator[IndexedFile], limit: ReadLimit): Seq[IndexedFile] =
-    Admission.admit(files, limit)(_.add.isDefined, _.bytes)
-
-  // ----------------------------------------------------------- CDF mode
-
-  /** First version a CDF stream consumes: explicit `startingVersion`, else
-    * the table's version when the stream started (tail-only default).
-    */
-  private val cdfStartVersion: Long =
-    if (cdfMode) startingVersion.getOrElse(initialSnapshot.version) else 0L
-
-  /** Whole-version admission units for CDF (version, data files, bytes). */
-  private case class VersionUnit(version: Long, nFiles: Int, bytes: Long)
-
-  private def cdfUnitsAfter(
-      from: Option[GraftSourceOffset], endVersion: Long): Iterator[VersionUnit] = {
-    val startV = from.map(_.tableVersion).getOrElse(cdfStartVersion)
-    if (startV > endVersion) return Iterator.empty
-    tableLog.changesIterator(startV, endVersion).map { commit =>
-      val cdc = commit.actions.collect { case c: graft.model.AddCDCFile => c }
-      val files: Seq[(String, Long)] =
-        if (cdc.nonEmpty) cdc.map(c => (c.path, c.size))
-        else commit.actions.collect {
-          case a: AddFile if a.dataChange    => (a.path, a.size)
-          case r: RemoveFile if r.dataChange => (r.path, r.size)
+  /** cdc-priority: a version's CDC files when it has any, else its adds and removes. */
+  override protected def cdfUnits(start: Long, end: Long): Iterator[(Long, Int, Long)] =
+    versions(start, end).map { case (v, actions) =>
+      val cdc = actions.collect { case c: graft.model.AddCDCFile => c.size }
+      val sizes =
+        if (cdc.nonEmpty) cdc
+        else actions.collect {
+          case a: AddFile if a.dataChange    => a.size
+          case r: RemoveFile if r.dataChange => r.size
         }
-      VersionUnit(commit.version, files.size, files.map(_._2).sum)
+      (v, sizes.size, sizes.sum)
     }
-  }
 
-  /** Greedy atomic-version admission under the (files, bytes) caps; at
-    * least one version is always admitted. Stops PULLING at the first
-    * over-cap version (same laziness contract as [[Admission.admit]]).
-    */
-  private def admitUnits(units: Iterator[VersionUnit], limit: ReadLimit): Seq[VersionUnit] = {
-    val (fileCap, byteCap) = caps(limit)
-    if (fileCap.isEmpty && byteCap.isEmpty) return units.toVector
-    var files = 0
-    var bytes = 0L
-    val admitted = Vector.newBuilder[VersionUnit]
-    var n = 0
-    var done = false
-    while (!done && units.hasNext) {
-      val u = units.next()
-      val over = (fileCap.exists(m => files + u.nFiles > m) ||
-        byteCap.exists(m => bytes + u.bytes > m)) && n > 0
-      if (over) done = true
-      else { admitted += u; files += u.nFiles; bytes += u.bytes; n += 1 }
-    }
-    admitted.result()
-  }
+  override protected def sizeOf(file: AddFile): Long = file.size
 
-  override def latestOffset(startOffset: streaming.Offset, limit: ReadLimit): streaming.Offset = {
-    val from = Option(startOffset).map(o => GraftSourceOffset(o.asInstanceOf[Offset]))
-    val endVersion = frozenEndVersion.getOrElse(tableLog.latestVersion())
-    if (cdfMode) {
-      val units = admitUnits(cdfUnitsAfter(from, endVersion), limit)
-      if (units.isEmpty) from.orNull
-      else GraftSourceOffset(tableId, units.last.version + 1, VERSION_CONSUMED,
-        isStartingVersion = false)
-    } else {
-      val files = admit(filesAfter(from, endVersion), limit)
-      if (files.isEmpty) {
-        from.orNull
-      } else {
-        val last = files.last
-        GraftSourceOffset(tableId, last.version, last.index, last.isStarting)
-      }
-    }
-  }
-
-  override def getOffset: Option[Offset] =
-    Option(latestOffset(null, getDefaultReadLimit)).map(_.asInstanceOf[Offset])
-
-  override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
-    val from = start.map(GraftSourceOffset(_))
-    val to = GraftSourceOffset(end)
-    from.foreach(f => GraftSourceOffset.validate(f, to))
-    if (cdfMode) return getCDFBatch(from, to)
-    val files = filesAfter(from, to.tableVersion)
-      .filter { f =>
-        val cmp = GraftSourceOffset(tableId, f.version, f.index, f.isStarting).compare(to)
-        cmp <= 0
-      }
-      .flatMap(_.add)
-    val batchSnap = initialSnapshot.copy(files = files.toVector)
+  override protected def batchDF(files: Seq[AddFile]): DataFrame = {
     // column-mapped: the relation must speak PHYSICAL names (file columns
     // and partition dirs) — project back to logical on top
-    val relation = GraftDataSource.relation(
-      spark, tablePath,
-      graft.model.ColumnMapping.physicalSnapshot(batchSnap))
-    val base = GraftSqlBridge.ofRowsStreaming(spark,
-      LogicalRelation(relation, isStreaming = true))
-    if (!cmEnabled) base
+    val relation = GraftDataSource.relation(spark, tablePath,
+      ColumnMapping.physicalSnapshot(initialSnapshot.copy(files = files)))
+    val base = GraftSqlBridge.ofRowsStreaming(spark, LogicalRelation(relation, isStreaming = true))
+    if (!ColumnMapping.isEnabled(initialSnapshot.metadata)) base
     else {
       import org.apache.spark.sql.functions.col
-      val names = graft.model.ColumnMapping.nameMap(initialSnapshot.schema)
-      base.select(initialSnapshot.schema.fields.toIndexedSeq.map(f =>
+      val names = ColumnMapping.nameMap(tableSchema)
+      base.select(tableSchema.fields.toIndexedSeq.map(f =>
         col(names.getOrElse(f.name, f.name)).as(f.name)): _*)
     }
   }
 
-  /** CDF micro-batch: row-level changes of versions [from, to], computed
-    * by the batch CDF assembler and handed to the stream execution as a
-    * streaming-flagged RDD (every getBatch result must satisfy the
-    * engine's isStreaming assertion).
-    */
-  private def getCDFBatch(from: Option[GraftSourceOffset], to: GraftSourceOffset): DataFrame = {
-    val fromV = from.map(_.tableVersion).getOrElse(cdfStartVersion)
-    val toV = to.tableVersion - 1 // offset (v+1, -1) = consumed through v
-    if (fromV > toV) {
-      return GraftSqlBridge.streamingDataFrameFromRdd(spark,
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow], schema)
-    }
-    val batch = graft.log.GraftCDF.tableChanges(spark, tablePath, fromV, Some(toV))
-      .selectExpr(schema.fieldNames.map(n => s"`$n`").toIndexedSeq: _*)
-    GraftSqlBridge.streamingDataFrameFromRdd(spark,
-      batch.queryExecution.toRdd, schema)
-  }
+  override protected def cdfDF(fromV: Long, toV: Long): DataFrame =
+    graft.log.GraftCDF.tableChanges(spark, tablePath, fromV, Some(toV))
 
-  /** Once Spark commits an offset past the starting snapshot
-    * (`isStartingVersion=false`), `filesAfter` can never re-enter
-    * `snapshotFiles` — drop the sorted list so a weeks-long tail over a
-    * 10^7-file table holds O(recent) driver state, not the full snapshot
-    * for its lifetime (reference pops consumed files the same way,
-    * `DeltaSharingSource.popSortedFetchedFiles:353-369`).
-    */
-  override def commit(end: Offset): Unit =
-    if (!GraftSourceOffset(end).isStartingVersion)
-      sortedSnapshotCache.synchronized { sortedSnapshotCache.clear() }
+  override protected def releaseBelow(version: Long): Unit =
+    tableLog.forgetCommitsBelow(version)
 
-  /** Test hook: number of snapshot file lists currently pinned. */
-  private[graft] def pinnedSnapshotLists: Int =
-    sortedSnapshotCache.synchronized { sortedSnapshotCache.size }
-
-  override def stop(): Unit = ()
-
-  override def toString: String = s"GraftSource[$tablePath]"
+  override private[graft] def heldCommitVersions: Iterable[Long] = tableLog.memoizedVersions
 }
 
 object GraftSource {
   /** Reference default `maxFilesPerTrigger` (DeltaSharingOptions.scala:194). */
   val DEFAULT_MAX_FILES = 1000
 }
-
-/** Byte-cap ReadLimit — Spark ships no built-in one; the reference defines
-  * its own `ReadMaxBytes` the same way (DeltaSharingSource.scala:1209-1213).
-  */
-case class GraftReadMaxBytes(bytes: Long) extends ReadLimit

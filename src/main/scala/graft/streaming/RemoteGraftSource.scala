@@ -2,27 +2,30 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.connector.read.streaming
-import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.client.{GraftRestClient, GraftUrlCache}
 import graft.model.SchemaCompat
-import graft.sources.{GraftFileSystem, RemoteBatchFileIndex}
+import graft.sources.{GraftFileSystem, RemoteBatchFileIndex, RemoteDeltaCDF}
 
-/** Streaming source over a REMOTE shared table — micro-batches fetched
-  * from the sharing server over REST (snapshot query + version-range
-  * queries), scan bytes flowing through pre-signed URLs + graft://
-  * (the reference's `DeltaSharingSource`, `client/.../DeltaSharingSource
-  * .scala:93-1207`, which tails exactly these two RPCs).
+/** Streaming source over a REMOTE shared table: the [[SharedTableSource]]
+  * contract over REST — snapshot query + version-range queries, scan bytes
+  * flowing through pre-signed URLs + graft:// (the reference's
+  * `DeltaSharingSource`, `client/.../DeltaSharingSource.scala:93-1207`,
+  * which tails exactly these two RPCs).
   *
-  * Semantics shared with the local [[GraftSource]]: snapshot-then-tail,
-  * stable in-version file order (by id), file/byte admission control,
-  * empty-version sentinels, remove-commit policing, per-metadata schema
-  * drift guard, Trigger.AvailableNow freezing.
+  * The transport: files are ordered by id within a version; version ranges
+  * are fetched in lazy windows of at most `maxVersionsPerRpc` versions,
+  * memoized per version and released as Spark commits offsets; each
+  * window's pre-signed URLs are registered with the refresher; table
+  * version polls are throttled; every historical metadata in a fetched
+  * range must stay read-compatible with the start schema. A table whose
+  * reader features refuse the parquet dialect (DV, column mapping) is
+  * streamed in `responseformat=delta`, where each batch applies DV
+  * merge-on-read filtering and physical→logical renames and a mid-range
+  * protocol upgrade fails the stream.
   */
 class RemoteGraftSource(
     spark: SparkSession,
@@ -31,40 +34,9 @@ class RemoteGraftSource(
     schemaName: String,
     table: String,
     options: Map[String, String])
-    extends Source
-    with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow {
+    extends SharedTableSource[RemoteGraftSource.RemoteFile](spark, options) {
 
-  import GraftSourceOffset.VERSION_CONSUMED
-
-  /** Replay start: explicit version, or a timestamp resolved server-side
-    * via `/version?startingTimestamp=` (earliest version at-or-after; a
-    * future timestamp is a 400 — reference `DeltaSharingOptions`
-    * startingVersion/startingTimestamp resolution).
-    */
-  private val startingVersion: Option[Long] =
-    (options.get("startingVersion"), options.get("startingTimestamp")) match {
-      case (Some(_), Some(_)) => throw new IllegalArgumentException(
-        "at most one of startingVersion/startingTimestamp may be set")
-      case (Some(v), None) => Some(v.toLong)
-      case (None, Some(ts)) =>
-        Some(client.tableVersion(share, schemaName, table, startingTimestamp = Some(ts)))
-      case _ => None
-    }
-  private val maxFilesPerTrigger: Int =
-    options.get("maxFilesPerTrigger").map(_.toInt).getOrElse(GraftSource.DEFAULT_MAX_FILES)
-  private val maxBytesPerTrigger: Option[Long] = options.get("maxBytesPerTrigger").map(_.toLong)
-  private val ignoreChanges: Boolean = options.get("ignoreChanges").exists(_.toBoolean)
-  private val ignoreDeletes: Boolean = options.get("ignoreDeletes").exists(_.toBoolean)
-  private val skipChangeCommits: Boolean = options.get("skipChangeCommits").exists(_.toBoolean)
-
-  /** Remote CDF streaming (T10 over REST): row-level changes fetched from
-    * the `/changes` endpoint, versions admitted ATOMICALLY (a commit's
-    * update_preimage/postimage rows never split across batches), same
-    * semantics as the local [[GraftSource]] CDF mode (reference
-    * `DeltaSharingSource.scala:603-716,880-913`).
-    */
-  private val cdfMode: Boolean = options.get("readChangeFeed").exists(_.toBoolean)
+  import RemoteGraftSource.RemoteFile
 
   /** T4: at most this many versions are requested per range RPC (the
     * reference default 100, `DeltaSharingSource.scala:176-191`) so a
@@ -82,32 +54,20 @@ class RemoteGraftSource(
   @volatile private var lastPolledVersion: Long = -1L
   @volatile private var lastPollTime: Long = 0L
 
-  private def currentServerVersion(): Long = {
-    val nowMs = System.currentTimeMillis()
-    if (lastPolledVersion < 0 || nowMs - lastPollTime >= versionPollIntervalMs) {
-      lastPolledVersion = client.tableVersion(share, schemaName, table)
-      lastPollTime = nowMs
-    }
-    lastPolledVersion
-  }
-
   /** Dialect negotiation (the streaming mirror of the batch fallback in
     * `GraftDataSource.createRemoteRelation`): parquet first; a table
-    * whose reader features refuse the flat dialect (DV, column mapping)
-    * answers the protocol's typed 400, and the stream renegotiates in
-    * `responseformat=delta` — every micro-batch then applies DV
-    * merge-on-read filtering and physical→logical renames.
+    * whose reader features refuse the flat dialect answers the protocol's
+    * typed 400, and the stream renegotiates in `responseformat=delta`.
     */
-  private val (tableId, tableSchemaRaw, partitionColumnsLogical, tableConfig,
-    deltaDialect, versionAtStart, deltaMetaLine) =
+  private val (tableIdAtStart, tableSchemaAtStart, partitionColumnsLogical, tableConfig,
+    deltaDialect, metaVersion, deltaMetaLine) =
     try {
       val (m, v) = client.metadata(share, schemaName, table)
       (m.id, DataType.fromJson(m.schemaString).asInstanceOf[StructType],
         m.partitionColumns, Map.empty[String, String], false, v,
         null.asInstanceOf[graft.server.wire.DeltaMetadataLine])
     } catch {
-      case e: graft.client.GraftClientException
-          if e.status == 400 && e.getMessage.contains("UNSUPPORTED_OPERATION") =>
+      case e: graft.client.GraftClientException if e.isUnsupportedOperation =>
         val (dm, v) = client.deltaMetadata(share, schemaName, table)
         (dm.deltaMetadata.id,
           DataType.fromJson(dm.deltaMetadata.schemaString).asInstanceOf[StructType],
@@ -116,188 +76,102 @@ class RemoteGraftSource(
           true, v, dm)
     }
 
-  private val tableSchema: StructType = tableSchemaRaw
+  override protected def tableName: String = s"$share.$schemaName.$table"
+  override protected def tableId: String = tableIdAtStart
+  override protected def tableSchema: StructType = tableSchemaAtStart
+  override protected def versionAtStart: Long = metaVersion
 
-  override val schema: StructType =
-    if (cdfMode) {
-      import org.apache.spark.sql.types._
-      tableSchema
-        .add(graft.log.GraftCDF.CHANGE_TYPE, StringType)
-        .add(graft.log.GraftCDF.COMMIT_VERSION, LongType)
-        .add(graft.log.GraftCDF.COMMIT_TIMESTAMP, TimestampType)
-    } else tableSchema
-
-  private val partitionSchema: StructType =
-    StructType(partitionColumnsLogical.map(c => schema(c)))
-
-  @volatile private var frozenEndVersion: Option[Long] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    frozenEndVersion = Some(client.tableVersion(share, schemaName, table))
-
-  override def getDefaultReadLimit: ReadLimit = {
-    val fileLimit = options.get("maxFilesPerTrigger")
-      .map(_ => ReadLimit.maxFiles(maxFilesPerTrigger))
-    val byteLimit = maxBytesPerTrigger.map(GraftReadMaxBytes(_))
-    (fileLimit, byteLimit) match {
-      case (Some(f), Some(b)) => ReadLimit.compositeLimit(Array[ReadLimit](f, b))
-      case (None, Some(b))    => b
-      case _                  => ReadLimit.maxFiles(maxFilesPerTrigger)
+  override protected def latestVersion(): Long = {
+    val nowMs = System.currentTimeMillis()
+    if (lastPolledVersion < 0 || nowMs - lastPollTime >= versionPollIntervalMs) {
+      lastPolledVersion = client.tableVersion(share, schemaName, table)
+      lastPollTime = nowMs
     }
+    lastPolledVersion
   }
 
-  /** One served data file: fileId + scan inputs (+ the DV descriptor in
-    * the delta dialect — merge-on-read filtering happens in getBatch).
+  /** Resolved server-side via `/version?startingTimestamp=` (a future
+    * timestamp is a 400).
     */
-  private case class RemoteFile(
-      id: String, size: Long, partitionValues: Map[String, String],
-      dv: Option[graft.server.wire.DeltaDvW] = None)
-
-  /** One admitted file (or empty-version sentinel) in offset order. */
-  private case class IndexedFile(
-      version: Long, index: Long,
-      file: Option[RemoteFile],
-      isStarting: Boolean) {
-    def bytes: Long = file.map(_.size).getOrElse(0L)
-  }
+  override protected def versionAtOrAfter(timestamp: String): Long =
+    client.tableVersion(share, schemaName, table, startingTimestamp = Some(timestamp))
 
   /** Registered URL-refresher windows keyed by their LAST version, so
-    * [[commit]] can drop windows the stream has fully consumed.
+    * [[releaseBelow]] can drop windows the stream has fully consumed.
     */
   private val registeredWindows = scala.collection.concurrent.TrieMap.empty[String, Long]
 
   private def registerUrls(key: String, entries: Map[String, GraftUrlCache.Entry],
-      refresh: () => Map[String, GraftUrlCache.Entry],
-      lastVersion: Long = Long.MaxValue): Unit = {
-    val fullKey = s"stream:$share.$schemaName.$table#$key"
+      refresh: () => Map[String, GraftUrlCache.Entry], lastVersion: Long): Unit = {
+    val fullKey = s"stream:$tableName#$key"
     registeredWindows(fullKey) = lastVersion
     GraftUrlCache.register(fullKey, entries, refresh)
   }
 
-  /** Spark committed everything below `end`: per-version memos and URL
-    * windows at lower versions can never be read again — drop them so a
-    * stream tailing an actively-committed table for weeks holds O(recent)
-    * state, not O(history).
-    */
-  override def commit(end: Offset): Unit = {
-    val o = GraftSourceOffset(end)
-    val v = o.tableVersion
-    fetchedCommits.filterInPlace((k, _) => k >= v - 1)
-    fetchedCdf.filterInPlace((k, _) => k >= v - 1)
-    fetchedCdfDelta.filterInPlace((k, _) => k >= v - 1)
-    // Starting-snapshot drained and committed past: the raw RemoteFile
-    // list (URLs, partition values — GB-scale at 10^7 files) can never be
-    // read again. The URL-refresher window for it is dropped below via
-    // registeredWindows; drop the file list too (reference pops consumed
-    // files, `DeltaSharingSource.popSortedFetchedFiles:353-369`).
-    if (!o.isStartingVersion) snapshotFilesCache.clear()
-    registeredWindows.filterInPlace { (key, last) =>
-      if (last < v - 1) { GraftUrlCache.unregister(key); false } else true
-    }
-  }
+  private def urlEntry(id: String, url: String, exp: java.lang.Long) =
+    id -> GraftUrlCache.Entry(url, Option(exp).map(_.longValue()).getOrElse(Long.MaxValue))
 
-  /** Test hook: number of snapshot file lists currently pinned. */
-  private[graft] def pinnedSnapshotLists: Int = snapshotFilesCache.size
-
-  /** Snapshot files at `version`, offset-ordered (stable by id). */
-  /** Memoized per version: the starting-snapshot phase is drained across
-    * many triggers (maxFilesPerTrigger slices), and `latestOffset` +
-    * `getBatch` each walk it — without the memo every trigger re-issued
-    * the FULL snapshot query RPC (O(snapshot) server work and response
-    * bytes per trigger, quadratic across the drain). The pre-signed URLs
-    * stay fresh independently via the refresher registered below.
-    */
-  private val snapshotFilesCache =
-    scala.collection.concurrent.TrieMap.empty[Long, Seq[RemoteFile]]
-
-  private def snapshotFiles(version: Long): Seq[RemoteFile] =
-    snapshotFilesCache.getOrElseUpdate(version, fetchSnapshotFiles(version))
-
-  private def fetchSnapshotFiles(version: Long): Seq[RemoteFile] =
+  override protected def snapshotFiles(version: Long): Seq[RemoteFile] = {
+    val req = graft.server.wire.QueryRequest(version = version)
     if (deltaDialect) {
-      val req = graft.server.wire.QueryRequest(version = version)
+      def urlsOf(r: client.DeltaQueryResult) = r.files.map(f =>
+        urlEntry(dvScopedId(f, version), f.deltaSingleAction.add.path, f.expirationTimestamp)).toMap
       val res = client.deltaQuery(share, schemaName, table, req)
-      def urlsOf(r: client.DeltaQueryResult) = r.files.map { f =>
-        dvScopedId(f, version) -> GraftUrlCache.Entry(f.deltaSingleAction.add.path,
-          Option(f.expirationTimestamp).map(_.longValue()).getOrElse(Long.MaxValue))
-      }.toMap
       registerUrls(s"snap@$version", urlsOf(res),
-        () => urlsOf(client.deltaQuery(share, schemaName, table, req)),
-        lastVersion = version)
-      res.files.sortBy(_.id).map { f =>
-        val a = f.deltaSingleAction.add
-        RemoteFile(dvScopedId(f, version), a.size, a.partitionValues,
-          Option(a.deletionVector))
-      }
+        () => urlsOf(client.deltaQuery(share, schemaName, table, req)), lastVersion = version)
+      res.files.sortBy(_.id).map(f => deltaFile(f, version))
     } else {
-      val req = graft.server.wire.QueryRequest(version = version)
+      def urlsOf(r: client.QueryResult) =
+        r.files.map(f => urlEntry(f.id, f.url, f.expirationTimestamp)).toMap
       val res = client.query(share, schemaName, table, req)
-      registerUrls(s"snap@$version",
-        res.files.map(f => f.id -> GraftUrlCache.Entry(f.url,
-          Option(f.expirationTimestamp).map(_.longValue()).getOrElse(Long.MaxValue))).toMap,
-        () => client.query(share, schemaName, table, req).files.map(f =>
-          f.id -> GraftUrlCache.Entry(f.url,
-            Option(f.expirationTimestamp).map(_.longValue()).getOrElse(Long.MaxValue))).toMap,
-        lastVersion = version)
+      registerUrls(s"snap@$version", urlsOf(res),
+        () => urlsOf(client.query(share, schemaName, table, req)), lastVersion = version)
       res.files.sortBy(_.id).map(f => RemoteFile(f.id, f.size, f.partitionValues))
     }
+  }
 
   /** Per-version memo of fetched range data. A committed version is
     * immutable, so once fetched it never needs re-fetching:
     * `latestOffset` + `getBatch` of the same micro-batch (and later
     * batches re-walking overlapping version ranges) cost ONE range RPC
     * per version window total, not two+ (the remote analogue of
-    * [[graft.log.GraftLog]]'s commit cache).
+    * [[graft.log.GraftLog]]'s commit memo).
     */
   private val fetchedCommits = scala.collection.concurrent.TrieMap
     .empty[Long, (Seq[RemoteFile], Boolean)]
 
-  /** Version-range files grouped per version, with policing + drift
-    * check; uncached spans are fetched in windows of `maxVersionsPerRpc`
-    * and memoized per version — LAZILY: a window RPC is issued only when
-    * the iterator is pulled into it. `latestOffset` feeds this straight
-    * into early-stopping admission, so a trigger fetches at most one
-    * window past its cap; an eager walk would pull the WHOLE remaining
-    * backlog over REST before the first micro-batch (measured: trigger 1
-    * of a 1,000-version catch-up signed all 10^5 files server-side,
-    * MetaProbe `stream` section) — exactly the unbounded reply
-    * `maxVersionsPerRpc` exists to prevent (reference
-    * `DeltaSharingSource.scala:176-191,302-315`).
+  /** Window-lazy: a window RPC is issued only when the walk is pulled into
+    * it, so a trigger fetches at most one window past its admission cap;
+    * an eager walk would pull the WHOLE remaining backlog over REST before
+    * the first micro-batch (measured: trigger 1 of a 1,000-version
+    * catch-up signed all 10^5 files server-side, MetaProbe `stream`
+    * section) — exactly the unbounded reply `maxVersionsPerRpc` exists to
+    * prevent (reference `DeltaSharingSource.scala:176-191,302-315`).
     */
-  private def rangeCommits(
+  override protected def commits(
       start: Long, end: Long): Iterator[(Long, Seq[RemoteFile], Boolean)] =
-    windowedVersions(start, end, fetchedCommits) { (v, e) =>
-      rangeCommitsWindow(v, e).foreach { case (vv, adds, dropped) =>
-        fetchedCommits.putIfAbsent(vv, (adds, dropped))
-      }
-    }.map { case (v, (adds, dropped)) => (v, adds, dropped) }
+    windowedVersions(start, end, fetchedCommits)(fetchCommitsWindow)
+      .map { case (v, (adds, hasRemoves)) => (v, adds, hasRemoves) }
 
   /** Window-lazy version iterator over a per-version memo — the ONE
     * shape behind the range/cdf/cdf-delta walks: pulling into an
     * uncached version fetches one window of at most `maxVersionsPerRpc`
-    * versions (`fetchWindow(v, windowEnd)` must populate the memo for at
-    * least `v`); memoized versions read straight through. The window
-    * extension stops at already-cached versions so re-walks never
-    * re-fetch.
+    * versions (`fetchWindow(v, windowEnd)` must populate the memo for
+    * every version of the window); memoized versions read straight
+    * through. The window extension stops at already-cached versions so
+    * re-walks never re-fetch.
     */
   private def windowedVersions[V](
       start: Long, end: Long,
       memo: scala.collection.concurrent.TrieMap[Long, V])(
       fetchWindow: (Long, Long) => Unit): Iterator[(Long, V)] =
-    new Iterator[(Long, V)] {
-      private var v = start
-      override def hasNext: Boolean = v <= end
-      override def next(): (Long, V) = {
-        if (!memo.contains(v)) {
-          var e = v
-          while (e < end && e - v + 1 < maxVersionsPerRpc && !memo.contains(e + 1))
-            e += 1
-          fetchWindow(v, e)
-        }
-        val r = (v, memo(v))
-        v += 1
-        r
+    Iterator.range(start, end + 1).map { v =>
+      if (!memo.contains(v)) {
+        var e = v
+        while (e < end && e - v + 1 < maxVersionsPerRpc && !memo.contains(e + 1)) e += 1
+        fetchWindow(v, e)
       }
+      (v, memo(v))
     }
 
   /** DV-carrying file instances get a VERSION-SCOPED synthetic file id:
@@ -312,98 +186,65 @@ class RemoteGraftSource(
     if (f.deltaSingleAction.add.deletionVector == null) f.id
     else s"${f.id}~dv$version"
 
-  private def policeRemoves(v: Long, hasRemoves: Boolean): Boolean = {
-    val dropCommit = hasRemoves && skipChangeCommits
-    if (hasRemoves && !dropCommit && !(ignoreChanges || ignoreDeletes)) {
-      throw new UnsupportedOperationException(
-        s"Detected a data update/delete in version $v of table " +
-          s"$share.$schemaName.$table. Streaming sources only support appends; " +
-          "set 'skipChangeCommits' to skip such commits, or 'ignoreChanges'/" +
-          "'ignoreDeletes' to stream the added files anyway.")
-    }
-    dropCommit
+  private def deltaFile(f: graft.server.wire.DeltaFileW, version: Long): RemoteFile = {
+    val a = f.deltaSingleAction.add
+    RemoteFile(dvScopedId(f, version), a.size, a.partitionValues, Option(a.deletionVector))
   }
 
-  private def rangeCommitsWindow(
-      start: Long, end: Long): Seq[(Long, Seq[RemoteFile], Boolean)] =
-    if (deltaDialect) {
-      val res = client.deltaQueryRange(share, schemaName, table, start, Some(end),
-        includeHistoricalProtocol = true)
-      res.metas.foreach { m =>
-        SchemaCompat.assertReadCompatible(schema,
-          DataType.fromJson(m.deltaMetadata.schemaString).asInstanceOf[StructType],
-          s"$share.$schemaName.$table (version ${Option(m.version).getOrElse(-1L)})")
-      }
-      // Protocol drift guard (the reader-requirements analog of the T7
-      // schema guard): a mid-range Protocol upgrade to features this
-      // client cannot decode must fail the stream loudly HERE — before
-      // any file of that version is read — not surface as silently
-      // wrong rows.
-      res.protocols.foreach { p =>
-        graft.model.Protocol(
-          minReaderVersion = p.deltaProtocol.minReaderVersion,
-          readerFeatures = Option(p.deltaProtocol.readerFeatures).getOrElse(Nil))
-          .assertReadable(
-            s"$share.$schemaName.$table (version ${Option(p.version).getOrElse(-1L)})")
-      }
-      val adds = res.files.filter(f => f.deltaSingleAction.add != null)
-      val removes = res.files.filter(f => f.deltaSingleAction.remove != null)
-      def wireV(f: graft.server.wire.DeltaFileW): Long =
-        Option(f.version).map(_.longValue()).getOrElse(-1L)
-      def urlsOf(r: client.DeltaChangesResult) =
-        r.files.filter(f => f.deltaSingleAction.add != null).map { f =>
-          dvScopedId(f, wireV(f)) -> GraftUrlCache.Entry(f.deltaSingleAction.add.path,
-            Option(f.expirationTimestamp).map(_.longValue()).getOrElse(Long.MaxValue))
-        }.toMap
-      registerUrls(s"range@$start-$end", urlsOf(res),
-        () => urlsOf(client.deltaQueryRange(share, schemaName, table, start, Some(end))),
-        lastVersion = end)
-      val addsByVersion = adds.groupBy(wireV)
-      val removeVersions = removes.map(wireV).toSet
-      (start to end).map { v =>
-        // a DV merge-on-read DELETE commits remove(old)+add(same file,
-        // new DV) — under ignoreChanges the re-added file streams with
-        // its NEW DV applied, so deleted rows never reappear
-        val dropCommit = policeRemoves(v, removeVersions.contains(v))
-        val vAdds = addsByVersion.getOrElse(v, Nil).sortBy(_.id).map { f =>
-          val a = f.deltaSingleAction.add
-          RemoteFile(dvScopedId(f, v), a.size, a.partitionValues,
-            Option(a.deletionVector))
+  private def assertReadCompatible(schemaString: String, version: java.lang.Long): Unit =
+    SchemaCompat.assertReadCompatible(tableSchema,
+      DataType.fromJson(schemaString).asInstanceOf[StructType],
+      s"$tableName (version ${Option(version).getOrElse(-1L)})")
+
+  private def fetchCommitsWindow(start: Long, end: Long): Unit = {
+    val (addsByVersion, removeVersions) =
+      if (deltaDialect) {
+        val res = client.deltaQueryRange(share, schemaName, table, start, Some(end),
+          includeHistoricalProtocol = true)
+        res.metas.foreach(m => assertReadCompatible(m.deltaMetadata.schemaString, m.version))
+        // Protocol drift guard (the reader-requirements analog of the T7
+        // schema guard): a mid-range Protocol upgrade to features this
+        // client cannot decode must fail the stream loudly HERE — before
+        // any file of that version is read — not surface as silently
+        // wrong rows.
+        res.protocols.foreach { p =>
+          graft.model.Protocol(
+            minReaderVersion = p.deltaProtocol.minReaderVersion,
+            readerFeatures = Option(p.deltaProtocol.readerFeatures).getOrElse(Nil))
+            .assertReadable(s"$tableName (version ${Option(p.version).getOrElse(-1L)})")
         }
-        (v, vAdds, dropCommit)
+        def wireV(f: graft.server.wire.DeltaFileW): Long =
+          Option(f.version).map(_.longValue()).getOrElse(-1L)
+        def addsOf(r: client.DeltaChangesResult) = r.files.filter(_.deltaSingleAction.add != null)
+        def urlsOf(r: client.DeltaChangesResult) = addsOf(r).map(f => urlEntry(
+          dvScopedId(f, wireV(f)), f.deltaSingleAction.add.path, f.expirationTimestamp)).toMap
+        registerUrls(s"range@$start-$end", urlsOf(res),
+          () => urlsOf(client.deltaQueryRange(share, schemaName, table, start, Some(end))),
+          lastVersion = end)
+        // a DV merge-on-read DELETE commits remove(old)+add(same file, new
+        // DV) — under ignoreChanges the re-added file streams with its NEW
+        // DV applied, so deleted rows never reappear
+        (addsOf(res).groupBy(wireV).view
+          .mapValues(_.sortBy(_.id).map(f => deltaFile(f, wireV(f)))).toMap,
+          res.files.filter(_.deltaSingleAction.remove != null).map(wireV).toSet)
+      } else {
+        val res = client.queryRange(share, schemaName, table, start, Some(end))
+        res.metas.foreach(m => assertReadCompatible(m.schemaString, m.version))
+        def urlsOf(r: client.ChangesResult) =
+          r.adds.map(a => urlEntry(a.id, a.url, a.expirationTimestamp)).toMap
+        registerUrls(s"range@$start-$end", urlsOf(res),
+          () => urlsOf(client.queryRange(share, schemaName, table, start, Some(end))),
+          lastVersion = end)
+        (res.adds.groupBy(_.version).view.mapValues(_.sortBy(_.id)
+          .map(a => RemoteFile(a.id, a.size, a.partitionValues))).toMap,
+          res.removes.map(_.version).toSet)
       }
-    } else {
-      val res = client.queryRange(share, schemaName, table, start, Some(end))
-      // schema drift guard on every historical metadata in the range
-      res.metas.foreach { m =>
-        SchemaCompat.assertReadCompatible(schema,
-          DataType.fromJson(m.schemaString).asInstanceOf[StructType],
-          s"$share.$schemaName.$table (version ${Option(m.version).getOrElse(-1L)})")
-      }
-      registerUrls(s"range@$start-$end",
-        res.adds.map(a => a.id -> GraftUrlCache.Entry(a.url,
-          Option(a.expirationTimestamp).map(_.longValue()).getOrElse(Long.MaxValue))).toMap,
-        () => client.queryRange(share, schemaName, table, start, Some(end)).adds.map(a =>
-          a.id -> GraftUrlCache.Entry(a.url,
-            Option(a.expirationTimestamp).map(_.longValue()).getOrElse(Long.MaxValue))).toMap,
-        lastVersion = end)
-      val removesByVersion = res.removes.groupBy(_.version)
-      val addsByVersion = res.adds.groupBy(_.version)
-      (start to end).map { v =>
-        val dropCommit = policeRemoves(v, removesByVersion.get(v).exists(_.nonEmpty))
-        val adds = addsByVersion.getOrElse(v, Nil).sortBy(_.id)
-          .map(a => RemoteFile(a.id, a.size, a.partitionValues))
-        (v, adds, dropCommit)
-      }
+    (start to end).foreach { v =>
+      fetchedCommits.putIfAbsent(v, (addsByVersion.getOrElse(v, Nil), removeVersions.contains(v)))
     }
+  }
 
   // ----------------------------------------------------------- CDF mode
-
-  /** First version a CDF stream consumes: explicit start, else the
-    * table's version when the stream started (tail-only default).
-    */
-  private val cdfStartVersion: Long =
-    if (cdfMode) startingVersion.getOrElse(versionAtStart) else 0L
 
   /** One version's change files as served by `/changes` (cdc-priority). */
   private case class CdfCommit(
@@ -426,29 +267,26 @@ class RemoteGraftSource(
     * in [[graft.sources.RemoteDeltaCDF.assemble]] at batch time).
     */
   private val fetchedCdfDelta = scala.collection.concurrent.TrieMap
-    .empty[Long, graft.sources.RemoteDeltaCDF.Group]
+    .empty[Long, RemoteDeltaCDF.Group]
 
-  /** Window-lazy like [[rangeCommits]]: an RPC is issued only when the
-    * iterator is pulled into an uncached version.
-    */
-  private def cdfDeltaCommits(
-      start: Long, end: Long): Iterator[(Long, graft.sources.RemoteDeltaCDF.Group)] =
-    windowedVersions(start, end, fetchedCdfDelta)(fetchCdfDeltaWindow)
+  override protected def cdfUnits(start: Long, end: Long): Iterator[(Long, Int, Long)] =
+    if (deltaDialect)
+      windowedVersions(start, end, fetchedCdfDelta)(fetchCdfDeltaWindow)
+        .map { case (v, g) => (v, g.nFiles, g.bytes) }
+    else
+      windowedVersions(start, end, fetchedCdf)(fetchCdfWindow)
+        .map { case (v, c) => (v, c.nFiles, c.bytes) }
+
+  private def cdfRangeParams(v: Long, e: Long) =
+    Map("startingVersion" -> v.toString, "endingVersion" -> e.toString)
 
   private def fetchCdfDeltaWindow(v: Long, e: Long): Unit = {
-    import graft.sources.RemoteDeltaCDF
-    val rangeParams = Map(
-      "startingVersion" -> v.toString, "endingVersion" -> e.toString)
-    val res = client.deltaChanges(share, schemaName, table, rangeParams)
-    res.metas.foreach { m =>
-      SchemaCompat.assertReadCompatible(tableSchema,
-        DataType.fromJson(m.deltaMetadata.schemaString).asInstanceOf[StructType],
-        s"$share.$schemaName.$table (cdf, version ${Option(m.version).getOrElse(-1L)})")
-    }
+    val res = client.deltaChanges(share, schemaName, table, cdfRangeParams(v, e))
+    res.metas.foreach(m => assertReadCompatible(m.deltaMetadata.schemaString, m.version))
     val groups = RemoteDeltaCDF.groupsOf(res.files)
     registerUrls(s"cdfdelta@$v-$e", RemoteDeltaCDF.urlEntries(groups),
       () => RemoteDeltaCDF.urlEntries(RemoteDeltaCDF.groupsOf(
-        client.deltaChanges(share, schemaName, table, rangeParams).files)),
+        client.deltaChanges(share, schemaName, table, cdfRangeParams(v, e)).files)),
       lastVersion = e)
     val byV = groups.map(g => g.version -> g).toMap
     (v to e).foreach { vv =>
@@ -457,28 +295,15 @@ class RemoteGraftSource(
     }
   }
 
-  /** Window-lazy like [[rangeCommits]]. */
-  private def cdfCommits(start: Long, end: Long): Iterator[(Long, CdfCommit)] =
-    windowedVersions(start, end, fetchedCdf)(fetchCdfWindow)
-
   private def fetchCdfWindow(v: Long, e: Long): Unit = {
-    val res = client.changes(share, schemaName, table,
-      Map("startingVersion" -> v.toString, "endingVersion" -> e.toString))
-    res.metas.foreach { m =>
-      SchemaCompat.assertReadCompatible(tableSchema,
-        DataType.fromJson(m.schemaString).asInstanceOf[StructType],
-        s"$share.$schemaName.$table (cdf, version ${Option(m.version).getOrElse(-1L)})")
-    }
-    def entry(id: String, url: String, exp: java.lang.Long) =
-      id -> GraftUrlCache.Entry(url,
-        Option(exp).map(_.longValue()).getOrElse(Long.MaxValue))
+    val res = client.changes(share, schemaName, table, cdfRangeParams(v, e))
+    res.metas.foreach(m => assertReadCompatible(m.schemaString, m.version))
     def urlsOf(r: client.ChangesResult) =
-      (r.adds.map(a => entry(a.id, a.url, a.expirationTimestamp)) ++
-        r.cdfs.map(c => entry(c.id, c.url, c.expirationTimestamp)) ++
-        r.removes.map(x => entry(x.id, x.url, x.expirationTimestamp))).toMap
+      (r.adds.map(a => urlEntry(a.id, a.url, a.expirationTimestamp)) ++
+        r.cdfs.map(c => urlEntry(c.id, c.url, c.expirationTimestamp)) ++
+        r.removes.map(x => urlEntry(x.id, x.url, x.expirationTimestamp))).toMap
     registerUrls(s"cdf@$v-$e", urlsOf(res),
-      () => urlsOf(client.changes(share, schemaName, table,
-        Map("startingVersion" -> v.toString, "endingVersion" -> e.toString))),
+      () => urlsOf(client.changes(share, schemaName, table, cdfRangeParams(v, e))),
       lastVersion = e)
     val addsBy = res.adds.groupBy(_.version)
     val cdfsBy = res.cdfs.groupBy(_.version)
@@ -491,168 +316,47 @@ class RemoteGraftSource(
     }
   }
 
-  /** Greedy atomic-version admission under the (files, bytes) caps; at
-    * least one version is always admitted (mirrors the local source).
-    * Stops PULLING at the first over-cap version, so the window-lazy
-    * producers fetch at most one RPC window past the cap per trigger.
-    */
-  private def admitCdfVersions(
-      units: Iterator[(Long, Int, Long)], limit: ReadLimit): Seq[Long] = {
-    val (fileCap, byteCap) = Admission.caps(limit)
-    if (fileCap.isEmpty && byteCap.isEmpty) return units.map(_._1).toVector
-    var files = 0
-    var bytes = 0L
-    var n = 0
-    val admitted = Vector.newBuilder[Long]
-    var done = false
-    while (!done && units.hasNext) {
-      val (v, nf, b) = units.next()
-      val over = (fileCap.exists(m => files + nf > m) ||
-        byteCap.exists(m => bytes + b > m)) && n > 0
-      if (over) done = true
-      else { admitted += v; files += nf; bytes += b; n += 1 }
-    }
-    admitted.result()
-  }
-
-  /** Remote CDF micro-batch [fromV, toV]: assembled from the per-version
-    * memo (zero extra RPCs) with the shared batch machinery, handed to
-    * the stream as a streaming-flagged RDD.
-    */
-  private def cdfBatchDF(fromV: Long, toV: Long): DataFrame = {
-    if (fromV > toV)
-      return GraftSqlBridge.streamingDataFrameFromRdd(spark,
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow], schema)
-    GraftFileSystem.register(spark)
-    if (deltaDialect) return cdfDeltaBatchDF(fromV, toV)
-    val commits = cdfCommits(fromV, toV).toVector // bounded by the batch
-    val batch = graft.sources.RemoteGraftCDF.assemble(spark, tableSchema,
-      graft.sources.RemoteGraftCDF.groupsOf(
-        commits.flatMap(_._2.adds), commits.flatMap(_._2.cdfs),
-        commits.flatMap(_._2.removes)))
-      .selectExpr(schema.fieldNames.map(n => s"`$n`").toIndexedSeq: _*)
-    GraftSqlBridge.streamingDataFrameFromRdd(spark, batch.queryExecution.toRdd, schema)
-  }
-
-  /** Delta-dialect CDF micro-batch: row-level changes derived client-side
+  /** Row changes of `[fromV, toV]`, assembled from the per-version memo
+    * (zero extra RPCs). In the delta dialect they are derived client-side
     * from the raw served actions ([[graft.sources.RemoteDeltaCDF]]); the
     * pre-batch DV state comes from one snapshot query below the batch
-    * start, so batch assembly is deterministic regardless of how versions
-    * were split across micro-batches (restart-safe).
+    * start, so assembly is deterministic however versions were split
+    * across micro-batches (restart-safe).
     */
-  private def cdfDeltaBatchDF(fromV: Long, toV: Long): DataFrame = {
-    import graft.sources.RemoteDeltaCDF
-    val dvState = scala.collection.mutable.HashMap
-      .empty[String, Option[graft.server.wire.DeltaDvW]]
-    if (fromV > 0)
-      client.deltaQuery(share, schemaName, table,
-        graft.server.wire.QueryRequest(version = fromV - 1)).files.foreach { f =>
-        dvState(f.id) = Option(f.deltaSingleAction.add.deletionVector)
-      }
-    val groups = cdfDeltaCommits(fromV, toV).map(_._2).toVector // bounded by the batch
-    val batch = RemoteDeltaCDF.assemble(spark, deltaMetaLine, groups, dvState)
-      .selectExpr(schema.fieldNames.map(n => s"`$n`").toIndexedSeq: _*)
-    GraftSqlBridge.streamingDataFrameFromRdd(spark, batch.queryExecution.toRdd, schema)
-  }
-
-  /** Lazy backlog walk (same contract as the local source): admission
-    * stops pulling at its cap, so a trigger fetches at most one
-    * `maxVersionsPerRpc` window beyond what it admits.
-    */
-  private def filesAfter(
-      from: Option[GraftSourceOffset], endVersion: Long): Iterator[IndexedFile] = {
-
-    def emitSnapshot(version: Long, fromIndex: Long): Iterator[IndexedFile] =
-      snapshotFiles(version).iterator.zipWithIndex.collect {
-        case (f, i) if i > fromIndex =>
-          IndexedFile(version, i.toLong, Some(f), isStarting = true)
-      } ++ Iterator.single(
-        IndexedFile(version + 1, VERSION_CONSUMED, None, isStarting = false))
-
-    def emitChanges(fromVersion: Long, fromIndex: Long): Iterator[IndexedFile] = {
-      if (fromVersion > endVersion) return Iterator.empty
-      rangeCommits(fromVersion, endVersion).flatMap { case (v, adds, dropped) =>
-        val out = Vector.newBuilder[IndexedFile]
-        if (!dropped) {
-          adds.zipWithIndex.foreach { case (f, i) =>
-            if (v > fromVersion || i > fromIndex)
-              out += IndexedFile(v, i.toLong, Some(f), isStarting = false)
-          }
+  override protected def cdfDF(fromV: Long, toV: Long): DataFrame = {
+    GraftFileSystem.register(spark)
+    if (deltaDialect) {
+      val dvState = scala.collection.mutable.HashMap
+        .empty[String, Option[graft.server.wire.DeltaDvW]]
+      if (fromV > 0)
+        client.deltaQuery(share, schemaName, table,
+          graft.server.wire.QueryRequest(version = fromV - 1)).files.foreach { f =>
+          dvState(f.id) = Option(f.deltaSingleAction.add.deletionVector)
         }
-        out += IndexedFile(v + 1, VERSION_CONSUMED, None, isStarting = false)
-        out.result()
-      }
-    }
-
-    from match {
-      case None =>
-        startingVersion match {
-          case Some(sv) => emitChanges(sv, Long.MinValue)
-          case None =>
-            val snapV = math.min(versionAtStart, endVersion)
-            emitSnapshot(snapV, Long.MinValue) ++
-              emitChanges(snapV + 1, Long.MinValue)
-        }
-      case Some(o) if o.isStartingVersion =>
-        emitSnapshot(o.tableVersion, o.index) ++
-          emitChanges(o.tableVersion + 1, Long.MinValue)
-      case Some(o) if o.index == VERSION_CONSUMED =>
-        emitChanges(o.tableVersion, Long.MinValue)
-      case Some(o) =>
-        emitChanges(o.tableVersion, o.index)
-    }
-  }
-
-  override def latestOffset(startOffset: streaming.Offset, limit: ReadLimit): streaming.Offset = {
-    val from = Option(startOffset).map(o => GraftSourceOffset(o.asInstanceOf[Offset]))
-    val endVersion = frozenEndVersion.getOrElse(currentServerVersion())
-    if (cdfMode) {
-      val startV = from.map(_.tableVersion).getOrElse(cdfStartVersion)
-      if (startV > endVersion) return from.orNull
-      val units =
-        if (deltaDialect)
-          cdfDeltaCommits(startV, endVersion).map { case (v, g) => (v, g.nFiles, g.bytes) }
-        else cdfCommits(startV, endVersion).map { case (v, c) => (v, c.nFiles, c.bytes) }
-      val admitted = admitCdfVersions(units, limit)
-      if (admitted.isEmpty) from.orNull
-      else GraftSourceOffset(tableId, admitted.last + 1, VERSION_CONSUMED,
-        isStartingVersion = false)
+      val groups = windowedVersions(fromV, toV, fetchedCdfDelta)(fetchCdfDeltaWindow)
+        .map(_._2).toVector // bounded by the batch
+      RemoteDeltaCDF.assemble(spark, deltaMetaLine, groups, dvState)
     } else {
-      val files = Admission.admit(filesAfter(from, endVersion), limit)(_.file.isDefined, _.bytes)
-      if (files.isEmpty) from.orNull
-      else {
-        val last = files.last
-        GraftSourceOffset(tableId, last.version, last.index, last.isStarting)
-      }
+      val commits = windowedVersions(fromV, toV, fetchedCdf)(fetchCdfWindow)
+        .map(_._2).toVector // bounded by the batch
+      graft.sources.RemoteGraftCDF.assemble(spark, tableSchema,
+        graft.sources.RemoteGraftCDF.groupsOf(
+          commits.flatMap(_.adds), commits.flatMap(_.cdfs), commits.flatMap(_.removes)))
     }
   }
 
-  override def getOffset: Option[Offset] =
-    Option(latestOffset(null, getDefaultReadLimit)).map(_.asInstanceOf[Offset])
+  // ------------------------------------------------------------ batches
 
-  override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
-    val from = start.map(GraftSourceOffset(_))
-    val to = GraftSourceOffset(end)
-    from.foreach(f => GraftSourceOffset.validate(f, to))
-    if (cdfMode)
-      return cdfBatchDF(from.map(_.tableVersion).getOrElse(cdfStartVersion),
-        to.tableVersion - 1) // offset (v+1, -1) = consumed through v
-    // A sentinel offset (v+1, -1) means "consumed through v" — fetch only
-    // up to v; asking the server for v+1 would be out of range.
-    val endV =
-      if (to.index == VERSION_CONSUMED && !to.isStartingVersion) to.tableVersion - 1
-      else to.tableVersion
-    val files = filesAfter(from, endV)
-      .filter(f => GraftSourceOffset(tableId, f.version, f.index, f.isStarting).compare(to) <= 0)
-      .flatMap(_.file)
-      .toVector // bounded by the batch
+  override protected def sizeOf(file: RemoteFile): Long = file.size
+
+  override protected def batchDF(files: Seq[RemoteFile]): DataFrame = {
     GraftFileSystem.register(spark)
     if (deltaDialect) return deltaBatchDF(files)
-    val index = new RemoteBatchFileIndex(spark, schema, partitionColumnsLogical,
+    val index = new RemoteBatchFileIndex(spark, tableSchema, partitionColumnsLogical,
       files.map(f => (f.id, f.size, f.partitionValues)))
     val relation = HadoopFsRelation(
       location = index,
-      partitionSchema = partitionSchema,
+      partitionSchema = StructType(partitionColumnsLogical.map(c => tableSchema(c))),
       dataSchema = index.dataSchema,
       bucketSpec = None,
       fileFormat = new ParquetFileFormat,
@@ -695,7 +399,28 @@ class RemoteGraftSource(
     GraftSqlBridge.streamingDataFrameFromRdd(spark, out.queryExecution.toRdd, schema)
   }
 
-  override def stop(): Unit = ()
+  /** Memos and URL windows below `version` can never be read again. The
+    * starting snapshot's URL window goes with them once the stream is past
+    * it (its file list is dropped by the shared core).
+    */
+  override protected def releaseBelow(version: Long): Unit = {
+    fetchedCommits.filterInPlace((k, _) => k >= version)
+    fetchedCdf.filterInPlace((k, _) => k >= version)
+    fetchedCdfDelta.filterInPlace((k, _) => k >= version)
+    registeredWindows.filterInPlace { (key, last) =>
+      if (last < version) { GraftUrlCache.unregister(key); false } else true
+    }
+  }
 
-  override def toString: String = s"RemoteGraftSource[$share.$schemaName.$table]"
+  override private[graft] def heldCommitVersions: Iterable[Long] =
+    fetchedCommits.keys ++ fetchedCdf.keys ++ fetchedCdfDelta.keys
+}
+
+object RemoteGraftSource {
+  /** One served data file: fileId + scan inputs (+ the DV descriptor in
+    * the delta dialect — merge-on-read filtering happens per batch).
+    */
+  private[streaming] case class RemoteFile(
+      id: String, size: Long, partitionValues: Map[String, String],
+      dv: Option[graft.server.wire.DeltaDvW] = None)
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamReader, Trigger}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,13 +24,32 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  private var server: graft.server.GraftServer = _
+
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")
     SharedFixtures.ensure(spark, sfDir)
+    server = new graft.server.GraftServer(
+      graft.server.ServerConfig(bearerToken = Some("tkn")),
+      spark.sessionState.newHadoopConf()).start()
   }
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = {
+    if (server != null) server.stop()
+    spark.stop()
+  }
 
-  private def eventsPath = GraftCatalog.location(s"${SharedFixtures.SHARE}.events")
+  private def events = s"${SharedFixtures.SHARE}.events"
+  private def eventsPath = GraftCatalog.location(events)
+
+  /** The two transports a source option runs over, as (test-name suffix,
+    * stream reader of a catalog table): the local `path` and the remote
+    * `url` + `table`.
+    */
+  private def transports: Seq[(String, String => DataStreamReader)] = Seq(
+    "" -> (t => spark.readStream.format("graft").option("path", GraftCatalog.location(t))),
+    " (remote)" -> (t => spark.readStream.format("graft")
+      .option("url", server.url).option("token", "tkn").option("table", t)
+      .option("queryTableVersionIntervalSeconds", "0")))
 
   private def runToCompletion(df: org.apache.spark.sql.DataFrame, name: String): Long = {
     val q = df.groupBy().count()
@@ -60,19 +79,20 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(streamed === expected && streamed > 0)
   }
 
-  test("startingTimestamp replays from the earliest version at-or-after") {
-    val log = GraftCatalog.log(spark, s"${SharedFixtures.SHARE}.events")
+  for ((suffix, stream) <- transports)
+  test("startingTimestamp replays from the earliest version at-or-after" + suffix) {
+    val log = GraftCatalog.log(spark, events)
     def addRows(from: Long): Long = log.changes(from, log.latestVersion())
       .flatMap(_.actions).collect { case a: graft.model.AddFile => a }
       .flatMap(_.stats.map(_.numRecords)).sum
     // exact-match: ts=1000 → version 1 (commits stamped 0/1000/2000/3000)
-    assert(runToCompletion(spark.readStream.format("graft").option("path", eventsPath)
+    assert(runToCompletion(stream(events)
       .option("startingTimestamp", "1000").load(), "t_ts_exact") === addRows(1))
     // between commits: ts=1500 → version 2
-    assert(runToCompletion(spark.readStream.format("graft").option("path", eventsPath)
+    assert(runToCompletion(stream(events)
       .option("startingTimestamp", "1500").load(), "t_ts_between") === addRows(2))
     // ISO-8601 form resolves identically (epoch 1000 ms)
-    assert(runToCompletion(spark.readStream.format("graft").option("path", eventsPath)
+    assert(runToCompletion(stream(events)
       .option("startingTimestamp", "1970-01-01T00:00:01Z").load(), "t_ts_iso")
       === addRows(1))
   }
@@ -198,8 +218,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"restart must cover every row exactly once (got ${got.size} of ${all.size})")
   }
 
-  test("maxFilesPerTrigger=1 splits the stream into one-file batches") {
-    val q = spark.readStream.format("graft").option("path", eventsPath)
+  for ((suffix, stream) <- transports)
+  test("maxFilesPerTrigger=1 splits the stream into one-file batches" + suffix) {
+    val q = stream(events)
       .option("maxFilesPerTrigger", "1").load()
       .writeStream.format("memory").queryName("t_mft").outputMode("append")
       .trigger(Trigger.AvailableNow()).start()
@@ -207,18 +228,19 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val progress = q.recentProgress
     q.stop()
     val batchesWithData = progress.count(_.numInputRows > 0)
-    val totalFiles = GraftCatalog.snapshot(spark, s"${SharedFixtures.SHARE}.events").files.size
+    val totalFiles = GraftCatalog.snapshot(spark, events).files.size
     assert(batchesWithData >= totalFiles,
       s"expected >= $totalFiles one-file batches, saw $batchesWithData with data")
     val total = spark.read.format("graft").option("path", eventsPath).load().count()
     assert(spark.table("t_mft").count() === total)
   }
 
-  test("maxBytesPerTrigger alone rate-limits (bytes-only admission)") {
+  for ((suffix, stream) <- transports)
+  test("maxBytesPerTrigger alone rate-limits (bytes-only admission)" + suffix) {
     // one file's size: admit roughly one file per batch by capping bytes
-    val snap = GraftCatalog.snapshot(spark, s"${SharedFixtures.SHARE}.events")
+    val snap = GraftCatalog.snapshot(spark, events)
     val minSize = snap.files.map(_.size).min
-    val q = spark.readStream.format("graft").option("path", eventsPath)
+    val q = stream(events)
       .option("maxBytesPerTrigger", minSize.toString).load()
       .writeStream.format("memory").queryName("t_bytes").outputMode("append")
       .trigger(Trigger.AvailableNow()).start()
@@ -249,36 +271,41 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("remove commits: fail by default, pass with skipChangeCommits") {
+  for ((suffix, stream) <- transports)
+  test("remove commits: fail by default, pass with skipChangeCommits" + suffix) {
     val base = s"${SharedFixtures.shareRoot(sfDir)}/stream_removes"
     val dir = new java.io.File(base)
     if (dir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    GraftLog.invalidateListing(base)
     val region = spark.read.parquet(s"$sfDir/region.parquet")
     TableBuilder.create(spark, region.repartition(2), base, name = "stream_removes")
     TableBuilder.append(spark, region.limit(2), base, timestamp = 1000L)
     val victim = new GraftLog(base, spark.sessionState.newHadoopConf())
       .snapshot(None).files.head.path
     TableBuilder.removeFiles(spark, base, _.path == victim, timestamp = 2000L)
+    val table = s"${SharedFixtures.SHARE}.stream_removes"
+    GraftCatalog.register(table, base)
+    try {
+      // tailing from version 0 hits the remove commit → must fail
+      val failing = stream(table)
+        .option("startingVersion", "0").load()
+        .writeStream.format("memory").queryName("t_rm_fail").outputMode("append")
+        .trigger(Trigger.AvailableNow()).start()
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        failing.awaitTermination(120000)
+      }
+      assert(ex.getCause.getMessage.contains("skipChangeCommits"))
 
-    // tailing from version 0 hits the remove commit → must fail
-    val failing = spark.readStream.format("graft").option("path", base)
-      .option("startingVersion", "0").load()
-      .writeStream.format("memory").queryName("t_rm_fail").outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      failing.awaitTermination(120000)
-    }
-    assert(ex.getCause.getMessage.contains("skipChangeCommits"))
-
-    // skipChangeCommits silently drops the remove commit
-    val q = spark.readStream.format("graft").option("path", base)
-      .option("startingVersion", "0").option("skipChangeCommits", "true").load()
-      .writeStream.format("memory").queryName("t_rm_skip").outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    q.stop()
-    val expected = region.count() + 2 // v0 + v1 appends; remove commit skipped
-    assert(spark.table("t_rm_skip").count() === expected)
+      // skipChangeCommits silently drops the remove commit
+      val q = stream(table)
+        .option("startingVersion", "0").option("skipChangeCommits", "true").load()
+        .writeStream.format("memory").queryName("t_rm_skip").outputMode("append")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(120000)
+      q.stop()
+      val expected = region.count() + 2 // v0 + v1 appends; remove commit skipped
+      assert(spark.table("t_rm_skip").count() === expected)
+    } finally GraftCatalog.unregister(table) // keep other suites' share listings clean
   }
 
   test("remote streaming renegotiates the delta dialect for DV and " +
@@ -675,6 +702,81 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       GraftLog.invalidateListing(path)
     }
   }
+
+  /** A fresh region table `name` (v0: 2 files, then one 2-row append per
+    * entry of `appendTimestamps`), served as `share1.default.<name>`; runs
+    * `body` with the local and the remote source over it.
+    */
+  private def withBothSources(name: String, appendTimestamps: Seq[Long],
+      options: Map[String, String])(
+      body: (String, Seq[graft.streaming.SharedTableSource[_]]) => Unit): Unit = {
+    val base = s"${SharedFixtures.shareRoot(sfDir)}/$name"
+    val dir = new java.io.File(base)
+    if (dir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    GraftLog.invalidateListing(base)
+    val region = spark.read.parquet(s"$sfDir/region.parquet")
+    TableBuilder.create(spark, region.repartition(2), base, name = name)
+    appendTimestamps.foreach(ts =>
+      TableBuilder.append(spark, region.limit(2), base, timestamp = ts))
+    GraftCatalog.register(s"${SharedFixtures.SHARE}.$name", base)
+    try {
+      val client = new graft.client.GraftRestClient(server.url, Some("tkn"))
+      body(base, Seq(
+        new graft.streaming.GraftSource(spark, base, options),
+        new graft.streaming.RemoteGraftSource(spark, client, "share1", "default", name,
+          options + ("queryTableVersionIntervalSeconds" -> "0"))))
+    } finally GraftCatalog.unregister(s"${SharedFixtures.SHARE}.$name")
+  }
+
+  test("a batch ending at a version sentinel reads no commit past it, on " +
+    "both transports") {
+    // The sentinel (v+1, -1) means "consumed through v". A removing commit
+    // v+1 that lands after latestOffset must not fail (or enter) the batch.
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    withBothSources("stream_overread", Seq(1000L), Map("startingVersion" -> "0")) {
+      (base, sources) =>
+        val ends = sources.map(_.latestOffset(null, ReadLimit.allAvailable())
+          .asInstanceOf[GraftSourceOffset])
+        ends.foreach(e => assert((e.tableVersion, e.index) === ((2L, -1L))))
+        val log = new GraftLog(base, spark.sessionState.newHadoopConf())
+        val v1Files = log.snapshot(Some(1L)).files.size
+        TableBuilder.removeFiles(spark, base, _.path == log.snapshot(None).files.head.path,
+          timestamp = 2000L)
+        GraftLog.invalidateListing(base)
+        sources.zip(ends).foreach { case (src, end) =>
+          val planned = src.getBatch(None, end).queryExecution.logical.collect {
+            case l: LogicalRelation =>
+              l.relation.asInstanceOf[HadoopFsRelation].location.inputFiles.length
+          }.sum
+          assert(planned === v1Files, s"$src")
+        }
+    }
+  }
+
+  test("both sources release commit state below the committed version") {
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    withBothSources("stream_memo", Seq(1000L, 2000L, 3000L),
+      Map("startingVersion" -> "0", "maxFilesPerTrigger" -> "1")) { (_, sources) =>
+      sources.foreach { src =>
+        var prev: GraftSourceOffset = null
+        var done = false
+        while (!done) {
+          val cur = src.latestOffset(prev, ReadLimit.maxFiles(1))
+          if (cur == null || cur == prev) done = true
+          else {
+            prev = cur.asInstanceOf[GraftSourceOffset]
+            src.commit(prev)
+            val held = src.heldCommitVersions.toSeq.sorted
+            assert(held.forall(_ >= prev.tableVersion - 1),
+              s"$src holds versions $held after committing $prev")
+          }
+        }
+        assert(prev.tableVersion === 4L, s"$src drained to $prev")
+      }
+    }
+  }
+
   test("TTL'd budget admission: a domain idle past the TTL gets a FRESH " +
     "budget (session reset) — previously-admitted urls re-admit, and " +
     "per-domain admitted counts exceed the budget (r15 verdict task)") {
