@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.queries.{Layer, QueryRegistry, QuerySpec}
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Setup (shared-table materialization, function
@@ -10,82 +10,32 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Let AQE convert sort-merge joins to broadcast from RUNTIME sizes
-      // up to a threshold sized for executor memory (default 10 MB is
-      // far below what a 8 GB heap handles). Derived tables like the
-      // dedup code dictionaries have no planner stats, so the static
-      // threshold never fires for them; the runtime one is the safe,
-      // scale-correct mechanism — at 100 TB those tables measure huge
-      // and AQE keeps the shuffle join.
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "256m")
-      // Spark 4.1 writes a Spark-level .crc twin for EVERY streaming
-      // checkpoint file (state deltas, offsets, commits) through a small
-      // shared async pool; stateful tasks then park in
-      // ChecksumCheckpointFileManager.awaitResult — measured here as the
-      // dominant wait of every stateful streaming task (thread dumps;
-      // ~0.5-1.2 s/query at sf0.1, −12% over the streaming family when
-      // disabled). The checkpoint FS already checksums (Hadoop
-      // ChecksumFileSystem locally; S3/HDFS server-side at scale), and at
-      // scale the feature doubles PUT/CREATE ops on the checkpoint store
-      // per state file — disabling is the production posture for an
-      // engine whose exactly-once story is the commit protocol, not crc
-      // twins. Overridable via system property (-D wins over this
-      // default): guide §5/§6.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.props.getOrElse(
-          "spark.sql.streaming.checkpoint.fileChecksum.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Optional subset for local iteration: SPARK_GRAFT_ONLY=q35,q27
+    val selected = Harness.select(sys.env.getOrElse("SPARK_GRAFT_ONLY", ""))
+    val spark = Harness.session()
 
     // setup outside the timed region
-    graft.log.SharedFixtures.ensure(spark, sfDir)
-    graft.functions.VectorFunctions.register(spark)
+    Harness.prepare(spark, sfDir)
     // JVM / codegen / scalar-library warm-up: run every plain-parquet
     // query once at sf0.001 so one-time costs (janino compilation of each
     // query's generated class, ICU classload on the first collation-aware
     // upper/lower, parquet reader init) are paid before the timed loop —
     // steady-state measurement, the JMH discipline. Measured: q13 1.63 s
     // cold vs 0.45 s warm at sf0.1; the warm-up pass itself costs ~10 s
-    // at sf0.001. Queries that go through the shared-fixture / REST /
-    // streaming layer are excluded: their layer caches are keyed per
-    // table registration, and re-pointing the share registry at a second
-    // sf mid-process is not a code path the engine needs to support.
-    val fixtureLayer = Set(
-      "q21_share_snapshot_scan", "q22_share_partition_prune",
-      "q23_share_limit_pushdown", "q24_share_time_travel",
-      "q33_stream_agg", "q34_share_cdf", "q36_rest_snapshot_scan",
-      "q37_cdf_option", "q38_cdf_stream", "q42_cdf_stream_rest",
-      "q45_dv_scan", "q46_column_mapping_scan", "q47_dv_rest_scan",
-      "q67_kernel_scan", "q72_cdf_incremental_agg", "q77_sql_catalog",
-      "q78_compacted_scan", "q81_delta_snapshot_scan", "q82_delta_time_travel",
-      "q83_delta_cdf", "q84_delta_rest_scan", "q85_delta_native_write",
-      "q87_stream_dedup", "q88_stream_custom_state", "q90_stream_sink",
-      "q92_sql_update_merge", "q152_stream_lsh_dedup",
-      "q160_version_dedup_gate", "q198_stream_image_dedup",
-      "q201_incremental_datacard", "q203_stream_video_dedup",
-      "q208_stream_content_dedup", "q209_stream_source_sketch",
-      "q214_stream_url_frontier")
+    // at sf0.001. Only Plain-layer queries warm: the others go through
+    // the shared-fixture / REST / streaming layer, whose caches are keyed
+    // per table registration, and re-pointing the share registry at a
+    // second sf mid-process is not a code path the engine needs to support.
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory) {
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filterNot { case (name, _) => fixtureLayer(name) }
-        .foreach { case (name, fn) =>
-          try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable =>
-            System.err.println(s"BENCH WARMUP SKIP $name: ${e.getMessage}") }
-        }
+      QueryRegistry.all.filter(_.layer == Layer.Plain).foreach { q =>
+        try q.build(spark, warmDir).write.format("noop").mode("overwrite").save()
+        catch { case e: Throwable =>
+          System.err.println(s"BENCH WARMUP SKIP ${q.name}: ${e.getMessage}") }
+      }
     }
     spark.range(1).selectExpr("upper('x')", "lower('X')", "initcap('x')").count()
 
-    // Optional subset for local iteration: SPARK_GRAFT_ONLY=q35,q27
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     // Per-query BEST-OF-N (default 2): one-off interference on a shared
     // driver host (the r6/r7 artifacts showed 4-8x inflation on single
     // queries) cannot survive two passes both being hit — the min is the
@@ -107,17 +57,11 @@ object Bench {
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
     }
     val gcDeltas = scala.collection.mutable.Map.empty[String, Vector[Long]]
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        loud: Boolean): Double = {
-      // every pass runs COLD: operators may persist intermediates (the
-      // dedup code-array index does), and Spark's CacheManager matches
-      // cached plans semantically — without this, pass 2+ would silently
-      // time warm-cache reruns and the best-of-N would overstate us.
-      // releasePersisted additionally DRAINS the strong-reference
-      // registry those persists sit in (clearCache drops blocks but
-      // would leave the queue pinning plan objects for the whole run)
-      graft.ops.Dedup.releasePersisted()
-      spark.catalog.clearCache()
+    def timeOnce(q: QuerySpec, loud: Boolean): Double = {
+      val name = q.name
+      // every pass runs COLD — otherwise pass 2+ would silently time
+      // warm-cache reruns and the best-of-N would overstate us
+      Harness.coldReset(spark)
       // §1.5 of the optimization playbook: label every job with the query
       // name so event logs / the UI attribute stages to queries.
       spark.sparkContext.setJobDescription(name)
@@ -130,7 +74,7 @@ object Bench {
       // minutes). The noop write evaluates every output column and
       // discards the rows.
       try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
         gcDeltas(name) = gcDeltas.getOrElse(name, Vector.empty) :+ (gcNowMs() - gc0)
         dt
@@ -151,13 +95,7 @@ object Bench {
     // run (~minutes), so a load window must span the entire bench to
     // corrupt both; if it does, the per-pass ratios expose it (suspect
     // flag below) instead of silently producing a plausible-looking min.
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(f => f.exists(name.startsWith)) }
-    val sweeps: Seq[Seq[(String, Double)]] = (1 to passes).map { p =>
-      selected.map { case (name, fn) =>
-        (name, timeOnce(name, fn, loud = p == 1))
-      }
-    }
+    val sweeps = (1 to passes).map(p => selected.map(timeOnce(_, loud = p == 1)))
     // A query whose sweep times disagree by >2x (above a 0.3 s noise
     // floor) was probably hit by external load in one sweep. 2x (down
     // from 3x, r14 verdict task): borderline spikes like r14's q28
@@ -176,14 +114,9 @@ object Bench {
     // suspect flag clears; the flag survives only if the third pass
     // still disagrees with the min (sustained interference — nothing
     // this process can adjudicate on its own).
-    val firstPass = selected.zipWithIndex.map { case ((name, _), i) =>
-      name -> sweeps.map(_(i)._2)
-    }
-    val allTimes: Seq[(String, Seq[Double])] = firstPass.map {
-      case (name, times) if disagrees(times) =>
-        val extra = timeOnce(name, selected.find(_._1 == name).get._2, loud = false)
-        name -> (times :+ extra)
-      case other => other
+    val allTimes: Seq[(String, Seq[Double])] = selected.zipWithIndex.map { case (q, i) =>
+      val times = sweeps.map(_(i))
+      q.name -> (if (disagrees(times)) times :+ timeOnce(q, loud = false) else times)
     }
     val results = allTimes.map { case (name, times) =>
       val ok = times.filter(_ >= 0)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.queries.Layer
 
 /** Dump `.explain("formatted")` for declared queries to files — the
   * optimization-round evidence trail (plans/r16/<query>_{before,after}.txt).
@@ -18,50 +18,29 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     val suffix = args(2)
-    val only: Option[Set[String]] =
-      if (args.length > 3) Some(args(3).split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "256m")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.props.getOrElse(
-          "spark.sql.streaming.checkpoint.fileChecksum.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.log.SharedFixtures.ensure(spark, sfDir)
-    graft.functions.VectorFunctions.register(spark)
+    val selected = Harness.select(args.lift(3).getOrElse(""))
+    val spark = Harness.session()
+    Harness.prepare(spark, sfDir)
     java.nio.file.Files.createDirectories(outDir)
-    // Match the query-id token exactly (qNN or the full name), not a bare
-    // prefix: "q13" must not also select q133/q136, "q24" not q240-q249.
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) =>
-        only.forall(f => f.exists(t => name == t || name.startsWith(t + "_"))) }
-    selected.foreach { case (name, fn) =>
+    selected.foreach { q =>
       try {
-        graft.ops.Dedup.releasePersisted()
-        spark.catalog.clearCache()
-        val df = fn(spark, sfDir)
+        Harness.coldReset(spark)
+        val df = q.build(spark, sfDir)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        val streaming = name.contains("stream")
         val header =
-          if (streaming)
+          if (q.layer == Layer.Streaming)
             "NOTE: streaming query — the drain already executed while building " +
               "the frame; this is the declared result's final batch plan over " +
               "the drained sink.\n\n"
           else ""
         java.nio.file.Files.write(
-          outDir.resolve(s"${name}_$suffix.txt"),
+          outDir.resolve(s"${q.name}_$suffix.txt"),
           (header + plan + "\n").getBytes("UTF-8"))
-        System.err.println(s"PLAN OK $name")
+        System.err.println(s"PLAN OK ${q.name}")
       } catch {
         case e: Throwable =>
-          System.err.println(s"PLAN FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
+          System.err.println(s"PLAN FAIL ${q.name}: ${e.getClass.getName}: ${e.getMessage}")
       }
     }
     spark.stop()

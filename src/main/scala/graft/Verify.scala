@@ -1,46 +1,31 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // Optional third arg: comma-separated name prefixes to run a subset
-    // (local iteration only — the driver always passes two args).
-    val (sfDir, outDir, only) = args match {
-      case Array(a, b)    => (a, b, None)
-      case Array(a, b, c) => (a, b, Some(c.split(",").toSet))
-      case _ => sys.error("usage: Verify <sfDir> <outDir> [namePrefixes]")
+    // Optional third arg: comma-separated query ids (`q13` or a full
+    // name) to run a subset — local iteration only.
+    val (sfDir, outDir, selected) = args match {
+      case Array(a, b)    => (a, b, Harness.select(""))
+      case Array(a, b, c) => (a, b, Harness.select(c))
+      case _ => sys.error("usage: Verify <sfDir> <outDir> [queryIds]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Unlike Bench (which defaults the streaming checkpoint .crc twins
-      // OFF for performance), the CORRECTNESS harness stays on the engine
-      // default so verification keeps exercising the upstream checkpoint
-      // integrity posture (r16 advisory); -D still overrides either way.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.props.getOrElse(
-          "spark.sql.streaming.checkpoint.fileChecksum.enabled", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Unlike Bench, the CORRECTNESS harness keeps the streaming
+    // checkpoint .crc twins at the engine default (on), so verification
+    // keeps exercising the upstream checkpoint integrity posture.
+    val spark = Harness.session(checkpointChecksum = true)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { q =>
+      try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
-      // drop dedup code-array caches between queries: a long Verify run
-      // otherwise accumulates MEMORY_AND_DISK blocks across the ~190
-      // queries (and could serve semantically-matched stale plans if an
-      // input path's files changed mid-session)
-      graft.ops.Dedup.releasePersisted()
+      // a long Verify run would otherwise accumulate MEMORY_AND_DISK
+      // blocks across the queries (and could serve semantically-matched
+      // stale plans if an input path's files changed mid-session)
+      Harness.coldReset(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -223,9 +223,8 @@ object Dedup {
     // after the input path's files changed can serve the stale cached
     // arrays, and repeated invocations accumulate MEMORY_AND_DISK blocks.
     // Call [[Dedup.releasePersisted]] after consuming the pipeline's
-    // result (Verify does, per query); Bench and ScaleProbe instead run
-    // spark.catalog.clearCache() before every timed pass, which drops
-    // these blocks along with everything else.
+    // result; every harness does, through `graft.Harness.coldReset`
+    // between queries.
     trackPersist(exploded.join(dict.select(col("__f"), col("__code")), "__f")
       .groupBy(col("id"))
       .agg(aggs.head, aggs.tail: _*))
@@ -264,8 +263,8 @@ object Dedup {
     * the gate-lifted q43 verification run: eager unpersist of the
     * fixpoint edge set made write-after-connectedComponents die with
     * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Registered frames are released
-    * by the next [[releasePersisted]] — the same drain point Verify,
-    * Bench, and ScaleProbe already call between queries.
+    * by the next [[releasePersisted]] — the drain point every harness
+    * calls between queries (`graft.Harness.coldReset`).
     */
   private val checkpointed =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]

@@ -6,7 +6,6 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GreaterThanOrEqual, LessThanOrEqual, Literal}
 import org.apache.spark.sql.types.StringType
 
@@ -139,12 +138,7 @@ object MetaProbe {
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val sections = args.lift(2).getOrElse("meta,stream").split(',').toSet
     val conf = new Configuration()
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     val http = HttpClient.newHttpClient()
 
     counts.foreach { n =>

@@ -1,111 +1,60 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness
+import graft.queries.QuerySpec
 
 /** In-JVM A/B timing harness: wall-clock comparisons on this host are
   * noisy across JVMs (shared-host variance dwarfs real deltas), so perf
   * experiments run alternating variants inside ONE session and report
-  * per-variant medians. Not part of the driver contract — a scratchpad
-  * for plan work. Usage: tools/run.sh graft.tools.PerfAB <sfDir> <reps>
+  * per-variant medians. Each variant is a set of SQL confs applied for
+  * its runs only; a baseline with the session's own confs always runs
+  * first. Every run is cold and writes to the `noop` sink, as Bench does.
+  * A scratchpad for plan work.
+  *
+  * Usage: tools/run.sh graft.tools.PerfAB <sfDir> <reps> <queryIds> [k=v[,k=v...] ...]
+  * e.g.   tools/run.sh graft.tools.PerfAB <sf0.1 dir> 5 q64,q131 \
+  *          spark.sql.adaptive.enabled=false
   */
 object PerfAB {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // extra configs under test: SPARK_GRAFT_AB_CONF="k=v,k=v"
-    sys.env.get("SPARK_GRAFT_AB_CONF").toSeq
-      .flatMap(_.split(',')).map(_.split("=", 2))
-      .foreach { case Array(k, v) => builder.config(k, v); case _ => }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions.col
+    if (args.length < 3)
+      sys.error("usage: PerfAB <sfDir> <reps> <queryIds> [k=v[,k=v...] ...]")
+    val sfDir = args(0)
+    val reps = args(1).toInt
+    val selected = Harness.select(args(2))
+    val variants: Seq[(String, Seq[(String, String)])] =
+      ("baseline" -> Seq.empty) +: args.drop(3).toSeq.map { v =>
+        v -> v.split(',').toSeq.map(_.split("=", 2) match {
+          case Array(k, x) => k.trim -> x.trim
+          case _ => sys.error(s"variant '$v': expected k=v[,k=v...]")
+        })
+      }
+    val spark = Harness.session()
+    Harness.prepare(spark, sfDir)
 
-    def docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    import org.apache.spark.sql.functions.{array_distinct, explode, split}
-    def shingleSets = docs.select(col("doc_id").as("id"),
-      array_distinct(graft.ops.Dedup.shingles(col("text"), 3)).as("fset"))
-    def ngramSets = docs.select(col("doc_id").as("id"),
-      graft.ops.Dedup.charNgrams(col("text"), 5).as("fset"))
-
-    // Round-7 experiment: q64 exact quantiles — the round-6 plan (one
-    // Window.partitionBy(rf): 3 reducers each sort ⅓ of the table; dies
-    // at 100×) vs the shipped distributed rank (range partition + local
-    // rank + broadcast offsets: every task bounded by its range slice).
-    // Recorded at sf0.1 (reps=5, medians): window 0.39 s, distributed
-    // 1.70 s — the single-node price of the extra exchange; the window
-    // variant's per-group sort grows linearly with table size per
-    // reducer (3 reducers total), the distributed one stays flat per
-    // task and scales with the cluster.
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    def li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select(col("l_returnflag").as("rf"), col("l_extendedprice").as("price"))
-    val variants: Seq[(String, () => Long)] = Seq(
-      "q64_window_per_group" -> (() => {
-        val ranked = li
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("rf")).orderBy(col("price"))))
-          .withColumn("n", count(lit(1)).over(Window.partitionBy(col("rf"))))
-        ranked.groupBy(col("rf")).agg(
-          max(when(col("rn") === expr("(n + 3) div 4"), col("price"))).as("p25"),
-          max(when(col("rn") === expr("(n + 1) div 2"), col("price"))).as("p50"),
-          max(when(col("rn") === expr("(3*n + 3) div 4"), col("price"))).as("p75"),
-          max(when(col("rn") === expr("(9*n + 9) div 10"), col("price"))).as("p90"))
-          .count()
-      }),
-      "q64_distributed_rank" -> (() =>
-        graft.SparkEntry.queries("q64_exact_quantiles")(spark, sfDir).count()),
-      "ngram_jaccard" -> (() =>
-        graft.ops.Dedup.ngramJaccardDuplicates(docs, "doc_id", "text",
-          n = 5, threshold = 0.6).count()),
-      // Round-10 experiment: PCA covariance accumulation — struct(i,j,p)
-      // cells vs a single flat position key (pos = i*dim+j). Same
-      // aggregation shape; the question is codegen/allocation overhead
-      // of 4096 struct builds per row vs posexplode over a double array.
-      "pca_cov_struct" -> (() => {
-        def emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        val centered = col("embedding").cast("array<double>")
-        emb.select(explode(flatten(transform(centered, (a, i) =>
-            transform(centered, (b, j) =>
-              struct(i.as("i"), j.as("j"), (a * b).as("p")))))).as("c"))
-          .groupBy(col("c.i"), col("c.j"))
-          .agg(round(round(sum(col("c.p")), 4) / count(lit(1)), 8))
-          .count()
-      }),
-      "pca_cov_poskey" -> (() => {
-        def emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        val centered = col("embedding").cast("array<double>")
-        emb.select(posexplode(flatten(transform(centered, a =>
-            transform(centered, b => a * b)))).as(Seq("pos", "p")))
-          .groupBy(col("pos"))
-          .agg(round(round(sum(col("p")), 4) / count(lit(1)), 8))
-          .count()
-      }),
-      "pca_full_fit" -> (() =>
-        graft.SparkEntry.queries("q131_pca_projection")(spark, sfDir).count()))
-
-    // warm-up (JIT + codegen cache) on the first variant
-    variants.head._2()
-
-    val times = scala.collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
-    val counts = scala.collection.mutable.Map[String, Long]()
-    for (_ <- 1 to reps; (name, fn) <- variants) {
-      val t0 = System.nanoTime()
-      val n = fn()
-      val dt = (System.nanoTime() - t0) / 1e9
-      times(name) = times(name) :+ dt
-      counts(name) = n
+    def run(q: QuerySpec, conf: Seq[(String, String)]): Double = {
+      Harness.coldReset(spark)
+      val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val t0 = System.nanoTime()
+        q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
-    variants.foreach { case (name, _) =>
-      val ts = times(name).sorted
-      val med = ts(ts.size / 2)
-      println(f"$name%-28s rows=${counts(name)}%-8d median=$med%6.2f s  runs=${ts.map(t => f"$t%.2f").mkString(",")}")
+
+    // warm-up (JIT + codegen cache): one untimed baseline run per query
+    selected.foreach(run(_, Seq.empty))
+
+    val times = for (_ <- 1 to reps; q <- selected; (label, conf) <- variants)
+      yield (q.name, label, run(q, conf))
+    for (q <- selected; (label, _) <- variants) {
+      val ts = times.collect { case (n, l, t) if n == q.name && l == label => t }.sorted
+      println(f"${q.name}%-28s $label%-40s median=${ts(ts.size / 2)}%6.2f s  " +
+        s"runs=${ts.map(t => f"$t%.2f").mkString(",")}")
     }
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -18,22 +17,10 @@ import scala.collection.mutable
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val names = args(1).split(',').map(_.trim).filter(_.nonEmpty)
+    val selected = graft.Harness.select(args(1))
     val passes = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "256m")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.props.getOrElse(
-          "spark.sql.streaming.checkpoint.fileChecksum.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.log.SharedFixtures.ensure(spark, sfDir)
-    graft.functions.VectorFunctions.register(spark)
+    val spark = graft.Harness.session()
+    graft.Harness.prepare(spark, sfDir)
 
     case class StageRow(desc: String, stageId: Int, name: String,
       wallMs: Long, tasks: Int, runMs: Long, cpuMs: Long, maxTaskMs: Long,
@@ -78,20 +65,16 @@ object QueryProfile {
       }
     })
 
-    val selected = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) =>
-        names.exists(t => n == t || n.startsWith(t + "_") || n.startsWith(t)) }
     (1 to passes).foreach { p =>
-      selected.foreach { case (name, fn) =>
-        graft.ops.Dedup.releasePersisted()
-        spark.catalog.clearCache()
-        val desc = s"$name#$p"
+      selected.foreach { q =>
+        graft.Harness.coldReset(spark)
+        val desc = s"${q.name}#$p"
         currentDesc = desc
         spark.sparkContext.setJobDescription(desc)
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        try q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
-          System.err.println(s"FAIL $name: ${e.getMessage}") }
+          System.err.println(s"FAIL ${q.name}: ${e.getMessage}") }
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"\n=== $desc%s  total ${dt}%.3f s  jobs=${jobCount(desc)}%d")
         val rows = stages.filter(_.desc == desc).sortBy(-_.wallMs)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-exponent probe for the dedup family (q27 prefix cascade, q35
@@ -26,15 +26,8 @@ object ScaleProbe {
     val factors = args.lift(1).getOrElse("1,2,4").split(',').map(_.trim.toInt).toSeq
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val opFilter = args.lift(3).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "256m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Harness.cpus
+    val spark = graft.Harness.session()
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
@@ -1045,13 +1038,9 @@ object ScaleProbe {
       val pinnedPartitionOps = Set("q204_dsir_bigk", "q199_key_width",
         "cc_edges_pinned", "q229_domain_axis", "q231_ttl_axis")
       spark.conf.set("spark.sql.shuffle.partitions",
-        (if (pinnedPartitionOps(name)) cpus.toInt else cpus.toInt * k).toString)
+        (if (pinnedPartitionOps(name)) cpus else cpus * k).toString)
       val ts = (1 to reps).map { _ =>
-        // cold per rep: operators may persist intermediates and the
-        // CacheManager matches plans semantically (same rationale as
-        // Bench.timeOnce); releasePersisted also drains the registry
-        graft.ops.Dedup.releasePersisted()
-        spark.catalog.clearCache()
+        graft.Harness.coldReset(spark)
         val t0 = System.nanoTime()
         rows((name, k)) = fn(k)
         (System.nanoTime() - t0) / 1e9

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Server-path bench split (round-12 verdict task #7): the remote-
@@ -21,14 +20,7 @@ object ServerSplit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val url = graft.server.LocalShareServer.ensure(spark, sfDir)
     val server = graft.server.LocalShareServer.instance
@@ -53,7 +45,7 @@ object ServerSplit {
 
     cases.foreach { case (name, fn) =>
       val runs = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
+        graft.Harness.coldReset(spark)
         server.resetPhases()
         server.signCount.set(0L)
         val t0 = System.nanoTime()
