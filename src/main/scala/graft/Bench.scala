@@ -29,7 +29,7 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory) {
       QueryRegistry.all.filter(_.layer == Layer.Plain).foreach { q =>
-        try q.build(spark, warmDir).write.format("noop").mode("overwrite").save()
+        try Harness.cold(spark)(q.build(spark, warmDir).write.format("noop").mode("overwrite").save())
         catch { case e: Throwable =>
           System.err.println(s"BENCH WARMUP SKIP ${q.name}: ${e.getMessage}") }
       }
@@ -59,14 +59,10 @@ object Bench {
     val gcDeltas = scala.collection.mutable.Map.empty[String, Vector[Long]]
     def timeOnce(q: QuerySpec, loud: Boolean): Double = {
       val name = q.name
-      // every pass runs COLD — otherwise pass 2+ would silently time
-      // warm-cache reruns and the best-of-N would overstate us
-      Harness.coldReset(spark)
       // §1.5 of the optimization playbook: label every job with the query
       // name so event logs / the UI attribute stages to queries.
       spark.sparkContext.setJobDescription(name)
       val gc0 = gcNowMs()
-      val t0 = System.nanoTime()
       // noop sink, NOT count(): count() lets Catalyst prune the whole
       // projection, so a pure-projection query (fingerprints, entropy,
       // redaction) measures only its scan — the winnowing O(n^2) defect
@@ -74,8 +70,10 @@ object Bench {
       // minutes). The noop write evaluates every output column and
       // discards the rows.
       try {
-        q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
+        // every pass runs COLD — otherwise pass 2+ would silently time
+        // warm-cache reruns and the best-of-N would overstate us
+        val dt = Harness.timed(spark)(
+          q.build(spark, sfDir).write.format("noop").mode("overwrite").save())
         gcDeltas(name) = gcDeltas.getOrElse(name, Vector.empty) :+ (gcNowMs() - gc0)
         dt
       }

@@ -73,15 +73,23 @@ object Harness {
     else QueryRegistry.all.filter(q => wanted.exists(hit(_, q.name)))
   }
 
-  /** Make the next query run cold: operators may persist intermediates
-    * (the dedup code-array index does), and Spark's CacheManager matches
-    * cached plans semantically, so without this a rerun silently hits
-    * the previous run's cache. releasePersisted also DRAINS the
-    * strong-reference registry those persists sit in (clearCache drops
-    * blocks but would leave the queue pinning plan objects).
+  /** Run `body` (a query's build and action) cold and self-contained:
+    * clear the CacheManager first (it matches cached plans semantically,
+    * so a rerun could otherwise hit an earlier run's cache), and run the
+    * body in its own [[graft.ops.Materialize]] scope, so every pin the
+    * query makes is released when it returns.
     */
-  def coldReset(spark: SparkSession): Unit = {
-    graft.ops.Dedup.releasePersisted()
+  def cold[T](spark: SparkSession)(body: => T): T = {
     spark.catalog.clearCache()
+    graft.ops.Materialize.scoped(body)
+  }
+
+  /** Seconds `body` takes, run [[cold]]: neither the reset nor the
+    * release of the query's pins is timed.
+    */
+  def timed(spark: SparkSession)(body: => Unit): Double = cold(spark) {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
   }
 }

@@ -24,10 +24,8 @@ object PlanDump {
     java.nio.file.Files.createDirectories(outDir)
     selected.foreach { q =>
       try {
-        Harness.coldReset(spark)
-        val df = q.build(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val plan = Harness.cold(spark)(q.build(spark, sfDir).queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode))
         val header =
           if (q.layer == Layer.Streaming)
             "NOTE: streaming query — the drain already executed while building " +

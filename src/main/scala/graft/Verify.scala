@@ -17,15 +17,11 @@ object Verify {
     val spark = Harness.session(checkpointChecksum = true)
     new java.io.File(outDir).mkdirs()
     selected.foreach { q =>
-      try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/${q.name}")
+      try Harness.cold(spark)(q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
-      // a long Verify run would otherwise accumulate MEMORY_AND_DISK
-      // blocks across the queries (and could serve semantically-matched
-      // stale plans if an input path's files changed mid-session)
-      Harness.coldReset(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

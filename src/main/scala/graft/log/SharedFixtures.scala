@@ -82,7 +82,7 @@ object SharedFixtures {
     buildIfMissing(root, "events") { path =>
       // ts varies by fixture generation: TIMESTAMP(NANOS) (read as long
       // nanos via nanosAsLong — stays long in the shared table) or a
-      // native timestamp; consumers normalize, see SparkEntry.events.
+      // native timestamp; consumers normalize, see graft.queries.QueryHelpers.events.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val ev = spark.read.parquet(s"$sfDir/events.parquet")
       val n = ev.count()

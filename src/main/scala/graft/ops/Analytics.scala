@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -271,9 +271,9 @@ object Analytics {
     * edges (`edge.t ≥ arrival` is monotone), so keeping one row per
     * (seed, node) — the earliest arrival — loses nothing. Each round
     * is one equi-join frontier expansion + a min-merge (map-side
-    * combinable); lineage cut per round with a lazy localCheckpoint
-    * (the CC/ANF discipline). State is O(seeds × reached nodes), never
-    * walks.
+    * combinable); each round is pinned, which cuts the plan (the CC/ANF
+    * discipline); the rounds build in the caller's one action and stay in
+    * the caller's scope. State is O(seeds × reached nodes), never walks.
     *
     * Returns `(seed, node, t)` — earliest arrival in micros, `t = −1`
     * for the seed itself (sorts before every real timestamp, so the
@@ -291,9 +291,8 @@ object Analytics {
       val expanded = dist.join(e,
           dist("node") === e("src") && e("__et") >= dist("t"))
         .select(dist("seed"), e("dst").as("node"), col("__et").as("t"))
-      dist = dist.unionByName(expanded)
-        .groupBy(col("seed"), col("node")).agg(min(col("t")).as("t"))
-        .localCheckpoint(false)
+      dist = Materialize.pin(dist.unionByName(expanded)
+        .groupBy(col("seed"), col("node")).agg(min(col("t")).as("t")))
     }
     dist
   }
@@ -301,10 +300,10 @@ object Analytics {
   /** Bounded-hop single-source shortest paths from a seed set over
     * weighted directed edges `(src, dst, w)` — `maxHops` rounds of
     * min-plus (Bellman–Ford) relaxation: each round one equi-join
-    * frontier expansion + a min-merge (map-side combinable), lineage
-    * cut per round. Parallel edges are pre-reduced to their cheapest
-    * weight (sound for shortest paths). State is O(seeds × reached
-    * nodes); returns `(seed, node, cost)` with `cost = 0` for the seed
+    * frontier expansion + a min-merge (map-side combinable), pinned per
+    * round as in [[temporalReachability]]. Parallel edges are pre-reduced
+    * to their cheapest weight (sound for shortest paths). State is
+    * O(seeds × reached nodes); returns `(seed, node, cost)` with `cost = 0` for the seed
     * itself. Exact integer costs — partitioning/order independent.
     */
   def boundedShortestPaths(
@@ -320,9 +319,8 @@ object Analytics {
       val expanded = dist.join(e, dist("node") === e("src"))
         .select(dist("seed"), e("dst").as("node"),
           (dist("cost") + col("__w")).as("cost"))
-      dist = dist.unionByName(expanded)
-        .groupBy(col("seed"), col("node")).agg(min(col("cost")).as("cost"))
-        .localCheckpoint(false)
+      dist = Materialize.pin(dist.unionByName(expanded)
+        .groupBy(col("seed"), col("node")).agg(min(col("cost")).as("cost")))
     }
     dist
   }
@@ -452,9 +450,8 @@ object Analytics {
     *
     * Shape at scale: per round one map-side-combinable degree count +
     * two semi-joins on the vertex key — edges and degrees stay
-    * DataFrames end-to-end, nothing is collected; with many rounds one
-    * would localCheckpoint every few rounds to cut lineage (the
-    * [[pageRank]] discipline).
+    * DataFrames end-to-end, nothing is collected; the per-round pin
+    * below also cuts the plan, so many rounds stay cheap to plan.
     */
   def kCoreMembers(edges: DataFrame, k: Int, rounds: Int = 3): DataFrame = {
     require(k >= 1 && rounds >= 1, s"k=$k rounds=$rounds")
@@ -469,23 +466,23 @@ object Analytics {
     var e = edges.select(col("a").as("u"), col("b").as("v"))
       .union(edges.select(col("b").as("u"), col("a").as("v")))
       .repartition(col("u"))
-    // persist each round's edge set: every round reads its input twice
+    // pin each round's edge set: every round reads its input twice
     // (degree count + join input) and lazily re-deriving it would
     // re-run ALL prior rounds each time — ~2^rounds recomputation
     // (measured: q139 6.9 s lazy vs ~1 s persisted at sf0.1). The
-    // previous round's block releases as soon as the next materializes.
-    var prev: Option[DataFrame] = None
+    // previous round's pin releases as soon as the next is built.
+    var cur = e
     for (_ <- 1 to rounds) {
-      val cur = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val prev = cur
+      cur = Materialize.pin(e)
       cur.count()
-      prev.foreach(_.unpersist())
-      prev = Some(cur)
+      Materialize.release(prev)
       val keep = cur.groupBy(col("u")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("u").as("kv"))
       e = cur.join(keep.withColumnRenamed("kv", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("kv", "v"), Seq("v"), "left_semi")
     }
-    // the final (unpersisted) round reads the last cached round twice
+    // the final (unpinned) round reads the last pinned round twice
     e.groupBy(col("u").as("user_id")).agg(count(lit(1)).as("core_degree"))
   }
 
@@ -509,13 +506,14 @@ object Analytics {
       .union(edges.select(col("dst").as("node"))).distinct()
     val n = broadcast(nodes.agg(count(lit(1)).as("__n")))
     var ranks = nodes.crossJoin(n).select(col("node"), (lit(1.0) / col("__n")).as("rank"))
-    // Lineage cut every CUT iterations: without it the logical plan (and
+    // Plan cut every CUT iterations: without it the logical plan (and
     // Catalyst analysis time) doubles per iteration — fine at the fixed 3
     // the oracle queries use, pathological at 20+. Same discipline as
-    // Dedup.connectedComponents; each cut releases the previous one's
-    // block so at most one checkpoint block is live at a time.
+    // Dedup.connectedComponents; each cut releases the previous one, and
+    // the last stays in the caller's scope (the caller's action may
+    // re-plan the query and read it again).
     val CUT = 5
-    var prevCut: DataFrame = null
+    var cut = ranks
     for (i <- 1 to iterations) {
       val contrib = edges.join(ranks, edges("src") === ranks("node"))
         .groupBy(col("dst").as("node"))
@@ -528,22 +526,11 @@ object Analytics {
           (lit(1.0 - damping) / col("__n") +
             lit(damping) * coalesce(col("__in"), lit(0.0))).as("rank"))
       if (i % CUT == 0 && i < iterations) {
-        val cut = ranks.localCheckpoint(true)
-        if (prevCut != null) GraftSqlBridge.unpersistCheckpoint(prevCut, blocking = true)
-        prevCut = cut
-        ranks = cut
+        ranks = Materialize.pin(ranks)
+        ranks.count()
+        Materialize.release(cut)
+        cut = ranks
       }
-    }
-    if (prevCut != null) {
-      // The returned frame is built on the last cut's checkpoint blocks,
-      // and the caller's action may RE-PLAN (DataFrameWriter builds a
-      // fresh QueryExecution — registered shuffle outputs are not
-      // reused), so the blocks must outlive this call: deferred release
-      // via the persisted-registry lifecycle (same fix as
-      // Dedup.connectedComponents' fixpoint edges; the prior eager
-      // unpersist was the identical CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
-      // latent at iterations >= the cut interval).
-      Dedup.trackCheckpoint(prevCut)
     }
     ranks
   }
@@ -749,7 +736,7 @@ object Analytics {
     // PINNED: the canonical edge set feeds the union (twice) and the
     // final anti-join — per-stage metrics showed the upstream edge
     // derivation executing three times (3 × ~0.5 s serial).
-    val und = Par.pin(edges.select(
+    val und = Materialize.pin(edges.select(
       least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b")))
     val dir = und.union(und.select(col("b").as("a"), col("a").as("b")))
       .select(col("a").as("z"), col("b").as("x"))
@@ -757,7 +744,7 @@ object Analytics {
     // deg-1 centers cannot form a wedge — excluded up front so the
     // 1/ln(deg) weight is ANSI-safe (ln(1) = 0) and no work is wasted.
     // PINNED: both sides of the wedge self-join consume it.
-    val adj = Par.pin(dir.join(
+    val adj = Materialize.pin(dir.join(
         deg.filter(col("deg") <= maxHubDegree && col("deg") >= 2), "z")
       .withColumn("w", lit(1.0) / log(col("deg").cast("double"))))
     // The probe side is EXPLICITLY hash-exchanged on the center: the
@@ -809,7 +796,7 @@ object Analytics {
     *
     *  - EXACT (nodes ≤ gate): iterative frontier expansion of the
     *    distinct (v, w) reach set — one equi-join + distinct per hop,
-    *    lineage cut per round, early-constant once the diameter is
+    *    pinned per round, early-constant once the diameter is
     *    reached. State is O(reachable pairs): exact and right at
     *    fixture scale, quadratic in the worst case — hence the gate.
     *  - HYPERBALL (above the gate): one 64-register HyperLogLog per
@@ -830,18 +817,18 @@ object Analytics {
     import spark.implicits._
     val sym = edges.select(col("a").cast("long").as("u"),
       col("b").cast("long").as("v")).filter(col("u") =!= col("v"))
-    val both = sym.union(sym.select(col("v").as("u"), col("u").as("v")))
-      .distinct().localCheckpoint(true) // consumed once per hop
-    // checkpointed: the gate count and the per-path seed share ONE
-    // distinct computation (r16 review finding: the seed re-derived it);
-    // a forced-sketch gate (<= 0) skips the count job entirely
-    val nodes = both.select(col("u").as("v")).distinct().localCheckpoint(true)
-    val counts =
+    // the counts are collected, so every pin below lives in this scope
+    val counts = Materialize.scoped {
+      val both = Materialize.pin( // consumed once per hop
+        sym.union(sym.select(col("v").as("u"), col("u").as("v"))).distinct())
+      // pinned: the gate count and the per-path seed share ONE distinct
+      // computation; a forced-sketch gate (<= 0) skips the count job
+      // entirely
+      val nodes = Materialize.pin(both.select(col("u").as("v")).distinct())
       if (exactNodeThreshold > 0 && nodes.count() <= exactNodeThreshold)
         exactAnf(both, nodes, maxHops)
       else hyperBallAnf(both, nodes, maxHops)
-    GraftSqlBridge.unpersistCheckpoint(nodes, blocking = false)
-    GraftSqlBridge.unpersistCheckpoint(both, blocking = false)
+    }
     counts.toDF("hop", "n_pairs")
   }
 
@@ -850,38 +837,34 @@ object Analytics {
     * whole reach set — the standard delta-BFS cut that matters once
     * balls saturate), anti-joins out already-known pairs, and unions
     * the disjoint remainder without a distinct. Early-constant once a
-    * hop discovers nothing.
+    * hop discovers nothing. Each hop's count builds the previous hop's
+    * reach set, so the pins that set was made from are released then.
     */
   private def exactAnf(both: DataFrame, nodes: DataFrame,
       maxHops: Int): Seq[(Long, Long)] = {
-    var reach = nodes.select(col("v"), col("v").as("w")).localCheckpoint(true)
+    var reach = Materialize.pin(nodes.select(col("v"), col("v").as("w")))
     var frontier = reach
     var total = reach.count()
     val out = scala.collection.mutable.ArrayBuffer((0L, total))
     var growing = true
+    var stale = Seq.empty[DataFrame] // the pins `reach` is made from
     for (h <- 1 to maxHops) {
       if (growing) {
         val grown = frontier
           .join(both.select(col("u").as("w"), col("v").as("x")), "w")
           .select(col("v"), col("x").as("w")).distinct()
-        val newPairs = grown.join(reach, Seq("v", "w"), "left_anti")
-          .localCheckpoint(true)
-        val nNew = newPairs.count()
+        val newPairs = Materialize.pin(grown.join(reach, Seq("v", "w"), "left_anti"))
+        val nNew = newPairs.count() // also builds `reach`, which the anti-join reads
+        stale.foreach(Materialize.release)
+        stale = Seq(reach, newPairs)
         // disjoint by the anti-join and internally distinct: plain union
-        val nextReach = reach.union(newPairs).localCheckpoint(true)
-        GraftSqlBridge.unpersistCheckpoint(reach, blocking = false)
-        if (!(frontier eq reach))
-          GraftSqlBridge.unpersistCheckpoint(frontier, blocking = false)
-        reach = nextReach
+        reach = Materialize.pin(reach.union(newPairs))
         frontier = newPairs
         growing = nNew > 0
         total += nNew
         out += ((h.toLong, total))
       } else out += ((h.toLong, total))
     }
-    GraftSqlBridge.unpersistCheckpoint(reach, blocking = false)
-    if (!(frontier eq reach))
-      GraftSqlBridge.unpersistCheckpoint(frontier, blocking = false)
     out.toSeq
   }
 
@@ -936,9 +919,8 @@ object Analytics {
       maxHops: Int): Seq[(Long, Long)] = {
     val spark = both.sparkSession
     import spark.implicits._
-    var regs = nodes.select(col("v")).as[Long]
-      .map(v => (v, graft.ops.Analytics.initRegs(v))).toDF("node", "r")
-      .localCheckpoint(true)
+    var regs = Materialize.pin(nodes.select(col("v")).as[Long]
+      .map(v => (v, graft.ops.Analytics.initRegs(v))).toDF("node", "r"))
     // per-node estimates quantized to integer MICROUNITS before the sum:
     // long addition is associative, so N(h) is bit-stable across task
     // orders (r16 review finding: a double reduce(_+_) could flip the
@@ -957,14 +939,13 @@ object Analytics {
         .select(col("nbr").as("node"), col("r"))
         .unionByName(regs)
         .as[(Long, Array[Byte])]
-      val next = contrib.groupByKey(_._1)
+      val next = Materialize.pin(contrib.groupByKey(_._1)
         .reduceGroups((x, y) => (x._1, graft.ops.Analytics.maxRegs(x._2, y._2)))
-        .map(_._2).toDF("node", "r").localCheckpoint(true)
-      GraftSqlBridge.unpersistCheckpoint(regs, blocking = false)
+        .map(_._2).toDF("node", "r"))
+      out += ((h.toLong, census(next))) // builds `next`
+      Materialize.release(regs)
       regs = next
-      out += ((h.toLong, census(regs)))
     }
-    GraftSqlBridge.unpersistCheckpoint(regs, blocking = false)
     out.toSeq
   }
 }

@@ -297,11 +297,10 @@ object Classify {
     * classifiers (NB q200, perceptron q202): rule verdicts label every
     * doc, tokens hash into `dim` buckets with the positional codepoint
     * hash (identical on both engines), and the per-(doc, bucket) counts
-    * are localCheckpoint-ed — the rule-pack + tokenize + hash + groupBy
-    * pipeline feeds several downstream actions, and without truncation
-    * each action re-runs the whole text pipeline (the q192 lesson:
-    * persist() does not reliably barrier HOF-lambda plans). Returns
-    * (labels, feats): `labels` is the text-free per-doc frame.
+    * are pinned — the rule-pack + tokenize + hash + groupBy pipeline
+    * feeds several downstream actions, and unpinned each action would
+    * re-run the whole text pipeline. Returns (labels, feats): `labels`
+    * is the text-free per-doc frame.
     */
   /** Positional-codepoint token hash into `dim` buckets — codepoint-
     * based on BOTH engines (Spark `ascii(substring)` / DuckDB
@@ -315,14 +314,9 @@ object Classify {
         k => (ascii(tok.substr(k, lit(1))).cast("long") + 1L) * k.cast("long")),
       lit(0L), (a, x) => a + x) % dim).cast("int")
 
-  /** The labels frame is returned as a THUNK: localCheckpoint is eager,
-    * so materializing it unconditionally would charge callers that never
-    * read it (the perceptron scores from feats alone) a full wasted
-    * rule-pack pass over the corpus.
-    */
   private def gopherHashedFeatures(
       docs: DataFrame, idCol: String, textCol: String,
-      dim: Int, trainMod: Int): (() => DataFrame, DataFrame) = {
+      dim: Int, trainMod: Int): (DataFrame, DataFrame) = {
     val labeled = graft.ops.TextOps.gopherFilter(
       graft.ops.Par.widen(docs).select(col(idCol).as("id"), col(textCol).as("text")), "id", "text")
       .select(col("id"), col("text"), col("kept").as("label"),
@@ -335,10 +329,9 @@ object Classify {
       .withColumn("b", tokenBucket(col("tok"), dim))
       .groupBy(col("id"), col("label"), col("is_train"), col("b"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val labels = () => labeled.select(col("id"), col("label"), col("is_train"))
-      .localCheckpoint() // text-free: 3 narrow columns per doc
-    (labels, feats)
+      .transform(Materialize.pin)
+    // text-free: 3 narrow columns per doc, read once by the NB
+    (labeled.select(col("id"), col("label"), col("is_train")), feats)
   }
 
   def nbQualityHashed(
@@ -347,8 +340,7 @@ object Classify {
       textCol: String,
       dim: Int = 1024,
       trainMod: Int = 5): DataFrame = {
-    val (labelsFn, feats) = gopherHashedFeatures(docs, idCol, textCol, dim, trainMod)
-    val labels = labelsFn()
+    val (labels, feats) = gopherHashedFeatures(docs, idCol, textCol, dim, trainMod)
 
     // model-scale driver state: per-class token totals + train doc counts
     val trainFeats = feats.filter(col("is_train"))

@@ -211,89 +211,22 @@ object Dedup {
       sort_array(collect_list(col("__code"))).as("__codes"),
       first(col("__n")).as("__n")) ++
       (if (tagged) Seq(first(col("__new")).as("__new")) else Nil)
-    // PERSISTED: index prefix, probe prefix, and both verification sides
+    // PINNED: index prefix, probe prefix, and both verification sides
     // consume this frame — exchange reuse alone would still recompute the
     // per-doc collect+sort four times (measured 9.0 s -> 2.6 s on the
     // sf0.1 char-ngram pipeline). Unlike the exploded table (codegen,
     // cheaper to recompute than cache), the aggregated arrays are the
-    // expensive artifact worth keeping; blocks are reclaimed by Spark's
-    // ContextCleaner once the frame is unreachable. LIFECYCLE CAVEAT for
-    // long-lived sessions: Spark's CacheManager matches cached plans
-    // semantically, so re-running a dedup pipeline in the SAME session
-    // after the input path's files changed can serve the stale cached
-    // arrays, and repeated invocations accumulate MEMORY_AND_DISK blocks.
-    // Call [[Dedup.releasePersisted]] after consuming the pipeline's
-    // result; every harness does, through `graft.Harness.coldReset`
-    // between queries.
-    trackPersist(exploded.join(dict.select(col("__f"), col("__code")), "__f")
+    // expensive artifact worth keeping.
+    Materialize.pin(exploded.join(dict.select(col("__f"), col("__code")), "__f")
       .groupBy(col("id"))
       .agg(aggs.head, aggs.tail: _*))
   }
 
-  /** Frames persisted by [[codedSetsFromFeatures]]. STRONG references:
-    * Spark's CacheManager pins the cached plan regardless of this
-    * registry, so a weak ref could be GC-cleared while the blocks are
-    * still resident — releasePersisted would then silently skip blocks
-    * it can no longer reach. The frame objects themselves are plan-sized
-    * (small); the registry is drained on every release call.
+  /** Release the calling thread's current [[Materialize]] scope: every
+    * pin made there so far (the code arrays above among them). Callers
+    * that run queries back to back on one thread call it between them.
     */
-  private val persisted =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-
-  /** Persist an arbitrary frame under the same lifecycle as the dedup
-    * code arrays: MEMORY_AND_DISK now, released by the next
-    * [[releasePersisted]] call. For multi-branch compositions whose
-    * shared stage would otherwise recompute a cascade per consuming
-    * aggregate (the internal code-array index above is the in-tree
-    * user; composition queries now favor localCheckpoint, which also
-    * truncates lineage).
-    */
-  def trackPersist(df: DataFrame): DataFrame = {
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    persisted.add(cached)
-    cached
-  }
-
-  /** Checkpointed frames whose blocks must OUTLIVE the producing call:
-    * a returned result built on a localCheckpoint cannot release its
-    * blocks before the caller's action, because the caller may RE-PLAN
-    * the query (DataFrameWriter builds a fresh QueryExecution with new
-    * exchanges, so registered shuffle outputs are NOT reused) and the
-    * re-planned map stages read the checkpoint blocks again. Found by
-    * the gate-lifted q43 verification run: eager unpersist of the
-    * fixpoint edge set made write-after-connectedComponents die with
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. Registered frames are released
-    * by the next [[releasePersisted]] — the drain point every harness
-    * calls between queries (`graft.Harness.coldReset`).
-    */
-  private val checkpointed =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
-
-  def trackCheckpoint(df: DataFrame): DataFrame = {
-    checkpointed.add(df)
-    df
-  }
-
-  /** Unpersists every cached code-array frame produced so far. Call after
-    * the action that consumes a dedup pipeline's result when the session
-    * is long-lived or the input files may change between runs (the
-    * persisted plans otherwise both pin storage blocks and can be
-    * semantically matched by a later run over the mutated path).
-    */
-  def releasePersisted(): Unit = {
-    var df = persisted.poll()
-    while (df != null) {
-      try df.unpersist(blocking = false)
-      catch { case scala.util.control.NonFatal(_) => }
-      df = persisted.poll()
-    }
-    var cp = checkpointed.poll()
-    while (cp != null) {
-      try GraftSqlBridge.unpersistCheckpoint(cp, blocking = false)
-      catch { case scala.util.control.NonFatal(_) => }
-      cp = checkpointed.poll()
-    }
-  }
+  def releasePersisted(): Unit = Materialize.releaseScope()
 
   /** The (index, probe) prefix tables SLICED from the sorted code arrays
     * (same contract as the former window-ranked variant): `__f` is the
@@ -422,8 +355,8 @@ object Dedup {
       bands: Int = 8,
       includeMinHashCandidates: Boolean = true): DataFrame = {
     // pinned: the shingle-set frame feeds the dictionary aggregate AND
-    // the code join (plus the optional MinHash band pass) — see Par.pin
-    val sets = Par.pin(Par.widen(docs).select(col(idCol).as("id"),
+    // the code join (plus the optional MinHash band pass)
+    val sets = Materialize.pin(Par.widen(docs).select(col(idCol).as("id"),
       array_distinct(shingles(col(textCol), shingleSize)).as("fset")))
     val (exploded, dict) = featureTables(sets)
     val codes = codedSetsFromFeatures(exploded, dict)
@@ -489,8 +422,8 @@ object Dedup {
       threshold: Double = 0.7, shingleSize: Int = 3,
       paragraphs: Column => Column = blankLineParagraphs): DataFrame = {
     // pinned: the unit table feeds the whole dedup cascade AND the final
-    // reassembly join — see Par.pin
-    val units = Par.pin(Par.widen(docs)
+    // reassembly join
+    val units = Materialize.pin(Par.widen(docs)
       .select(col(idCol).cast("long").as("__did"),
         posexplode(paragraphs(col(textCol))).as(Seq("__pidx", "__para")))
       // unit ids pack (doc, paragraph) into one long join key — cheaper
@@ -583,8 +516,8 @@ object Dedup {
       numHashes: Int = 32,
       bands: Int = 8): DataFrame = {
     // pinned: the shingle-set frame feeds the signature aggregate, the
-    // dictionary aggregate, and the code join — see Par.pin
-    val sets = Par.pin(Par.widen(docs).select(col(idCol).as("id"),
+    // dictionary aggregate, and the code join
+    val sets = Materialize.pin(Par.widen(docs).select(col(idCol).as("id"),
       array_distinct(shingles(col(textCol), shingleSize)).as("fset")))
     val sigs = portableSignatures(sets, numHashes)
     val cands = portableBandCandidates(sigs, numHashes, bands)
@@ -704,24 +637,23 @@ object Dedup {
     // pinned twice: `sets` feeds the signature aggregate AND the
     // dictionary/code branch; `sigs` feeds candidate banding AND both
     // sides of the estimate join (3 consumers — per-stage metrics showed
-    // the md5 signature aggregate executing three times) — see Par.pin
-    val sets = Par.pin(Par.widen(docs).select(col(idCol).as("id"),
+    // the md5 signature aggregate executing three times). The estimate
+    // joins onto the verified pairs (one row per candidate either way),
+    // so the candidates are built once and no pair-level join remains.
+    val sets = Materialize.pin(Par.widen(docs).select(col(idCol).as("id"),
       array_distinct(shingles(col(textCol), shingleSize)).as("fset")))
-    val sigs = Par.pin(portableSignatures(sets, numHashes))
-    val cands = portableBandCandidates(sigs, numHashes, bands)
+    val sigs = Materialize.pin(portableSignatures(sets, numHashes))
+    val (exploded, dict) = featureTables(sets)
+    val exact = codedVerifyFromCodes(portableBandCandidates(sigs, numHashes, bands),
+      codedSetsFromFeatures(exploded, dict), threshold = 0.0)
     val sigA = sigs.select(col("id").as("id_a") +:
       (0 until numHashes).map(j => col(s"h$j").as(s"__a$j")): _*)
     val sigB = sigs.select(col("id").as("id_b") +:
       (0 until numHashes).map(j => col(s"h$j").as(s"__b$j")): _*)
-    val est = cands.join(sigA, "id_a").join(sigB, "id_b")
+    exact.join(sigA, "id_a").join(sigB, "id_b")
       .withColumn("__est", (0 until numHashes)
         .map(j => when(col(s"__a$j") === col(s"__b$j"), 1).otherwise(0))
         .reduce(_ + _).cast("double") / numHashes)
-      .select("id_a", "id_b", "__est")
-    val (exploded, dict) = featureTables(sets)
-    val exact = codedVerifyFromCodes(cands,
-      codedSetsFromFeatures(exploded, dict), threshold = 0.0)
-    est.join(exact, Seq("id_a", "id_b"))
       .groupBy(round(col("__est") - col("jaccard"), 1).as("err_bucket"))
       .agg(count(lit(1)).as("n_pairs"),
         round(avg(col("__est")), 6).as("avg_est"),
@@ -931,8 +863,8 @@ object Dedup {
       n: Int = 5,
       threshold: Double = 0.6): DataFrame = {
     // pinned: the ngram-set frame feeds the dictionary aggregate and the
-    // code join — see Par.pin
-    val sets = Par.pin(Par.widen(docs)
+    // code join
+    val sets = Materialize.pin(Par.widen(docs)
       .select(col(idCol).as("id"), charNgrams(col(textCol), n).as("fset")))
     val codes = codedSets(sets)
     val (index, probe) = prefixTables(codes, threshold)
@@ -1043,11 +975,9 @@ object Dedup {
     * converges in O(log^2 n) rounds regardless of component diameter, so
     * a 100M-node duplicate graph needs ~dozens of shuffles, not
     * O(diameter) like naive label propagation. Each round's edge set is
-    * `localCheckpoint`ed (materialized, lineage truncated) — without the
-    * cut, Catalyst re-analyzes a plan that doubles per round and planning
-    * time explodes long before data size matters. On a cluster with a
-    * checkpoint dir configured, `checkpoint()` would add fault tolerance;
-    * the algorithm is unchanged.
+    * pinned ([[Materialize.pin]]) — without the cut, Catalyst re-analyzes
+    * a plan that doubles per round and planning time explodes long before
+    * data size matters.
     *
     * Convergence is detected by a per-round (count, xor-of-hash)
     * signature and then CONFIRMED exactly (one anti-join on the terminal
@@ -1117,7 +1047,7 @@ object Dedup {
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Materialize.pin)
 
     // Small-graph fast path: near-dup edge sets are usually FAR smaller
     // than the corpus (dedup pairs, not documents). Below the threshold
@@ -1130,7 +1060,7 @@ object Dedup {
     val edgeCount = edges.count()
     if (edgeCount <= smallGraphEdgeThreshold) {
       val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      GraftSqlBridge.unpersistCheckpoint(edges, blocking = true) // collected — release the block
+      Materialize.release(edges) // collected
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var root = x
@@ -1198,11 +1128,11 @@ object Dedup {
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      // LAZY local checkpoint: the signature aggregate is the action that
-      // materializes it, so each round costs ONE job (eager checkpointing
-      // would spend a second job per round just to materialize — measured
-      // round overhead halves on small graphs where scheduling dominates)
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
+      // the signature aggregate is the action that builds the pin, so
+      // each round costs ONE job (a separate build job per round would
+      // double the round overhead on small graphs, where scheduling
+      // dominates)
+      val next = Materialize.pin(smallStar(largeStar(edges)))
       val nextSig = signature(next)
       if (nextSig == sig) {
         // exact confirmation, terminal round only: equal counts (from the
@@ -1210,13 +1140,13 @@ object Dedup {
         // anti-join job at the fixpoint, zero cost on every other round
         converged = next.join(edges, Seq("u", "v"), "left_anti").isEmpty
       }
-      GraftSqlBridge.unpersistCheckpoint(edges, blocking = false)
+      Materialize.release(edges)
       edges = next
       sig = nextSig
       iter += 1
     }
     if (!converged) {
-      GraftSqlBridge.unpersistCheckpoint(edges, blocking = true)
+      Materialize.release(edges)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds")
     }
@@ -1230,19 +1160,9 @@ object Dedup {
     val labeled = edges.select(col("u").as("node"), col("v").as("component"))
       .union(edges.select(col("v").as("node"), col("v").as("component")))
       .groupBy(col("node")).agg(min(col("component")).as("component"))
-
-    // Block-release discipline: the per-round checkpoints were released
-    // as each round superseded them; the FIXPOINT edge set (O(nodes) —
-    // one star edge per non-minimum node, far below the input edge
-    // volume) must outlive this call because the caller's action may
-    // re-plan the query (a DataFrameWriter builds a fresh
-    // QueryExecution, so shuffle-output reuse cannot be assumed — the
-    // prior eager unpersist here made write-after-CC fail with
-    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in the gate-lifted q43 run).
-    // Deferred release via the persisted-registry lifecycle: Verify,
-    // Bench, and ScaleProbe drain it between queries, so a long-lived
-    // session still accumulates nothing.
-    trackCheckpoint(edges)
+    // the FIXPOINT edge set stays in the caller's scope: the caller's
+    // action may re-plan the query (a DataFrameWriter builds a fresh
+    // QueryExecution), and the re-planned stages read it again
     labeled
   }
 

@@ -27,28 +27,6 @@ import org.apache.spark.sql.DataFrame
   * original single map task.
   */
 object Par {
-  /** Pin a MULTI-CONSUMER frame: one materialization every downstream
-    * branch reads, instead of one re-execution of the frame's whole
-    * subtree per branch. The dedup cascades fan one prepared frame into
-    * 2-3 aggregation branches whose pushed filters/pruning differ, so
-    * exchange reuse does not fire and the scan + kernel (and any widen
-    * exchange) re-run per branch — per-stage metrics showed the widen
-    * map executing 3x serially in q93 and the md5 signature aggregate
-    * 3x in q180. localCheckpoint (MEMORY_AND_DISK, lineage truncated)
-    * is the house pattern (q191/q192/q201): persist() is defeated by
-    * HOF-lambda plan canonicalization. Blocks drain at the
-    * releasePersisted boundary. Streaming frames pass through
-    * (checkpointing a streaming frame is unsupported; their operators
-    * run per micro-batch). Cluster caveat: like every localCheckpoint,
-    * blocks are executor-local — an executor loss mid-query fails the
-    * query (documented posture; the rank pin's -Dgraft.rank.pin
-    * precedent applies if this ever needs a reliable spelling).
-    */
-  def pin(df: DataFrame): DataFrame = {
-    if (df.isStreaming) return df
-    Dedup.trackCheckpoint(df.localCheckpoint())
-  }
-
   def widen(df: DataFrame): DataFrame = {
     // Streaming frames cannot be partition-inspected (.rdd is a batch-only
     // surface) — their parallelism is the micro-batch source's concern;

@@ -220,11 +220,10 @@ object Robots {
     */
   def policyVerdicts(targets: DataFrame, policies: DataFrame,
       broadcastHostGate: Long = defaultBroadcastHostGate): DataFrame = {
-    // persist the compiled dim: the gate count AND the join both consume
+    // pin the compiled dim: the gate count AND the join both consume
     // it, and the robots-parse MapPartitions would otherwise run twice
-    // per call (r16 review finding); released at the registry drain
-    // Verify/Bench/ScaleProbe already run between queries
-    val pol = Dedup.trackPersist(policies)
+    // per call
+    val pol = Materialize.pin(policies)
     val dim = if (pol.count() <= broadcastHostGate) broadcast(pol) else pol
     // pass the targets' columns through (a composed pipeline carries the
     // url alongside host/path); the compiled rule blob is dropped

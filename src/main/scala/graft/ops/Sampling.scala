@@ -354,7 +354,7 @@ object Sampling {
       .withColumn("b", graft.ops.Classify.tokenBucket(col("tok"), dim))
       .groupBy(col("id"), col("tgt"), col("b"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // feeds the count collect, the scoring pass, and K
+      .transform(Materialize.pin) // feeds the count collect, the scoring pass, and K
 
     val tot = feats.agg(
       sum(when(col("tgt"), col("cnt")).otherwise(0L)),

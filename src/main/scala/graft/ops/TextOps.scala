@@ -712,7 +712,7 @@ object TextOps {
     * freq-weighted over distinct words, so all later rounds run on
     * vocabulary-scale data, not corpus-scale); each round is one
     * map-side-combinable pair count + a 1-row argmax collect + one
-    * row-local fold re-segmentation. Per-round frames are persisted and
+    * row-local fold re-segmentation. Per-round frames are pinned and
     * the previous round released, so lineage and memory stay O(1) in the
     * round count.
     */
@@ -722,13 +722,12 @@ object TextOps {
     val spark = docs.sparkSession
     import spark.implicits._
     // word-frequency table; symbols start as characters
-    var words = docs
+    var words = Materialize.pin(docs
       .filter(col(textCol).isNotNull)
       .select(explode(split(lower(col(textCol)), "\\s+")).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .select(split(col("w"), "").as("syms"), col("freq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(split(col("w"), "").as("syms"), col("freq")))
 
     // one non-overlapping left-to-right merge pass over a symbol array
     def applyMerge(l: String, r: String): Column = {
@@ -763,18 +762,17 @@ object TextOps {
         .limit(1)
         .as[(String, String, Long)].collect()
       if (best.isEmpty) {
-        words.unpersist()
+        Materialize.release(words)
         return merges.result().toDF("rank", "left", "right", "pair_freq")
       }
       val (l, r, pf) = best.head
       merges += ((rank, l, r, pf))
-      val next = words.select(applyMerge(l, r).as("syms"), col("freq"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      next.count() // materialize before releasing the previous round
-      words.unpersist()
+      val next = Materialize.pin(words.select(applyMerge(l, r).as("syms"), col("freq")))
+      next.count() // build before releasing the previous round
+      Materialize.release(words)
       words = next
     }
-    words.unpersist()
+    Materialize.release(words)
     merges.result().toDF("rank", "left", "right", "pair_freq")
   }
 
@@ -940,15 +938,14 @@ object TextOps {
     // into each branch's explode subtree, so canonicalization differs and
     // exchange reuse never fires — per-stage metrics showed the corpus
     // explode map stage executing FOUR times (4× the scan + lambda-explode
-    // CPU and 4× its shuffle write). localCheckpoint truncates the lineage
-    // into one LogicalRDD every consumer reads (the q192/q201 pattern;
-    // persist() is defeated by the HOF-lambda plan's canonicalization).
-    // evc is the aggregate — (src × trigram)-scale, far smaller than the
-    // token stream — and the blocks drain at releasePersisted.
-    val evc = graft.ops.Dedup.trackCheckpoint(
+    // CPU and 4× its shuffle write). The pin is one node every consumer
+    // reads. evc is the aggregate — (src × trigram)-scale, far smaller
+    // than the token stream — and is hash-partitioned by trigram, so c3
+    // and the final event-side join read it without an exchange.
+    val evc = Materialize.pin(
       ev.groupBy(col("src"), col("u"), col("v"), col("w"))
         .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint())
+        .repartition(col("u"), col("v"), col("w")))
     val c3 = evc.groupBy(col("u"), col("v"), col("w"))
       .agg(sum(col("cnt")).as("c3"))
     val c2 = c3.groupBy(col("u"), col("v"))
@@ -1074,12 +1071,11 @@ object TextOps {
     require(seedExtra >= 0 && maxPieceLen >= 1 && emRounds >= 1 && maxWordLen >= 1)
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = Par.widen(docs)
+    val words = Materialize.pin(Par.widen(docs)
       .filter(col(textCol).isNotNull)
       .select(explode(split(lower(col(textCol)), "\\s+")).as("w"))
       .filter(col("w") =!= "" && length(col("w")) <= maxWordLen)
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("w")).agg(count(lit(1)).as("freq")))
     try {
       // seed: freq-weighted counts of ALL substrings length 1..maxPieceLen
       // (overlapping occurrences, the Kudo seed statistic)
@@ -1122,7 +1118,7 @@ object TextOps {
         .map(p => (p, counts.getOrElse(p, 0L),
           quantLog(counts.getOrElse(p, 0L), tot, vocabPieces.length)))
         .toDF("piece", "cnt", "logp_q")
-    } finally words.unpersist()
+    } finally Materialize.release(words)
   }
 
   /** Out-of-vocabulary rate per source against the corpus' own top-N

@@ -1432,13 +1432,12 @@ object CrawlQueries {
       val htmlPages = sniffed.filter(col("kind") === "html")
       val r4 = htmlPages.agg(count(lit(1)),
         count_distinct(concat_ws("/", col("kind"), col("charset")))).head()
-      val ex = graft.ops.Html.extractPages(htmlPages)
-        .filter(col("content_words") > 0).persist()
+      val ex = graft.ops.Materialize.pin(graft.ops.Html.extractPages(htmlPages)
+        .filter(col("content_words") > 0))
       val r5 = ex.agg(count(lit(1)), sum(col("content_words"))).head()
       val grp = ex.groupBy(sha2(col("content"), 256).as("ck"))
         .agg(count(lit(1)).as("n"))
       val r6 = grp.agg(count(lit(1)), sum(col("n") - 1)).head()
-      ex.unpersist()
       Seq(
         (0L, "discovered", r0.getLong(0), r0.getLong(1)),
         (1L, "frontier", r1.getLong(0), r1.getLong(1)),

@@ -526,10 +526,10 @@ object CurationQueries {
     // paragraph-level near-dup with reassembly → doc-level 3-gram
     // near-dup (keep-first) → contamination canary screen → UniMax
     // language mix → 512-token sequence packing. Stage frames are
-    // localCheckpoint-ed once so the cascades run once, not per
-    // attrition row; rows 0-6 count surviving docs/tokens, row 7 the
-    // allocated token budget, row 8 the packed bins/tokens. Doubles as
-    // the composition regression test over the whole operator family.
+    // pinned once so the cascades run once, not per attrition row;
+    // rows 0-6 count surviving docs/tokens, row 7 the allocated token
+    // budget, row 8 the packed bins/tokens. Doubles as the composition
+    // regression test over the whole operator family.
     QuerySpec("q192_curation_datacard", Plain, (s, dir) => {
       val T = graft.ops.TextOps
       val De = graft.ops.Dedup
@@ -541,54 +541,24 @@ object CurationQueries {
         when(m4 === 0, lit("é")).when(m4 === 1, lit("Å"))
           .when(m4 === 2, lit("Ω")).otherwise(lit("")))
       val text1 = T.nfcNormalize(T.fixMojibake(planted))
-      // Stage frames are LOCAL-CHECKPOINTED, not persisted: the cascade
-      // plans carry lambda/native expressions whose canonicalized forms
-      // defeat CacheManager's lookup (measured: a persisted s6 re-ran
-      // its whole lineage on EVERY downstream aggregate, ~2.6 s each at
-      // sf0.1), while localCheckpoint truncates the lineage into a
-      // LogicalRDD that every consumer reads directly — each stage
-      // computes exactly once. The frames are survivor-corpus-sized
-      // rows, freed by the ContextCleaner when unreachable.
-      val base = t(s, dir, "documents")
+      val M = graft.ops.Materialize
+      val base = M.pin(t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"),
           T.tokenCount(col("text")).cast("long").as("tok0"), text1.as("text1"))
         .withColumn("tok1", T.tokenCount(col("text1")).cast("long"))
         .withColumn("p2", T.langId(col("text1")) =!= "und")
         .withColumn("p3", T.qualityScore(col("text1")) >= 0.5 &&
           T.uniqueTokenRatio(col("text1")) >= 0.4)
-        // widen BEFORE the checkpoint (same rationale as q201: the
+        // widen BEFORE the pin (same rationale as q201: the
         // mojibake/NFC/langid/quality kernels parallelize and every
         // downstream cascade's Par.widen gate then no-ops).
-        .transform(graft.ops.Par.widen)
-        .localCheckpoint()
-      val s3 = base.filter(col("p2") && col("p3"))
-      val pd = De.paragraphDedup(s3.select(col("doc_id"), col("text1")),
-        "doc_id", "text1", threshold = 0.7,
-        paragraphs = De.tokenWindows(20))
-      val s4 = s3
-        .join(pd.filter(col("n_kept") > 0)
-          .select(col("doc_id"), col("text_kept").as("text2")), "doc_id")
-        .withColumn("tok2", T.tokenCount(col("text2")).cast("long"))
-        .localCheckpoint()
-      val pairs = De.nearDuplicatesExact(
-        s4.select(col("doc_id"), col("text2")), "doc_id", "text2",
-        threshold = 0.6, includeMinHashCandidates = false)
-      val s5 = s4.join(
-        pairs.select(col("id_b").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-      val canaries = Seq("hash join", "fast data", "data data")
-      val s6 = s5.filter(aggregate(
-        T.ahoCounts(col("text2"), canaries), lit(0L), (a, x) => a + x) === 0L)
-        .localCheckpoint()
-      // the cascades' own code-array caches are no longer needed
-      De.releasePersisted()
+        .transform(graft.ops.Par.widen))
       // EAGER stage aggregates into a local 9-row frame: a lazy
       // 9-branch union would hand Catalyst the full multi-cascade
       // lineage NINE times over — at sf0.1 the analysis/optimization of
       // that tree alone cost ~45 s (55.8 s total vs ~13 s for the
       // stage computations; the plan string OOMs a 1 GB driver just
-      // printing). Each stage is one aggregate over a persisted frame;
+      // printing). Each stage is one aggregate over a pinned frame;
       // rows 0-3 share one conditional-aggregation pass over `base`.
       // The datacard is an attrition REPORT — 9 rows — so a local
       // result frame is its natural shape (the q190 model-artifact
@@ -606,17 +576,37 @@ object CurationQueries {
           coalesce(sum(col("tok2")), lit(0L))).first()
         (r.getLong(0), r.getLong(1))
       }
-      val (d4, t4) = stageOf(s4)
-      val (d5, t5) = stageOf(s5)
-      val (d6, t6) = stageOf(s6)
-      val um = graft.ops.Sampling.unimaxAllocation(
-        s6, Seq("lang"), col("tok2"), budget = 0.5 * t6, maxEpochs = 2.0)
-      val t7 = um.agg(coalesce(round(sum(col("alloc_tokens")), 0), lit(0.0))
-        .cast("long")).first().getLong(0)
-      val p8 = graft.ops.Packing.packSequences(
-        s6.select(col("source"), col("doc_id"), col("tok2")),
-        "source", "doc_id", "tok2", seqLen = 512L)
-        .agg(count(lit(1)), coalesce(sum(col("seq_tokens")), lit(0L))).first()
+      // the stage frames and the cascades' own pins (code arrays, shingle
+      // sets) are released once the stage aggregates are collected
+      val ((d4, t4), (d5, t5), (d6, t6), t7, p8) = M.scoped {
+        val s3 = base.filter(col("p2") && col("p3"))
+        val pd = De.paragraphDedup(s3.select(col("doc_id"), col("text1")),
+          "doc_id", "text1", threshold = 0.7,
+          paragraphs = De.tokenWindows(20))
+        val s4 = M.pin(s3
+          .join(pd.filter(col("n_kept") > 0)
+            .select(col("doc_id"), col("text_kept").as("text2")), "doc_id")
+          .withColumn("tok2", T.tokenCount(col("text2")).cast("long")))
+        val pairs = De.nearDuplicatesExact(
+          s4.select(col("doc_id"), col("text2")), "doc_id", "text2",
+          threshold = 0.6, includeMinHashCandidates = false)
+        val s5 = M.pin(s4.join(
+          pairs.select(col("id_b").as("doc_id")).distinct(),
+          Seq("doc_id"), "left_anti"))
+        val canaries = Seq("hash join", "fast data", "data data")
+        val s6 = M.pin(s5.filter(aggregate(
+          T.ahoCounts(col("text2"), canaries), lit(0L), (a, x) => a + x) === 0L))
+        val st6 = stageOf(s6)
+        val um = graft.ops.Sampling.unimaxAllocation(
+          s6, Seq("lang"), col("tok2"), budget = 0.5 * st6._2, maxEpochs = 2.0)
+        val t7 = um.agg(coalesce(round(sum(col("alloc_tokens")), 0), lit(0.0))
+          .cast("long")).first().getLong(0)
+        val p8 = graft.ops.Packing.packSequences(
+          s6.select(col("source"), col("doc_id"), col("tok2")),
+          "source", "doc_id", "tok2", seqLen = 512L)
+          .agg(count(lit(1)), coalesce(sum(col("seq_tokens")), lit(0L))).first()
+        (stageOf(s4), stageOf(s5), st6, t7, p8)
+      }
       import s.implicits._
       Seq(
         (0L, "input", r03.getLong(0), r03.getLong(1)),
@@ -799,14 +789,14 @@ object CurationQueries {
           (T.langId(col("text")) =!= "und").as("p2"),
           (T.qualityScore(col("text")) >= 0.5 &&
             T.uniqueTokenRatio(col("text")) >= 0.4).as("p3"))
-        // widen BEFORE the checkpoint: the CDF scan is a handful of
+        // widen BEFORE the pin: the CDF scan is a handful of
         // partitions, so (a) the langid/quality kernels above would
         // otherwise serialize in its tasks and (b) every per-version
         // filter downstream would trip Par.widen's gate and re-shuffle
-        // the growing corpus once per iteration; checkpointing wide
-        // makes all of those no-ops (one exchange total).
+        // the growing corpus once per iteration; pinning wide makes all
+        // of those no-ops (one exchange total).
         .transform(graft.ops.Par.widen)
-        .localCheckpoint()
+        .transform(graft.ops.Materialize.pin)
 
       def stageRow(df: DataFrame): Array[Long] = {
         val r = df.agg(
@@ -827,7 +817,7 @@ object CurationQueries {
 
       // --- incremental fold over versions (version-scale driver loop).
       // The per-version stage stats are additive over the disjoint
-      // version batches, so ONE grouped aggregate over the checkpointed
+      // version batches, so ONE grouped aggregate over the pinned
       // CDF frame yields every version's row (and the version list) in a
       // single job, folded driver-side — replaces the former
       // distinct-collect plus one six-column aggregate job per version
@@ -847,9 +837,9 @@ object CurationQueries {
       }
       var admN = 0L; var admT = 0L
       // `seen` after version v is exactly the passing docs of versions
-      // ≤ v — a filter over the ALREADY-checkpointed `g`, not a growing
-      // unionByName + localCheckpoint chain (same rows, no per-version
-      // re-materialization job, no quadratic checkpoint bytes).
+      // ≤ v — a filter over the ALREADY-pinned `g`, not a growing
+      // unionByName + pin chain (same rows, no per-version
+      // re-materialization job, no quadratic pinned bytes).
       def passUpTo(vMax: Long) = g
         .filter(col("v") <= vMax && col("p2") && col("p3"))
         .select(col("doc_id"), col("text"), col("tok0"))
@@ -858,24 +848,23 @@ object CurationQueries {
           .select(col("doc_id"), col("text"), col("tok0"))
         val seen =
           if (i == 0) bPass.limit(0) else passUpTo(versions(i - 1))
-        val adm = graft.ops.Dedup.incrementalDedup(
-          seen, bPass, "doc_id", "text", threshold = 0.6)
-        val (an, at) = survivorRow(adm)
+        // each version's cascade pins are released with its own scope
+        val (an, at) = graft.ops.Materialize.scoped(survivorRow(
+          graft.ops.Dedup.incrementalDedup(seen, bPass, "doc_id", "text", threshold = 0.6)))
         admN += an; admT += at
-        graft.ops.Dedup.releasePersisted()
       }
 
       // --- from-scratch over the full corpus, smaller-id-wins
       val fr = stageRow(g)
       val fPass = g.filter(col("p2") && col("p3"))
         .select(col("doc_id"), col("text"), col("tok0"))
-      val pairs = graft.ops.Dedup.nearDuplicatesExact(fPass, "doc_id", "text",
-        threshold = 0.6, includeMinHashCandidates = false)
-      val surv = fPass.join(
-        pairs.select(col("id_b").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      val (fn, ft) = survivorRow(surv)
-      graft.ops.Dedup.releasePersisted()
+      val (fn, ft) = graft.ops.Materialize.scoped {
+        val pairs = graft.ops.Dedup.nearDuplicatesExact(fPass, "doc_id", "text",
+          threshold = 0.6, includeMinHashCandidates = false)
+        survivorRow(fPass.join(
+          pairs.select(col("id_b").as("doc_id")).distinct(),
+          Seq("doc_id"), "left_anti"))
+      }
 
       Seq(
         (0L, "input", acc(0), acc(1), fr(0), fr(1)),

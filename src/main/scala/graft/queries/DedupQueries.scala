@@ -823,7 +823,7 @@ object DedupQueries {
       val docs = t(s, dir, "documents")
       val De = graft.ops.Dedup
       val threshold = 0.7
-      val sets = graft.ops.Par.pin(
+      val sets = graft.ops.Materialize.pin(
         graft.ops.Par.widen(docs).select(col("doc_id").as("id"),
           array_distinct(De.shingles(col("text"), 3)).as("fset")))
       val (exploded, dict) = De.featureTables(sets)

@@ -33,13 +33,10 @@ object PerfAB {
     Harness.prepare(spark, sfDir)
 
     def run(q: QuerySpec, conf: Seq[(String, String)]): Double = {
-      Harness.coldReset(spark)
       val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
       conf.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
-        val t0 = System.nanoTime()
-        q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        Harness.timed(spark)(q.build(spark, sfDir).write.format("noop").mode("overwrite").save())
       } finally saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)

@@ -67,15 +67,14 @@ object QueryProfile {
 
     (1 to passes).foreach { p =>
       selected.foreach { q =>
-        graft.Harness.coldReset(spark)
         val desc = s"${q.name}#$p"
         currentDesc = desc
         spark.sparkContext.setJobDescription(desc)
-        val t0 = System.nanoTime()
-        try q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"FAIL ${q.name}: ${e.getMessage}") }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val dt = graft.Harness.timed(spark) {
+          try q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
+          catch { case e: Throwable =>
+            System.err.println(s"FAIL ${q.name}: ${e.getMessage}") }
+        }
         println(f"\n=== $desc%s  total ${dt}%.3f s  jobs=${jobCount(desc)}%d")
         val rows = stages.filter(_.desc == desc).sortBy(-_.wallMs)
         println(f"${"wall_ms"}%8s ${"tasks"}%5s ${"run_ms"}%8s ${"cpu_ms"}%8s " +
@@ -87,7 +86,9 @@ object QueryProfile {
         }
         val tot = rows.map(_.wallMs).sum
         println(f"stage wall sum ${tot}%d ms over ${rows.size}%d stages " +
-          f"(whole-query ${dt * 1000}%.0f ms; gap = scheduling/driver/plan)")
+          f"(whole-query ${dt * 1000}%.0f ms; gap = scheduling/driver/plan), " +
+          f"shuffle read ${rows.map(_.shReadMb).sum}%.1f MB, " +
+          f"write ${rows.map(_.shWriteMb).sum}%.1f MB")
       }
     }
     spark.stop()

@@ -1039,12 +1039,7 @@ object ScaleProbe {
         "cc_edges_pinned", "q229_domain_axis", "q231_ttl_axis")
       spark.conf.set("spark.sql.shuffle.partitions",
         (if (pinnedPartitionOps(name)) cpus else cpus * k).toString)
-      val ts = (1 to reps).map { _ =>
-        graft.Harness.coldReset(spark)
-        val t0 = System.nanoTime()
-        rows((name, k)) = fn(k)
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+      val ts = (1 to reps).map(_ => graft.Harness.timed(spark)(rows((name, k)) = fn(k))).sorted
       medians((name, k)) = ts(ts.size / 2)
       println(f"$name%-22s k=$k%-3d rows=${rows((name, k))}%-8d median=${medians((name, k))}%6.2f s  runs=${ts.map(t => f"$t%.2f").mkString(",")}")
     }

@@ -45,12 +45,9 @@ object ServerSplit {
 
     cases.foreach { case (name, fn) =>
       val runs = (1 to reps).map { _ =>
-        graft.Harness.coldReset(spark)
         server.resetPhases()
         server.signCount.set(0L)
-        val t0 = System.nanoTime()
-        fn()
-        val e2eMs = (System.nanoTime() - t0) / 1e6
+        val e2eMs = graft.Harness.timed(spark)(fn()) * 1e3
         val p = server.phaseNanos.map { case (k, v) => k -> v.get() / 1e6 }
         (e2eMs, p.getOrElse("snapshot", 0.0), p.getOrElse("listing", 0.0),
           p.getOrElse("render", 0.0), server.signCount.get())

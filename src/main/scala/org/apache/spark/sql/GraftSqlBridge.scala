@@ -27,20 +27,59 @@ object GraftSqlBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Release the storage blocks of a `localCheckpoint`ed Dataset.
+  /** `ds` cached once for all its consumers, and the call that drops
+    * the cache. The cache is the in-memory relation a `persist` call
+    * would build (`CacheManager.cacheQuery`'s session handling) but is
+    * never entered in the CacheManager, so no consumer's plan has to
+    * match it. The frame is a `LogicalRDD` leaf over the relation's rows
+    * with the scan's partitioning and ordering, as a `localCheckpoint`
+    * leaf has: consumers plan it with no cache stage of its own, two
+    * scans of it can share an exchange, and a lost block recomputes from
+    * the lineage the cache keeps. Under AQE, making the leaf runs `ds`'s
+    * shuffle stages; the last stage runs, and fills the cache, inside
+    * the first action over the leaf.
     *
-    * `Dataset.unpersist()` only uncaches CacheManager entries — a
-    * checkpointed Dataset's data lives on the INTERNAL RDD behind its
-    * `LogicalRDD` node, which unpersist never touches, so iterative
-    * algorithms that checkpoint per round would leak storage blocks for
-    * the whole session (they are only reclaimed when the GC happens to
-    * collect the RDD reference). This frees them deterministically.
+    * The leaf's size is what `ds`'s last stage reads: the runtime size
+    * of each finished stage it reads plus the size of each other input
+    * (an earlier pin, a file scan); the planner's estimate of `ds` when
+    * an input has no size or `ds` has no shuffle. Estimates of derived frames are off by
+    * orders of magnitude both ways (a 2 MB code-array aggregate
+    * estimates at 10 TB, a 19 MB trigram count at 0.4 MB), and joins
+    * over the pin pick broadcast or shuffle from this size.
     */
-  def unpersistCheckpoint(ds: Dataset[_], blocking: Boolean): Unit =
-    ds.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed match {
-      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking)
-      case _                        => ()
+  def pin(ds: Dataset[_]): (DataFrame, () => Unit) = {
+    val session = ds.sparkSession.asInstanceOf[classic.SparkSession]
+    val conf = session.sessionState.conf
+    val off = Seq(internal.SQLConf.AUTO_BUCKETED_SCAN_ENABLED) ++
+      (if (conf.getConf(internal.SQLConf.CAN_CHANGE_CACHED_PLAN_OUTPUT_PARTITIONING)) Nil
+       else Seq(internal.SQLConf.ADAPTIVE_EXECUTION_APPLY_FINAL_STAGE_SHUFFLE_OPTIMIZATIONS))
+    val cacheSession = classic.SparkSession.getOrCloneSessionWithConfigsOff(session, off)
+    val relation = cacheSession.withActive {
+      execution.columnar.InMemoryRelation(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+        cacheSession.sessionState.executePlan(
+          ds.asInstanceOf[classic.Dataset[_]].queryExecution.normalized), None)
     }
+    val scan = execution.columnar.InMemoryTableScanExec(relation.output, Nil, relation)
+    val rows = scan.execute()
+    val sizes = relation.cachedPlan match {
+      case a: execution.adaptive.AdaptiveSparkPlanExec =>
+        val last = a.executedPlan match {
+          case s: execution.adaptive.QueryStageExec => s.plan
+          case p                                    => p
+        }
+        last.collectLeaves().map {
+          case s: execution.adaptive.QueryStageExec => Some(s.getRuntimeStatistics.sizeInBytes)
+          case l                                    => l.logicalLink.map(_.stats.sizeInBytes)
+        }
+      case _ => Seq(None)
+    }
+    val size =
+      if (sizes.forall(_.isDefined)) sizes.flatten.sum else relation.computeStats().sizeInBytes
+    val leaf = execution.LogicalRDD(relation.output, rows, scan.outputPartitioning,
+      scan.outputOrdering)(session, originStats = Some(catalyst.plans.logical.Statistics(size)))
+    (classic.Dataset.ofRows(session, leaf), () => relation.cacheBuilder.clearCache())
+  }
 
   /** Streaming-flagged DataFrame over a computed InternalRow RDD — how a
     * Source hands a micro-batch whose rows come from arbitrary (non-file-

@@ -47,6 +47,16 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   var server: GraftServer = _
 
+  /** Queries whose shared frames are pinned: q86 ranks through the
+    * range-partitioned rank pin, q93 pins its shingle sets and MinHash
+    * signatures. Their single-JVM results are the executor-loss test's
+    * reference.
+    */
+  private val pinnedQueries = Seq("q86", "q93")
+  private var localRows: Map[String, Seq[String]] = Map.empty
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
   override def beforeAll(): Unit = {
     if (!sparkHome.exists(h => new java.io.File(h).isDirectory)) return
     // a leaked session from an earlier suite would pin the wrong master —
@@ -54,6 +64,15 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     // would getOrCreate against the leaked context and pin local[*])
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.getDefaultSession.foreach(_.stop())
+    val local = SparkSession.builder().master("local[2]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    // the reference run's pins are released before its context stops
+    try localRows = pinnedQueries
+      .map(id => id -> Harness.cold(local)(rows(Harness.select(id).head.build(local, sfDir)))).toMap
+    finally local.stop()
     spark.sparkContext.setLogLevel("WARN")
     SharedFixtures.ensure(spark, sfDir)
     server = new GraftServer(ServerConfig(bearerToken = Some(TOKEN)),
@@ -182,5 +201,30 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       build.select(col("o_orderkey").as("l_orderkey")).distinct(),
       Seq("l_orderkey"), "left_semi").count()
     assert(got === expected)
+  }
+
+  // Runs last: the killed executor is not replaced.
+  test("pinned frames recompute lost blocks from lineage after an executor dies") {
+    requireSparkHome()
+    val sc = spark.sparkContext
+    def cachedPartitions = sc.getRDDStorageInfo.map(_.numCachedPartitions).sum
+    graft.ops.Materialize.scoped {
+      val frames = pinnedQueries.map(id => id -> Harness.select(id).head.build(spark, sfDir))
+      frames.foreach { case (id, df) => assert(rows(df) === localRows(id), s"$id before the loss") }
+      val held = cachedPartitions
+      assert(held > 0, "the pinned frames hold blocks on the executors")
+      def alive = sc.statusTracker.getExecutorInfos.length
+      val before = alive
+      val victim = sc.parallelize(1 to 8, 8)
+        .map(_ => org.apache.spark.SparkEnv.get.executorId).collect().min
+      assert(sc.killExecutor(victim))
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while ((alive == before || cachedPartitions >= held) &&
+          System.nanoTime() < deadline) Thread.sleep(200)
+      assert(alive < before && cachedPartitions < held,
+        "the dead executor's blocks are gone")
+      // the same DataFrames again: lost blocks rebuild from lineage
+      frames.foreach { case (id, df) => assert(rows(df) === localRows(id), s"$id after the loss") }
+    }
   }
 }

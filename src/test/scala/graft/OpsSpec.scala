@@ -618,36 +618,37 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet
     val chain = (1L to 40L).sliding(2).map(s => (s(0), s(1))).toSeq
     for (threshold <- Seq(0L, 1L << 20)) {
-      val out = Dedup.connectedComponents(chain.toDF("a", "b"), "a", "b",
-        smallGraphEdgeThreshold = threshold)
-      if (threshold > 0)
-        // driver union-find path: nothing retained at all
-        assert(leaked.isEmpty, s"driver path leaked blocks: $leaked")
-      // The result must survive a WRITE — DataFrameWriter re-plans the
-      // query (fresh QueryExecution, no shuffle-output reuse), which is
-      // exactly how Verify/Bench consume it. The eager-unpersist version
-      // of the distributed path died here with
-      // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (r15 gate-lifted q43 run).
-      out.write.format("noop").mode("overwrite").save()
-      val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got.size === 40 && (1L to 40L).forall(n => got(n) == 1L))
-      // the distributed path's fixpoint blocks are retained until the
-      // registry drain — the lifecycle Verify/Bench/ScaleProbe run
-      // between queries — then nothing remains
-      Dedup.releasePersisted()
-      assert(leaked.isEmpty, s"blocks survive releasePersisted " +
+      Materialize.scoped {
+        val out = Dedup.connectedComponents(chain.toDF("a", "b"), "a", "b",
+          smallGraphEdgeThreshold = threshold)
+        if (threshold > 0)
+          // driver union-find path: nothing retained at all
+          assert(leaked.isEmpty, s"driver path leaked blocks: $leaked")
+        // The result must survive a WRITE — DataFrameWriter re-plans the
+        // query (fresh QueryExecution, no shuffle-output reuse), which is
+        // exactly how Verify/Bench consume it. The distributed path's
+        // fixpoint edges must still be pinned when it runs.
+        out.write.format("noop").mode("overwrite").save()
+        val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got.size === 40 && (1L to 40L).forall(n => got(n) == 1L))
+      }
+      // the distributed path's fixpoint pin lives until its scope ends —
+      // the lifecycle every harness runs a query in — then nothing remains
+      assert(leaked.isEmpty, s"blocks survive the scope " +
         s"(threshold=$threshold): $leaked")
     }
-    // 30 iterations: without the every-5-rounds lineage cut the logical
+    // 30 iterations: without the every-5-rounds plan cut the logical
     // plan doubles per iteration and analysis alone would dwarf the test
     val cycle = Seq(("a", "b", 1.0), ("b", "c", 1.0), ("c", "a", 1.0))
       .toDF("src", "dst", "p")
     val pr = Analytics.pageRank(cycle, 0.85, iterations = 30)
-    // same re-plan shape: the final ranks ride the LAST lineage cut's
-    // checkpoint blocks, which must outlive the call
+    // same re-plan shape: the final ranks ride the LAST cut's pin,
+    // which must outlive the call
     pr.write.format("noop").mode("overwrite").save()
     val ranks = pr.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     ranks.values.foreach(v => assert(math.abs(v - 1.0 / 3) < 1e-9))
+    // no scope is open here: the pins sit in the thread's outermost
+    // scope, which releasePersisted drains (the perfbench suite's path)
     Dedup.releasePersisted()
     assert(leaked.isEmpty, s"pageRank blocks survive releasePersisted: $leaked")
   }
