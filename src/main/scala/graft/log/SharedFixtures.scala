@@ -26,8 +26,20 @@ object SharedFixtures {
   def sfName(sfDir: String): String =
     Paths.get(sfDir).getFileName.toString
 
+  /** `target/` of the checkout these classes were compiled in (the
+    * nearest ancestor of the class directory holding `build.sbt`), or of
+    * the working directory when there is none: a second checkout builds
+    * its own fixtures and probe outputs instead of the first one's.
+    */
+  lazy val targetDir: String =
+    Option(getClass.getProtectionDomain.getCodeSource)
+      .flatMap(cs => Iterator.iterate(Paths.get(cs.getLocation.toURI))(_.getParent)
+        .takeWhile(_ != null).find(d => Files.isRegularFile(d.resolve("build.sbt"))))
+      .getOrElse(Paths.get(sys.props("user.dir")))
+      .resolve("target").toString
+
   def shareRoot(sfDir: String): String =
-    s"/root/repo/target/shares/${sfName(sfDir)}"
+    s"$targetDir/shares/${sfName(sfDir)}"
 
   /** Ensure all shared fixture tables exist + are registered; returns the
     * share root.

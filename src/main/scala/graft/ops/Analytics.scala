@@ -174,22 +174,28 @@ object Analytics {
     * inner join drops each type's first row exactly like the window's
     * isNotNull filter; (ts, tie) is a total order per type (tie is the
     * unique event id) so the pairing is bit-identical (OpsSpec pins both
-    * paths equal). Below the gate — the input scan fits one task wave,
-    * so the largest type sorts in one task anyway — the plain window is
-    * cheaper (the rank spelling costs two extra exchanges plus a pinned
-    * materialization; measured +0.5-1 s per graph query at sf0.1).
-    * Override via -Dgraft.edges.rankJoin=always|never (the CC
-    * smallGraphEdgeThreshold precedent) for gate-lifted verification.
+    * paths equal, forcing each side by partition count). Below the
+    * gate — the input scan fits one task wave, so the largest type sorts
+    * in one task anyway — the plain window is cheaper: the rank spelling
+    * adds two exchanges and a pin. Measured, window → rank join, s:
+    *  - graft.Bench at sf0.1 (one events file, so the window side by
+    *    default; local[4], median of 3 runs, each best of 2 passes):
+    *    q136 3.86 → 14.36, q139 2.59 → 5.22, q140 4.00 → 15.75,
+    *    q145 1.72 → 7.53, q146 2.71 → 10.79, q159 2.78 → 5.78,
+    *    q168 4.97 → 5.67, q236 4.57 → 6.61, q246 4.70 → 7.46,
+    *    q249 3.49 → 6.66, q251 3.49 → 3.72 (q236/q246 also take the
+    *    HyperBall side of [[neighborhoodFunction]]);
+    *  - ScaleProbe k=4 (four disjoint event copies, many input
+    *    partitions, so the rank side by default; median of 3 runs):
+    *    q136_triangles 7.99 → 37.46, q168_adamic_adar 12.98 → 17.06.
+    * So on one 4-core host the window is faster at both sizes; the
+    * rank join is kept for the cluster case the ≤ #types sort tasks of
+    * the window cannot spread over, which no measurement here covers.
     */
   private def useRankJoinEdges(events: DataFrame): Boolean =
-    sys.props.get("graft.edges.rankJoin") match {
-      case Some("always") => true
-      case Some("never")  => false
-      case _ =>
-        !events.isStreaming &&
-          events.queryExecution.toRdd.getNumPartitions >
-            events.sparkSession.sparkContext.defaultParallelism
-    }
+    !events.isStreaming &&
+      events.queryExecution.toRdd.getNumPartitions >
+        events.sparkSession.sparkContext.defaultParallelism
 
   private def lagPairs(
       events: DataFrame,
@@ -771,23 +777,6 @@ object Analytics {
 
   // ----------------------------------------------- neighborhood function
 
-  /** Exact/sketch split for [[neighborhoodFunction]], overridable via
-    * -Dgraft.anf.exactNodeThreshold (0 forces the HyperBall sketch path
-    * — the accuracy-pinned verification mode; unlike the CC gate lift,
-    * the two paths are NOT bit-equal, the sketch carries bounded HLL
-    * error, so the lift is pinned by OpsSpec error bounds, not by the
-    * oracle). The default is deliberately LOW: exact ANF is
-    * O(Σ_v |ball(v)| · deg) ≈ n²·d̄ join rows per hop — on a
-    * well-connected 1,500-node graph that is already ~10⁸ rows a hop
-    * (measured: 53 s at sf0.1 under a 64k gate), while HyperBall does
-    * the same graph in seconds at ~13% error. 512 nodes keeps the
-    * exact path where exactness is cheap and the answer is
-    * fixture-sized.
-    */
-  def defaultAnfNodeGate: Long =
-    sys.props.get("graft.anf.exactNodeThreshold").map(_.toLong)
-      .getOrElse(1L << 9)
-
   /** Neighborhood function N(h) = Σ_v |{w : dist(v, w) ≤ h}| per hop —
     * the quantity behind effective-diameter and reachability profiling
     * (Palmer/Gibbons/Faloutsos "ANF", KDD'02; Boldi, Rosa & Vigna
@@ -805,14 +794,24 @@ object Analytics {
     *    ANY graph size and O(maxHops) rounds, the 100 TB plan. N(h) is
     *    the rounded sum of per-node HLL estimates (~13% per-node error
     *    at m = 64; OpsSpec pins the summed error against the exact
-    *    path on a gate-lifted fixture).
+    *    path, passing a threshold of 0).
+    *
+    * The gate is a semantic choice as much as a cost one: the sketch is
+    * not bit-equal to the exact answer. Its default (512 nodes) keeps
+    * the exact path where exactness is cheap and the answer is
+    * fixture-sized; exact ANF is O(Σ_v |ball(v)| · deg) ≈ n²·d̄ join
+    * rows per hop. Measured at sf0.1 (above the gate; graft.Bench,
+    * local[4], s): HyperBall q236 4.57 / q246 4.70 (median of 3 runs,
+    * each best of 2 passes), exact q236 48.19 / q246 50.22 (threshold
+    * raised to 65,536, one pass). ScaleProbe's `anf_hyperball` times
+    * the sketch side alone: the exact side is quadratic there.
     *
     * Input: undirected edges (a, b). Output: (hop, n_pairs) for
     * hop = 0..maxHops, hop 0 counting the nodes themselves. Isolated
     * nodes (no edges) are out of frame on both paths.
     */
   def neighborhoodFunction(edges: DataFrame, maxHops: Int = 4,
-      exactNodeThreshold: Long = defaultAnfNodeGate): DataFrame = {
+      exactNodeThreshold: Long = 1L << 9): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val sym = edges.select(col("a").cast("long").as("u"),

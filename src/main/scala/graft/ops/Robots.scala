@@ -180,7 +180,7 @@ object Robots {
 
   /** Parse + compile robots bodies for a HOST DIM TABLE (host,
     * robots_txt) — one parse per host, never per URL; the result is the
-    * broadcast side of the frontier join.
+    * dim side of the frontier join.
     */
   def compilePolicies(robots: DataFrame, hostCol: String, txtCol: String,
       userAgent: String): DataFrame = {
@@ -194,43 +194,27 @@ object Robots {
       }).toDF("host", "rules", "crawl_delay")
   }
 
-  /** Driver/broadcast split for the policy join, the same size-gated
-    * pattern as [[Dedup.defaultEdgeGate]]: at or below this many hosts
-    * the compiled-policy dim gets an explicit `broadcast()` hint; above
-    * it the join strategy is left to the planner (AQE decides shuffle
-    * vs broadcast from runtime stats). Default 1M hosts ≈ low-GB of
-    * compiled blobs — the order of a comfortable broadcast side; a
-    * whole-web frontier (10⁷–10⁸ hosts × ~KB policies) must NOT be
-    * force-hinted or the driver OOMs instead of degrading to a shuffle
-    * join. Overridable via -Dgraft.robots.broadcastHostThreshold
-    * (0 forces the un-hinted path — gate-lifted verification mode).
-    */
-  def defaultBroadcastHostGate: Long =
-    sys.props.get("graft.robots.broadcastHostThreshold").map(_.toLong)
-      .getOrElse(1L << 20)
-
   /** Join URL targets (host, path) against compiled per-host policies
-    * (host, rules, crawl_delay) and evaluate the codegen verdict —
-    * broadcast-hinted only below the host gate (one count job on the
-    * dim side, the cheap action that makes the hint safe at any scale).
-    * A target host ABSENT from the policy dim is DEFAULT-ALLOWED with
-    * crawl_delay 0 — RFC 9309 semantics for a host without robots.txt
-    * (r16 review finding: the earlier inner join silently DROPPED such
-    * targets, neither allowed nor blocked).
+    * (host, rules, crawl_delay) and evaluate the codegen verdict. The
+    * join strategy is the planner's: the pinned dim is sized from its
+    * measured runtime size, so a fixture-sized dim broadcasts and a
+    * whole-web one (10⁷–10⁸ hosts × ~KB policies) shuffles instead of
+    * being forced onto the driver. A target host ABSENT from the policy
+    * dim is DEFAULT-ALLOWED with crawl_delay 0 — RFC 9309 semantics for
+    * a host without robots.txt (a left join: an inner join would drop
+    * such targets, neither allowed nor blocked).
     */
-  def policyVerdicts(targets: DataFrame, policies: DataFrame,
-      broadcastHostGate: Long = defaultBroadcastHostGate): DataFrame = {
-    // pin the compiled dim: the gate count AND the join both consume
-    // it, and the robots-parse MapPartitions would otherwise run twice
-    // per call
+  def policyVerdicts(targets: DataFrame, policies: DataFrame): DataFrame = {
+    // pinned: callers read the verdicts in more than one action (q234's
+    // funnel counts), and the robots-parse MapPartitions would otherwise
+    // run once per action
     val pol = Materialize.pin(policies)
-    val dim = if (pol.count() <= broadcastHostGate) broadcast(pol) else pol
     // pass the targets' columns through (a composed pipeline carries the
     // url alongside host/path); the compiled rule blob is dropped
     val keep = targets.columns.toSeq.map(col) ++
       Seq(coalesce(col("crawl_delay"), lit(0)).as("crawl_delay"),
         col("allowed"))
-    targets.join(dim, Seq("host"), "left")
+    targets.join(pol, Seq("host"), "left")
       .withColumn("allowed",
         allowedCol(coalesce(col("rules"), lit("")), col("path")))
       .select(keep: _*)

@@ -140,10 +140,11 @@ object MetaProbe {
     val conf = new Configuration()
     val spark = graft.Harness.session()
     val http = HttpClient.newHttpClient()
+    val outDir = s"${graft.log.SharedFixtures.targetDir}/metaprobe"
 
     counts.foreach { n =>
       if (sections("meta")) {
-      val path = s"/root/repo/target/metaprobe/t$n"
+      val path = s"$outDir/t$n"
       val genT0 = System.nanoTime()
       generate(path, n, conf)
       val genMs = (System.nanoTime() - genT0) / 1e6
@@ -297,7 +298,7 @@ object MetaProbe {
       if (sections("stream")) {
         import org.apache.spark.sql.connector.read.streaming.ReadLimit
         val versions = n / 100
-        val spath = s"/root/repo/target/metaprobe/s$n"
+        val spath = s"$outDir/s$n"
         generate(spath, n, conf, commits = versions)
         GraftLog.invalidateListing(spath)
         val perTrigger = 1000
@@ -422,8 +423,8 @@ object MetaProbe {
 
     val lines = rows.result()
     lines.foreach(println)
-    new java.io.File("/root/repo/target/metaprobe").mkdirs()
-    val out = new java.io.PrintWriter("/root/repo/target/metaprobe/results.json")
+    new java.io.File(outDir).mkdirs()
+    val out = new java.io.PrintWriter(s"$outDir/results.json")
     try lines.foreach(out.println) finally out.close()
     spark.stop()
   }

@@ -28,6 +28,7 @@ object ScaleProbe {
     val opFilter = args.lift(3).map(_.split(',').toSet)
     val cpus = graft.Harness.cpus
     val spark = graft.Harness.session()
+    val outDir = s"${graft.log.SharedFixtures.targetDir}/scaleprobe"
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
@@ -45,7 +46,7 @@ object ScaleProbe {
     // materialize each scale once so generation cost stays out of the
     // timed region (same discipline as Bench's fixture setup)
     val dirs = factors.map { k =>
-      val dir = s"/root/repo/target/scaleprobe/k$k"
+      val dir = s"$outDir/k$k"
       spark.time(scaled(k).repartition(k * 8).write.mode("overwrite").parquet(dir))
       k -> dir
     }.toMap
@@ -79,7 +80,7 @@ object ScaleProbe {
     val wideCache = scala.collection.mutable.Map.empty[Int, String]
     def wide(k: Int): DataFrame = {
       val dir = wideCache.getOrElseUpdate(k, {
-        val d = s"/root/repo/target/scaleprobe/wide_k$k"
+        val d = s"$outDir/wide_k$k"
         spark.time(wideDocs(k).repartition(k * 8).write.mode("overwrite").parquet(d))
         d
       })
@@ -94,7 +95,7 @@ object ScaleProbe {
     val repCache = scala.collection.mutable.Map.empty[Int, String]
     def repDocs(k: Int): DataFrame = {
       val dir = repCache.getOrElseUpdate(k, {
-        val d = s"/root/repo/target/scaleprobe/rep_k$k"
+        val d = s"$outDir/rep_k$k"
         val reps = (0 until k).map(c => base.select(
           (col("doc_id") + lit(c.toLong * 100000000L)).as("doc_id"),
           col("text"))).reduce(_ unionByName _)

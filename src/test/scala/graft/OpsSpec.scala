@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -717,28 +717,36 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("interaction/temporal edges: rank-join path equals the window path") {
     import spark.implicits._
-    // The size gate picks the per-type window below one task-wave of
-    // input and the consecutive-rank self-join above it (no ≤ #types-key
-    // window at scale); both spellings must produce the SAME edge sets.
+    // The gate reads the input's partition count: one task wave (at most
+    // defaultParallelism partitions) takes the per-type window, more takes
+    // the consecutive-rank self-join (no ≤ #types-key window at scale).
+    // Both spellings must produce the SAME edge sets, NULL event types
+    // included: the window keeps NULL as a type, so the rank join's group
+    // key must be null-safe.
     val ev = (1 to 5000).map { i =>
       (i.toLong, new java.sql.Timestamp(1600000000000L + (i * 7919L) % 100000000L),
-        (i * 31L) % 97, s"t${i % 4}")
-    }.toDF("event_id", "ts", "user_id", "event_type").repartition(3)
-    def run[A](mode: String)(f: => A): A = {
-      sys.props("graft.edges.rankJoin") = mode
-      try f finally sys.props.remove("graft.edges.rankJoin")
+        (i * 31L) % 97, if (i % 13 == 0) null else s"t${i % 4}")
+    }.toDF("event_id", "ts", "user_id", "event_type")
+    val oneWave = ev.coalesce(1)
+    val wide = ev.repartition(spark.sparkContext.defaultParallelism + 1)
+    def edges(f: (DataFrame, String, String, String, String) => DataFrame,
+        in: DataFrame, windowed: Boolean): Set[Row] = {
+      val out = f(in, "user_id", "event_type", "ts", "event_id")
+      assert(out.queryExecution.analyzed.toString.contains("lag(") === windowed,
+        s"windowed=$windowed path not taken")
+      out.collect().toSet
     }
-    val wE = run("never")(Analytics.interactionEdges(
-      ev, "user_id", "event_type", "ts", "event_id").collect().toSet)
-    val rE = run("always")(Analytics.interactionEdges(
-      ev, "user_id", "event_type", "ts", "event_id").collect().toSet)
+    val wE = edges(Analytics.interactionEdges, oneWave, windowed = true)
+    val rE = edges(Analytics.interactionEdges, wide, windowed = false)
     assert(wE === rE, "undirected edge sets must match across the gate")
     assert(wE.nonEmpty)
-    val wT = run("never")(Analytics.temporalEdges(
-      ev, "user_id", "event_type", "ts", "event_id").collect().toSet)
-    val rT = run("always")(Analytics.temporalEdges(
-      ev, "user_id", "event_type", "ts", "event_id").collect().toSet)
+    val wT = edges(Analytics.temporalEdges, oneWave, windowed = true)
+    val rT = edges(Analytics.temporalEdges, wide, windowed = false)
     assert(wT === rT, "temporal edge sets must match across the gate")
+    // the NULL type contributes pairs on both sides
+    val nullOnly = ev.filter(col("event_type").isNull)
+    val nullE = edges(Analytics.temporalEdges, nullOnly.coalesce(1), windowed = true)
+    assert(nullE.nonEmpty && nullE.subsetOf(wT))
     graft.ops.Dedup.releasePersisted()
   }
 
@@ -3759,8 +3767,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got((503, 30)) === "disallow_all")
   }
 
-  test("robots policy join gate: hinted and un-hinted strategies produce " +
-    "identical verdicts (broadcast is size-gated, the CC edge-gate pattern)") {
+  test("robots policy join: broadcast and shuffle give identical verdicts") {
     import spark.implicits._
     val R = graft.ops.Robots
     val docs = (0L until 200L).map(d => (d, s"body $d")).toDF("doc_id", "text")
@@ -3772,17 +3779,30 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         R.canonicalPath(col("t")).as("path"))
     val pol = R.compilePolicies(R.fixturePolicyDim(spark), "host", "txt",
       "graftcrawler/1.0")
-    val hinted = R.policyVerdicts(targets, pol) // 7 hosts ≤ default gate
-    val unhinted = R.policyVerdicts(targets, pol, broadcastHostGate = 0L)
     val keys = Seq("host", "path", "crawl_delay", "allowed")
-    val a = hinted.groupBy(keys.map(col): _*).count()
-    val b = unhinted.groupBy(keys.map(col): _*).count()
-    assert(a.count() === b.count())
-    assert(a.join(b, keys :+ "count").count() === a.count(),
+    def verdicts(): (String, Array[Row]) = {
+      val v = R.policyVerdicts(targets, pol)
+      val rows = v.groupBy(keys.map(col): _*).count().collect()
+      (v.queryExecution.executedPlan.toString, rows)
+    }
+    // the 7-host dim is small enough that the planner broadcasts it
+    // without a hint
+    val (bPlan, bRows) = verdicts()
+    assert(bPlan.contains("BroadcastHashJoin"), bPlan)
+    // Spark's own thresholds off: the same join shuffles
+    val conf = spark.conf
+    val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = thresholds.map(k => k -> conf.getOption(k))
+    thresholds.foreach(conf.set(_, "-1"))
+    val (sPlan, sRows) = try verdicts() finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None)    => conf.unset(k)
+    }
+    assert(!sPlan.contains("BroadcastHashJoin"), sPlan)
+    assert(bRows.nonEmpty)
+    assert(bRows.toSet === sRows.toSet, // one row per distinct verdict
       "verdict multisets must be identical across join strategies")
-    // below the gate the hint is real: the executed plan broadcasts
-    assert(hinted.queryExecution.executedPlan.toString
-      .contains("BroadcastHashJoin"))
     // a host with no compiled policy is DEFAULT-ALLOWED with delay 0
     // (RFC 9309: no robots.txt means everything allowed) — it must
     // appear in the output, not vanish through an inner join
@@ -3792,6 +3812,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.length === 1)
     assert(got.head.getAs[Boolean]("allowed") === true)
     assert(got.head.getAs[Int]("crawl_delay") === 0)
+    graft.ops.Dedup.releasePersisted()
   }
 
   test("assignWorkers: sorted round-robin = distributed LPT approximation " +
