@@ -18,6 +18,12 @@ object GraftUrlCache {
 
   case class Entry(url: String, expiration: Long)
 
+  /** The entry for one served file: `exp` is the wire
+    * `expirationTimestamp` (null = never expires).
+    */
+  def entry(id: String, url: String, exp: java.lang.Long): (String, Entry) =
+    id -> Entry(url, Option(exp).map(_.longValue()).getOrElse(Long.MaxValue))
+
   @volatile var refreshThresholdMs: Long = 10 * 60 * 1000L
 
   private val entries = TrieMap.empty[String, Entry]

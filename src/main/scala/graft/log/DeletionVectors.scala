@@ -15,7 +15,7 @@ import graft.model.{DeletionVectorDescriptor, RoaringBitmapArray, Z85}
   * Scale note: a DV is table METADATA, like stats — KBs per file,
   * resolved once on the driver and broadcast; the row-level filtering
   * itself happens executor-side against the broadcast bitmaps, never by
-  * shuffling data rows (see `sources/GraftParquetScanRelation`).
+  * shuffling data rows (see `sources/ScanCore.scala`).
   */
 object DeletionVectors {
 

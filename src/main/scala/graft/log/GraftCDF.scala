@@ -70,15 +70,13 @@ object GraftCDF {
     // Column mapping: files carry PHYSICAL names (and in id mode, parquet
     // field ids); partitionValues are keyed by physical name. Read
     // physical, rename to the starting snapshot's logical names at the
-    // end. Without column mapping `names` is the identity — one path.
+    // end. Without column mapping the layout is the identity — one path.
     val cmMode = graft.model.ColumnMapping.mode(snap.metadata)
-    val idMode = graft.model.ColumnMapping.isIdMode(snap.metadata)
-    if (idMode) spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val names = graft.model.ColumnMapping.nameMap(schema)
-    val physSchema = graft.model.ColumnMapping.physicalSchema(schema, idMode)
+    val scan = new graft.sources.SnapshotListing(spark, tablePath, snap)
+    val layout = scan.layout
+    layout.prepare(spark)
     val tsByVersion = log.versionTimestamps().toMap
     val root = new Path(tablePath)
-    lazy val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     def resolve(p: String): String = new Path(root, p).toString
 
     // Per-file deletion-vector state while replaying (delta's CDCReader
@@ -126,54 +124,14 @@ object GraftCDF {
           "start the range after the enabling SET TBLPROPERTIES commit")
       val ts = new java.sql.Timestamp(tsByVersion(commit.version))
 
-      // Partition columns live in partitionValues, NOT in the files —
-      // reading files with the full schema would silently yield NULL
-      // partition columns. Group per distinct partitionValues and attach
-      // the values as typed literals ("" ⇒ null, string cast to the
-      // column type — same decode as GraftFileIndex.partitionRow).
-      // Both file columns and partitionValues keys are PHYSICAL names.
-      val partCols = snap.metadata.partitionColumns
-      val physPartCols = partCols.map(c => names.getOrElse(c, c))
-      val dataSchema = org.apache.spark.sql.types.StructType(
-        physSchema.filterNot(f => physPartCols.contains(f.name)))
-      def spellings(rel: String, blob: Array[Byte]): Seq[(String, Array[Byte])] =
-        graft.sources.DvFilters
-          .pathSpellings(fs.makeQualified(new Path(root, rel))).map(_ -> blob)
+      def bitmaps(blobs: Seq[(String, Array[Byte])]): Map[String, Array[Byte]] =
+        graft.sources.ScanCore.bySpelling(blobs.map { case (rel, b) => scan.qualified(rel) -> b })
       def read(files: Seq[(String, Map[String, String])],
-          withChangeType: Option[String],
+          changeType: Option[String],
           keep: Map[String, Array[Byte]] = Map.empty,
-          drop: Map[String, Array[Byte]] = Map.empty) = {
-        if (files.isEmpty) None
-        else {
-          val perPartition = files.groupBy(_._2).map { case (pv, grp) =>
-            val paths = grp.map(f => resolve(f._1))
-            val raw0 = withChangeType match {
-              case Some(ct) =>
-                spark.read.schema(dataSchema).parquet(paths: _*)
-                  .withColumn(CHANGE_TYPE, lit(ct))
-              case None => // cdc files carry _change_type in the data
-                spark.read.schema(dataSchema.add(CHANGE_TYPE, "string"))
-                  .parquet(paths: _*)
-            }
-            val raw1 = if (drop.isEmpty) raw0
-              else graft.sources.DvFilters.filterDeleted(raw0, drop)
-            val base = if (keep.isEmpty) raw1
-              else graft.sources.DvFilters.selectDeleted(raw1, keep)
-            partCols.zip(physPartCols).foldLeft(base) { case (df, (c, pc)) =>
-              val raw = pv.getOrElse(pc, "")
-              val v = if (raw == null || raw.isEmpty) lit(null) else lit(raw)
-              df.withColumn(pc, v.cast(schema(c).dataType))
-            }
-          }.toSeq
-          // rename physical -> the starting snapshot's logical names
-          Some(perPartition.reduce(_.unionByName(_))
-            .select((schema.map(f =>
-              col(names.getOrElse(f.name, f.name)).as(f.name)) :+
-              col(CHANGE_TYPE)): _*)
-            .withColumn(COMMIT_VERSION, lit(commit.version))
-            .withColumn(COMMIT_TIMESTAMP, lit(ts)))
-        }
-      }
+          drop: Map[String, Array[Byte]] = Map.empty) =
+        readChanges(spark, layout, files.map { case (p, pv) => resolve(p) -> pv },
+          changeType, commit.version, ts, keep, drop)
 
       // Classify against the PRE-commit DV state. A dataChange add of a
       // known path is a DV-update-in-place: the rows newly set in its DV
@@ -187,12 +145,10 @@ object GraftCDF {
       val emitted: Seq[DataFrame] =
         if (cdc.nonEmpty) read(cdc.map(c => c.path -> c.partitionValues), None).toSeq
         else {
-          val insDrop = newAdds.flatMap(a => a.deletionVector.map(d =>
-            spellings(a.path, DeletionVectors.resolveBytes(tablePath, d, hadoopConf)))
-          ).flatten.toMap
-          val remDrop = pureRemoves.flatMap(r => dvState.getOrElse(r.path, None).map(d =>
-            spellings(r.path, DeletionVectors.resolveBytes(tablePath, d, hadoopConf)))
-          ).flatten.toMap
+          val insDrop = bitmaps(newAdds.flatMap(a => a.deletionVector.map(d =>
+            a.path -> DeletionVectors.resolveBytes(tablePath, d, hadoopConf))))
+          val remDrop = bitmaps(pureRemoves.flatMap(r => dvState.getOrElse(r.path, None).map(d =>
+            r.path -> DeletionVectors.resolveBytes(tablePath, d, hadoopConf))))
           val diffs = dvUpdates.map { a =>
             val oldSet = bitmapOf(dvState(a.path))
             val newSet = bitmapOf(a.deletionVector)
@@ -201,8 +157,7 @@ object GraftCDF {
           def diffKeep(sel: ((AddFile, Set[Long], Set[Long])) => Set[Long]) = {
             val hit = diffs.filter(d => sel(d).nonEmpty)
             (hit.map(d => d._1.path -> d._1.partitionValues),
-              hit.flatMap(d =>
-                spellings(d._1.path, RoaringBitmapArray(sel(d)).serialize())).toMap)
+              bitmaps(hit.map(d => d._1.path -> RoaringBitmapArray(sel(d)).serialize())))
           }
           val (delFiles, delKeep) = diffKeep(_._2)
           val (resFiles, resKeep) = diffKeep(_._3)
@@ -233,4 +188,48 @@ object GraftCDF {
       case dfs => dfs.reduce(_.unionByName(_))
     }
   }
+
+  /** One commit's change rows from `files` (path, partition values keyed
+    * by physical name): `changeType` stamps the rows of add and remove
+    * files, cdc files carry their own; `drop` removes DV-deleted rows and
+    * `keep` keeps only a DV diff's rows. Partition columns live in
+    * partition values, not in the files — reading files with the full
+    * schema would silently yield NULL partition columns — so they attach
+    * per distinct partition as typed literals ("" ⇒ null). Columns come
+    * back logical, stamped with the commit.
+    */
+  private[graft] def readChanges(
+      spark: SparkSession,
+      layout: graft.sources.Layout,
+      files: Seq[(String, Map[String, String])],
+      changeType: Option[String],
+      version: Long,
+      timestamp: java.sql.Timestamp,
+      keep: Map[String, Array[Byte]] = Map.empty,
+      drop: Map[String, Array[Byte]] = Map.empty): Option[DataFrame] =
+    if (files.isEmpty) None
+    else {
+      import graft.sources.ScanCore
+      val perPartition = files.groupBy(_._2).map { case (pv, grp) =>
+        val paths = grp.map(_._1)
+        val raw = changeType match {
+          case Some(ct) =>
+            spark.read.schema(layout.dataSchema).parquet(paths: _*)
+              .withColumn(CHANGE_TYPE, lit(ct))
+          case None => // cdc files carry _change_type in the data
+            spark.read.schema(layout.dataSchema.add(CHANGE_TYPE, "string")).parquet(paths: _*)
+        }
+        val live = if (drop.isEmpty) raw else ScanCore.filterDeleted(raw, drop)
+        val base = if (keep.isEmpty) live else ScanCore.selectDeleted(live, keep)
+        layout.partitionColumns.zip(layout.physicalPartitionColumns).foldLeft(base) {
+          case (df, (c, pc)) =>
+            val v = pv.getOrElse(pc, "")
+            df.withColumn(pc, (if (v == null || v.isEmpty) lit(null) else lit(v))
+              .cast(layout.logical(c).dataType))
+        }
+      }.toSeq
+      Some(layout.toLogical(perPartition.reduce(_.unionByName(_)), col(CHANGE_TYPE))
+        .withColumn(COMMIT_VERSION, lit(version))
+        .withColumn(COMMIT_TIMESTAMP, lit(timestamp)))
+    }
 }

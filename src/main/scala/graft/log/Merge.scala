@@ -77,36 +77,11 @@ object Merge {
     // drop the descriptors. Column-mapped tables read physical names and
     // rename to logical so `condition`/clause expressions resolve; the
     // rewrite renames back before writing.
-    import graft.model.ColumnMapping
-    val idMode = ColumnMapping.isIdMode(prev.metadata)
-    if (idMode) spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val names = ColumnMapping.nameMap(prev.schema)
-    val physSchema = ColumnMapping.physicalSchema(prev.schema, idMode)
+    val scan = new graft.sources.SnapshotListing(spark, tablePath, prev)
     val version = logR.latestVersion() + 1
     val root = new Path(tablePath)
     val fs = root.getFileSystem(conf)
     val qualifiedRoot = fs.makeQualified(root).toUri
-    def abs(rel: String): String = new Path(root, rel).toString
-    val dvByPath: Map[String, Array[Byte]] = prev.files.flatMap { f =>
-      f.deletionVector.toSeq.flatMap { dv =>
-        val bytes = DeletionVectors.resolveBytes(tablePath, dv, conf)
-        graft.sources.DvFilters
-          .pathSpellings(fs.makeQualified(new Path(root, f.path)))
-          .map(_ -> bytes)
-      }
-    }.toMap
-    def readLive(paths: Seq[String]): DataFrame =
-      graft.sources.DvFilters.filterDeleted(
-        spark.read.schema(physSchema).parquet(paths: _*), dvByPath)
-        .select(prev.schema.fields.toIndexedSeq.map(f =>
-          col(names.getOrElse(f.name, f.name)).as(f.name)): _*)
-    def toPhysical(df: DataFrame): DataFrame = {
-      val extras = df.columns.filterNot(c => names.contains(c)).toIndexedSeq
-      df.select(prev.schema.fields.toIndexedSeq.map { f =>
-        val phys = names.getOrElse(f.name, f.name)
-        col(f.name).as(phys, physSchema(phys).metadata)
-      } ++ extras.map(col): _*)
-    }
     def emptyTarget: DataFrame = spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], prev.schema)
     val targetCols = prev.schema.fieldNames.toSeq
@@ -120,7 +95,7 @@ object Merge {
     val src = source.alias("s").cache()
     try {
       // ---- 1. affected files: those holding >=1 matched target row ----
-      val active = readLive(prev.files.map(f => abs(f.path)))
+      val active = scan.readLive(prev.files.map(_.path))
         .withColumn("__file", input_file_name())
       val affectedUris = active.alias("t")
         .join(src, expr(condition), "left_semi")
@@ -133,7 +108,7 @@ object Merge {
       // below reads those files, never the whole table
       val affected =
         (if (affectedRel.isEmpty) emptyTarget
-         else readLive(affectedRel.map(abs)))
+         else scan.readLive(affectedRel))
           .withColumn("__uid", monotonically_increasing_id())
           .alias("t").cache()
 
@@ -175,9 +150,9 @@ object Merge {
       // ---- 3. write data + cdc, commit one version ----
       val before = TableBuilder.collectParquet(fs, fs.makeQualified(root))
         .map(_.getPath.toUri).toSet
-      toPhysical(rewritten).write.mode("append").parquet(tablePath)
+      scan.layout.toPhysical(rewritten).write.mode("append").parquet(tablePath)
       val adds = TableBuilder.scanDataFiles(
-        spark, tablePath, physSchema, Nil, version, timestamp,
+        spark, tablePath, scan.layout.physical, Nil, version, timestamp,
         onlyRelPaths = Some(TableBuilder.newRelPaths(fs, root, before)))
 
       val ct = GraftCDF.CHANGE_TYPE
@@ -193,7 +168,7 @@ object Merge {
         inserts.withColumn(ct, lit("insert"))
       ).map(_.select((targetCols :+ ct).map(col): _*)).reduce(_ unionByName _)
       val cdcDir = s"$tablePath/${"_cdc"}/v$version"
-      toPhysical(cdc).write.mode("overwrite").parquet(cdcDir)
+      scan.layout.toPhysical(cdc).write.mode("overwrite").parquet(cdcDir)
       val cdcFiles = TableBuilder.collectParquetIncludingHidden(fs, new Path(cdcDir))
         .map { st =>
           AddCDCFile(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.model.{Action, AddFile, ColumnMapping, DomainMetadata, Metadata}
+import graft.model.{Action, AddFile, DomainMetadata, Metadata}
 
 /** Row tracking (delta PROTOCOL "Row Tracking"): every row of a tracked
   * table has a durable integer id and a commit version.
@@ -80,20 +80,18 @@ object RowTracking {
 
   /** Per-file info frame (`__fp`, `__base`, `__rcv`) for the broadcast
     * join — one row per path SPELLING so `_metadata.file_path` always
-    * matches (see [[graft.sources.DvFilters.pathSpellings]]).
+    * matches (see [[graft.sources.ScanCore.bySpelling]]).
     */
   private def fileInfo(
       spark: SparkSession, tablePath: String, files: Seq[AddFile]): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val fs = new Path(tablePath).getFileSystem(conf)
-    val rows = files.flatMap { f =>
-      graft.sources.DvFilters
-        .pathSpellings(fs.makeQualified(new Path(tablePath, f.path)))
-        .map(sp => (sp,
-          f.baseRowId.map(java.lang.Long.valueOf).orNull,
-          f.defaultRowCommitVersion.map(java.lang.Long.valueOf)
-            .getOrElse(java.lang.Long.valueOf(f.version))))
-    }
+    val rows = graft.sources.ScanCore.bySpelling(files.map(f =>
+      fs.makeQualified(new Path(tablePath, f.path)) -> (
+        f.baseRowId.map(java.lang.Long.valueOf).orNull,
+        f.defaultRowCommitVersion.map(java.lang.Long.valueOf)
+          .getOrElse(java.lang.Long.valueOf(f.version)))))
+      .toSeq.map { case (sp, (base, rcv)) => (sp, base, rcv) }
     import spark.implicits._
     rows.toDF("__fp", "__base", "__rcv")
   }
@@ -135,10 +133,10 @@ object RowTracking {
     require(enabled(snap.metadata),
       s"table $tablePath does not have row tracking enabled " +
         s"(set $ENABLED_KEY=true at create time)")
-    val idMode = ColumnMapping.isIdMode(snap.metadata)
-    if (idMode) spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val names = ColumnMapping.nameMap(snap.schema)
-    val physSchema = ColumnMapping.physicalSchema(snap.schema, idMode)
+    val scan = new graft.sources.SnapshotListing(spark, tablePath, snap)
+    val layout = scan.layout
+    layout.prepare(spark)
+    val physSchema = layout.physical
     val config = snap.metadata.configuration
     val matId = config.get(MAT_ROW_ID_KEY)
     val matRcv = config.get(MAT_RCV_KEY)
@@ -147,17 +145,7 @@ object RowTracking {
       .map(StructField(_, LongType, nullable = true))
     val readSchema = StructType(physSchema.fields ++ extra)
 
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(conf)
-    def abs(rel: String): String = new Path(root, rel).toString
-    val dvByPath: Map[String, Array[Byte]] = snap.files.flatMap { f =>
-      f.deletionVector.toSeq.flatMap { dv =>
-        val bytes = DeletionVectors.resolveBytes(tablePath, dv, conf)
-        graft.sources.DvFilters
-          .pathSpellings(fs.makeQualified(new Path(root, f.path)))
-          .map(_ -> bytes)
-      }
-    }.toMap
+    def abs(rel: String): String = new Path(tablePath, rel).toString
 
     if (snap.files.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -168,13 +156,10 @@ object RowTracking {
     // active-file list (removed-but-on-disk files must not be scanned)
     val raw = spark.read.option("basePath", tablePath).schema(readSchema)
       .parquet(snap.files.map(f => abs(f.path)): _*)
-    val live = graft.sources.DvFilters.filterDeleted(
-      withAllocation(spark, tablePath, snap.files, raw), dvByPath)
-
-    live.select(snap.schema.fields.toIndexedSeq.map(f =>
-      col(names.getOrElse(f.name, f.name)).as(f.name)) :+
-      rowIdCol(matId).as("_row_id") :+
-      rcvCol(matRcv).as("_row_commit_version"): _*)
+    val live = graft.sources.ScanCore.filterDeleted(
+      withAllocation(spark, tablePath, snap.files, raw), scan.dvBitmaps)
+    layout.toLogical(live,
+      rowIdCol(matId).as("_row_id"), rcvCol(matRcv).as("_row_commit_version"))
   }
 
   /** For a layout-only rewrite (compact/zorder): extend the bin's scan

@@ -601,7 +601,6 @@ object TableBuilder {
       tablePath: String,
       cond: org.apache.spark.sql.Column,
       timestamp: Long = 0L): Long = {
-    import graft.model.ColumnMapping
     val conf = spark.sessionState.newHadoopConf()
     val logR = new GraftLog(tablePath, conf)
     val prev = logR.snapshot(None)
@@ -610,41 +609,17 @@ object TableBuilder {
     val root = new Path(tablePath)
     val fs = root.getFileSystem(conf)
     val qualifiedRoot = fs.makeQualified(root).toUri
-    val idMode = ColumnMapping.isIdMode(prev.metadata)
-    if (idMode) spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val names = ColumnMapping.nameMap(prev.schema)
-    val physSchema = ColumnMapping.physicalSchema(prev.schema, idMode)
-    val partitionCols = prev.metadata.partitionColumns
-    val physPartitionCols = partitionCols.map(c => names.getOrElse(c, c))
-    def abs(rel: String): String = new Path(root, rel).toString
-
-    val dvByPath: Map[String, Array[Byte]] = prev.files.flatMap { f =>
-      f.deletionVector.toSeq.flatMap { dv =>
-        val bytes = DeletionVectors.resolveBytes(tablePath, dv, conf)
-        graft.sources.DvFilters
-          .pathSpellings(fs.makeQualified(new Path(root, f.path)))
-          .map(_ -> bytes)
-      }
-    }.toMap
+    val scan = new graft.sources.SnapshotListing(spark, tablePath, prev)
+    val layout = scan.layout
     // basePath read: partition columns resolve from directory names even
     // though data files do not store them
-    def readLive(paths: Seq[String]): DataFrame =
-      graft.sources.DvFilters.filterDeleted(
-        spark.read.option("basePath", tablePath).schema(physSchema)
-          .parquet(paths: _*), dvByPath)
-        .select(prev.schema.fields.toIndexedSeq.map(f =>
-          col(names.getOrElse(f.name, f.name)).as(f.name)): _*)
-    def toPhysical(d: DataFrame): DataFrame =
-      d.select(prev.schema.fields.toIndexedSeq.map { f =>
-        val phys = names.getOrElse(f.name, f.name)
-        col(f.name).as(phys, physSchema(phys).metadata)
-      }: _*)
+    def readLive(relPaths: Seq[String]): DataFrame = scan.readLive(relPaths, basePath = true)
 
     val condTrue = coalesce(cond, lit(false))
     val affectedRel: Seq[String] =
       if (prev.files.isEmpty) Nil
       else {
-        val active = readLive(prev.files.map(f => abs(f.path)))
+        val active = readLive(prev.files.map(_.path))
           .withColumn("__file", input_file_name())
         val uris = active.filter(condTrue).select("__file").distinct()
           .collect().map(_.getString(0)).toSet
@@ -667,36 +642,29 @@ object TableBuilder {
 
     val survivors =
       if (affectedRel.isEmpty) None
-      else Some(readLive(affectedRel.map(abs)).filter(!condTrue))
+      else Some(readLive(affectedRel).filter(!condTrue))
     val before = collectParquet(fs, fs.makeQualified(root)).map(_.getPath.toUri).toSet
     val outDf = survivors.map(_.unionByName(prepared.select(
       prev.schema.fieldNames.toIndexedSeq.map(col): _*)))
       .getOrElse(prepared.select(prev.schema.fieldNames.toIndexedSeq.map(col): _*))
-    toPhysical(outDf).write.mode("append")
-      .partitionBy(physPartitionCols: _*).parquet(tablePath)
-    val adds = scanDataFiles(spark, tablePath, physSchema, physPartitionCols, version,
-      timestamp, onlyRelPaths = Some(newRelPaths(fs, root, before)),
-      config = prev.metadata.configuration,
-      nameMap = ColumnMapping.nameMap(prev.schema))
+    layout.toPhysical(outDf).write.mode("append")
+      .partitionBy(layout.physicalPartitionColumns: _*).parquet(tablePath)
+    val adds = scanDataFiles(spark, tablePath, layout.physical,
+      layout.physicalPartitionColumns, version, timestamp,
+      onlyRelPaths = Some(newRelPaths(fs, root, before)),
+      config = prev.metadata.configuration, nameMap = layout.names)
 
     // CDF: deleted preimages (the matched rows) + inserted rows
     val ct = GraftCDF.CHANGE_TYPE
     val deletes =
       if (affectedRel.isEmpty) None
-      else Some(readLive(affectedRel.map(abs)).filter(condTrue)
+      else Some(readLive(affectedRel).filter(condTrue)
         .withColumn(ct, lit("delete")))
     val inserts = prepared.select(prev.schema.fieldNames.toIndexedSeq.map(col): _*)
       .withColumn(ct, lit("insert"))
     val cdc = deletes.map(_.unionByName(inserts)).getOrElse(inserts)
     val cdcDir = s"$tablePath/${"_cdc"}/v$version"
-    val cdcPhys = {
-      val physCols = prev.schema.fields.toIndexedSeq.map { f =>
-        val phys = names.getOrElse(f.name, f.name)
-        col(f.name).as(phys, physSchema(phys).metadata)
-      }
-      cdc.select(physCols :+ col(ct): _*)
-    }
-    cdcPhys.write.mode("overwrite").parquet(cdcDir)
+    layout.toPhysical(cdc).write.mode("overwrite").parquet(cdcDir)
     val cdcFiles = collectParquetIncludingHidden(fs, new Path(cdcDir)).map { st =>
       AddCDCFile(
         path = relativize(qualifiedRoot, st.getPath.toUri),
@@ -808,25 +776,22 @@ object TableBuilder {
       tablePath: String,
       prev: Snapshot,
       cond: org.apache.spark.sql.Column): DataFrame = {
-    import graft.model.{ColumnMapping, RoaringBitmapArray}
+    import graft.model.RoaringBitmapArray
     import spark.implicits._
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(tablePath)
     def abs(rel: String): String = new Path(root, rel).toString
-    val logical = prev.schema
-    val names = ColumnMapping.nameMap(logical)
     val existing: Map[String, Array[Byte]] = prev.files.flatMap { f =>
       f.deletionVector.map(dv =>
         new Path(root, f.path).toUri.getPath ->
           DeletionVectors.resolveBytes(tablePath, dv, conf))
     }.toMap
     val bc = spark.sparkContext.broadcast(existing)
-    spark.read.schema(ColumnMapping.physicalSchema(logical))
-      .parquet(prev.files.map(f => abs(f.path)): _*)
-      .select(logical.fields.toIndexedSeq.map(f =>
-        col(names.getOrElse(f.name, f.name)).as(f.name)) ++
-        Seq(col("_metadata.file_path").as("__fp"),
-          col("_metadata.row_index").as("__ri")): _*)
+    val layout = graft.sources.Layout.of(prev)
+    layout.prepare(spark)
+    layout.toLogical(
+      spark.read.schema(layout.physical).parquet(prev.files.map(f => abs(f.path)): _*),
+      col("_metadata.file_path").as("__fp"), col("_metadata.row_index").as("__ri"))
       .filter(coalesce(cond, lit(false)))
       .groupBy(col("__fp"))
       .agg(collect_list(col("__ri")).as("__ris"))
@@ -912,13 +877,11 @@ object TableBuilder {
     val prev = logR.snapshot(None)
     // column-mapped tables compact ENTIRELY in physical-name space — the
     // bin-pack never evaluates user predicates, so no rename round-trip
-    import graft.model.ColumnMapping
-    val idMode = ColumnMapping.isIdMode(prev.metadata)
-    if (idMode) spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val names = ColumnMapping.nameMap(prev.schema)
-    val physSchema = ColumnMapping.physicalSchema(prev.schema, idMode)
+    val scan = new graft.sources.SnapshotListing(spark, tablePath, prev)
+    val layout = scan.layout
+    layout.prepare(spark)
     val partitionCols = prev.metadata.partitionColumns
-    val physPartitionCols = partitionCols.map(c => names.getOrElse(c, c))
+    val physPartitionCols = layout.physicalPartitionColumns
     val root = new Path(tablePath)
     val fs = root.getFileSystem(conf)
     def abs(rel: String): String = new Path(root, rel).toString
@@ -945,8 +908,7 @@ object TableBuilder {
 
     val version = logR.latestVersion() + 1
     val tracked = RowTracking.enabled(prev.metadata)
-    val dataSchema0 = StructType(
-      physSchema.fields.filterNot(f => physPartitionCols.contains(f.name)))
+    val dataSchema0 = layout.dataSchema
     // layout-only rewrite of a row-tracked table: read (or fall back to
     // fresh-derive) the stable id/commit-version and MATERIALIZE them
     // into the rewritten files, so `dataChange = false` keeps its promise
@@ -956,17 +918,8 @@ object TableBuilder {
     val before = collectParquet(fs, fs.makeQualified(root)).map(_.getPath.toUri).toSet
     bins.foreach { bin =>
       val raw = spark.read.schema(dataSchema).parquet(bin.map(f => abs(f.path)): _*)
-      // apply the bin's deletion vectors scan-side (broadcast KB bitmaps
-      // keyed by every file-path spelling) — rewritten files carry no DV
-      val dvByPath: Map[String, Array[Byte]] = bin.flatMap { f =>
-        f.deletionVector.toSeq.flatMap { dv =>
-          val bytes = DeletionVectors.resolveBytes(tablePath, dv, conf)
-          graft.sources.DvFilters
-            .pathSpellings(fs.makeQualified(new Path(root, f.path)))
-            .map(_ -> bytes)
-        }
-      }.toMap
-      val live = graft.sources.DvFilters.filterDeleted(raw, dvByPath)
+      // apply the deletion vectors scan-side — rewritten files carry no DV
+      val live = graft.sources.ScanCore.filterDeleted(raw, scan.dvBitmaps)
       val df =
         if (tracked)
           RowTracking.materializeForRewrite(spark, tablePath, prev.metadata, bin, live)
@@ -985,10 +938,9 @@ object TableBuilder {
       withParts.coalesce(1).write.mode("append")
         .partitionBy(physPartitionCols: _*).parquet(tablePath)
     }
-    val adds = scanDataFiles(spark, tablePath, physSchema, physPartitionCols, version,
+    val adds = scanDataFiles(spark, tablePath, layout.physical, physPartitionCols, version,
       timestamp, onlyRelPaths = Some(newRelPaths(fs, root, before)),
-      config = prev.metadata.configuration,
-      nameMap = ColumnMapping.nameMap(prev.schema))
+      config = prev.metadata.configuration, nameMap = layout.names)
       .map(_.copy(dataChange = false))
     val (stamped, domActs) = RowTracking.stamp(prev.metadata, prev.domains, version, adds)
     val removes = bins.flatten.map(f =>
@@ -1052,12 +1004,10 @@ object TableBuilder {
 
     // column-mapped tables cluster in physical-name space: only the
     // clustering columns need the logical→physical translation
-    import graft.model.ColumnMapping
-    val idMode = ColumnMapping.isIdMode(prev.metadata)
-    if (idMode) spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val names = ColumnMapping.nameMap(prev.schema)
-    val physSchema = ColumnMapping.physicalSchema(prev.schema, idMode)
-    val physCols = cols.map(c => names.getOrElse(c, c))
+    val scan = new graft.sources.SnapshotListing(spark, tablePath, prev)
+    val layout = scan.layout
+    layout.prepare(spark)
+    val physCols = cols.map(layout.physicalName)
 
     val version = logR.latestVersion() + 1
     val root = new Path(tablePath)
@@ -1066,22 +1016,13 @@ object TableBuilder {
     // apply any deletion vectors scan-side: the clustered rewrite drops
     // both the deleted rows and the descriptors (layout-only, rows
     // logically unchanged — dataChange=false stays correct)
-    val dvByPath: Map[String, Array[Byte]] = targets.flatMap { f =>
-      f.deletionVector.toSeq.flatMap { dv =>
-        val bytes = DeletionVectors.resolveBytes(tablePath, dv, conf)
-        graft.sources.DvFilters
-          .pathSpellings(fs.makeQualified(new Path(root, f.path)))
-          .map(_ -> bytes)
-      }
-    }.toMap
     val tracked = RowTracking.enabled(prev.metadata)
     val readSchema =
-      if (tracked) RowTracking.rewriteReadSchema(prev.metadata, physSchema)
-      else physSchema
-    val live = graft.sources.DvFilters.filterDeleted(
-      spark.read.schema(readSchema)
-        .parquet(targets.map(f => abs(f.path)): _*),
-      dvByPath)
+      if (tracked) RowTracking.rewriteReadSchema(prev.metadata, layout.physical)
+      else layout.physical
+    val live = graft.sources.ScanCore.filterDeleted(
+      spark.read.schema(readSchema).parquet(targets.map(f => abs(f.path)): _*),
+      scan.dvBitmaps)
     // layout-only rewrite: carry the stable id/commit-version through the
     // clustering as materialized columns (same contract as compact)
     val active =
@@ -1119,10 +1060,9 @@ object TableBuilder {
       Clustering.TAG_CUBE_ID -> java.util.UUID.randomUUID().toString,
       Clustering.TAG_CUBE_COLS -> Clustering.colsTagValue(cols),
       Clustering.TAG_CUBE_CURVE -> curve)
-    val adds = scanDataFiles(spark, tablePath, physSchema, Nil, version,
+    val adds = scanDataFiles(spark, tablePath, layout.physical, Nil, version,
       timestamp, onlyRelPaths = Some(newRelPaths(fs, root, before)),
-      config = prev.metadata.configuration,
-      nameMap = ColumnMapping.nameMap(prev.schema))
+      config = prev.metadata.configuration, nameMap = layout.names)
       .map(_.copy(dataChange = false, tags = Some(cubeTags)))
     val (stamped, domActs) = RowTracking.stamp(prev.metadata, prev.domains, version, adds)
     val removes = targets.map(f =>
@@ -1233,34 +1173,8 @@ object TableBuilder {
     // rename back before writing. DV-carrying files are supported: their
     // bitmaps are applied scan-side, so the rewrite never resurrects
     // DV-deleted rows and the rewritten files drop the descriptors.
-    import graft.model.ColumnMapping
-    val idMode = ColumnMapping.isIdMode(prev.metadata)
-    if (idMode) spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val names = ColumnMapping.nameMap(prev.schema)
-    val physSchema = ColumnMapping.physicalSchema(prev.schema, idMode)
-
-    def abs(rel: String): String = new Path(root, rel).toString
-    val dvByPath: Map[String, Array[Byte]] = prev.files.flatMap { f =>
-      f.deletionVector.toSeq.flatMap { dv =>
-        val bytes = DeletionVectors.resolveBytes(tablePath, dv, conf)
-        graft.sources.DvFilters
-          .pathSpellings(fs.makeQualified(new Path(root, f.path)))
-          .map(_ -> bytes)
-      }
-    }.toMap
-    def readLive(paths: Seq[String]): DataFrame =
-      graft.sources.DvFilters.filterDeleted(
-        spark.read.schema(physSchema).parquet(paths: _*), dvByPath)
-        .select(prev.schema.fields.toIndexedSeq.map(f =>
-          col(names.getOrElse(f.name, f.name)).as(f.name)): _*)
-    def toPhysical(df: DataFrame): DataFrame = {
-      val extras = df.columns.filterNot(c => names.contains(c)).toIndexedSeq
-      df.select(prev.schema.fields.toIndexedSeq.map { f =>
-        val phys = names.getOrElse(f.name, f.name)
-        col(f.name).as(phys, physSchema(phys).metadata)
-      } ++ extras.map(col): _*)
-    }
-    val active = readLive(prev.files.map(f => abs(f.path)))
+    val scan = new graft.sources.SnapshotListing(spark, tablePath, prev)
+    val active = scan.readLive(prev.files.map(_.path))
       .withColumn("__file", input_file_name())
 
     val affectedUris = active.filter(cond).select("__file").distinct()
@@ -1273,7 +1187,7 @@ object TableBuilder {
       .filter(rel => affectedUris.exists(u => new java.net.URI(u).getPath ==
         new Path(root, rel).toUri.getPath))
 
-    val affected = readLive(affectedRel.map(abs)).cache()
+    val affected = scan.readLive(affectedRel).cache()
     try {
       // NULL-condition rows must survive (SQL DELETE/UPDATE semantics):
       // `!cond` is NULL for them, and filter drops NULL — coalesce to
@@ -1294,17 +1208,16 @@ object TableBuilder {
       // new data files: diff the on-disk inventory on QUALIFIED uris
       // (unqualified Path.toUri has no scheme and would never match)
       val before = collectParquet(fs, fs.makeQualified(root)).map(_.getPath.toUri).toSet
-      toPhysical(rewritten).write.mode("append").parquet(tablePath)
-      val adds = scanDataFiles(spark, tablePath, physSchema, Nil, version,
+      scan.layout.toPhysical(rewritten).write.mode("append").parquet(tablePath)
+      val adds = scanDataFiles(spark, tablePath, scan.layout.physical, Nil, version,
         timestamp, onlyRelPaths = Some(newRelPaths(fs, root, before)),
-        config = prev.metadata.configuration,
-        nameMap = ColumnMapping.nameMap(prev.schema))
+        config = prev.metadata.configuration, nameMap = scan.layout.names)
 
       // cdc file(s) under _cdc/v<version>/ (underscore dir ⇒ invisible to
       // plain data scans; physical names + literal _change_type, the
       // delta cdc layout)
       val cdcDir = s"$tablePath/${"_cdc"}/v$version"
-      toPhysical(cdcRows).write.mode("overwrite").parquet(cdcDir)
+      scan.layout.toPhysical(cdcRows).write.mode("overwrite").parquet(cdcDir)
       val cdcFiles = collectParquetIncludingHidden(fs, new Path(cdcDir)).map { st =>
         AddCDCFile(
           path = relativize(qualifiedRoot, st.getPath.toUri),

@@ -77,7 +77,18 @@ case class AddFile(
       * on real Delta logs round-trip through replay and checkpoints.
       */
     tags: Option[Map[String, String]] = None)
-    extends Action
+    extends Action {
+
+  /** Rows a reader sees: `numRecords` minus the rows the deletion vector
+    * deletes (`Long.MaxValue` without stats). Every limit cut counts
+    * these; counting physical rows would stop listing before the limit is
+    * covered, an under-return no reader can repair.
+    */
+  @com.fasterxml.jackson.annotation.JsonIgnore
+  def liveRecords: Long = math.max(0L,
+    stats.map(_.numRecords).getOrElse(Long.MaxValue) -
+      deletionVector.map(_.cardinality).getOrElse(0L))
+}
 
 /** A file removed from the table (data change or compaction). */
 case class RemoveFile(

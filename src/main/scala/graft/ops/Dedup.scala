@@ -332,11 +332,6 @@ object Dedup {
       .distinct()
   }
 
-  def prefixFilterCandidates(sets: DataFrame, threshold: Double): DataFrame = {
-    val (index, probe) = prefixTables(codedSets(sets), threshold)
-    prefixJoin(index, probe, threshold).select("id_a", "id_b")
-  }
-
   /** COMPLETE near-dup pairs: exactly every pair with shingle-Jaccard ≥
     * threshold. Candidates = prefix-filter (completeness guarantee),
     * optionally ∪ MinHash-LSH bands (`includeMinHashCandidates` — the

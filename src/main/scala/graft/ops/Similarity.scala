@@ -305,25 +305,6 @@ object Similarity {
       .withColumn("kept", col("dup_of").isNull)
   }
 
-  /** Embedding near-duplicate pairs: cosine ≥ threshold, candidates from
-    * shared LSH buckets (no pairwise scan).
-    */
-  def embeddingDuplicates(
-      vectors: DataFrame, // (id, vec)
-      dim: Int,
-      threshold: Double = 0.95,
-      bits: Int = 8,
-      seed: Long = 42L): DataFrame = {
-    val planes = hyperplanes(dim, bits, seed)
-    val withBucket = vectors.withColumn("bucket", lshSignature(col("vec"), planes))
-    val a = withBucket.select(col("id").as("id_a"), col("vec").as("vec_a"), col("bucket"))
-    val b = withBucket.select(col("id").as("id_b"), col("vec").as("vec_b"), col("bucket"))
-    a.join(b, Seq("bucket")).filter(col("id_a") < col("id_b"))
-      .withColumn("sim", cosine(col("vec_a"), col("vec_b")))
-      .filter(col("sim") >= threshold)
-      .select("id_a", "id_b", "sim").distinct()
-  }
-
   // ------------------------------------------------- scalar quantization
 
   /** Per-dimension quantization bounds learned in ONE aggregation pass:

@@ -649,13 +649,7 @@ class GraftServer(
             var cum = 0L
             afterJson.takeWhile { f =>
               val take = cum < limit.longValue()
-              // LIVE rows, not physical: a DV-carrying file contributes
-              // numRecords − dv.cardinality readable rows — counting the
-              // physical total would stop listing before the limit is
-              // coverable (an under-return the client cannot repair)
-              val live = f.stats.map(_.numRecords).getOrElse(Long.MaxValue) -
-                f.deletionVector.map(_.cardinality).getOrElse(0L)
-              cum += math.max(live, 0L)
+              cum += f.liveRecords
               take
             }
           case _ => afterJson

@@ -4,11 +4,16 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
 
-/** Spark data-source `Filter` → `Column` translation so PrunedFilteredScan
-  * relations can apply pushed filters to their underlying DataFrame —
-  * which in turn lets the parquet scan prune row groups. Best-effort:
-  * untranslatable filters are skipped (Spark re-applies every filter on
-  * the returned rows, so skipping only costs I/O, never correctness).
+/** Spark data-source `Filter` → `Column` translation, total over the
+  * standard filter algebra (`None` = not expressible). Two uses:
+  *  - PrunedFilteredScan relations apply pushed filters to their
+  *    underlying DataFrame, which lets the parquet scan prune row groups;
+  *    [[translate]] skips untranslatable filters (Spark re-applies every
+  *    filter on the returned rows, so skipping only costs I/O);
+  *  - SQL `DELETE FROM` lowers its condition to the `Column` the
+  *    row-level writer evaluates; an untranslatable filter there must make
+  *    `canDeleteWhere` refuse (Spark then raises a clear analysis error
+  *    instead of a silent wrong delete).
   */
 object FilterColumns {
 
@@ -30,6 +35,8 @@ object FilterColumns {
     case StringStartsWith(a, v)   => Some(col(a).startsWith(v))
     case StringEndsWith(a, v)     => Some(col(a).endsWith(v))
     case StringContains(a, v)     => Some(col(a).contains(v))
+    case AlwaysTrue()             => Some(lit(true))
+    case AlwaysFalse()            => Some(lit(false))
     case And(l, r)                => for (a <- one(l); b <- one(r)) yield a && b
     case Or(l, r)                 => for (a <- one(l); b <- one(r)) yield a || b
     case Not(c)                   => one(c).map(!_)
@@ -59,48 +66,4 @@ private[sources] trait DataFrameBackedScan extends PrunedFilteredScan {
       else filtered.select(requiredColumns.map(col).toIndexedSeq: _*)
     projected.rdd
   }
-}
-
-/** Deletion-vector row filtering shared by the local and remote advanced
-  * scans: rows whose `(_metadata.file_path, _metadata.row_index)` is set
-  * in the file's broadcast bitmap are dropped scan-side.
-  */
-private[graft] object DvFilters {
-
-  /** Every spelling `_metadata.file_path` may use for a listed path:
-    * scheme-less (our FileIndex listings), `scheme:/...` (qualified
-    * `Path.toString`), `scheme://...` (URI form). A key missed here fails
-    * OPEN (deleted rows served), so all spellings are always registered.
-    */
-  def pathSpellings(p: org.apache.hadoop.fs.Path): Seq[String] =
-    Seq(p.toString, p.toUri.toString, p.toUri.getPath).distinct
-
-  private def deletedColumn(
-      df: org.apache.spark.sql.DataFrame,
-      byPath: Map[String, Array[Byte]]): Column = {
-    val bcast = df.sparkSession.sparkContext.broadcast(byPath)
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    column(graft.functions.DvRowDeleted(
-      expression(col("_metadata.file_path")),
-      expression(col("_metadata.row_index")),
-      bcast))
-  }
-
-  /** Drop deleted rows using per-file serialized bitmaps keyed by every
-    * path spelling.
-    */
-  def filterDeleted(
-      df: org.apache.spark.sql.DataFrame,
-      byPath: Map[String, Array[Byte]]): org.apache.spark.sql.DataFrame = {
-    if (byPath.isEmpty) return df
-    df.filter(!deletedColumn(df, byPath))
-  }
-
-  /** Keep ONLY the rows set in the per-file bitmaps (CDF derives the rows a
-    * deletion-vector update touched by selecting the DV diff).
-    */
-  def selectDeleted(
-      df: org.apache.spark.sql.DataFrame,
-      byPath: Map[String, Array[Byte]]): org.apache.spark.sql.DataFrame =
-    df.filter(deletedColumn(df, byPath))
 }

@@ -1,8 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{SparkSession, SQLContext}
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.{Sink, Source}
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
@@ -22,7 +20,9 @@ import graft.log.GraftCatalog
   *
   * The produced plan is a plain `HadoopFsRelation` over [[GraftFileIndex]]
   * + `ParquetFileFormat`, so every Catalyst operator, join strategy, AQE
-  * and whole-stage codegen applies unchanged downstream.
+  * and whole-stage codegen applies unchanged downstream. Tables with
+  * deletion vectors or column mapping read through [[GraftScanRelation]]
+  * over the same listing.
   */
 class GraftDataSource extends RelationProvider with CreatableRelationProvider
     with StreamSourceProvider with StreamSinkProvider with DataSourceRegister {
@@ -221,12 +221,13 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
       "at most one of versionAsOf/timestampAsOf may be set")
     val resolved = version.orElse(timestamp.map(log.versionAtOrBefore))
     val snapshot = log.snapshot(resolved)
+    val listing = new SnapshotListing(spark, tablePath, snapshot)
     // advanced reader features need the wrapping relation (DV filter /
     // physical->logical rename); plain tables stay a bare HadoopFsRelation
     if (snapshot.files.exists(_.deletionVector.isDefined) ||
       graft.model.ColumnMapping.isEnabled(snapshot.metadata))
-      return new GraftParquetScanRelation(spark, tablePath, snapshot)
-    GraftDataSource.relation(spark, tablePath, snapshot)
+      new GraftScanRelation(spark, listing)
+    else new GraftFileIndex(spark, listing).relation
   }
 
   /** Remote mode: `option("url", "http://host:port/delta-sharing")` +
@@ -256,23 +257,18 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
           new RemoteDeltaCDFRelation(spark, client, share, schema, table, parameters)
       }
     }
-    val index = try {
-      new RemoteGraftFileIndex(spark, client, share, schema, table,
-        versionAsOf = parameters.get("versionAsOf").map(_.toLong),
-        timestampAsOf = parameters.get("timestampAsOf"))
+    val versionAsOf = parameters.get("versionAsOf").map(_.toLong)
+    val timestampAsOf = parameters.get("timestampAsOf")
+    try {
+      new GraftFileIndex(spark,
+        new QueryListing(client, share, schema, table, versionAsOf, timestampAsOf)).relation
     } catch {
       // tables with advanced reader features refuse responseformat=parquet
       // with the protocol's typed 400 — renegotiate in the delta dialect
       case e: graft.client.GraftClientException if e.isUnsupportedOperation =>
-        return new RemoteDeltaScanRelation(spark, client, share, schema, table, parameters)
+        new GraftScanRelation(spark,
+          new DeltaQueryListing(client, share, schema, table, versionAsOf, timestampAsOf))
     }
-    HadoopFsRelation(
-      location = index,
-      partitionSchema = index.partitionSchema,
-      dataSchema = index.dataSchema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark)
   }
 }
 
@@ -296,19 +292,4 @@ object GraftDataSource {
         parameters.get("asyncQueryPollIntervalMs").map(_.toLong).getOrElse(10000L),
       asyncMaxDurationMs =
         parameters.get("asyncQueryMaxDurationMs").map(_.toLong).getOrElse(600000L))
-
-  def relation(
-      spark: SparkSession,
-      tablePath: String,
-      snapshot: graft.log.Snapshot,
-      limitHint: Option[Long] = None): HadoopFsRelation = {
-    val index = new GraftFileIndex(spark, tablePath, snapshot, limitHint)
-    HadoopFsRelation(
-      location = index,
-      partitionSchema = index.partitionSchema,
-      dataSchema = index.dataSchema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark)
-  }
 }

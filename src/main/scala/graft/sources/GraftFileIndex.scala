@@ -3,143 +3,113 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BindReferences, Cast, Expression, Literal, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, BindReferences, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.log.Snapshot
-import graft.model.AddFile
-import graft.predicates.{FileSkippingEvaluator, OpConverter}
 
-/** FileIndex over a graft snapshot — the point where Catalyst hands us
-  * partition filters + data filters and we answer with a pruned file list
+/** The one FileIndex over a shared table — the point where Catalyst hands
+  * over partition filters + data filters and gets a pruned file list back
   * (the reference's `RemoteDeltaSnapshotFileIndex.listFiles`,
-  * `RemoteDeltaFileIndex.scala:209-236`).
+  * `RemoteDeltaFileIndex.scala:209-236`). The files come from a
+  * [[Listing]]: a local snapshot, a remote `/query` or a fixed list.
   *
-  * Three prunings compose here, all best-effort supersets (Spark re-applies
-  * every filter on rows, so over-listing is only a perf cost, never a
-  * correctness one — `PROTOCOL.md:2128-2158`):
-  *   1. partition pruning: evaluate `partitionFilters` against each file's
-  *      typed partition values with an interpreted Catalyst predicate;
-  *   2. stats skipping: convert `dataFilters` → predicate AST → sound
-  *      three-valued min/max evaluation per file;
-  *   3. limit hint: stop listing once cumulative `numRecords` covers the
-  *      limit (only when no data filter might reject rows — reference
+  * Prunings compose, all best-effort supersets (Spark re-applies every
+  * filter on rows, so over-listing is only a perf cost — `PROTOCOL.md:
+  * 2128-2158`):
+  *   1. the listing's own (stats skipping locally, jsonPredicateHints
+  *      remotely);
+  *   2. partition pruning: an interpreted Catalyst predicate over each
+  *      file's typed partition values;
+  *   3. limit hint ([[GraftLimitPushDown]]): with no filter, the listing
+  *      returns only the files covering the limit's live rows (reference
   *      `DeltaSharedTableKernel.scala:293-297,445-449`).
   *
-  * Scale: O(files) driver-side metadata work, identical in shape to
-  * Delta's own log-replay listing; no data is touched until Spark schedules
-  * the scan tasks.
+  * Scale: O(files) driver-side metadata work, the shape of Delta's own
+  * log-replay listing; no data is touched until Spark schedules the scan.
   */
-class GraftFileIndex(
+class GraftFileIndex private[graft] (
     spark: SparkSession,
-    val tablePath: String,
-    val snapshot: Snapshot,
+    private[graft] val listing: Listing,
     val limitHint: Option[Long] = None)
-    extends FileIndex with GraftLimitableIndex {
+    extends FileIndex {
 
-  private val fullSchema: StructType = snapshot.schema
+  def this(spark: SparkSession, tablePath: String, snapshot: Snapshot) =
+    this(spark, new SnapshotListing(spark, tablePath, snapshot))
 
-  override val partitionSchema: StructType =
-    StructType(snapshot.metadata.partitionColumns.map(c => fullSchema(c)))
+  override val partitionSchema: StructType = listing.layout.partitionSchema
 
   /** Schema of the data stored inside the parquet files. */
-  val dataSchema: StructType =
-    StructType(fullSchema.filterNot(f => snapshot.metadata.partitionColumns.contains(f.name)))
+  val dataSchema: StructType = listing.layout.dataSchema
 
   def withLimit(n: Long): GraftFileIndex =
-    new GraftFileIndex(spark, tablePath, snapshot, Some(limitHint.fold(n)(math.min(_, n))))
+    new GraftFileIndex(spark, listing, Some(limitHint.fold(n)(math.min(_, n))))
 
-  override def rootPaths: Seq[Path] = Seq(new Path(tablePath))
+  /** A parquet relation over this index. */
+  def relation: HadoopFsRelation = HadoopFsRelation(
+    location = this,
+    partitionSchema = partitionSchema,
+    dataSchema = dataSchema,
+    bucketSpec = None,
+    fileFormat = new ParquetFileFormat,
+    options = Map.empty)(spark)
+
+  override def rootPaths: Seq[Path] = listing.rootPaths
 
   override def listFiles(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val afterPartition = prunePartitions(partitionFilters, snapshot.files)
-    val afterStats = pruneWithStats(dataFilters, afterPartition)
-    val afterLimit = applyLimit(afterStats, dataFilters.isEmpty && partitionFilters.isEmpty)
-    toPartitionDirectories(afterLimit)
+    // a limit covers rows only when nothing filters them
+    val limit = limitHint.filter(_ => partitionFilters.isEmpty && dataFilters.isEmpty)
+    directories(prunePartitions(partitionFilters,
+      listing.list(partitionFilters, dataFilters, limit)))
   }
 
-  /** 1. Partition pruning with a real Catalyst interpreted predicate over
-    * the casted partition values (reference `PartitionFilterUtils`).
-    */
-  private def prunePartitions(filters: Seq[Expression], files: Seq[AddFile]): Seq[AddFile] = {
+  private def prunePartitions(
+      filters: Seq[Expression], files: Seq[ListedFile]): Seq[ListedFile] = {
     if (filters.isEmpty || partitionSchema.isEmpty) return files
     val attrs: Seq[Attribute] =
-      partitionSchema.map(f => org.apache.spark.sql.catalyst.expressions.AttributeReference(
-        f.name, f.dataType, nullable = true)())
+      partitionSchema.map(f => AttributeReference(f.name, f.dataType, nullable = true)())
     val resolved = filters.filter(_.references.forall(r => attrs.exists(_.name == r.name)))
     if (resolved.isEmpty) return files
-    val bound = BindReferences.bindReference(
-      resolved.map(rebind(_, attrs)).reduce(And), attrs)
+    val bound = BindReferences.bindReference(resolved.map(_.transform {
+      case a: Attribute => attrs.find(_.name == a.name).getOrElse(a)
+    }).reduce(And), attrs)
     val predicate = Predicate.create(bound)
     predicate.initialize(0)
-    files.filter { f => predicate.eval(partitionRow(f)) }
+    files.filter(f => predicate.eval(partitionRow(f.partitionValues)))
   }
 
-  private def rebind(e: Expression, attrs: Seq[Attribute]): Expression = e.transform {
-    case a: Attribute => attrs.find(_.name == a.name).getOrElse(a)
-  }
-
-  /** Typed partition values row ("" ⇒ null, string cast to column type —
-    * reference `RemoteDeltaFileIndex.scala:96-98`).
+  /** Typed partition values row ("" ⇒ null, string cast to the column type
+    * — reference `RemoteDeltaFileIndex.scala:96-98`).
     */
-  private def partitionRow(f: AddFile): InternalRow =
+  private def partitionRow(values: Map[String, String]): InternalRow =
     InternalRow.fromSeq(partitionSchema.map { field =>
-      castPartitionValue(f.partitionValues.getOrElse(field.name, ""), field.dataType)
+      val v = values.getOrElse(field.name, "")
+      if (v == null || v.isEmpty) null
+      else Cast(Literal(UTF8String.fromString(v), StringType), field.dataType,
+        Some(spark.sessionState.conf.sessionLocalTimeZone)).eval()
     })
 
-  private def castPartitionValue(v: String, dt: DataType): Any =
-    if (v == null || v.isEmpty) null
-    else Cast(Literal(UTF8String.fromString(v), StringType), dt,
-      Some(spark.sessionState.conf.sessionLocalTimeZone)).eval()
-
-  /** 2. Min/max stats skipping via the predicate stack. */
-  private def pruneWithStats(dataFilters: Seq[Expression], files: Seq[AddFile]): Seq[AddFile] =
-    OpConverter.convert(dataFilters) match {
-      case None => files
-      case hint =>
-        FileSkippingEvaluator.filterFiles(hint, snapshot.metadata.partitionColumns, files)
-    }
-
-  /** 3. Limit-hint early cut on cumulative numRecords. */
-  private def applyLimit(files: Seq[AddFile], noFilters: Boolean): Seq[AddFile] =
-    limitHint match {
-      case Some(limit) if noFilters =>
-        var cum = 0L
-        val out = Vector.newBuilder[AddFile]
-        val it = files.iterator
-        while (it.hasNext && cum < limit) {
-          val f = it.next()
-          out += f
-          cum += f.stats.map(_.numRecords).getOrElse(Long.MaxValue)
-        }
-        out.result()
-      case _ => files
-    }
-
-  /** Group surviving files by partition values → PartitionDirectory
-    * (reference `RemoteDeltaFileIndex.scala:88-122`).
-    */
-  private def toPartitionDirectories(files: Seq[AddFile]): Seq[PartitionDirectory] = {
-    val root = new Path(tablePath)
-    def status(f: AddFile): FileStatus =
-      new FileStatus(f.size, false, 1, 134217728L, f.modificationTime, new Path(root, f.path))
-    if (partitionSchema.isEmpty) {
+  /** Group files by partition values (reference `RemoteDeltaFileIndex.scala:88-122`). */
+  private def directories(files: Seq[ListedFile]): Seq[PartitionDirectory] = {
+    def status(f: ListedFile): FileStatus =
+      new FileStatus(f.size, false, 1, GraftFileSystem.BLOCK_SIZE, f.modificationTime, f.path)
+    if (partitionSchema.isEmpty)
       Seq(PartitionDirectory(InternalRow.empty, files.map(status).toArray))
-    } else {
-      files.groupBy(_.partitionValues).toSeq.map { case (_, group) =>
-        PartitionDirectory(partitionRow(group.head), group.map(status).toArray)
-      }
+    else files.groupBy(_.partitionValues).toSeq.map { case (values, group) =>
+      PartitionDirectory(partitionRow(values), group.map(status).toArray)
     }
   }
 
-  override def inputFiles: Array[String] =
-    snapshot.files.map(f => new Path(new Path(tablePath), f.path).toString).toArray
+  private lazy val allFiles = listing.list(Nil, Nil, limitHint)
+
+  override def inputFiles: Array[String] = allFiles.map(_.path.toString).toArray
 
   override def refresh(): Unit = ()
 
-  override def sizeInBytes: Long = snapshot.files.map(_.size).sum
+  override def sizeInBytes: Long = allFiles.map(_.size).sum
 }

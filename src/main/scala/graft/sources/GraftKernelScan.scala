@@ -88,16 +88,15 @@ class GraftKernelSource extends TableProvider with DataSourceRegister {
   }
 }
 
-class GraftKernelTable(tablePath: String, snapshot: Snapshot)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsDeleteV2
+class GraftKernelTable(
+    protected val tablePath: String, protected val snapshot: Snapshot)
+    extends GraftLocalTable with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
   override def name(): String = s"graft-kernel:`$tablePath`@v${snapshot.version}"
 
   /** SQL `UPDATE` / `MERGE INTO` / complex `DELETE` — group-based
     * copy-on-write rewrites (see [[GraftRowLevelOperation]]). Simple
-    * filter deletes still take the cheaper [[deleteWhere]] metadata path
+    * filter deletes still take the cheaper `deleteWhere` metadata path
     * (Spark's `OptimizeMetadataOnlyDeleteFromTable` prefers it).
     */
   override def newRowLevelOperationBuilder(
@@ -105,111 +104,35 @@ class GraftKernelTable(tablePath: String, snapshot: Snapshot)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
     () => new GraftRowLevelOperation(tablePath, snapshot, info.command())
 
-  /** SQL `DELETE FROM … WHERE …`: the analyzer lowers the condition to
-    * connector predicates; we translate them through Spark's own V1
-    * bridge into the `Column` the row-level writer evaluates, then
-    * [[graft.log.TableBuilder.deleteWhere]] rewrites only the files
-    * containing matches (RemoveFile + surviving AddFile + cdc capture).
-    * `DELETE FROM t` with no WHERE arrives as `AlwaysTrue`.
-    */
-  private def deleteColumns(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Option[org.apache.spark.sql.Column] = {
-    if (snapshot.metadata.partitionColumns.nonEmpty) return None
-    val cols = predicates.toSeq.map(p =>
-      org.apache.spark.sql.GraftBatchDf.predicateToV1(p)
-        .flatMap(V1FilterColumn.toColumn))
-    if (cols.exists(_.isEmpty)) None
-    else Some(cols.flatten.reduceOption(_ && _)
-      .getOrElse(org.apache.spark.sql.functions.lit(true)))
-  }
-
-  override def canDeleteWhere(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Boolean = deleteColumns(predicates).isDefined
-
-  override def deleteWhere(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Unit = {
-    val cond = deleteColumns(predicates).getOrElse(throw new UnsupportedOperationException(
-      s"DELETE condition not expressible as connector filters: ${predicates.mkString(", ")}"))
-    // delta DV contract: DV-enabled tables delete by WRITING deletion
-    // vectors (merge-on-read); later loads route through the V1 fallback
-    GraftV1FallbackTable.routeDelete(SparkSession.active, tablePath, snapshot, cond)
-  }
-  override def schema(): StructType = snapshot.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val spark = SparkSession.active
+    val index = new GraftFileIndex(spark, tablePath, snapshot)
     new GraftKernelScanBuilder(spark, name(), snapshot.schema,
       snapshot.metadata.partitionColumns.toSet,
-      limit => new GraftFileIndex(spark, tablePath, snapshot, limit.map(_.toLong)))
+      limit => limit.fold(index)(n => index.withLimit(n.toLong)))
   }
-
-  /** SQL DML via the V1 write fallback: `INSERT INTO` appends a new log
-    * version through the table builder (schema-checked, stats computed,
-    * Delta-format commits on Delta-format tables); `INSERT OVERWRITE`
-    * recreates at version 0 preserving partitioning, configuration, and
-    * log format. The DataFrame-based V1 path is exactly the builder's
-    * input shape — no duplicate per-task writer machinery.
-    */
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder
-      with org.apache.spark.sql.connector.write.SupportsTruncate {
-      private var overwrite = false
-      override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = {
-        overwrite = true; this
-      }
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.V1Write {
-          override def toInsertableRelation
-              : org.apache.spark.sql.sources.InsertableRelation =
-            (data: org.apache.spark.sql.DataFrame, _: Boolean) => {
-              val spark = data.sparkSession
-              val conf = spark.sessionState.newHadoopConf()
-              if (overwrite) {
-                val wasDelta = new graft.log.GraftLog(tablePath, conf).deltaMode
-                val p = new org.apache.hadoop.fs.Path(tablePath)
-                p.getFileSystem(conf).delete(p, true)
-                graft.log.GraftLog.invalidateListing(tablePath)
-                graft.log.TableBuilder.create(spark, data, tablePath,
-                  partitionCols = snapshot.metadata.partitionColumns,
-                  name = snapshot.metadata.name,
-                  configuration = snapshot.metadata.configuration,
-                  deltaFormat = wasDelta)
-              } else {
-                graft.log.TableBuilder.append(spark, data, tablePath)
-              }
-            }
-        }
-    }
 }
 
 /** The same DSv2 columnar scan over a REMOTE shared table: partition
-  * planning goes through [[RemoteGraftFileIndex]] (jsonPredicateHints to
-  * the server, pre-signed URLs registered in the refreshing cache) and
-  * scan tasks read parquet bytes via `graft://` Range requests — the
+  * planning goes through a [[GraftFileIndex]] over a `/query` listing
+  * (jsonPredicateHints to the server, pre-signed URLs registered in the
+  * refreshing cache) and scan tasks read parquet bytes via `graft://` Range requests — the
   * kernel path and the REST path composed. Advanced reader features are
   * refused like the local kernel scan (the table's configuration travels
   * in the wire metadata).
   */
 class RemoteGraftKernelTable(
     spark: SparkSession,
-    baseIndex: RemoteGraftFileIndex,
+    baseIndex: GraftFileIndex,
     label: String) extends Table with SupportsRead {
   override def name(): String = label
-  override def schema(): StructType = baseIndex.fullSchema
+  override def schema(): StructType = baseIndex.listing.layout.logical
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftKernelScanBuilder(spark, label, baseIndex.fullSchema,
+    new GraftKernelScanBuilder(spark, label, schema(),
       baseIndex.partitionSchema.fieldNames.toSet,
-      limit => limit.fold(baseIndex: org.apache.spark.sql.execution.datasources.FileIndex)(
-        n => baseIndex.withLimit(n.toLong)))
+      limit => limit.fold(baseIndex)(n => baseIndex.withLimit(n.toLong)))
 }
 
 /** Collects Spark's pushdown calls, then builds the scan. All pushed
@@ -220,7 +143,7 @@ class GraftKernelScanBuilder(
     label: String,
     fullSchema: StructType,
     partitionCols: Set[String],
-    mkIndex: Option[Int] => org.apache.spark.sql.execution.datasources.FileIndex)
+    mkIndex: Option[Int] => GraftFileIndex)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownLimit {
 
@@ -259,7 +182,7 @@ class GraftKernelScan(
     label: String,
     fullSchema: StructType,
     partitionCols: Set[String],
-    index: org.apache.spark.sql.execution.datasources.FileIndex,
+    index: GraftFileIndex,
     required: StructType,
     pushed: Array[Filter],
     limit: Option[Int]) extends Scan with Batch {
@@ -283,7 +206,7 @@ class GraftKernelScan(
   /** Index the scan plans over — a subclass may narrow it after runtime
     * filtering (row-level group pruning).
     */
-  protected def currentIndex: org.apache.spark.sql.execution.datasources.FileIndex = index
+  protected def currentIndex: GraftFileIndex = index
 
   override def planInputPartitions(): Array[InputPartition] = {
     val index = currentIndex

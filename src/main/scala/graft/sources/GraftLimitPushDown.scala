@@ -6,15 +6,15 @@ import org.apache.spark.sql.catalyst.plans.logical.{LocalLimit, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-/** Catalyst rule pushing `LIMIT n` down into [[GraftFileIndex]] as a
-  * file-level hint: the index then lists only enough files to cover n rows
-  * by their `numRecords` stats (the reference's
-  * `DeltaSharingLimitPushDown.scala:32-65` + server-side early termination
-  * `DeltaSharedTableKernel.scala:445-449`).
+/** Catalyst rule pushing `LIMIT n` down to the listing as a file-level
+  * hint: only enough files to cover n live rows are listed (the
+  * reference's `DeltaSharingLimitPushDown.scala:32-65` + server-side early
+  * termination `DeltaSharedTableKernel.scala:445-449`).
   *
   * Catalyst will never push a LocalLimit into a FileIndex on its own —
   * this is one of the two custom optimizer hooks the engine needs
-  * (SURVEY.md §4.2).
+  * (SURVEY.md §4.2). One case per scan shape: the parquet relation over
+  * [[GraftFileIndex]] and the advanced-feature [[GraftScanRelation]].
   */
 object GraftLimitPushDown extends Rule[LogicalPlan] {
 
@@ -27,14 +27,12 @@ object GraftLimitPushDown extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case limit @ LocalLimit(IntegerLiteral(n),
         lr @ LogicalRelation(
-          hfs @ HadoopFsRelation(index: GraftLimitableIndex, _, _, _, _, _), _, _, _, _))
+          hfs @ HadoopFsRelation(index: GraftFileIndex, _, _, _, _, _), _, _, _, _))
         if index.limitHint.isEmpty =>
       val newRelation = hfs.copy(location = index.withLimit(n.toLong))(hfs.sparkSession)
       limit.copy(child = lr.copy(relation = newRelation))
-    // the delta-dialect remote scan takes the hint on the relation itself
-    // (its file listing happens inside buildScan, not a FileIndex)
     case limit @ LocalLimit(IntegerLiteral(n),
-        lr @ LogicalRelation(rel: RemoteDeltaScanRelation, _, _, _, _))
+        lr @ LogicalRelation(rel: GraftScanRelation, _, _, _, _))
         if rel.limitHint.isEmpty =>
       limit.copy(child = lr.copy(relation = rel.withLimit(n.toLong)))
   }

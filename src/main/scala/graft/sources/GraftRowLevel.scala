@@ -155,7 +155,7 @@ class GraftRowLevelScan(
   // re-plan over whatever the candidate set has been narrowed to by the
   // time Spark plans partitions (static build-time pruning + runtime
   // group filters both land in op.candidates)
-  override protected def currentIndex: org.apache.spark.sql.execution.datasources.FileIndex =
+  override protected def currentIndex: GraftFileIndex =
     new GraftFileIndex(spark, tablePath, snapshot.copy(files = op.candidates))
 
   /** EXACTLY ONE stats-eligible column — the leading one (merge keys

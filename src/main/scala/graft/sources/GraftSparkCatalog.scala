@@ -29,9 +29,10 @@ import graft.log.GraftCatalog
   * hooks. Shares are read-only by protocol, so every DDL entry point
   * refuses.
   *
-  * Advanced-reader-feature tables (deletion vectors / column mapping)
-  * need the V1 wrapping relation and are refused here with a pointer at
-  * `format("graft")` — same guard as [[GraftKernelSource]].
+  * Local advanced-reader-feature tables (deletion vectors / column
+  * mapping) serve through [[GraftV1FallbackTable]] over the scan core's
+  * relation; the remote catalog refuses them with a pointer at
+  * `format("graft")`.
   */
 class GraftSparkCatalog extends TableCatalog with SupportsNamespaces {
 
@@ -39,7 +40,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces {
   /** Remote mode: `spark.sql.catalog.<name>.url` (+ `.token`) points the
     * catalog at a sharing server instead of the in-process registry —
     * identifiers resolve through the REST listings, tables scan through
-    * [[RemoteGraftFileIndex]] + `graft://` pre-signed reads.
+    * a [[GraftFileIndex]] over `/query` + `graft://` pre-signed reads.
     */
   private var remote: Option[graft.client.GraftRestClient] = None
 
@@ -129,8 +130,8 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces {
         // paged round trips (O(catalog size) HTTP calls per identifier
         // resolution). Ask for the table's metadata directly and map the
         // server's not-found to the catalog contract.
-        val index = try {
-          new RemoteGraftFileIndex(spark, client, share, schema, table,
+        val listing = try {
+          new QueryListing(client, share, schema, table,
             versionAsOf = version,
             timestampAsOf = timestampMs.map(ms =>
               java.time.Instant.ofEpochMilli(ms).toString))
@@ -141,10 +142,10 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces {
         // the scan decodes raw parquet bytes: a column-mapped table's
         // logical wire schema would silently match nothing — refuse (DV
         // tables are already refused server-side in the parquet dialect)
-        require(!index.configuration.get("delta.columnMapping.mode").exists(_ != "none"),
+        require(!listing.configuration.get("delta.columnMapping.mode").exists(_ != "none"),
           s"$catalogName serves tables via the DSv2 columnar scan, which does " +
             "not apply column mapping; read this table with format(\"graft\")")
-        new RemoteGraftKernelTable(spark, index,
+        new RemoteGraftKernelTable(spark, new GraftFileIndex(spark, listing),
           s"graft-kernel-remote:$share.$schema.$table")
     }
 

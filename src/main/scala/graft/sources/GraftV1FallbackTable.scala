@@ -3,15 +3,94 @@ package graft.sources
 import java.util
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SQLContext, SparkSession}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
+import org.apache.spark.sql.{Column, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.connector.catalog.{SupportsDeleteV2, SupportsRead, SupportsWrite, Table, TableCapability}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
+import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.log.Snapshot
+
+/** What the local catalog tables ([[GraftKernelTable]],
+  * [[GraftV1FallbackTable]]) share: SQL writes and SQL `DELETE`.
+  *
+  *  - `INSERT INTO` appends a new log version through the table builder
+  *    (schema-checked, stats computed, Delta-format commits on
+  *    Delta-format tables); `INSERT OVERWRITE` recreates at version 0
+  *    preserving partitioning, configuration and log format. The
+  *    DataFrame-based V1 write is exactly the builder's input shape.
+  *  - `DELETE FROM … WHERE …`: the analyzer lowers the condition to
+  *    connector predicates, translated through Spark's own V1 bridge into
+  *    the `Column` the row-level writer evaluates (`DELETE FROM t` with no
+  *    WHERE arrives as `AlwaysTrue`). The delta DV contract decides the
+  *    writer: a table with `delta.enableDeletionVectors=true` (or existing
+  *    DVs) deletes by WRITING deletion vectors (merge-on-read, zero data
+  *    file rewrites), anything else rewrites only the files holding
+  *    matches ([[graft.log.TableBuilder.deleteWhere]]).
+  */
+private[sources] trait GraftLocalTable extends Table with SupportsWrite with SupportsDeleteV2 {
+  protected def tablePath: String
+  protected def snapshot: Snapshot
+
+  override def schema(): StructType = snapshot.schema
+
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ,
+      TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
+
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    new WriteBuilder with SupportsTruncate {
+      private var overwrite = false
+      override def truncate(): WriteBuilder = { overwrite = true; this }
+      override def build(): Write = new V1Write {
+        override def toInsertableRelation: InsertableRelation =
+          (data: org.apache.spark.sql.DataFrame, _: Boolean) => {
+            val spark = data.sparkSession
+            val conf = spark.sessionState.newHadoopConf()
+            if (overwrite) {
+              val wasDelta = new graft.log.GraftLog(tablePath, conf).deltaMode
+              val p = new org.apache.hadoop.fs.Path(tablePath)
+              p.getFileSystem(conf).delete(p, true)
+              graft.log.GraftLog.invalidateListing(tablePath)
+              graft.log.TableBuilder.create(spark, data, tablePath,
+                partitionCols = snapshot.metadata.partitionColumns,
+                name = snapshot.metadata.name,
+                configuration = snapshot.metadata.configuration,
+                deltaFormat = wasDelta)
+            } else {
+              graft.log.TableBuilder.append(spark, data, tablePath)
+            }
+          }
+      }
+    }
+
+  private def deleteCondition(predicates: Array[Predicate]): Option[Column] = {
+    if (snapshot.metadata.partitionColumns.nonEmpty) return None
+    val cols = predicates.toSeq.map(p =>
+      org.apache.spark.sql.GraftBatchDf.predicateToV1(p).flatMap(FilterColumns.one))
+    if (cols.exists(_.isEmpty)) None
+    else Some(cols.flatten.reduceOption(_ && _)
+      .getOrElse(org.apache.spark.sql.functions.lit(true)))
+  }
+
+  override def canDeleteWhere(predicates: Array[Predicate]): Boolean =
+    deleteCondition(predicates).isDefined
+
+  override def deleteWhere(predicates: Array[Predicate]): Unit = {
+    val cond = deleteCondition(predicates).getOrElse(throw new UnsupportedOperationException(
+      s"DELETE condition not expressible as connector filters: ${predicates.mkString(", ")}"))
+    val spark = SparkSession.active
+    val dvMode =
+      snapshot.metadata.configuration.get("delta.enableDeletionVectors").contains("true") ||
+        snapshot.files.exists(_.deletionVector.isDefined)
+    if (dvMode) graft.log.TableBuilder.deleteWhereDV(spark, tablePath, cond)
+    else graft.log.TableBuilder.deleteWhere(spark, tablePath, cond)
+  }
+}
 
 /** Catalog `Table` for ADVANCED-reader-feature tables (deletion vectors /
   * column mapping): the DSv2 columnar kernel scan decodes raw parquet and
@@ -26,22 +105,15 @@ import graft.log.Snapshot
   * are applied to the underlying DataFrame for file skipping but reported
   * UNHANDLED (`pushedFilters()` empty), so Spark re-evaluates them above —
   * sound by construction, and the underlying scan still prunes files via
-  * its own FileIndex. Writes: appends/overwrites via [[graft.log
-  * .TableBuilder]] like the kernel table; SQL DELETE honors the delta DV
-  * contract — a table with `delta.enableDeletionVectors=true` (or
-  * existing DVs) deletes by WRITING deletion vectors (merge-on-read, no
-  * file rewrite), anything else takes the copy-on-write path.
+  * its own listing. Writes and SQL DELETE are [[GraftLocalTable]]'s; no
+  * row-level operations (UPDATE/MERGE) are offered, since their group
+  * rewrite reads raw parquet and would resurrect DV-deleted rows.
   */
-class GraftV1FallbackTable(tablePath: String, snapshot: Snapshot)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsDeleteV2 {
+class GraftV1FallbackTable(
+    protected val tablePath: String, protected val snapshot: Snapshot)
+    extends GraftLocalTable with SupportsRead {
 
   override def name(): String = s"graft-v1:`$tablePath`@v${snapshot.version}"
-  override def schema(): StructType = snapshot.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
@@ -63,8 +135,8 @@ class GraftV1FallbackTable(tablePath: String, snapshot: Snapshot)
             .option("path", tablePath)
             .option("versionAsOf", snapshot.version.toString)
             .load()
-          val filtered = filters.foldLeft(df0)((d, f) =>
-            V1FilterColumn.toColumn(f).map(d.filter).getOrElse(d))
+          val filtered = FilterColumns.translate(filters.toIndexedSeq)
+            .map(df0.filter).getOrElse(df0)
           val projected =
             filtered.select(required.fieldNames.toIndexedSeq.map(col): _*)
           new BaseRelation with TableScan {
@@ -75,81 +147,4 @@ class GraftV1FallbackTable(tablePath: String, snapshot: Snapshot)
         }
       }
     }
-
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder
-      with org.apache.spark.sql.connector.write.SupportsTruncate {
-      private var overwrite = false
-      override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = {
-        overwrite = true; this
-      }
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.V1Write {
-          override def toInsertableRelation
-              : org.apache.spark.sql.sources.InsertableRelation =
-            (data: org.apache.spark.sql.DataFrame, _: Boolean) => {
-              val spark = data.sparkSession
-              val conf = spark.sessionState.newHadoopConf()
-              if (overwrite) {
-                val wasDelta = new graft.log.GraftLog(tablePath, conf).deltaMode
-                val p = new org.apache.hadoop.fs.Path(tablePath)
-                p.getFileSystem(conf).delete(p, true)
-                graft.log.GraftLog.invalidateListing(tablePath)
-                graft.log.TableBuilder.create(spark, data, tablePath,
-                  partitionCols = snapshot.metadata.partitionColumns,
-                  name = snapshot.metadata.name,
-                  configuration = snapshot.metadata.configuration,
-                  deltaFormat = wasDelta)
-              } else {
-                graft.log.TableBuilder.append(spark, data, tablePath)
-              }
-            }
-        }
-    }
-
-  private def deleteColumn(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Option[org.apache.spark.sql.Column] = {
-    if (snapshot.metadata.partitionColumns.nonEmpty) return None
-    val cols = predicates.toSeq.map(p =>
-      org.apache.spark.sql.GraftBatchDf.predicateToV1(p)
-        .flatMap(V1FilterColumn.toColumn))
-    if (cols.exists(_.isEmpty)) None
-    else Some(cols.flatten.reduceOption(_ && _)
-      .getOrElse(org.apache.spark.sql.functions.lit(true)))
-  }
-
-  override def canDeleteWhere(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Boolean = deleteColumn(predicates).isDefined
-
-  override def deleteWhere(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Unit = {
-    val cond = deleteColumn(predicates).getOrElse(
-      throw new UnsupportedOperationException(
-        s"DELETE condition not expressible as connector filters: " +
-          predicates.mkString(", ")))
-    GraftV1FallbackTable.routeDelete(SparkSession.active, tablePath, snapshot, cond)
-  }
-}
-
-object GraftV1FallbackTable {
-  /** The delta DV-delete contract, shared with the kernel table's DELETE:
-    * tables that enabled deletion vectors (or already carry some) delete
-    * by writing DVs — merge-on-read, zero data-file rewrites — while
-    * plain tables take the copy-on-write rewrite.
-    */
-  private[sources] def routeDelete(
-      spark: SparkSession, tablePath: String, snapshot: Snapshot,
-      cond: org.apache.spark.sql.Column): Unit = {
-    val dvMode =
-      snapshot.metadata.configuration
-        .get("delta.enableDeletionVectors").contains("true") ||
-        snapshot.files.exists(_.deletionVector.isDefined)
-    if (dvMode) graft.log.TableBuilder.deleteWhereDV(spark, tablePath, cond)
-    else graft.log.TableBuilder.deleteWhere(spark, tablePath, cond)
-  }
 }

@@ -5,11 +5,11 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.BaseRelation
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.client.{GraftRestClient, GraftUrlCache}
 import graft.log.GraftCDF
-import graft.model.{ColumnMapping, RoaringBitmapArray}
+import graft.model.RoaringBitmapArray
 import graft.server.wire
 
 /** Remote Change Data Feed in the DELTA response dialect — for tables the
@@ -120,8 +120,7 @@ object RemoteDeltaCDF {
   def urlEntries(groups: Seq[Group]): Map[String, GraftUrlCache.Entry] =
     groups.flatMap { g =>
       def entry(f: wire.DeltaFileW, url: String) =
-        vid(f) -> GraftUrlCache.Entry(url,
-          Option(f.expirationTimestamp).map(_.longValue()).getOrElse(Long.MaxValue))
+        GraftUrlCache.entry(vid(f), url, f.expirationTimestamp)
       g.cdc.map(f => entry(f, f.deltaSingleAction.cdc.path)) ++
         g.adds.map(f => entry(f, f.deltaSingleAction.add.path)) ++
         g.removes.map(f => entry(f, f.deltaSingleAction.remove.path))
@@ -130,7 +129,7 @@ object RemoteDeltaCDF {
   private def bitmapOf(dv: Option[wire.DeltaDvW]): Set[Long] = dv match {
     case None => Set.empty
     case Some(d) =>
-      RoaringBitmapArray.deserialize(RemoteDeltaScanRelation.fetchDvBytes(d))
+      RoaringBitmapArray.deserialize(ScanCore.fetchDvBytes(d))
         .toSeq.toSet
   }
 
@@ -146,55 +145,24 @@ object RemoteDeltaCDF {
       groups: Seq[Group],
       dvState: mutable.HashMap[String, Option[wire.DeltaDvW]]): DataFrame = {
 
-    val logical = DataType.fromJson(meta.deltaMetadata.schemaString)
-      .asInstanceOf[StructType]
-    val config = Option(meta.deltaMetadata.configuration).getOrElse(Map.empty)
-    val idMode = config.get(ColumnMapping.MODE_KEY).exists(_.equalsIgnoreCase("id"))
-    if (idMode) spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val names = ColumnMapping.nameMap(logical)
-    val physSchema = ColumnMapping.physicalSchema(logical, idMode)
-    val partCols = meta.deltaMetadata.partitionColumns
-    val physPartCols = partCols.map(c => names.getOrElse(c, c))
-    val dataSchema = StructType(physSchema.filterNot(f => physPartCols.contains(f.name)))
+    val dm = meta.deltaMetadata
+    val layout = Layout.ofWire(dm.schemaString, dm.partitionColumns, dm.configuration)
+    layout.prepare(spark)
 
-    def spellings(f: wire.DeltaFileW, size: Long, blob: Array[Byte]) =
-      DvFilters.pathSpellings(GraftFileSystem.encodePath(vid(f), size)).map(_ -> blob)
+    def bitmaps(blobs: Seq[(wire.DeltaFileW, Long, Array[Byte])]): Map[String, Array[Byte]] =
+      ScanCore.bySpelling(blobs.map { case (f, size, b) =>
+        GraftFileSystem.encodePath(vid(f), size) -> b })
 
     val perVersion: Seq[DataFrame] = groups.flatMap { g =>
       val ts = new java.sql.Timestamp(g.timestamp)
 
       def read(files: Seq[(wire.DeltaFileW, Long, Map[String, String])],
-          withChangeType: Option[String],
+          changeType: Option[String],
           keep: Map[String, Array[Byte]] = Map.empty,
           drop: Map[String, Array[Byte]] = Map.empty): Option[DataFrame] =
-        if (files.isEmpty) None
-        else {
-          val perPartition = files.groupBy(_._3).map { case (pv, grp) =>
-            val paths = grp.map(f =>
-              GraftFileSystem.encodePath(vid(f._1), f._2).toString)
-            val raw0 = withChangeType match {
-              case Some(ct) =>
-                spark.read.schema(dataSchema).parquet(paths: _*)
-                  .withColumn(GraftCDF.CHANGE_TYPE, lit(ct))
-              case None =>
-                spark.read.schema(dataSchema.add(GraftCDF.CHANGE_TYPE, "string"))
-                  .parquet(paths: _*)
-            }
-            val raw1 = if (drop.isEmpty) raw0 else DvFilters.filterDeleted(raw0, drop)
-            val base = if (keep.isEmpty) raw1 else DvFilters.selectDeleted(raw1, keep)
-            partCols.zip(physPartCols).foldLeft(base) { case (d, (c, pc)) =>
-              val raw = pv.getOrElse(pc, "")
-              val v = if (raw == null || raw.isEmpty) lit(null) else lit(raw)
-              d.withColumn(pc, v.cast(logical(c).dataType))
-            }
-          }.toSeq
-          Some(perPartition.reduce(_.unionByName(_))
-            .select((logical.map(f =>
-              col(names.getOrElse(f.name, f.name)).as(f.name)) :+
-              col(GraftCDF.CHANGE_TYPE)): _*)
-            .withColumn(GraftCDF.COMMIT_VERSION, lit(g.version))
-            .withColumn(GraftCDF.COMMIT_TIMESTAMP, lit(ts)))
-        }
+        GraftCDF.readChanges(spark, layout, files.map { case (f, size, pv) =>
+          GraftFileSystem.encodePath(vid(f), size).toString -> pv
+        }, changeType, g.version, ts, keep, drop)
 
       val addedIds = g.adds.map(_.id).toSet
       val newAdds = g.adds.filterNot(f => dvState.contains(f.id))
@@ -207,16 +175,14 @@ object RemoteDeltaCDF {
             (f, f.deltaSingleAction.cdc.size, f.deltaSingleAction.cdc.partitionValues)),
             None).toSeq
         else {
-          val insDrop = newAdds.flatMap { f =>
+          val insDrop = bitmaps(newAdds.flatMap { f =>
             Option(f.deltaSingleAction.add.deletionVector).map(d =>
-              spellings(f, f.deltaSingleAction.add.size,
-                RemoteDeltaScanRelation.fetchDvBytes(d)))
-          }.flatten.toMap
-          val remDrop = pureRemoves.flatMap { f =>
+              (f, f.deltaSingleAction.add.size, ScanCore.fetchDvBytes(d)))
+          })
+          val remDrop = bitmaps(pureRemoves.flatMap { f =>
             dvState.getOrElse(f.id, None).map(d =>
-              spellings(f, f.deltaSingleAction.remove.size,
-                RemoteDeltaScanRelation.fetchDvBytes(d)))
-          }.flatten.toMap
+              (f, f.deltaSingleAction.remove.size, ScanCore.fetchDvBytes(d)))
+          })
           val diffs = dvUpdates.map { f =>
             val oldSet = bitmapOf(dvState(f.id))
             val newSet = bitmapOf(Option(f.deltaSingleAction.add.deletionVector))
@@ -226,8 +192,8 @@ object RemoteDeltaCDF {
             val hit = diffs.filter(d => sel(d).nonEmpty)
             (hit.map(d => (d._1, d._1.deltaSingleAction.add.size,
               d._1.deltaSingleAction.add.partitionValues)),
-              hit.flatMap(d => spellings(d._1, d._1.deltaSingleAction.add.size,
-                RoaringBitmapArray(sel(d)).serialize())).toMap)
+              bitmaps(hit.map(d => (d._1, d._1.deltaSingleAction.add.size,
+                RoaringBitmapArray(sel(d)).serialize()))))
           }
           val (delFiles, delKeep) = diffKeep(_._2)
           val (resFiles, resKeep) = diffKeep(_._3)
@@ -254,7 +220,7 @@ object RemoteDeltaCDF {
     perVersion match {
       case Nil =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          GraftCDF.withCdfColumns(logical))
+          GraftCDF.withCdfColumns(layout.logical))
       case dfs => dfs.reduce(_.unionByName(_))
     }
   }

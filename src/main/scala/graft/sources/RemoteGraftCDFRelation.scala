@@ -1,9 +1,8 @@
 package graft.sources
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{BaseRelation, Filter, PrunedFilteredScan}
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.client.{GraftRestClient, GraftUrlCache}
@@ -38,9 +37,7 @@ class RemoteGraftCDFRelation(
     val res = client.changes(share, schemaName, table, params)
     val tableSchema = DataType.fromJson(res.metadata.schemaString).asInstanceOf[StructType]
 
-    def entry(id: String, url: String, exp: java.lang.Long) =
-      id -> GraftUrlCache.Entry(url,
-        Option(exp).map(_.longValue()).getOrElse(Long.MaxValue))
+    import GraftUrlCache.entry
     val urls =
       res.adds.map(a => entry(a.id, a.url, a.expirationTimestamp)) ++
         res.cdfs.map(c => entry(c.id, c.url, c.expirationTimestamp)) ++

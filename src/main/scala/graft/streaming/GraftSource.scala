@@ -1,13 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.log.{GraftLog, Snapshot}
 import graft.model.{AddFile, ColumnMapping, RemoveFile}
-import graft.sources.GraftDataSource
+import graft.sources.{ScanCore, SnapshotListing}
 
 /** Micro-batch streaming source over a LOCAL graft table: the
   * [[SharedTableSource]] contract read straight from the table's log.
@@ -17,8 +15,8 @@ import graft.sources.GraftDataSource
   * commits offsets; every metadata commit tailed mid-stream must stay
   * read-compatible with the start schema and keep the column-mapping mode;
   * files carrying deletion vectors cannot be tailed. Column-mapped tables
-  * stream: batches read the physical snapshot and project back to logical
-  * names. CDF batches come from the batch CDF assembler.
+  * stream: batches are the scan core's live rows of the admitted files.
+  * CDF batches come from the batch CDF assembler.
   */
 class GraftSource(
     spark: SparkSession,
@@ -36,8 +34,8 @@ class GraftSource(
   ColumnMapping.assertNoAdvancedFeatures(
     initialSnapshot.metadata, s"streaming from $tablePath", allowCm = true)
   private val cmMode = ColumnMapping.mode(initialSnapshot.metadata)
-  if (ColumnMapping.isIdMode(initialSnapshot.metadata))
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+  // batches read the start snapshot's physical layout
+  private val listing = new SnapshotListing(spark, tablePath, initialSnapshot)
 
   override protected def tableName: String = tablePath
   override protected val tableId: String = initialSnapshot.metadata.id
@@ -105,20 +103,8 @@ class GraftSource(
 
   override protected def sizeOf(file: AddFile): Long = file.size
 
-  override protected def batchDF(files: Seq[AddFile]): DataFrame = {
-    // column-mapped: the relation must speak PHYSICAL names (file columns
-    // and partition dirs) — project back to logical on top
-    val relation = GraftDataSource.relation(spark, tablePath,
-      ColumnMapping.physicalSnapshot(initialSnapshot.copy(files = files)))
-    val base = GraftSqlBridge.ofRowsStreaming(spark, LogicalRelation(relation, isStreaming = true))
-    if (!ColumnMapping.isEnabled(initialSnapshot.metadata)) base
-    else {
-      import org.apache.spark.sql.functions.col
-      val names = ColumnMapping.nameMap(tableSchema)
-      base.select(tableSchema.fields.toIndexedSeq.map(f =>
-        col(names.getOrElse(f.name, f.name)).as(f.name)): _*)
-    }
-  }
+  override protected def batchDF(files: Seq[AddFile]): DataFrame =
+    ScanCore.liveRows(spark, listing.fixed(files), streaming = true)
 
   override protected def cdfDF(fromV: Long, toV: Long): DataFrame =
     graft.log.GraftCDF.tableChanges(spark, tablePath, fromV, Some(toV))

@@ -1,14 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.client.{GraftRestClient, GraftUrlCache}
 import graft.model.SchemaCompat
-import graft.sources.{GraftFileSystem, RemoteBatchFileIndex, RemoteDeltaCDF}
+import graft.sources.{FixedListing, GraftFileSystem, Layout, ListedFile, RemoteDeltaCDF, ScanCore}
 
 /** Streaming source over a REMOTE shared table: the [[SharedTableSource]]
   * contract over REST — snapshot query + version-range queries, scan bytes
@@ -34,9 +31,7 @@ class RemoteGraftSource(
     schemaName: String,
     table: String,
     options: Map[String, String])
-    extends SharedTableSource[RemoteGraftSource.RemoteFile](spark, options) {
-
-  import RemoteGraftSource.RemoteFile
+    extends SharedTableSource[ListedFile](spark, options) {
 
   /** T4: at most this many versions are requested per range RPC (the
     * reference default 100, `DeltaSharingSource.scala:176-191`) so a
@@ -59,26 +54,23 @@ class RemoteGraftSource(
     * whose reader features refuse the flat dialect answers the protocol's
     * typed 400, and the stream renegotiates in `responseformat=delta`.
     */
-  private val (tableIdAtStart, tableSchemaAtStart, partitionColumnsLogical, tableConfig,
-    deltaDialect, metaVersion, deltaMetaLine) =
+  private val (tableIdAtStart, layout, deltaDialect, metaVersion, deltaMetaLine) =
     try {
       val (m, v) = client.metadata(share, schemaName, table)
-      (m.id, DataType.fromJson(m.schemaString).asInstanceOf[StructType],
-        m.partitionColumns, Map.empty[String, String], false, v,
+      (m.id, Layout(DataType.fromJson(m.schemaString).asInstanceOf[StructType],
+        m.partitionColumns, idMode = false), false, v,
         null.asInstanceOf[graft.server.wire.DeltaMetadataLine])
     } catch {
       case e: graft.client.GraftClientException if e.isUnsupportedOperation =>
         val (dm, v) = client.deltaMetadata(share, schemaName, table)
-        (dm.deltaMetadata.id,
-          DataType.fromJson(dm.deltaMetadata.schemaString).asInstanceOf[StructType],
-          dm.deltaMetadata.partitionColumns,
-          Option(dm.deltaMetadata.configuration).getOrElse(Map.empty[String, String]),
+        val meta = dm.deltaMetadata
+        (meta.id, Layout.ofWire(meta.schemaString, meta.partitionColumns, meta.configuration),
           true, v, dm)
     }
 
   override protected def tableName: String = s"$share.$schemaName.$table"
   override protected def tableId: String = tableIdAtStart
-  override protected def tableSchema: StructType = tableSchemaAtStart
+  override protected def tableSchema: StructType = layout.logical
   override protected def versionAtStart: Long = metaVersion
 
   override protected def latestVersion(): Long = {
@@ -108,25 +100,22 @@ class RemoteGraftSource(
     GraftUrlCache.register(fullKey, entries, refresh)
   }
 
-  private def urlEntry(id: String, url: String, exp: java.lang.Long) =
-    id -> GraftUrlCache.Entry(url, Option(exp).map(_.longValue()).getOrElse(Long.MaxValue))
-
-  override protected def snapshotFiles(version: Long): Seq[RemoteFile] = {
+  override protected def snapshotFiles(version: Long): Seq[ListedFile] = {
     val req = graft.server.wire.QueryRequest(version = version)
     if (deltaDialect) {
-      def urlsOf(r: client.DeltaQueryResult) = r.files.map(f =>
-        urlEntry(dvScopedId(f, version), f.deltaSingleAction.add.path, f.expirationTimestamp)).toMap
+      def urlsOf(r: client.DeltaQueryResult) = r.files.map(f => GraftUrlCache.entry(
+        dvScopedId(f, version), f.deltaSingleAction.add.path, f.expirationTimestamp)).toMap
       val res = client.deltaQuery(share, schemaName, table, req)
       registerUrls(s"snap@$version", urlsOf(res),
         () => urlsOf(client.deltaQuery(share, schemaName, table, req)), lastVersion = version)
       res.files.sortBy(_.id).map(f => deltaFile(f, version))
     } else {
       def urlsOf(r: client.QueryResult) =
-        r.files.map(f => urlEntry(f.id, f.url, f.expirationTimestamp)).toMap
+        r.files.map(f => GraftUrlCache.entry(f.id, f.url, f.expirationTimestamp)).toMap
       val res = client.query(share, schemaName, table, req)
       registerUrls(s"snap@$version", urlsOf(res),
         () => urlsOf(client.query(share, schemaName, table, req)), lastVersion = version)
-      res.files.sortBy(_.id).map(f => RemoteFile(f.id, f.size, f.partitionValues))
+      res.files.sortBy(_.id).map(f => plainFile(f.id, f.size, f.partitionValues))
     }
   }
 
@@ -138,7 +127,7 @@ class RemoteGraftSource(
     * [[graft.log.GraftLog]]'s commit memo).
     */
   private val fetchedCommits = scala.collection.concurrent.TrieMap
-    .empty[Long, (Seq[RemoteFile], Boolean)]
+    .empty[Long, (Seq[ListedFile], Boolean)]
 
   /** Window-lazy: a window RPC is issued only when the walk is pulled into
     * it, so a trigger fetches at most one window past its admission cap;
@@ -149,7 +138,7 @@ class RemoteGraftSource(
     * prevent (reference `DeltaSharingSource.scala:176-191,302-315`).
     */
   override protected def commits(
-      start: Long, end: Long): Iterator[(Long, Seq[RemoteFile], Boolean)] =
+      start: Long, end: Long): Iterator[(Long, Seq[ListedFile], Boolean)] =
     windowedVersions(start, end, fetchedCommits)(fetchCommitsWindow)
       .map { case (v, (adds, hasRemoves)) => (v, adds, hasRemoves) }
 
@@ -186,10 +175,11 @@ class RemoteGraftSource(
     if (f.deltaSingleAction.add.deletionVector == null) f.id
     else s"${f.id}~dv$version"
 
-  private def deltaFile(f: graft.server.wire.DeltaFileW, version: Long): RemoteFile = {
-    val a = f.deltaSingleAction.add
-    RemoteFile(dvScopedId(f, version), a.size, a.partitionValues, Option(a.deletionVector))
-  }
+  private def deltaFile(f: graft.server.wire.DeltaFileW, version: Long): ListedFile =
+    ScanCore.servedFile(dvScopedId(f, version), f.deltaSingleAction.add)
+
+  private def plainFile(id: String, size: Long, partitionValues: Map[String, String]) =
+    ListedFile(GraftFileSystem.encodePath(id, size), size, partitionValues)
 
   private def assertReadCompatible(schemaString: String, version: java.lang.Long): Unit =
     SchemaCompat.assertReadCompatible(tableSchema,
@@ -216,7 +206,7 @@ class RemoteGraftSource(
         def wireV(f: graft.server.wire.DeltaFileW): Long =
           Option(f.version).map(_.longValue()).getOrElse(-1L)
         def addsOf(r: client.DeltaChangesResult) = r.files.filter(_.deltaSingleAction.add != null)
-        def urlsOf(r: client.DeltaChangesResult) = addsOf(r).map(f => urlEntry(
+        def urlsOf(r: client.DeltaChangesResult) = addsOf(r).map(f => GraftUrlCache.entry(
           dvScopedId(f, wireV(f)), f.deltaSingleAction.add.path, f.expirationTimestamp)).toMap
         registerUrls(s"range@$start-$end", urlsOf(res),
           () => urlsOf(client.deltaQueryRange(share, schemaName, table, start, Some(end))),
@@ -231,12 +221,12 @@ class RemoteGraftSource(
         val res = client.queryRange(share, schemaName, table, start, Some(end))
         res.metas.foreach(m => assertReadCompatible(m.schemaString, m.version))
         def urlsOf(r: client.ChangesResult) =
-          r.adds.map(a => urlEntry(a.id, a.url, a.expirationTimestamp)).toMap
+          r.adds.map(a => GraftUrlCache.entry(a.id, a.url, a.expirationTimestamp)).toMap
         registerUrls(s"range@$start-$end", urlsOf(res),
           () => urlsOf(client.queryRange(share, schemaName, table, start, Some(end))),
           lastVersion = end)
         (res.adds.groupBy(_.version).view.mapValues(_.sortBy(_.id)
-          .map(a => RemoteFile(a.id, a.size, a.partitionValues))).toMap,
+          .map(a => plainFile(a.id, a.size, a.partitionValues))).toMap,
           res.removes.map(_.version).toSet)
       }
     (start to end).foreach { v =>
@@ -299,9 +289,9 @@ class RemoteGraftSource(
     val res = client.changes(share, schemaName, table, cdfRangeParams(v, e))
     res.metas.foreach(m => assertReadCompatible(m.schemaString, m.version))
     def urlsOf(r: client.ChangesResult) =
-      (r.adds.map(a => urlEntry(a.id, a.url, a.expirationTimestamp)) ++
-        r.cdfs.map(c => urlEntry(c.id, c.url, c.expirationTimestamp)) ++
-        r.removes.map(x => urlEntry(x.id, x.url, x.expirationTimestamp))).toMap
+      (r.adds.map(a => GraftUrlCache.entry(a.id, a.url, a.expirationTimestamp)) ++
+        r.cdfs.map(c => GraftUrlCache.entry(c.id, c.url, c.expirationTimestamp)) ++
+        r.removes.map(x => GraftUrlCache.entry(x.id, x.url, x.expirationTimestamp))).toMap
     registerUrls(s"cdf@$v-$e", urlsOf(res),
       () => urlsOf(client.changes(share, schemaName, table, cdfRangeParams(v, e))),
       lastVersion = e)
@@ -347,56 +337,15 @@ class RemoteGraftSource(
 
   // ------------------------------------------------------------ batches
 
-  override protected def sizeOf(file: RemoteFile): Long = file.size
+  override protected def sizeOf(file: ListedFile): Long = file.size
 
-  override protected def batchDF(files: Seq[RemoteFile]): DataFrame = {
-    GraftFileSystem.register(spark)
-    if (deltaDialect) return deltaBatchDF(files)
-    val index = new RemoteBatchFileIndex(spark, tableSchema, partitionColumnsLogical,
-      files.map(f => (f.id, f.size, f.partitionValues)))
-    val relation = HadoopFsRelation(
-      location = index,
-      partitionSchema = StructType(partitionColumnsLogical.map(c => tableSchema(c))),
-      dataSchema = index.dataSchema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark)
-    GraftSqlBridge.ofRowsStreaming(spark, LogicalRelation(relation, isStreaming = true))
-  }
-
-  /** Delta-dialect micro-batch: physical-name scan over the admitted
-    * files, merge-on-read DV filtering (descriptors fetched driver-side —
-    * DVs are KB metadata), physical→logical rename — the per-batch reuse
-    * of [[graft.sources.RemoteDeltaScanRelation]]'s machinery.
+  /** The admitted files' live rows: in the delta dialect each batch
+    * applies DV merge-on-read filtering (descriptors fetched driver-side —
+    * DVs are KB metadata) and the physical→logical rename.
     */
-  private def deltaBatchDF(files: Seq[RemoteFile]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    import graft.model.ColumnMapping
-    val names = ColumnMapping.nameMap(tableSchema)
-    val idMode = tableConfig.get(ColumnMapping.MODE_KEY).exists(_.equalsIgnoreCase("id"))
-    if (idMode) spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val physSchema = ColumnMapping.physicalSchema(tableSchema, idMode)
-    val physPartitionCols = partitionColumnsLogical.map(c => names.getOrElse(c, c))
-    val index = new RemoteBatchFileIndex(spark, physSchema, physPartitionCols,
-      files.map(f => (f.id, f.size, f.partitionValues)))
-    val base = spark.baseRelationToDataFrame(HadoopFsRelation(
-      location = index,
-      partitionSchema = index.partitionSchema,
-      dataSchema = index.dataSchema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark))
-    val byPath: Map[String, Array[Byte]] = files
-      .filter(_.dv.isDefined)
-      .flatMap { f =>
-        val bytes = graft.sources.RemoteDeltaScanRelation.fetchDvBytes(f.dv.get)
-        graft.sources.DvFilters.pathSpellings(
-          GraftFileSystem.encodePath(f.id, f.size)).map(_ -> bytes)
-      }.toMap
-    val live = graft.sources.DvFilters.filterDeleted(base, byPath)
-    val out = live.select(tableSchema.fields.toIndexedSeq.map(f =>
-      col(names.getOrElse(f.name, f.name)).as(f.name)): _*)
-    GraftSqlBridge.streamingDataFrameFromRdd(spark, out.queryExecution.toRdd, schema)
+  override protected def batchDF(files: Seq[ListedFile]): DataFrame = {
+    GraftFileSystem.register(spark)
+    ScanCore.liveRows(spark, new FixedListing(layout, files), streaming = true)
   }
 
   /** Memos and URL windows below `version` can never be read again. The
@@ -414,13 +363,4 @@ class RemoteGraftSource(
 
   override private[graft] def heldCommitVersions: Iterable[Long] =
     fetchedCommits.keys ++ fetchedCdf.keys ++ fetchedCdfDelta.keys
-}
-
-object RemoteGraftSource {
-  /** One served data file: fileId + scan inputs (+ the DV descriptor in
-    * the delta dialect — merge-on-read filtering happens per batch).
-    */
-  private[streaming] case class RemoteFile(
-      id: String, size: Long, partitionValues: Map[String, String],
-      dv: Option[graft.server.wire.DeltaDvW] = None)
 }

@@ -20,11 +20,11 @@ class CDFSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val base = "/root/repo/target/test_cdf/people"
+  val base = s"${graft.log.SharedFixtures.targetDir}/test_cdf/people"
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")
-    val dir = new java.io.File("/root/repo/target/test_cdf")
+    val dir = new java.io.File(s"${graft.log.SharedFixtures.targetDir}/test_cdf")
     if (dir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dir)
     import spark.implicits._
     // v0: 4 inserts; v1: +2 inserts; v2: delete age<25; v3: double score where name=c
@@ -86,7 +86,7 @@ class CDFSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("CDF disabled table is rejected") {
-    val plain = "/root/repo/target/test_cdf/nocdf"
+    val plain = s"${graft.log.SharedFixtures.targetDir}/test_cdf/nocdf"
     import spark.implicits._
     TableBuilder.create(spark, Seq((1L, "x")).toDF("id", "v"), plain, name = "nocdf")
     val ex = intercept[IllegalArgumentException] {
@@ -145,7 +145,7 @@ class CDFSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("CDF on a partitioned table carries typed partition values") {
     import spark.implicits._
-    val dir = "/root/repo/target/test_cdf/partitioned"
+    val dir = s"${graft.log.SharedFixtures.targetDir}/test_cdf/partitioned"
     TableBuilder.create(spark,
       Seq((1L, "x", "g0"), (2L, "y", "g1")).toDF("id", "v", "grp"),
       dir, partitionCols = Seq("grp"),
@@ -162,7 +162,7 @@ class CDFSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1L, "g0", "insert", 0L), (2L, "g1", "insert", 0L),
       (3L, "g0", "insert", 1L), (4L, "g2", "insert", 1L)))
     // typed (non-string) partition columns cast correctly too
-    val dir2 = "/root/repo/target/test_cdf/partitioned_int"
+    val dir2 = s"${graft.log.SharedFixtures.targetDir}/test_cdf/partitioned_int"
     TableBuilder.create(spark,
       Seq((1L, "x", 7), (2L, "y", 8)).toDF("id", "v", "bucket"),
       dir2, partitionCols = Seq("bucket"),
@@ -199,7 +199,7 @@ class CDFSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("CDF over a column-mapped table speaks logical names end to end") {
     // physical file columns are col-<uuid>; CDF must read them and hand
     // back LOGICAL names, for whole-file adds and cdc files alike
-    val dir = "/root/repo/target/test_cdf/colmapped"
+    val dir = s"${graft.log.SharedFixtures.targetDir}/test_cdf/colmapped"
     import spark.implicits._
     TableBuilder.createColumnMapped(spark,
       Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "name", "score"),
@@ -228,7 +228,7 @@ class CDFSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cdf.filter(col("_change_type") === "update_postimage")
       .select("score").as[Double].collect().toSeq === Seq(15.0))
     // partitioned + column-mapped: partitionValues keys are physical
-    val pdir = "/root/repo/target/test_cdf/colmapped_part"
+    val pdir = s"${graft.log.SharedFixtures.targetDir}/test_cdf/colmapped_part"
     TableBuilder.createColumnMapped(spark,
       Seq((1L, "x", "g0"), (2L, "y", "g1")).toDF("id", "v", "grp"),
       pdir, partitionCols = Seq("grp"),
@@ -244,7 +244,7 @@ class CDFSpec extends AnyFunSuite with BeforeAndAfterAll {
     // v0: 6 inserts; v1: DV-delete id<=2; v2: DV-delete id<=4 (merged DV —
     // only 3,4 are NEW deletes); v3: remove the file outright (only the 2
     // live rows are deletes)
-    val dir = "/root/repo/target/test_cdf/dv"
+    val dir = s"${graft.log.SharedFixtures.targetDir}/test_cdf/dv"
     import spark.implicits._
     TableBuilder.create(spark,
       (1L to 6L).map(i => (i, s"n$i")).toDF("id", "name").coalesce(1), dir,
@@ -274,7 +274,7 @@ class CDFSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("readChangeFeed streaming without startingVersion tails new changes only") {
-    val scratch = "/root/repo/target/test_cdf/tail"
+    val scratch = s"${graft.log.SharedFixtures.targetDir}/test_cdf/tail"
     import spark.implicits._
     TableBuilder.create(spark, Seq((1L, "x", 1, 1.0)).toDF("id", "name", "age", "score"),
       scratch, name = "tail", configuration = Map("enableChangeDataFeed" -> "true"))
@@ -290,7 +290,7 @@ class CDFSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SET TBLPROPERTIES toggles CDF; ranges police per-version enablement") {
-    val scratch = "/root/repo/target/test_cdf/toggle"
+    val scratch = s"${graft.log.SharedFixtures.targetDir}/test_cdf/toggle"
     import spark.implicits._
     // v0 created WITHOUT CDF, v1 appends (uncaptured)
     TableBuilder.create(spark, Seq((1L, "x")).toDF("id", "v"), scratch, name = "toggle")

@@ -34,7 +34,7 @@ class CatalogModelSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = spark.sparkContext.setLogLevel("WARN")
   override def afterAll(): Unit = spark.stop()
 
-  val root = "/root/repo/target/test_catalog_model"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_catalog_model"
 
   test("random INSERT/DELETE/OPTIMIZE sequences match the in-memory model") {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))

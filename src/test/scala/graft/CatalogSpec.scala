@@ -21,7 +21,8 @@ class CatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.catalog.graft", classOf[graft.sources.GraftSparkCatalog].getName)
-    .config("spark.sql.catalog.graft.warehouse", "/root/repo/target/graft_warehouse")
+    .config("spark.sql.catalog.graft.warehouse",
+      s"${graft.log.SharedFixtures.targetDir}/graft_warehouse")
     .getOrCreate()
 
   override def beforeAll(): Unit = {
@@ -98,7 +99,7 @@ class CatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SQL DDL/DML: CTAS, INSERT INTO/OVERWRITE, DROP TABLE, delta format") {
-    val wh = "/root/repo/target/graft_warehouse"
+    val wh = s"${graft.log.SharedFixtures.targetDir}/graft_warehouse"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
     spark.sql(s"DROP TABLE IF EXISTS $T.sql_t")
     spark.sql(s"CREATE TABLE $T.sql_t AS " +
@@ -168,7 +169,8 @@ class CatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("SQL UPDATE and MERGE INTO: group-based row-level rewrites") {
     Seq("sql_upd", "sql_mrg_src").foreach { t =>
       org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"/root/repo/target/graft_warehouse/share1/default/$t"))
+        new java.io.File(
+          s"${graft.log.SharedFixtures.targetDir}/graft_warehouse/share1/default/$t"))
     }
     spark.sql(s"DROP TABLE IF EXISTS $T.sql_upd")
     spark.sql(s"CREATE TABLE $T.sql_upd AS " +
@@ -221,7 +223,7 @@ class CatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("MERGE runtime group filter rewrites only files holding matched keys") {
     import spark.implicits._
-    val path = "/root/repo/target/graft_warehouse/share1/default/mrg_prune"
+    val path = s"${graft.log.SharedFixtures.targetDir}/graft_warehouse/share1/default/mrg_prune"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
     graft.log.GraftCatalog.unregister("share1.default.mrg_prune")
     // two files with disjoint id ranges
@@ -324,7 +326,7 @@ class CatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("DV-enabled SQL DELETE writes deletion vectors; the catalog keeps " +
     "serving through the V1 fallback") {
-    val loc = "/root/repo/target/graft_warehouse_dv/dvsql"
+    val loc = s"${graft.log.SharedFixtures.targetDir}/graft_warehouse_dv/dvsql"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(loc))
     GraftLog.invalidateListing(loc)
     spark.sql(s"""CREATE TABLE $T.dvsql (id BIGINT, v STRING)
@@ -369,7 +371,7 @@ class CatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("column-mapped tables answer SQL names through the V1 fallback") {
     import spark.implicits._
-    val loc = "/root/repo/target/graft_warehouse_dv/cmsql"
+    val loc = s"${graft.log.SharedFixtures.targetDir}/graft_warehouse_dv/cmsql"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(loc))
     GraftLog.invalidateListing(loc)
     TableBuilder.createColumnMapped(spark,

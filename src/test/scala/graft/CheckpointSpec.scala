@@ -20,7 +20,7 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val root = "/root/repo/target/test_checkpoint"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_checkpoint"
   val base = s"$root/appends"
 
   private def conf = spark.sessionState.newHadoopConf()

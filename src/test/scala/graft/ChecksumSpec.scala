@@ -21,7 +21,7 @@ class ChecksumSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val root = "/root/repo/target/test_checksum"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_checksum"
   private def conf = spark.sessionState.newHadoopConf()
 
   override def beforeAll(): Unit = {

@@ -165,7 +165,7 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     // OutputWriterFactory + serialized hadoop conf) ships into real
     // separate executor processes — the serialization boundary a
     // single-JVM run hides
-    val path = "/root/repo/target/test_cluster/rowlevel_upd"
+    val path = s"${graft.log.SharedFixtures.targetDir}/test_cluster/rowlevel_upd"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
     graft.log.TableBuilder.create(spark,
       spark.read.parquet(s"$sfDir/orders.parquet")

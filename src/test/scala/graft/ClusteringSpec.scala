@@ -21,7 +21,7 @@ class ClusteringSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val root = "/root/repo/target/test_clustering"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_clustering"
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")

@@ -22,7 +22,7 @@ class CompactedLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val root = "/root/repo/target/test_compacted_log"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_compacted_log"
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")

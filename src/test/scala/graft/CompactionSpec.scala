@@ -21,7 +21,7 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val root = "/root/repo/target/test_compact"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_compact"
   val flat = s"$root/flat"
   val parted = s"$root/parted"
 

@@ -23,14 +23,15 @@ class DefaultsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.extensions", classOf[graft.GraftSparkExtensions].getName)
     .config("spark.sql.catalog.graft", classOf[graft.sources.GraftSparkCatalog].getName)
-    .config("spark.sql.catalog.graft.warehouse", "/root/repo/target/defaults_warehouse")
+    .config("spark.sql.catalog.graft.warehouse",
+      s"${graft.log.SharedFixtures.targetDir}/defaults_warehouse")
     .getOrCreate()
 
-  val root = "/root/repo/target/test_defaults"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_defaults"
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")
-    for (d <- Seq(root, "/root/repo/target/defaults_warehouse")) {
+    for (d <- Seq(root, s"${graft.log.SharedFixtures.targetDir}/defaults_warehouse")) {
       val dir = new java.io.File(d)
       if (dir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dir)
     }

@@ -26,7 +26,7 @@ class DeltaLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val root = "/root/repo/target/test_delta_log"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_delta_log"
   private def conf = spark.sessionState.newHadoopConf()
 
   override def beforeAll(): Unit = {

@@ -27,7 +27,7 @@ class DeltaWriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val root = "/root/repo/target/test_delta_write"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_delta_write"
   private def conf = spark.sessionState.newHadoopConf()
 
   override def beforeAll(): Unit = {

@@ -137,8 +137,7 @@ class DvSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.unsafe.types.UTF8String
     val bm = RoaringBitmapArray(Seq(3L, 7L))
     val listed = new org.apache.hadoop.fs.Path("file:/tmp/graft dv/part-0.parquet")
-    val byPath = graft.sources.DvFilters.pathSpellings(listed)
-      .map(_ -> bm.serialize()).toMap
+    val byPath = graft.sources.ScanCore.bySpelling(Seq(listed -> bm.serialize()))
     val bcast = spark.sparkContext.broadcast(byPath)
     val expr = graft.functions.DvRowDeleted(
       BoundReference(0, StringType, nullable = false),
@@ -400,16 +399,17 @@ class DvSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally server.stop()
   }
 
-  test("RemoteBatchFileIndex prunes partitions client-side") {
+  test("fixed-list GraftFileIndex prunes partitions client-side") {
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal}
     import org.apache.spark.sql.types._
+    import graft.sources.{FixedListing, GraftFileIndex, GraftFileSystem, Layout, ListedFile}
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("grp", StringType)))
-    val files = Seq(
-      ("f1", 10L, Map("grp" -> "a")),
-      ("f2", 10L, Map("grp" -> "b")),
-      ("f3", 10L, Map("grp" -> "a")))
-    val idx = new graft.sources.RemoteBatchFileIndex(spark, schema, Seq("grp"), files)
+    val files = Seq("f1" -> "a", "f2" -> "b", "f3" -> "a").map { case (id, grp) =>
+      ListedFile(GraftFileSystem.encodePath(id, 10L), 10L, Map("grp" -> grp))
+    }
+    val idx = new GraftFileIndex(spark,
+      new FixedListing(Layout(schema, Seq("grp"), idMode = false), files))
     val grpAttr = AttributeReference("grp", StringType)()
     val pruned = idx.listFiles(Seq(EqualTo(grpAttr, Literal("a"))), Nil)
     assert(pruned.map(_.files.length).sum === 2)

@@ -19,7 +19,7 @@ class GraftTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val root = "/root/repo/target/test_gtable"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_gtable"
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")

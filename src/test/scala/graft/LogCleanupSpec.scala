@@ -27,7 +27,7 @@ class LogCleanupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  val root = "/root/repo/target/test_log_cleanup"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_log_cleanup"
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")

@@ -20,7 +20,7 @@ class MergeSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val root = "/root/repo/target/test_merge"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_merge"
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")

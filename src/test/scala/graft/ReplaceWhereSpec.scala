@@ -21,7 +21,7 @@ class ReplaceWhereSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val root = "/root/repo/target/test_replace_where"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_replace_where"
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")

@@ -23,7 +23,7 @@ class RestoreModelSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val root = "/root/repo/target/test_restore_model"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_restore_model"
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")

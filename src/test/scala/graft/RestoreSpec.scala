@@ -29,7 +29,7 @@ class RestoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  val root = "/root/repo/target/test_restore"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_restore"
 
   private def conf = spark.sessionState.newHadoopConf()
   private def readTable(p: String) =

@@ -32,7 +32,7 @@ class RowTrackingModelSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val root = "/root/repo/target/test_rowtrack_model"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_rowtrack_model"
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")

@@ -29,7 +29,7 @@ class SchemaEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  val root = "/root/repo/target/test_schema_evo"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_schema_evo"
 
   private def conf = spark.sessionState.newHadoopConf()
   private def readTable(p: String) =

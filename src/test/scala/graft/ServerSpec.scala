@@ -324,7 +324,7 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("stalenessAcceptable serves the last good snapshot when the log listing fails") {
     import spark.implicits._
-    val path = "/root/repo/target/test_staleness_table"
+    val path = s"${graft.log.SharedFixtures.targetDir}/test_staleness_table"
     val dir = new java.io.File(path)
     if (dir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dir)
     GraftLog.invalidateListing(path)
@@ -1296,7 +1296,7 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the walk covers every file exactly once, continuation tokens
     // round-trip, and signing work is O(files-returned) per page (the
     // filtered listing is computed once and sliced, never re-signed).
-    val path = "/root/repo/target/test-tables/pagination10k"
+    val path = s"${graft.log.SharedFixtures.targetDir}/test-tables/pagination10k"
     val dir = new java.io.File(path)
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
@@ -1419,7 +1419,7 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     // clamped end, not the requested one — a request with endingVersion
     // beyond the current latest must see commits that land later, not a
     // frozen truncation.
-    val path = "/root/repo/target/test-tables/rangeclamp"
+    val path = s"${graft.log.SharedFixtures.targetDir}/test-tables/rangeclamp"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
       f.delete()
@@ -1462,7 +1462,7 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     // + checksum, the reference invariant: `DeltaSharedTable.scala:927-959`),
     // and the clamped change-range cache must never freeze a truncated
     // range even while appends race readers.
-    val path = "/root/repo/target/test-tables/paginationConcurrent"
+    val path = s"${graft.log.SharedFixtures.targetDir}/test-tables/paginationConcurrent"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
       f.delete()

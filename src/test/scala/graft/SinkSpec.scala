@@ -21,7 +21,7 @@ class SinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val root = "/root/repo/target/test_sink"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_sink"
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")

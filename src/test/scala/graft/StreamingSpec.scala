@@ -123,7 +123,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // lazy walk must fetch exactly one maxVersionsPerRpc window for a
     // trigger whose cap fits inside it. Observable server-side via
     // signCount (every served file line is signed exactly once).
-    val path = "/root/repo/target/test-tables/streamwindowpin"
+    val path = s"${graft.log.SharedFixtures.targetDir}/test-tables/streamwindowpin"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
       f.delete()
@@ -640,7 +640,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("remote source releases the starting-snapshot file list once the " +
     "stream commits past the drain") {
-    val path = "/root/repo/target/test-tables/snapevictpin"
+    val path = s"${graft.log.SharedFixtures.targetDir}/test-tables/snapevictpin"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
       f.delete()

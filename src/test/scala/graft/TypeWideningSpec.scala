@@ -30,7 +30,7 @@ class TypeWideningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  val root = "/root/repo/target/test_type_widening"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_type_widening"
 
   private def readTable(p: String) =
     spark.read.format("graft").option("path", p).load()

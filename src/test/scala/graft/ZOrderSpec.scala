@@ -21,7 +21,7 @@ class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val root = "/root/repo/target/test_zorder"
+  val root = s"${graft.log.SharedFixtures.targetDir}/test_zorder"
 
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")
