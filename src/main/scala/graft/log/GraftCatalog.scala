@@ -30,9 +30,13 @@ object GraftCatalog {
 
   private val tables = scala.collection.concurrent.TrieMap.empty[String, ShareConfig]
 
+  /** (location, version) → snapshot, with the checkpoint version its
+    * replay started from (what [[GraftLog.replay]] needs to derive a later
+    * version from it).
+    */
   private val snapshotCache =
-    new JLinkedHashMap[(String, Long), Snapshot](16, 0.75f, true) {
-      override def removeEldestEntry(e: JMap.Entry[(String, Long), Snapshot]): Boolean =
+    new JLinkedHashMap[(String, Long), (Snapshot, Long)](16, 0.75f, true) {
+      override def removeEldestEntry(e: JMap.Entry[(String, Long), (Snapshot, Long)]): Boolean =
         size() > SNAPSHOT_CACHE_SIZE
     }
 
@@ -53,6 +57,11 @@ object GraftCatalog {
     * page-token versions through here, so a 10-page walk over a 10^5-file
     * table replays the log once, not once per page (the reference's
     * `DeltaSharedTableLoader` caches per-version snapshots the same way).
+    * A miss starts from the newest cached earlier version of the table
+    * and applies only the commits after it, when a cold replay would
+    * start from the same checkpoint, and shares the AddFile objects of a
+    * cached later version ([[GraftLog.replay]]): cached versions hold
+    * each parsed file once.
     */
   def snapshotAt(l: GraftLog, version: Long): Snapshot = {
     val key = (l.tablePath, version)
@@ -61,33 +70,37 @@ object GraftCatalog {
     // and holding the global lock for it would serialize every other
     // table's snapshot resolution behind it. Concurrent duplicate
     // replays of the same immutable version are benign — last put wins.
-    snapshotCache.synchronized {
+    val others = snapshotCache.synchronized {
       val cached = snapshotCache.get(key)
-      if (cached != null) return cached
+      if (cached != null) return cached._1
+      val out = Seq.newBuilder[(Snapshot, Long)]
+      snapshotCache.forEach((k, v) => if (k._1 == l.tablePath) out += v)
+      out.result()
     }
-    val s = l.snapshot(Some(version))
-    snapshotCache.synchronized { snapshotCache.put(key, s) }
-    s
+    val entry = l.replay(version, others)
+    snapshotCache.synchronized { snapshotCache.put(key, entry) }
+    entry._1
   }
 
-  /** (location, version, query checksum) → pruned+limited file listing.
-    * A paginated /query walk runs the sort → hint-prune → stats-skip →
-    * limit pipeline ONCE; continuation pages slice the cached vector, so
-    * full pagination is O(files) total instead of O(files × pages) —
-    * driver-quadratic at the 10^5-file counts a 100 TB table serves.
-    * Values hold REFERENCES to the snapshot's AddFile objects (no copies);
-    * the checksum binds every query parameter that shapes the listing, and
-    * the page token already proves the caller's parameters hash to it.
+  /** (location, version, query checksum) → the positions, in the
+    * snapshot's file index, of the pruned+limited listing in serving
+    * order. A paginated /query walk runs the prune → skip → limit
+    * pipeline ONCE; continuation pages slice the cached positions, so full
+    * pagination is O(files) total instead of O(files × pages). Positions
+    * are stable: a version's replay order does not depend on how it was
+    * replayed. The checksum binds every query parameter that shapes the
+    * listing, and the page token already proves the caller's parameters
+    * hash to it.
     */
   private val filteredListings =
-    new JLinkedHashMap[(String, Long, String), IndexedSeq[graft.model.AddFile]](16, 0.75f, true) {
+    new JLinkedHashMap[(String, Long, String), Array[Int]](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: JMap.Entry[(String, Long, String), IndexedSeq[graft.model.AddFile]]): Boolean =
+          e: JMap.Entry[(String, Long, String), Array[Int]]): Boolean =
         size() > SNAPSHOT_CACHE_SIZE
     }
 
   def filteredListing(location: String, version: Long, checksum: String)(
-      compute: => IndexedSeq[graft.model.AddFile]): IndexedSeq[graft.model.AddFile] = {
+      compute: => Array[Int]): Array[Int] = {
     filteredListings.synchronized {
       val cached = filteredListings.get((location, version, checksum))
       if (cached != null) return cached

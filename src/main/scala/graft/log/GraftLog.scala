@@ -268,20 +268,50 @@ class GraftLog(val tablePath: String, conf: Configuration) {
     * checkpoint only means falling back to full replay, never a wrong
     * answer.
     */
-  def snapshot(version: Option[Long] = None): Snapshot = {
-    val target = version.getOrElse(latestVersion())
+  def snapshot(version: Option[Long] = None): Snapshot =
+    replay(version.getOrElse(latestVersion()), Nil)._1
+
+  /** [[snapshot]] at `target`, using `cached` — other versions of this
+    * table, each with the checkpoint its own replay started from — where
+    * a cold replay would start from the same checkpoint:
+    *
+    *  - the newest such version below `target` is the base: its state
+    *    plus commits `(base.version, target]` is the cold replay's state,
+    *    files in the same order. The files reference the base's AddFile
+    *    objects (not the base itself) and its index columns carry over;
+    *  - an added file equal to the file at its path in the nearest such
+    *    version above `target` is shared with it rather than kept twice.
+    *
+    * Without a base (or on a delta log with compacted ranges, which a
+    * cold replay may read in place of commits) this is a cold replay.
+    * Returns the snapshot and the checkpoint version its replay started
+    * from (-1: none).
+    */
+  private[log] def replay(target: Long, cached: Seq[(Snapshot, Long)]): (Snapshot, Long) = {
     val cp = checkpointAtOrBefore(target)
+    val cpVersion = cp.fold(-1L)(_.version)
+    val peers = cached.collect { case (s, c) if c == cpVersion && s.version >= cpVersion => s }
+    val base = peers.filter(_.version < target).maxByOption(_.version)
+      .filterNot(_ => deltaMode && compactedRanges().nonEmpty)
+    val above = peers.filter(_.version > target).minByOption(_.version).map(_.index)
+    def shared(a: AddFile): AddFile = above.fold(a) { ix =>
+      val j = ix.positionOf(a.path)
+      if (j >= 0 && ix(j) == a) ix(j) else a
+    }
     val versions = listVersions()
-      .filter(v => v <= target && cp.forall(v > _.version))
+      .filter(v => v <= target && v > base.fold(cpVersion)(_.version))
     require(versions.nonEmpty || cp.nonEmpty,
       s"version $target not found in $tablePath")
-    val active = mutable.LinkedHashMap.empty[String, AddFile]
-    var meta: Metadata = cp.map(_.metadata).orNull
-    var proto: Protocol = cp.map(_.protocol).getOrElse(Protocol())
+    val active = new GraftLog.ActiveFiles(base.map(_.index))
+    var meta: Metadata = base.map(_.metadata).orElse(cp.map(_.metadata)).orNull
+    var proto: Protocol = base.map(_.protocol).orElse(cp.map(_.protocol)).getOrElse(Protocol())
     val txns = mutable.LinkedHashMap.empty[String, Long]
     val domains = mutable.LinkedHashMap.empty[String, String]
-    cp.foreach { c =>
-      c.files.foreach(a => active(a.path) = a); txns ++= c.txns; domains ++= c.domains
+    base match {
+      case Some(b) => txns ++= b.transactions; domains ++= b.domains
+      case None => cp.foreach { c =>
+        c.files.foreach(active.add); txns ++= c.txns; domains ++= c.domains
+      }
     }
     // Delta minor log compaction ("Log Compaction"): a
     // `{s}.{e}.compacted.json` range whose replay is needed IN FULL
@@ -293,7 +323,7 @@ class GraftLog(val tablePath: String, conf: Configuration) {
     // range coarsens to the range end (same fidelity every compacted-log
     // reader accepts); change/CDF queries always read real commits.
     val batches: Seq[Seq[Action]] = {
-      val ranges = if (deltaMode) compactedRanges() else Nil
+      val ranges = if (deltaMode && base.isEmpty) compactedRanges() else Nil
       val vs = versions.toIndexedSeq
       val out = Seq.newBuilder[Seq[Action]]
       var i = 0
@@ -319,7 +349,7 @@ class GraftLog(val tablePath: String, conf: Configuration) {
       out.result()
     }
     batches.foreach(_.foreach {
-      case a: AddFile    => active(a.path) = a
+      case a: AddFile    => active.add(shared(a))
       case r: RemoveFile => active.remove(r.path)
       case m: Metadata   => meta = m
       case p: Protocol   => proto = p
@@ -337,10 +367,11 @@ class GraftLog(val tablePath: String, conf: Configuration) {
     // writer recorded this version's state summary, the replay must agree
     // — a drifted log/checkpoint fails the load instead of serving wrong
     // rows. Memoized read; absence (pre-checksum tables) is the base case.
+    val files = active.result()
     if (deltaMode)
       Checksum.read(fs, logDir, target)
-        .foreach(Checksum.validate(_, active.values, tablePath, target))
-    Snapshot(target, meta, proto, active.values.toVector, txns.toMap, domains.toMap)
+        .foreach(Checksum.validate(_, files, tablePath, target))
+    (Snapshot(target, meta, proto, files, txns.toMap, domains.toMap), cpVersion)
   }
 
   // ------------------------------------------------------------ checkpoints
@@ -389,18 +420,28 @@ class GraftLog(val tablePath: String, conf: Configuration) {
               // never unbox Long directly (the pre-fix CCE silently
               // degraded EVERY header load to full replay).
               def asLong(x: Any): Long = x.asInstanceOf[Number].longValue()
-              val prefix: Option[Seq[(Long, Long)]] =
-                header.prevCheckpoint.asInstanceOf[Option[Any]] match {
-                  case None     => Some(Nil)
-                  case Some(pv) => load(asLong(pv)).map(_.timestamps)
-                }
+              val prev: Option[Option[GraftLog.CheckpointState]] =
+                header.prevCheckpoint.asInstanceOf[Option[Any]].map(pv => load(asLong(pv)))
+              val prefix: Option[Seq[(Long, Long)]] = prev match {
+                case None    => Some(Nil)
+                case Some(p) => p.map(_.timestamps)
+              }
               prefix.map { pre =>
                 val own = header.timestamps.map { t =>
                   val s = t.asInstanceOf[Seq[Any]]
                   (asLong(s(0)), asLong(s(1)))
                 }
+                // a file the previous checkpoint already holds, unchanged,
+                // is shared with it: consecutive checkpoints of a growing
+                // table repeat most of their files
+                val earlier = new java.util.HashMap[String, AddFile]()
+                prev.flatten.foreach(_.files.foreach(f => earlier.put(f.path, f)))
+                val shared = files.result().map { a =>
+                  val e = earlier.get(a.path)
+                  if (e != null && e == a) e else a
+                }
                 val st = GraftLog.CheckpointState(header.version,
-                  pre ++ own, meta, proto, files.result(), txns.toMap, doms.toMap)
+                  pre ++ own, meta, proto, shared, txns.toMap, doms.toMap)
                 GraftLog.checkpointCache.put((tablePath, v), st)
                 st
               }
@@ -516,9 +557,15 @@ class GraftLog(val tablePath: String, conf: Configuration) {
 case class Snapshot(version: Long, metadata: Metadata, protocol: Protocol,
     files: Seq[AddFile], transactions: Map[String, Long] = Map.empty,
     domains: Map[String, String] = Map.empty) {
-  def schema: org.apache.spark.sql.types.StructType =
+  @transient lazy val schema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType.fromJson(metadata.schemaString)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
+
+  /** The files' index: the only way production code filters a snapshot's
+    * files. A replayed snapshot's `files` is already its index.
+    */
+  @transient lazy val index: graft.predicates.FileIndex =
+    graft.predicates.FileIndex.of(files)
 }
 
 /** One committed version's actions. */
@@ -526,6 +573,47 @@ case class CommitChange(version: Long, timestamp: Long, actions: Seq[Action])
 
 object GraftLog {
   val LOG_DIR = "_graft_log"
+
+  /** The active files of a replay, in replay order: an add of an active
+    * path replaces it in place, a re-add after a remove goes last (the
+    * order of a `LinkedHashMap` keyed by path). Starts empty, or from the
+    * files of `base`, which stay where they are and are found by binary
+    * search in its path order.
+    */
+  private final class ActiveFiles(base: Option[graft.predicates.FileIndex]) {
+    private val kept: Array[AddFile] = base.fold(Array.empty[AddFile])(_.toArray)
+    private val alive = Array.fill(kept.length)(true)
+    private val added = mutable.LinkedHashMap.empty[String, AddFile]
+
+    /** Position in `base` of an active base file at `path`, else -1. */
+    private def position(path: String): Int = base match {
+      case Some(b) if !added.contains(path) =>
+        val j = b.positionOf(path)
+        if (j >= 0 && alive(j)) j else -1
+      case _ => -1
+    }
+
+    def add(a: AddFile): Unit = position(a.path) match {
+      case -1 => added(a.path) = a
+      case j => kept(j) = a
+    }
+
+    def remove(path: String): Unit = position(path) match {
+      case -1 => added.remove(path)
+      case j => alive(j) = false
+    }
+
+    def result(): graft.predicates.FileIndex = base match {
+      case None => graft.predicates.FileIndex(added.values.toArray)
+      case Some(b) =>
+        val live = kept.indices.filter(alive(_))
+        val files = (live.map(kept) ++ added.values).toArray
+        // a replaced file's columns are decoded again
+        val fromBase = (live.map(j => if (kept(j) eq b(j)) j else -1) ++
+          Iterator.fill(added.size)(-1)).toArray
+        b.derive(files, fromBase)
+    }
+  }
 
   /** Write a consolidated checkpoint every N commits (Delta's default
     * checkpoint interval).

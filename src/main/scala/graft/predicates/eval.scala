@@ -185,15 +185,13 @@ object FileSkippingEvaluator {
   /** Filter a file list down to the non-skippable subset — the server-side
     * data-skipping entry point (reference
     * `JsonPredicateFilterUtils.evaluatePredicate`). Best-effort superset:
-    * callers must still re-filter rows (PROTOCOL.md:2128-2158).
+    * callers must still re-filter rows (PROTOCOL.md:2128-2158). Runs the
+    * compiled evaluator of [[FileIndex]] (over the snapshot's own index
+    * when `files` is one); `canSkip` above is its per-file reference.
     */
   def filterFiles(
       hint: Option[BaseOp],
       partitionColumns: Seq[String],
-      files: Seq[AddFile]): Seq[AddFile] = hint match {
-    case None => files
-    case Some(op) =>
-      val eval = new FileSkippingEvaluator(partitionColumns.toSet)
-      files.filterNot(f => eval.canSkip(op, f))
-  }
+      files: Seq[AddFile]): Seq[AddFile] =
+    if (hint.isEmpty) files else FileIndex.of(files).filter(hint, partitionColumns)
 }

@@ -32,8 +32,7 @@ object CloudSigners {
     mac.doFinal(data.getBytes("UTF-8"))
   }
 
-  private def hex(b: Array[Byte]): String =
-    b.map(x => f"${x & 0xFF}%02x").mkString
+  private def hex(b: Array[Byte]): String = Tokens.hex(b)
 
   private def sha256Hex(s: String): String =
     hex(java.security.MessageDigest.getInstance("SHA-256")

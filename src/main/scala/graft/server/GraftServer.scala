@@ -12,7 +12,7 @@ import org.apache.hadoop.fs.Path
 
 import graft.log.{GraftCatalog, GraftLog}
 import graft.model._
-import graft.predicates.{FileSkippingEvaluator, JsonPredicates}
+import graft.predicates.{AndOp, JsonPredicates}
 import graft.server.wire._
 
 /** The sharing REST server over the graft engine — the reference's core
@@ -352,7 +352,7 @@ class GraftServer(
     version.foreach(v => requireVersionExists(l, v))
     val resolved = version.orElse(timestamp.map(l.versionAtOrBefore))
     val snap = resolved match {
-      case Some(v) => l.snapshot(Some(v))
+      case Some(v) => GraftCatalog.snapshotAt(l, v)
       case None    => latestSnapshot(l, tableLocation(share, schema, table))
     }
     ex.getResponseHeaders.set(DELTA_TABLE_VERSION_HEADER, snap.version.toString)
@@ -597,63 +597,55 @@ class GraftServer(
       snap.metadata.partitionColumns.map(c => snap.schema(c)))
 
     // File-level operators, in reference order: SQL-hint partition
-    // pruning, json-predicate stats skipping, limit hint, pagination.
-    //
-    // Hints speak LOGICAL column names; on a column-mapped table the
-    // files' partitionValues/stats are keyed by PHYSICAL names. Evaluate
-    // hints against logically re-keyed copies — a raw mismatch would
-    // resolve every hinted column to "all null" and silently skip every
-    // matching file (best-effort must over-return, never under-return).
-    val physToLogical: Map[String, String] =
-      if (graft.model.ColumnMapping.isEnabled(snap.metadata))
-        graft.model.ColumnMapping.nameMap(snap.schema).map(_.swap)
-      else Map.empty
-    def rekey[V](m: Map[String, V]): Map[String, V] =
-      m.map { case (k, v) => (physToLogical.getOrElse(k, k), v) }
-    def logicalized(f: graft.model.AddFile): graft.model.AddFile =
-      if (physToLogical.isEmpty) f
-      else f.copy(
-        partitionValues = rekey(f.partitionValues),
-        stats = f.stats.map(st => st.copy(
-          minValues = rekey(st.minValues),
-          maxValues = rekey(st.maxValues),
-          nullCount = rekey(st.nullCount))))
-
-    // The full sort → hint-prune → stats-skip → limit pipeline is a pure
-    // function of (snapshot version, query parameters); the query checksum
-    // binds every parameter, so the result caches per (location, version,
-    // checksum) and continuation pages SLICE instead of recomputing —
-    // without this a full pagination is O(files × pages) driver work.
+    // pruning, json-predicate stats skipping, limit hint, pagination —
+    // run through the snapshot's file index. The full prune → skip → limit
+    // pipeline is a pure function of (snapshot version, query
+    // parameters); the query checksum binds every parameter, so the
+    // result caches per (location, version, checksum) as index positions
+    // and continuation pages SLICE instead of recomputing.
     val checksum = queryChecksum(tableKey, req)
     val tList = System.nanoTime()
-    val afterLimit: IndexedSeq[graft.model.AddFile] =
+    val index = snap.index
+    val positions: Array[Int] =
       GraftCatalog.filteredListing(location, version, checksum) {
-        val sorted = snap.files.sortBy(_.path)
-        val byPath = sorted.map(f => f.path -> f).toMap
-        val sortedEval = sorted.map(logicalized)
-        val afterSql = PartitionHintPruner.prune(
-          Option(req.predicateHints).getOrElse(Nil), partitionSchema, sortedEval)
-        val afterJsonEval = Option(req.jsonPredicateHints) match {
-          case Some(hint) =>
-            val op = try Some(JsonPredicates.fromJson(hint))
-              catch { case scala.util.control.NonFatal(_) => None } // best-effort
-            FileSkippingEvaluator.filterFiles(op, snap.metadata.partitionColumns, afterSql)
-          case None => afterSql
+        val sqlOp = PartitionHintPruner.op(
+          Option(req.predicateHints).getOrElse(Nil), partitionSchema)
+        val jsonOp = Option(req.jsonPredicateHints).flatMap { hint =>
+          try Some(JsonPredicates.fromJson(hint))
+          catch { case scala.util.control.NonFatal(_) => None } // best-effort
         }
-        // served actions keep their original (physical) keys
-        val afterJson = afterJsonEval.map(f => byPath(f.path))
+        // Hints speak LOGICAL column names; on a column-mapped table the
+        // files' partitionValues/stats are keyed by PHYSICAL names, so
+        // each hinted name resolves to its physical key once. A raw
+        // mismatch would resolve every hinted column to "all null" and
+        // silently skip every matching file.
+        val physicalKey: String => Option[String] =
+          if (!graft.model.ColumnMapping.isEnabled(snap.metadata)) Some(_)
+          else {
+            val names = graft.model.ColumnMapping.nameMap(snap.schema)
+            val renamed = names.collect { case (lg, ph) if lg != ph => ph }.toSet
+            n => names.get(n).orElse(if (renamed(n)) None else Some(n))
+          }
+        val kept = (sqlOp ++ jsonOp).toSeq match {
+          case Seq() => index.pathOrder
+          case ops =>
+            val mask = index.keep(AndOp(ops),
+              snap.metadata.partitionColumns.toSet, physicalKey)
+            index.pathOrder.filter(mask(_))
+        }
         val hadPredicates = Option(req.predicateHints).exists(_.nonEmpty) ||
           req.jsonPredicateHints != null
-        (Option(req.limitHint) match {
+        Option(req.limitHint) match {
           case Some(limit) if !hadPredicates =>
             var cum = 0L
-            afterJson.takeWhile { f =>
+            kept.takeWhile { i =>
               val take = cum < limit.longValue()
-              cum += f.liveRecords
+              val live = index(i).liveRecords // Long.MaxValue without stats
+              cum = if (live > Long.MaxValue - cum) Long.MaxValue else cum + live
               take
             }
-          case _ => afterJson
-        }).toIndexedSeq
+          case _ => kept
+        }
       }
 
     addPhase("listing", System.nanoTime() - tList)
@@ -663,8 +655,8 @@ class GraftServer(
     val pageSize = Option(req.maxFiles).map(_.intValue())
       .getOrElse(config.queryTablePageSizeLimit)
       .min(config.queryTablePageSizeLimit)
-    val pageFiles = afterLimit.slice(startIndex, startIndex + pageSize)
-    val nextPageToken = if (startIndex + pageSize < afterLimit.size)
+    val pageFiles = positions.slice(startIndex, startIndex + pageSize).map(index(_))
+    val nextPageToken = if (startIndex + pageSize < positions.length)
       Some(Tokens.encode(Tokens.PageTokenPayload(
         tableKey, version, startIndex + pageSize,
         checksum, now() + config.pageTokenTtlMs)))
@@ -750,7 +742,7 @@ class GraftServer(
       s"starting version($start) > ending version($end)")
     requireSinceStartVersion(cfg, start)
     requireVersionExists(l, start)
-    val snap = l.snapshot(Some(start))
+    val snap = GraftCatalog.snapshotAt(l, start)
     if (!graft.log.GraftCDF.isEnabled(snap.metadata))
       throw GraftServerException.badRequest(
         s"Change Data Feed is not enabled on table $share.$schema.$table")
@@ -799,7 +791,7 @@ class GraftServer(
           "page token does not match the query parameters")
     }
 
-    val startSnap = l.snapshot(Some(start))
+    val startSnap = GraftCatalog.snapshotAt(l, start)
     val fmt = negotiateFormat(ex, startSnap.metadata)
     changeScheme = fileIdScheme(ex, fmt)
     val delta = fmt == FORMAT_DELTA

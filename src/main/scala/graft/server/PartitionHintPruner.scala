@@ -15,8 +15,9 @@ import graft.predicates._
   *
   * Re-expressed here by translating the parsed Catalyst expression into the
   * engine's typed predicate ADT and evaluating with the sound three-valued
-  * [[FileSkippingEvaluator]] (a partition value is a point interval, so
-  * True/False are exact). Hints that don't fit the supported shape are
+  * compiled evaluator of [[graft.predicates.FileIndex]] (a partition value
+  * is a point interval, so True/False are exact; each distinct value is
+  * decided once). Hints that don't fit the supported shape are
   * DROPPED whole — server filtering is best-effort and clients must
   * re-filter (`PROTOCOL.md:2128-2158`), so dropping can only over-return.
   */
@@ -25,14 +26,18 @@ object PartitionHintPruner {
   def prune(
       hints: Seq[String],
       partitionSchema: StructType,
-      files: Seq[AddFile]): Seq[AddFile] = {
-    if (hints.isEmpty || partitionSchema.isEmpty) return files
-    val ops = hints.flatMap(h => translate(h, partitionSchema))
-    if (ops.isEmpty) files
-    else FileSkippingEvaluator.filterFiles(
-      Some(if (ops.size == 1) ops.head else AndOp(ops)),
+      files: Seq[AddFile]): Seq[AddFile] =
+    FileSkippingEvaluator.filterFiles(op(hints, partitionSchema),
       partitionSchema.map(_.name), files)
-  }
+
+  /** The hints as one op (their conjunction), or None when none applies. */
+  def op(hints: Seq[String], partitionSchema: StructType): Option[BaseOp] =
+    if (partitionSchema.isEmpty) None
+    else hints.flatMap(translate(_, partitionSchema)) match {
+      case Seq() => None
+      case Seq(one) => Some(one)
+      case ops => Some(AndOp(ops))
+    }
 
   /** One hint string → predicate op, or None when unsupported. */
   def translate(hint: String, partitionSchema: StructType): Option[BaseOp] =

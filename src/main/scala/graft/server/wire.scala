@@ -290,10 +290,13 @@ object Tokens {
     * via the `fileidhash` request header. Both are deterministic in the
     * file, so clients can cache bytes keyed by id.
     */
-  def fileId(tablePath: String, relPath: String, scheme: String = "parquet"): String = {
-    val algo = if (scheme == "delta") "SHA-256" else "MD5"
-    hex(MessageDigest.getInstance(algo).digest(s"$tablePath/$relPath".getBytes(UTF_8)))
-  }
+  def fileId(tablePath: String, relPath: String, scheme: String = "parquet"): String =
+    hex((if (scheme == "delta") sha256 else md5).get()
+      .digest(s"$tablePath/$relPath".getBytes(UTF_8)))
+
+  // one digest per thread: `getInstance` costs a provider lookup per call
+  private val md5 = ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
+  private val sha256 = ThreadLocal.withInitial(() => MessageDigest.getInstance("SHA-256"))
 
   /** SHA-256 checksum binding a token to the query parameters that
     * produced it — any change to the params invalidates the token.
@@ -305,7 +308,7 @@ object Tokens {
     * under-return), not merely reject a continuation token.
     */
   def checksum(params: Seq[String]): String =
-    hex(MessageDigest.getInstance("SHA-256").digest(
+    hex(sha256.get().digest(
       params.map(p => s"${p.length}:$p").mkString("\u001f").getBytes(UTF_8)))
 
   case class PageTokenPayload(
@@ -330,10 +333,23 @@ object Tokens {
   case class OAuthTokenPayload(clientId: String, expiration: Long, sig: String)
 
   /** HMAC-SHA256, hex-encoded. */
-  def hmac(secret: Array[Byte], message: String): String = {
-    val mac = javax.crypto.Mac.getInstance("HmacSHA256")
-    mac.init(new javax.crypto.spec.SecretKeySpec(secret, "HmacSHA256"))
-    hex(mac.doFinal(message.getBytes(UTF_8)))
+  def hmac(secret: Array[Byte], message: String): String =
+    hex(keyedMac(secret).doFinal(message.getBytes(UTF_8)))
+
+  /** One keyed `Mac` per secret, cloned per thread: `getInstance` + `init`
+    * cost more than the HMAC of a URL-sized message, and the server signs
+    * one URL per served file. Keyed by the secret's bytes.
+    */
+  private val macs =
+    new java.util.concurrent.ConcurrentHashMap[String, ThreadLocal[javax.crypto.Mac]]()
+
+  private def keyedMac(secret: Array[Byte]): javax.crypto.Mac = {
+    if (macs.size > 64) macs.clear() // one entry per live server secret
+    macs.computeIfAbsent(new String(secret, java.nio.charset.StandardCharsets.ISO_8859_1), _ => {
+      val keyed = javax.crypto.Mac.getInstance("HmacSHA256")
+      keyed.init(new javax.crypto.spec.SecretKeySpec(secret, "HmacSHA256"))
+      ThreadLocal.withInitial(() => keyed.clone().asInstanceOf[javax.crypto.Mac])
+    }).get()
   }
 
   def encode(payload: AnyRef): String =
@@ -348,8 +364,18 @@ object Tokens {
         throw GraftServerException.badRequest(s"malformed $kind token")
     }
 
-  private def hex(bytes: Array[Byte]): String =
-    bytes.map(b => f"${b & 0xff}%02x").mkString
+  private[graft] def hex(bytes: Array[Byte]): String = {
+    val out = new Array[Char](bytes.length * 2)
+    var i = 0
+    while (i < bytes.length) {
+      out(2 * i) = HEX(bytes(i) >> 4 & 0xf)
+      out(2 * i + 1) = HEX(bytes(i) & 0xf)
+      i += 1
+    }
+    new String(out)
+  }
+
+  private val HEX = "0123456789abcdef".toCharArray
 
   /** Constant-time bearer-token check (reference
     * `DeltaSharingService.scala:843-854` uses the same

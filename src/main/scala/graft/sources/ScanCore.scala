@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import graft.client.{GraftRestClient, GraftUrlCache}
 import graft.log.{DeletionVectors, Snapshot}
 import graft.model.{AddFile, ColumnMapping, Z85}
-import graft.predicates.{FileSkippingEvaluator, JsonPredicates, OpConverter}
+import graft.predicates.{JsonPredicates, OpConverter}
 import graft.server.wire
 
 /** The scan core: how a list of a shared table's files becomes live
@@ -130,8 +130,8 @@ private[graft] trait Listing {
       limit: Option[Long]): Seq[ListedFile]
 }
 
-/** Transport 1: a local snapshot. Stats skipping runs over the files'
-  * min/max (physical names); the limit cut counts live rows.
+/** Transport 1: a local snapshot. Stats skipping runs over the snapshot's
+  * file index (physical names); the limit cut counts live rows.
   */
 private[graft] final class SnapshotListing(
     spark: SparkSession, tablePath: String, val snapshot: Snapshot) extends Listing {
@@ -147,10 +147,11 @@ private[graft] final class SnapshotListing(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression],
       limit: Option[Long]): Seq[ListedFile] = {
+    // the snapshot's index, walked in replay order (a limit keeps the
+    // first files the log lists)
     val kept = OpConverter.convert(dataFilters.map(layout.physicalFilter)) match {
       case None => snapshot.files
-      case hint =>
-        FileSkippingEvaluator.filterFiles(hint, layout.physicalPartitionColumns, snapshot.files)
+      case hint => snapshot.index.filter(hint, layout.physicalPartitionColumns)
     }
     ScanCore.coveringLimit(kept, limit).map(listed)
   }

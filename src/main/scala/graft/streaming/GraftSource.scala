@@ -47,8 +47,10 @@ class GraftSource(
   override protected def versionAtOrAfter(timestamp: String): Long =
     tableLog.versionAtOrAfter(graft.server.GraftServer.parseWireTimestamp(timestamp))
 
-  override protected def snapshotFiles(version: Long): Seq[AddFile] =
-    tableLog.snapshot(Some(version)).files.sortBy(_.path)
+  override protected def snapshotFiles(version: Long): Seq[AddFile] = {
+    val index = tableLog.snapshot(Some(version)).index
+    index.pathOrder.toIndexedSeq.map(index)
+  }
 
   /** Commits in `[start, end]`, read one version at a time as the walk
     * pulls. Bypasses [[GraftLog.changesIterator]], whose commit timestamps

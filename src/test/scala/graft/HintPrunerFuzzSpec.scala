@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types._
 
 import graft.model.{AddFile, StatsCodec}
+import graft.predicates.FileSkippingEvaluator
 import graft.server.PartitionHintPruner
 
 /** Randomized differential fuzzer for the SQL-hint partition pruner
@@ -28,6 +29,11 @@ import graft.server.PartitionHintPruner
   * The superset property is the protocol's contract: server filtering is
   * best-effort and clients re-filter, so over-returning is legal but a
   * skipped matching file is silent data loss (`PROTOCOL.md:2128-2158`).
+  *
+  * `prune` runs the compiled evaluator over a file index; every case also
+  * runs the same translated op file by file through the per-file
+  * [[FileSkippingEvaluator]], and the two must keep the same files (no
+  * generated partition value fails to decode).
   */
 class HintPrunerFuzzSpec extends AnyFunSuite {
 
@@ -196,6 +202,15 @@ class HintPrunerFuzzSpec extends AnyFunSuite {
       c.name -> pv(c.name).flatMap(StatsCodec.encode).getOrElse("")).toMap,
     stats = None)
 
+  /** The per-file reference: the translated hints, file by file. */
+  private def oracleKept(hints: Seq[String], files: Seq[AddFile]): Set[String] =
+    PartitionHintPruner.op(hints, schema) match {
+      case None => files.map(_.path).toSet
+      case Some(op) =>
+        val eval = new FileSkippingEvaluator(schema.map(_.name).toSet)
+        files.filterNot(eval.canSkip(op, _)).map(_.path).toSet
+    }
+
   private val outcomes = Seq(Some(true), Some(false), None)
   private def assignments(ids: Set[Int]): Seq[Map[Int, Option[Boolean]]] =
     ids.toSeq.sorted.foldLeft(Seq(Map.empty[Int, Option[Boolean]])) {
@@ -216,6 +231,7 @@ class HintPrunerFuzzSpec extends AnyFunSuite {
       val rendered = hints.map(render)
       val kept = PartitionHintPruner.prune(rendered, schema, files)
         .map(_.path).toSet
+      assert(kept === oracleKept(rendered, files), rendered.mkString(" ||| "))
       if (kept.size < files.size) prunedSomething += 1
       pvs.zipWithIndex.foreach { case (pv, i) =>
         // the file COULD match iff every hint evaluates TRUE under some
@@ -250,6 +266,7 @@ class HintPrunerFuzzSpec extends AnyFunSuite {
       val files = pvs.zipWithIndex.map { case (pv, i) => fileOf(pv, i) }
       val kept = PartitionHintPruner.prune(Seq(render(hint)), schema, files)
         .map(_.path).toSet
+      assert(kept === oracleKept(Seq(render(hint)), files), render(hint))
       pvs.zipWithIndex.foreach { case (pv, i) =>
         eval3(hint, pv, Map.empty) match {
           case Some(true) => assert(kept.contains(s"f$i.parquet"),
@@ -278,6 +295,7 @@ class HintPrunerFuzzSpec extends AnyFunSuite {
     forAllN(1500, gen) { case (bad, pvs) =>
       val files = pvs.zipWithIndex.map { case (pv, i) => fileOf(pv, i) }
       val kept = PartitionHintPruner.prune(bad.filter(_.nonEmpty), schema, files)
+      assert(kept.map(_.path).toSet === oracleKept(bad.filter(_.nonEmpty), files))
       // every hint is either untranslatable (dropped whole → no pruning)
       // or a free-variable shape (must keep all: any file could match)
       assert(kept.size == files.size,

@@ -25,6 +25,12 @@ import graft.predicates._
   * leaves (type-mismatched literals, unparseable values, unknown
   * columns, col-col compares) checked against every three-valued
   * interpretation of the hostile subtrees.
+  *
+  * Every case also runs the compiled evaluator of [[FileIndex]]: where
+  * no value fails to decode it keeps exactly the files the per-file
+  * evaluator keeps; where one does (the hostile leaves) it keeps a
+  * subset of them (no per-evaluator error cutoff), and every soundness
+  * check holds for both.
   */
 class PredicateFuzzSpec extends AnyFunSuite {
 
@@ -186,6 +192,17 @@ class PredicateFuzzSpec extends AnyFunSuite {
 
   private def newEval = new FileSkippingEvaluator(Set(PART.name))
 
+  /** Whether the compiled evaluator keeps `file` under `tree`. */
+  private def compiledKeeps(tree: BaseOp, file: AddFile): Boolean =
+    FileIndex.of(Seq(file)).keep(tree, Set(PART.name))(0)
+
+  /** The compiled evaluator keeps what the per-file one keeps, for the
+    * tree and for its negation (so the two agree on every verdict).
+    */
+  private def assertSameVerdict(tree: BaseOp, file: AddFile): Unit =
+    for (t <- Seq(tree, NotOp(Seq(tree))))
+      assert(compiledKeeps(t, file) === !newEval.canSkip(t, file), s"verdicts differ: $t")
+
   // ----------------------------------------------------------- the fuzz
   test("fuzz: mixed-type trees with masked stats never skip a matching file (3000 cases)") {
     val gen = for {
@@ -199,6 +216,7 @@ class PredicateFuzzSpec extends AnyFunSuite {
       if (anyMatch)
         assert(!newEval.canSkip(tree, file),
           s"skipped a matching file: $tree rows=$rows pv=$pv mask=$maskSeed")
+      assertSameVerdict(tree, file)
     }
   }
 
@@ -221,6 +239,7 @@ class PredicateFuzzSpec extends AnyFunSuite {
     } yield (t, rows, pv)
     forAllN(3000, gen, Gen.choose(0L, Long.MaxValue)) { case ((tree, rows, pv), maskSeed) =>
       val file = fileFromRows(rows, pv, maskSeed)
+      assertSameVerdict(tree, file)
       newEval.evalOp(tree, file) match {
         case EvalTrue =>
           assert(!rows.exists(r => eval3(tree, r, pv) == Some(false)),
@@ -243,6 +262,7 @@ class PredicateFuzzSpec extends AnyFunSuite {
       val file = fileFromRows(rows, pv, maskSeed)
       val anyMatch = rows.exists(r => eval3(tree, r, pv) == Some(true))
       if (anyMatch) assert(!newEval.canSkip(tree, file), s"deep chain skipped a match")
+      assertSameVerdict(tree, file)
     }
   }
 
@@ -290,12 +310,50 @@ class PredicateFuzzSpec extends AnyFunSuite {
       scala.util.Try(assigns.exists(asg =>
         rows.exists(r => eval3(tree, r, pv, asg, idx) == Some(true))))
         .foreach { anyMatch =>
-          if (anyMatch)
+          if (anyMatch) {
             assert(!newEval.canSkip(tree, file),
               s"hostile tree skipped a possible match: $tree")
+            assert(compiledKeeps(tree, file),
+              s"compiled: hostile tree skipped a possible match: $tree")
+          }
         }
+      // an unparseable literal or a literal of another type than its
+      // column fails in the per-file evaluator; only those can differ
+      def fails(op: BaseOp): Boolean = op match {
+        case EqualOp(Seq(_, LiteralOp("zz", _))) => true
+        case LessThanOp(Seq(ColumnOp("s", _), LiteralOp(_, "long"))) => true
+        case other => other.children.exists(fails)
+      }
+      if (fails(tree)) {
+        if (compiledKeeps(tree, file))
+          assert(!newEval.canSkip(tree, file), s"compiled keeps more: $tree")
+      } else assertSameVerdict(tree, file)
       // and the whole filterFiles path stays total
       FileSkippingEvaluator.filterFiles(Some(tree), Set(PART.name).toSeq, Seq(file))
+    }
+  }
+
+  test("fuzz: the compiled evaluator over a 40-file index keeps what the " +
+    "per-file evaluator keeps (500 cases)") {
+    // one index over many files: partition dictionaries with several
+    // values and shared stats arrays, walked position by position
+    val gen = for {
+      t <- genTree(4, genWellTypedLeaf)
+      files <- Gen.listOfN(40, for {
+        rows <- Gen.nonEmptyListOf(genRow)
+        pv <- genPart
+        seed <- Gen.choose(0L, Long.MaxValue)
+      } yield (rows, pv, seed))
+    } yield (t, files)
+    forAllN(500, gen, Gen.const(())) { case ((tree, specs), _) =>
+      val files = specs.zipWithIndex.map { case ((rows, pv, seed), i) =>
+        fileFromRows(rows, pv, seed).copy(path = s"f$i.parquet")
+      }
+      val mask = FileIndex.of(files).keep(tree, Set(PART.name))
+      val oracle = files.map(f => !newEval.canSkip(tree, f))
+      assert(mask.toSeq === oracle, s"kept sets differ: $tree")
+      assert(FileSkippingEvaluator.filterFiles(Some(tree), Seq(PART.name), files) ===
+        files.zip(oracle).collect { case (f, true) => f })
     }
   }
 }

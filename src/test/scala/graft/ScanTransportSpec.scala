@@ -141,4 +141,17 @@ class ScanTransportSpec extends AnyFunSuite with BeforeAndAfterAll {
         }
       }
   }
+
+  test("plain over url: a limit under a column-pruning projection reaches the listing") {
+    val shape = shapes.head
+    if (!registered.contains(shape.fqn)) create(shape)
+    val s0 = server.signCount.get()
+    // count(lit(1)) reads no column: the optimizer puts an empty Project
+    // between the limit and the relation
+    val counted = transports.toMap.apply("url")(shape).limit(3).agg(count(lit(1)))
+    assert(pushedLimit(counted) === Some(3L))
+    assert(counted.collect().head.getLong(0) === 3L)
+    // one 10-row file of four covers 3 rows
+    assert(server.signCount.get() - s0 === 1L)
+  }
 }

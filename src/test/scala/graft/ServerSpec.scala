@@ -1414,6 +1414,97 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("paginated, hinted /query serves the same pages warm as cold, " +
+    "from cached, derived and cold snapshots") {
+    val path = s"${graft.log.SharedFixtures.targetDir}/test-tables/warmCold"
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete()
+    }
+    rm(new java.io.File(path))
+    GraftLog.invalidateListing(path)
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType, nullable = false),
+      org.apache.spark.sql.types.StructField("ds",
+        org.apache.spark.sql.types.StringType, nullable = false))).json
+    val conf = spark.sessionState.newHadoopConf()
+    // 12 versions of 60 files over 4 dates (a checkpoint at v10); each
+    // version from v1 also removes 5 files of the version before
+    def file(v: Int, j: Int) = {
+      val i = v * 60 + j
+      val ds = s"2026-01-0${1 + (i * 7) % 4}"
+      graft.model.AddFile(path = s"ds=$ds/part-${(i * 37) % 1000}-$i.parquet",
+        partitionValues = Map("ds" -> ds), size = 1000L,
+        stats = Some(graft.model.FileStats(numRecords = 100L,
+          minValues = Map("id" -> (i * 100L).toString),
+          maxValues = Map("id" -> (i * 100L + 99).toString),
+          nullCount = Map("id" -> 0L))),
+        version = v, timestamp = 1700000000000L + v)
+    }
+    (0 until 12).foreach { v =>
+      val adds = (0 until 60).map(file(v, _))
+      val removes = if (v == 0) Nil else (0 until 5).map(j =>
+        graft.model.RemoveFile(path = file(v - 1, j * 11).path, version = v))
+      val actions: Seq[graft.model.Action] =
+        if (v == 0) Seq(graft.model.Protocol(), graft.model.Metadata(
+          id = "warmCold", name = "warmCold", schemaString = schema,
+          partitionColumns = Seq("ds"))) ++ adds
+        else removes ++ adds
+      GraftLog.commit(path, v, actions, conf)
+    }
+    GraftCatalog.register("share1.default.warmcold", path)
+    try {
+      def post(body: String): Seq[String] = {
+        val r = rawPost("/shares/share1/schemas/default/tables/warmcold/query", body)
+        assert(r.statusCode() === 200, r.body().take(300))
+        r.body().split('\n').filter(_.nonEmpty).toSeq
+      }
+      val pred = JsonUtils.toJson("""{"op":"or","children":[""" +
+        """{"op":"lessThan","children":[{"op":"column","name":"id","valueType":"long"},""" +
+        """{"op":"literal","value":"20000","valueType":"long"}]},""" +
+        """{"op":"greaterThanOrEqual","children":[{"op":"column","name":"id","valueType":"long"},""" +
+        """{"op":"literal","value":"50000","valueType":"long"}]}]}""")
+      val shapes = Seq(
+        s""""jsonPredicateHints":$pred,"predicateHints":["ds >= '2026-01-02'"],"maxFiles":40""",
+        """"limitHint":2500,"maxFiles":7""")
+      /** Each page's file ids, following tokens. */
+      def walk(v: Int, shape: String): Seq[Seq[String]] = {
+        val pages = Seq.newBuilder[Seq[String]]
+        var tok: Option[String] = None
+        var done = false
+        while (!done) {
+          val lines = post(s"""{"version":$v,$shape${
+            tok.map(t => s""","pageToken":"$t"""").getOrElse("")}}""")
+          val parsed = lines.map(JsonUtils.fromJson[Line](_))
+          pages += parsed.flatMap(l => Option(l.file)).map(_.id)
+          tok = parsed.lastOption.flatMap(l => Option(l.endStreamAction))
+            .flatMap(e => Option(e.nextPageToken))
+          done = tok.isEmpty
+        }
+        pages.result()
+      }
+      val versions = 0 until 12
+      // cold: every cache dropped before each walk
+      val cold = for (v <- versions; s <- shapes) yield {
+        GraftLog.invalidateListing(path)
+        walk(v, s)
+      }
+      // warm: each version after v0 derives from the one before (but v10,
+      // which starts from its checkpoint); then every listing is cached
+      GraftLog.invalidateListing(path)
+      val derived = for (v <- versions; s <- shapes) yield walk(v, s)
+      val cached = for (v <- versions.takeRight(5); s <- shapes) yield walk(v, s)
+      assert(derived === cold)
+      assert(cached === cold.takeRight(10))
+      assert(cold.forall(_.size > 1), "every walk spans several pages")
+    } finally {
+      GraftCatalog.unregister("share1.default.warmcold")
+      rm(new java.io.File(path))
+      GraftLog.invalidateListing(path)
+    }
+  }
+
   test("change-range cache never freezes an over-range endingVersion") {
     // REGRESSION (round-13 review): the change-range cache keys on the
     // clamped end, not the requested one — a request with endingVersion
