@@ -5,6 +5,8 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.Duration
 
+import scala.jdk.OptionConverters._
+
 import graft.model.JsonUtils
 import graft.server.wire
 
@@ -42,6 +44,9 @@ class GraftRestClient(
     asyncQuery: Boolean = false,
     asyncPollIntervalMs: Long = 10000L,
     asyncMaxDurationMs: Long = 600000L) {
+
+  private val CAPABILITIES = "delta-sharing-capabilities"
+  private val END_STREAM = "includeendstreamaction=true"
 
   private val http = HttpClient.newBuilder()
     .connectTimeout(Duration.ofSeconds(30)).build()
@@ -96,8 +101,10 @@ class GraftRestClient(
         .POST(HttpRequest.BodyPublishers.ofString(body.getOrElse("{}"), UTF_8))
     }).build()
 
-    // Retry with exponential backoff on 5xx / transport errors (reference
-    // `RetryUtils.scala`); 4xx are surfaced immediately.
+    // Retry with exponential backoff on 5xx, 429 and transport errors
+    // (reference `RetryUtils.scala`); other 4xx are surfaced immediately.
+    // A `Retry-After` of whole seconds on a retried response replaces the
+    // backoff for that wait.
     var attempt = 0
     var delay = 1000L
     while (true) {
@@ -106,17 +113,21 @@ class GraftRestClient(
         catch { case scala.util.control.NonFatal(e) => Left(e) }
       result match {
         case Right(resp) if resp.statusCode() < 400 => return resp
-        case Right(resp) if resp.statusCode() < 500 =>
+        case Right(resp) if resp.statusCode() < 500 && resp.statusCode() != 429 =>
           throw new GraftClientException(resp.statusCode(),
             s"$method $path failed (${resp.statusCode()}): ${resp.body()}")
         case Right(resp) if attempt >= numRetries =>
           throw new GraftClientException(resp.statusCode(),
-            s"$method $path failed after ${attempt + 1} attempts: ${resp.body()}")
+            s"$method $path failed after ${attempt + 1} attempts " +
+              s"(${resp.statusCode()}): ${resp.body()}")
         case Left(e) if attempt >= numRetries =>
           throw new GraftClientException(0,
             s"$method $path failed after ${attempt + 1} attempts: $e")
-        case _ =>
-          Thread.sleep(delay); delay *= 2; attempt += 1
+        case r =>
+          val retryAfterMs = r.toOption
+            .flatMap(_.headers().firstValue("Retry-After").toScala)
+            .flatMap(_.trim.toLongOption).filter(_ >= 0).map(_ * 1000)
+          Thread.sleep(retryAfterMs.getOrElse(delay)); delay *= 2; attempt += 1
       }
     }
     throw new IllegalStateException("unreachable")
@@ -201,15 +212,25 @@ class GraftRestClient(
 
   // ---------------------------------------------------------------- query
 
-  /** Append `asyncquery=true` to the capabilities header when async mode
-    * is on (the server keys on the `delta-sharing-capabilities` value).
+  /** `headers` with `cap` appended to the capabilities header (the server
+    * keys on the `delta-sharing-capabilities` value).
     */
-  private def withAsync(headers: Map[String, String]): Map[String, String] =
-    if (!asyncQuery) headers
-    else headers.get("delta-sharing-capabilities") match {
-      case Some(v) => headers + ("delta-sharing-capabilities" -> s"$v;asyncquery=true")
-      case None => headers + ("delta-sharing-capabilities" -> "asyncquery=true")
+  private def withCapability(headers: Map[String, String], cap: String): Map[String, String] =
+    headers.get(CAPABILITIES) match {
+      case Some(v) => headers + (CAPABILITIES -> s"$v;$cap")
+      case None => headers + (CAPABILITIES -> cap)
     }
+
+  /** Append `asyncquery=true` when async mode is on. */
+  private def withAsync(headers: Map[String, String]): Map[String, String] =
+    if (!asyncQuery) headers else withCapability(headers, "asyncquery=true")
+
+  /** Every `/query` and `/changes` request asks for an EndStreamAction at
+    * the end of each response, so [[walkPages]] can tell a complete last
+    * page from one cut short after a whole line.
+    */
+  private def withEndStream(headers: Map[String, String]): Map[String, String] =
+    withCapability(headers, END_STREAM)
 
   /** A pending async response carries a queryStatus line (works for both
     * dialects — raw-tree sniff, no line codec commitment).
@@ -267,7 +288,7 @@ class GraftRestClient(
     var refreshToken: Option[String] = None
     val version = walkPages(
       tok => postQueryResolved(tablePath(share, schema, table),
-        req.copy(pageToken = tok.orNull), Map.empty),
+        req.copy(pageToken = tok.orNull), withEndStream(Map.empty)),
       JsonUtils.fromJson[wire.Line],
       (l: wire.Line) => PageLineKind(l.protocol != null, l.metaData != null,
         Option(l.endStreamAction)),
@@ -287,7 +308,7 @@ class GraftRestClient(
     * fallback) so basic tables also answer in one dialect.
     */
   val DELTA_CAPABILITIES: Map[String, String] = Map(
-    "delta-sharing-capabilities" ->
+    CAPABILITIES ->
       ("responseformat=delta;readerfeatures=deletionvectors,columnmapping," +
         "typewidening,varianttype"))
 
@@ -308,7 +329,7 @@ class GraftRestClient(
     val files = Seq.newBuilder[wire.DeltaFileW]
     val version = walkPages(
       tok => postQueryResolved(tablePath(share, schema, table),
-        req.copy(pageToken = tok.orNull), DELTA_CAPABILITIES),
+        req.copy(pageToken = tok.orNull), withEndStream(DELTA_CAPABILITIES)),
       JsonUtils.fromJson[wire.DeltaLine],
       (l: wire.DeltaLine) => PageLineKind(l.protocol != null, l.metaData != null,
         Option(l.endStreamAction))) { line =>
@@ -371,7 +392,7 @@ class GraftRestClient(
     collectDeltaChanges { tok =>
       request("POST", s"${tablePath(share, schema, table)}/query",
         body = Some(JsonUtils.toJson(req.copy(pageToken = tok.orNull))),
-        headers = DELTA_CAPABILITIES)
+        headers = withEndStream(DELTA_CAPABILITIES))
     }
   }
 
@@ -384,7 +405,7 @@ class GraftRestClient(
     collectDeltaChanges { tok =>
       request("GET", s"${tablePath(share, schema, table)}/changes",
         params = params ++ tok.map(t => Map("pageToken" -> t)).getOrElse(Map.empty),
-        headers = DELTA_CAPABILITIES)
+        headers = withEndStream(DELTA_CAPABILITIES))
     }
 
   private def collectDeltaChanges(
@@ -429,7 +450,8 @@ class GraftRestClient(
       maxFiles = maxFiles.map(Int.box).orNull)
     collectChanges { tok =>
       request("POST", s"${tablePath(share, schema, table)}/query",
-        body = Some(JsonUtils.toJson(req.copy(pageToken = tok.orNull))))
+        body = Some(JsonUtils.toJson(req.copy(pageToken = tok.orNull))),
+        headers = withEndStream(Map.empty))
     }
   }
 
@@ -438,7 +460,8 @@ class GraftRestClient(
       params: Map[String, String]): ChangesResult =
     collectChanges { tok =>
       request("GET", s"${tablePath(share, schema, table)}/changes",
-        params = params ++ tok.map(t => Map("pageToken" -> t)).getOrElse(Map.empty))
+        params = params ++ tok.map(t => Map("pageToken" -> t)).getOrElse(Map.empty),
+        headers = withEndStream(Map.empty))
     }
 
   private def collectChanges(
@@ -480,7 +503,11 @@ class GraftRestClient(
     * continuation page when page 1 had none — fails LOUDLY. Silently
     * accepting a non-re-emitting server would drop a genuine
     * first-of-page change line; value-dedup would collapse a legitimate
-    * A->B->A metadata revert into [A, B]. Returns the last
+    * A->B->A metadata revert into [A, B]. A response whose capabilities
+    * header echoes `includeendstreamaction=true` must carry an
+    * EndStreamAction; the last page of a walk without one was cut short,
+    * and the walk fails instead of returning a shorter list (the
+    * reference client's `checkEndStreamAction`). Returns the last
     * Delta-Table-Version header seen.
     */
   private def walkPages[L](
@@ -511,6 +538,7 @@ class GraftRestClient(
       version = resp.headers().firstValue("Delta-Table-Version")
         .map[Long](_.toLong).orElse(version)
       pageToken = None
+      var pageEnded = false
       var pageProto = false
       var pageMeta = false
       def checkHead(head: Option[String], raw: String, what: String): Unit =
@@ -526,6 +554,7 @@ class GraftRestClient(
         // and the line still flows to `emit` (a pure-end line reaching
         // emit is harmless — consumers match on their specific fields)
         k.end.foreach { e =>
+          pageEnded = true
           pageToken = Option(e.nextPageToken)
           onEnd(e)
         }
@@ -539,6 +568,12 @@ class GraftRestClient(
           else checkHead(headMeta, raw, "metadata")
         } else emit(line)
       }
+      if (!pageEnded && resp.headers().firstValue(CAPABILITIES).orElse("")
+          .toLowerCase.contains(END_STREAM))
+        throw new GraftClientException(0,
+          s"truncated response: the last page (${rawLines.size} lines) ended " +
+            "without the endStreamAction the server promised; the file list " +
+            "would be incomplete")
       firstPage = false
     }
     version

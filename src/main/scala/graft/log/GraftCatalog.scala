@@ -4,6 +4,8 @@ import java.util.{LinkedHashMap => JLinkedHashMap, Map => JMap}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.model.{Metadata, Protocol}
+
 /** Registry of shared tables: `share.schema.table` → storage location,
   * mirroring the reference's share/schema/table config tree
   * (`ServerConfig.scala:208-259`) with an LRU snapshot cache of the same
@@ -80,6 +82,60 @@ object GraftCatalog {
     val entry = l.replay(version, others)
     snapshotCache.synchronized { snapshotCache.put(key, entry) }
     entry._1
+  }
+
+  /** (location, version) → that version's (metadata, protocol): what a
+    * range or CDF request needs of its start version. Holds no files, so
+    * it keeps more versions than the snapshot cache.
+    */
+  private val tableStates =
+    new JLinkedHashMap[(String, Long), (Metadata, Protocol)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: JMap.Entry[(String, Long), (Metadata, Protocol)]): Boolean =
+        size() > 64
+    }
+
+  /** The (metadata, protocol) of `version`, as its replay would find them,
+    * without replaying its files. It starts from the nearest state at or
+    * below `version` that the process already holds — a cached snapshot,
+    * a memoized pair, or a loaded checkpoint; with none, the checkpoint a
+    * replay would load — and applies the Metadata and Protocol actions of
+    * the commits after it ([[GraftLog.readStateActions]]). A delta log's
+    * protocol must be readable, as in a replay. Version checksums are not
+    * checked here: they validate a replayed file set, and none is built.
+    */
+  def tableStateAt(l: GraftLog, version: Long): (Metadata, Protocol) = {
+    def below[V](m: JLinkedHashMap[(String, Long), V])(pair: V => (Metadata, Protocol))
+        : Option[(Long, (Metadata, Protocol))] = m.synchronized {
+      var best: Option[(Long, (Metadata, Protocol))] = None
+      m.forEach((k, v) =>
+        if (k._1 == l.tablePath && k._2 <= version && best.forall(_._1 < k._2))
+          best = Some((k._2, pair(v))))
+      best
+    }
+    def commitsAfter(from: Long): Seq[Long] =
+      l.listVersions().filter(v => v > from && v <= version)
+    // a held state serves only while every commit after it is still in
+    // the log (a log cleanup deletes commits below a newer checkpoint)
+    val held = Seq(
+      below(snapshotCache)(e => (e._1.metadata, e._1.protocol)),
+      below(tableStates)(identity),
+      l.loadedCheckpointAtOrBefore(version).map(c => (c.version, (c.metadata, c.protocol)))
+    ).flatten.maxByOption(_._1).filter(h => commitsAfter(h._1).size == version - h._1)
+    val base = held.orElse(
+      l.checkpointAtOrBefore(version).map(c => (c.version, (c.metadata, c.protocol))))
+    var meta: Metadata = base.map(_._2._1).orNull
+    var proto: Protocol = base.map(_._2._2).getOrElse(Protocol())
+    commitsAfter(base.fold(Long.MinValue)(_._1)).foreach(v =>
+      l.readStateActions(v).foreach {
+        case m: Metadata => meta = m
+        case p: Protocol => proto = p
+        case _ => ()
+      })
+    require(meta != null, s"no metadata in log at ${l.tablePath}")
+    if (l.deltaMode) proto.assertReadable(l.tablePath)
+    tableStates.synchronized { tableStates.put((l.tablePath, version), (meta, proto)) }
+    (meta, proto)
   }
 
   /** (location, version, query checksum) → the positions, in the
@@ -160,7 +216,18 @@ object GraftCatalog {
     changeRanges.synchronized {
       changeRanges.keySet.removeIf(_._1 == location)
     }
+    tableStates.synchronized {
+      tableStates.keySet.removeIf(_._1 == location)
+    }
   }
+
+  /** Test hook: the versions of `location` in the snapshot cache. */
+  private[graft] def cachedSnapshotVersions(location: String): Seq[Long] =
+    snapshotCache.synchronized {
+      val out = Seq.newBuilder[Long]
+      snapshotCache.forEach((k, _) => if (k._1 == location) out += k._2)
+      out.result().sorted
+    }
 
   def location(fqn: String): String = shareConfig(fqn).location
 

@@ -116,6 +116,30 @@ class GraftLog(val tablePath: String, conf: Configuration) {
   private[graft] def memoizedVersions: Seq[Long] =
     commitCache.synchronized { commitCache.keys.toVector }
 
+  /** The Metadata and Protocol actions of commit `v`, in commit order,
+    * read without decoding its file actions: only a line that names
+    * `metaData` or `protocol` is decoded (a file line that merely
+    * mentions the word is decoded and dropped).
+    */
+  def readStateActions(v: Long): Seq[Action] = {
+    val memo = commitCache.synchronized(commitCache.get(v))
+    val actions = memo.getOrElse {
+      val in = fs.open(new Path(logDir, GraftLog.versionFileName(v)))
+      val lines =
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+          .filter(l => l.contains("\"metaData\"") || l.contains("\"protocol\"")).toList
+        finally in.close()
+      lines.flatMap { l =>
+        if (deltaMode) DeltaLogCompat.actionFromNode(JsonUtils.mapper.readTree(l), v, 0L)
+        else Some(JsonUtils.lineToAction(l))
+      }
+    }
+    actions.filter {
+      case _: Metadata | _: Protocol => true
+      case _ => false
+    }
+  }
+
   /** Commit-file timestamps, monotonized: a commit's timestamp is
     * `max(actions' max ts, prev + 1ms)` so time travel is well-defined even
     * when underlying mtimes are not monotonic (reference
@@ -128,11 +152,41 @@ class GraftLog(val tablePath: String, conf: Configuration) {
     */
   def versionTimestamps(): Seq[(Long, Long)] = {
     if (deltaMode) return deltaVersionTimestamps()
+    // The fold is memoized per table next to the listing: a committed
+    // version's timestamp never changes, so a later call folds only the
+    // commits listed since (O(new commits) for a fresh per-request log).
+    GraftLog.timestampCache.get(tablePath).filter(_.nonEmpty) match {
+      case Some(memo) =>
+        val newer = listVersions().filter(_ > memo.last._1)
+        if (newer.isEmpty) memo
+        else {
+          val out = fold(memo, newer)
+          GraftLog.timestampCache(tablePath) = out
+          out
+        }
+      case None =>
+        val out = foldedVersionTimestamps()
+        GraftLog.timestampCache(tablePath) = out
+        out
+    }
+  }
+
+  /** [[versionTimestamps]] without the memo: the newest checkpoint's
+    * prefix, then the commits after it.
+    */
+  private[graft] def foldedVersionTimestamps(): Vector[(Long, Long)] = {
     val cp = checkpointAtOrBefore(Long.MaxValue)
-    val prefix = cp.map(_.timestamps).getOrElse(Nil)
-    var prev = prefix.lastOption.map(_._2).getOrElse(Long.MinValue)
     val from = cp.map(_.version + 1).getOrElse(Long.MinValue)
-    prefix ++ listVersions().filter(_ >= from).map { v =>
+    fold(cp.map(_.timestamps.toVector).getOrElse(Vector.empty),
+      listVersions().filter(_ >= from))
+  }
+
+  /** `prefix` extended with commits `versions`, each stamped with
+    * `max(its actions' max ts, prev + 1ms)`.
+    */
+  private def fold(prefix: Vector[(Long, Long)], versions: Seq[Long]): Vector[(Long, Long)] = {
+    var prev = prefix.lastOption.map(_._2).getOrElse(Long.MinValue)
+    prefix ++ versions.map { v =>
       val ts0 = readVersion(v).map {
         case a: AddFile    => a.timestamp
         case a: RemoveFile => a.timestamp
@@ -384,8 +438,41 @@ class GraftLog(val tablePath: String, conf: Configuration) {
     */
   private[graft] def checkpointAtOrBefore(target: Long): Option[GraftLog.CheckpointState] = {
     if (deltaMode) return deltaCheckpointAtOrBefore(target)
+    // Jackson + erasure: numbers inside Seq[Seq[Long]] and Option[Long]
+    // materialize as Integers — go through Number, never unbox Long
+    // directly (the pre-fix CCE silently degraded EVERY header load to
+    // full replay).
+    def asLong(x: Any): Long = x.asInstanceOf[Number].longValue()
+    def own(h: GraftLog.CheckpointHeader): Seq[(Long, Long)] = h.timestamps.map { t =>
+      val s = t.asInstanceOf[Seq[Any]]
+      (asLong(s(0)), asLong(s(1)))
+    }
+    def prevOf(h: GraftLog.CheckpointHeader): Option[Long] =
+      h.prevCheckpoint.asInstanceOf[Option[Any]].map(asLong)
+    def cached(v: Long) = GraftLog.checkpointCache.get((tablePath, v))
+    // The timestamp prefix up to checkpoint `v`, from the header lines of
+    // `v` and the checkpoints it chains to (down to one already loaded):
+    // no older checkpoint body is parsed. A missing or unreadable link,
+    // or one that does not point further down, is None.
+    def prefixThrough(v: Long): Option[Seq[(Long, Long)]] = {
+      var headers = List.empty[GraftLog.CheckpointHeader]
+      var link: Option[Long] = Some(v)
+      var base: Option[Seq[(Long, Long)]] = Some(Nil)
+      while (link.isDefined) {
+        val at = link.get
+        link = None
+        cached(at).map(_.timestamps) match {
+          case Some(ts) => base = Some(ts)
+          case None => readHeader(at) match {
+            case Some(h) if prevOf(h).forall(_ < at) => headers = h :: headers; link = prevOf(h)
+            case _ => base = None
+          }
+        }
+      }
+      base.map(b => headers.foldLeft(b.toVector)((pre, h) => pre ++ own(h)))
+    }
     def load(v: Long): Option[GraftLog.CheckpointState] =
-      GraftLog.checkpointCache.get((tablePath, v))
+      cached(v)
         .orElse {
           val p = new Path(logDir, GraftLog.checkpointFileName(v))
           try {
@@ -396,6 +483,7 @@ class GraftLog(val tablePath: String, conf: Configuration) {
                 try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
                   .filter(_.nonEmpty).toList
                 finally in.close()
+              GraftLog.checkpointBodies.incrementAndGet()
               val header = JsonUtils.fromJson[GraftLog.CheckpointHeader](lines.head)
               var meta: Metadata = null
               var proto: Protocol = Protocol()
@@ -415,33 +503,29 @@ class GraftLog(val tablePath: String, conf: Configuration) {
               // timestamp prefix chains through the previous checkpoint;
               // a broken link makes THIS checkpoint unusable (None) —
               // replay from commits still answers correctly.
-              // Jackson + erasure: numbers inside Seq[Seq[Long]] and
-              // Option[Long] materialize as Integers — go through Number,
-              // never unbox Long directly (the pre-fix CCE silently
-              // degraded EVERY header load to full replay).
-              def asLong(x: Any): Long = x.asInstanceOf[Number].longValue()
-              val prev: Option[Option[GraftLog.CheckpointState]] =
-                header.prevCheckpoint.asInstanceOf[Option[Any]].map(pv => load(asLong(pv)))
-              val prefix: Option[Seq[(Long, Long)]] = prev match {
-                case None    => Some(Nil)
-                case Some(p) => p.map(_.timestamps)
+              val prefix = prevOf(header) match {
+                case None => Some(Nil)
+                case Some(pv) => if (pv < v) prefixThrough(pv) else None
               }
               prefix.map { pre =>
-                val own = header.timestamps.map { t =>
-                  val s = t.asInstanceOf[Seq[Any]]
-                  (asLong(s(0)), asLong(s(1)))
+                // a file that the nearest loaded checkpoint of this table
+                // on either side holds, unchanged, is shared with it:
+                // checkpoints of a growing table repeat most of their
+                // files, and they load in any order (time travel)
+                val loaded = GraftLog.checkpointCache.iterator.collect {
+                  case ((t, u), st) if t == tablePath && u != v => st
+                }.toSeq
+                val near = (loaded.filter(_.version < v).maxByOption(_.version) ++
+                  loaded.filter(_.version > v).minByOption(_.version)).map { st =>
+                  val byPath = new java.util.HashMap[String, AddFile]()
+                  st.files.foreach(f => byPath.put(f.path, f))
+                  byPath
                 }
-                // a file the previous checkpoint already holds, unchanged,
-                // is shared with it: consecutive checkpoints of a growing
-                // table repeat most of their files
-                val earlier = new java.util.HashMap[String, AddFile]()
-                prev.flatten.foreach(_.files.foreach(f => earlier.put(f.path, f)))
                 val shared = files.result().map { a =>
-                  val e = earlier.get(a.path)
-                  if (e != null && e == a) e else a
+                  near.iterator.map(_.get(a.path)).find(e => e != null && e == a).getOrElse(a)
                 }
                 val st = GraftLog.CheckpointState(header.version,
-                  pre ++ own, meta, proto, shared, txns.toMap, doms.toMap)
+                  pre ++ own(header), meta, proto, shared, txns.toMap, doms.toMap)
                 GraftLog.checkpointCache.put((tablePath, v), st)
                 st
               }
@@ -477,6 +561,26 @@ class GraftLog(val tablePath: String, conf: Configuration) {
       }
     }
   }
+
+  /** The header line of graft checkpoint `v` alone; None when it is
+    * missing or unreadable.
+    */
+  private def readHeader(v: Long): Option[GraftLog.CheckpointHeader] =
+    try {
+      val in = fs.open(new Path(logDir, GraftLog.checkpointFileName(v)))
+      val line =
+        try new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8")).readLine()
+        finally in.close()
+      Option(line).map(JsonUtils.fromJson[GraftLog.CheckpointHeader](_))
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The newest checkpoint at or below `target` that this process has
+    * already loaded, without reading the log.
+    */
+  private[graft] def loadedCheckpointAtOrBefore(target: Long): Option[GraftLog.CheckpointState] =
+    GraftLog.checkpointCache.iterator.collect {
+      case ((t, v), st) if t == tablePath && v <= target => st
+    }.maxByOption(_.version)
 
   /** Delta-mode checkpoint discovery: `_last_checkpoint` names the newest
     * checkpoint (and its part count) in O(1); time travel below it falls
@@ -706,6 +810,15 @@ object GraftLog {
   private val listingCache =
     scala.collection.concurrent.TrieMap.empty[String, Vector[Long]]
 
+  /** tablePath → monotonized commit timestamps, ascending by version (see
+    * [[GraftLog.versionTimestamps]]); graft-format logs only.
+    */
+  private val timestampCache =
+    scala.collection.concurrent.TrieMap.empty[String, Vector[(Long, Long)]]
+
+  /** Test hook: count of checkpoint bodies parsed. */
+  private[graft] val checkpointBodies = new java.util.concurrent.atomic.AtomicLong
+
   /** tablePath → compacted log ranges; see [[GraftLog.compactedRanges]]. */
   private val compactedCache =
     scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Long, Path)]]
@@ -727,6 +840,7 @@ object GraftLog {
     */
   private[graft] def invalidateListing(tablePath: String): Unit = {
     listingCache.remove(tablePath)
+    timestampCache.remove(tablePath)
     formatCache.remove(tablePath)
     compactedCache.remove(tablePath)
     checkpointCache.keys.filter(_._1 == tablePath).foreach(checkpointCache.remove)

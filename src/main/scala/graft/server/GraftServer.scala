@@ -66,7 +66,7 @@ class GraftServer(
 
   def start(): GraftServer = synchronized {
     require(server == null, "already started")
-    server = HttpServer.create(new InetSocketAddress(config.host, config.port), 0)
+    server = httpServer(new InetSocketAddress(config.host, config.port))
     // daemon threads: an embedded server must never keep the JVM alive
     // after the driver's main returns
     server.setExecutor(Executors.newCachedThreadPool(r => {
@@ -742,8 +742,7 @@ class GraftServer(
       s"starting version($start) > ending version($end)")
     requireSinceStartVersion(cfg, start)
     requireVersionExists(l, start)
-    val snap = GraftCatalog.snapshotAt(l, start)
-    if (!graft.log.GraftCDF.isEnabled(snap.metadata))
+    if (!graft.log.GraftCDF.isEnabled(GraftCatalog.tableStateAt(l, start)._1))
       throw GraftServerException.badRequest(
         s"Change Data Feed is not enabled on table $share.$schema.$table")
     serveChangeLines(ex, l, location, s"$share.$schema.$table", start, end,
@@ -791,8 +790,10 @@ class GraftServer(
           "page token does not match the query parameters")
     }
 
-    val startSnap = GraftCatalog.snapshotAt(l, start)
-    val fmt = negotiateFormat(ex, startSnap.metadata)
+    // the start version's metadata and protocol, not its files: the head
+    // lines and the historical-protocol walk need nothing else of it
+    val (startMeta, startProto) = GraftCatalog.tableStateAt(l, start)
+    val fmt = negotiateFormat(ex, startMeta)
     changeScheme = fileIdScheme(ex, fmt)
     val delta = fmt == FORMAT_DELTA
     // Historical Protocol actions only have a representation in the delta
@@ -822,14 +823,14 @@ class GraftServer(
     }
 
     // Historical-protocol walk state: the effective (metadata, protocol)
-    // pair as of the last processed commit, starting from the range-start
-    // snapshot (which the head line covers). A commit strictly after
+    // pair as of the last processed commit, starting from the start
+    // version's pair (which the head line covers). A commit strictly after
     // `start` that CHANGES the effective wire protocol — via a logged
     // Protocol action (real delta logs) or a metadata-driven feature
     // enablement (graft-mode logs) — emits one version-stamped protocol
     // line (reference `DeltaSharedTable.scala:672-675`).
-    var runMeta = startSnap.metadata
-    var runProto = startSnap.protocol
+    var runMeta = startMeta
+    var runProto = startProto
     var lastEmittedProto = deltaProtoW(runMeta, runProto)
     // Each entry is a RENDER THUNK: which lines exist (and their order) is
     // decided eagerly — the walk state, sorts, and counts are O(range
@@ -927,11 +928,11 @@ class GraftServer(
     val head =
       // the head Protocol is version-stamped only under the opt-in, so
       // non-opted clients keep the exact previous delta wire shape
-      if (delta) Seq(deltaProtoJson(startSnap.metadata, startSnap.protocol,
+      if (delta) Seq(deltaProtoJson(startMeta, startProto,
           version = if (emitHistProto) Long.box(start) else null),
-        deltaMetaJson(startSnap.metadata, start))
+        deltaMetaJson(startMeta, start))
       else Seq(Line(protocol = wire.Protocol()).json,
-        Line(metaData = wireMetadata(startSnap.metadata, start)).json)
+        Line(metaData = wireMetadata(startMeta, start)).json)
     sendNdjson(ex, head ++ pageLines ++ endLines, fmt)
   }
 
@@ -1279,6 +1280,30 @@ object GraftServer {
   val FORMAT_DELTA = "delta"
 
   private val RANGE_RE = """bytes=(\d+)-(\d*)""".r
+
+  private val NODELAY = "sun.net.httpserver.nodelay"
+
+  /** Every JDK `HttpServer` of the project, tests included, is created
+    * here. The JDK server writes a response's headers on their own
+    * (`ExchangeImpl.sendResponseHeaders`) and sets `TCP_NODELAY` on
+    * accepted sockets only when `sun.net.httpserver.nodelay` is set as its
+    * `ServerConfig` class loads, that is, before the first server of the
+    * process is created. Without it, Nagle holds each response body until
+    * the client's delayed ACK of the headers arrives. So this sets the
+    * property when it is unset, and one factory keeps the order of
+    * creation from deciding the socket mode.
+    *
+    * A/B on 4 cores, same build with and without the property (3
+    * alternating seeds a side through `perfbench/compare.py`, every run
+    * correct, no metric worse; medians, without → with):
+    * `provider_churn` `op_p50_ms` 68.7 → 26.6 and `op_p95_ms` 103.8 →
+    * 56.2; `provider_query` `op_p50_ms` 22.6 → 16.2 and `ops_per_s` 87.6 →
+    * 111.6; `recipient_read` `ops_per_s` 3.9 → 4.5.
+    */
+  def httpServer(address: InetSocketAddress): HttpServer = {
+    if (System.getProperty(NODELAY) == null) System.setProperty(NODELAY, "true")
+    HttpServer.create(address, 0)
+  }
 
   private[server] def now(): Long = System.currentTimeMillis()
 

@@ -8,7 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.client.GraftRestClient
-import graft.server.{Tokens, wire}
+import graft.server.{GraftServer, Tokens, wire}
 
 /** Pagination head-line handling against a THIRD-PARTY server (round-12
   * advisory regression): the protocol re-emits the head protocol and
@@ -60,7 +60,7 @@ class ClientPaginationSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq(proto, meta("A"), meta("B"), meta("A"), file("f2", 3L)).mkString("\n")
 
   override def beforeAll(): Unit = {
-    httpd = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    httpd = GraftServer.httpServer(new InetSocketAddress("127.0.0.1", 0))
     def serve(ex: HttpExchange, body: String): Unit = {
       val b = body.getBytes(UTF_8)
       ex.getResponseHeaders.set("Delta-Table-Version", "3")
@@ -123,7 +123,7 @@ class ClientPaginationSpec extends AnyFunSuite with BeforeAndAfterAll {
     // validates lines(0)/(1) against page 1's head and throws
     // (DeltaSharingClient.fetchNextPageFiles:683-699); silently skipping
     // would hide B from a consumer vetting mid-range schema changes.
-    val bad = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val bad = GraftServer.httpServer(new InetSocketAddress("127.0.0.1", 0))
     bad.createContext("/", (ex: HttpExchange) => {
       val query = Option(ex.getRequestURI.getQuery).getOrElse("")
       val body =
@@ -149,7 +149,7 @@ class ClientPaginationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a data line that ALSO carries endStreamAction keeps its payload " +
     "(the end action is not exclusive of data)") {
-    val combo = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val combo = GraftServer.httpServer(new InetSocketAddress("127.0.0.1", 0))
     combo.createContext("/", (ex: HttpExchange) => {
       // single page: the LAST file line carries the end action inline
       val lastLine = wire.Line(
@@ -178,7 +178,7 @@ class ClientPaginationSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a buggy/hostile server: every continuation page ends with the SAME
     // nextPageToken it was asked for — without the repeat-token guard the
     // client would re-fetch page 2 in an infinite RPC loop.
-    val loopy = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val loopy = GraftServer.httpServer(new InetSocketAddress("127.0.0.1", 0))
     val fetches = new java.util.concurrent.atomic.AtomicInteger(0)
     loopy.createContext("/", (ex: HttpExchange) => {
       fetches.incrementAndGet()
@@ -204,6 +204,75 @@ class ClientPaginationSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(fetches.get() === 2,
         s"walk must stop at the first repeated token, made ${fetches.get()} fetches")
     } finally loopy.stop(0)
+  }
+
+  /** A scripted server on `handle`, stopped after `body` runs against it. */
+  private def scripted(handle: HttpExchange => Unit)(body: String => Unit): Unit = {
+    val s = GraftServer.httpServer(new InetSocketAddress("127.0.0.1", 0))
+    s.createContext("/", (ex: HttpExchange) => { handle(ex); ex.close() })
+    s.start()
+    try body(s"http://127.0.0.1:${s.getAddress.getPort}") finally s.stop(0)
+  }
+
+  private def reply(ex: HttpExchange, status: Int, body: String,
+      headers: Map[String, String] = Map.empty): Unit = {
+    val b = body.getBytes(UTF_8)
+    headers.foreach { case (k, v) => ex.getResponseHeaders.set(k, v) }
+    ex.sendResponseHeaders(status, if (b.isEmpty) -1 else b.length)
+    if (b.nonEmpty) ex.getResponseBody.write(b)
+  }
+
+  test("a last page cut after a complete line is a truncation error, not " +
+    "a shorter file list") {
+    // a server that honours includeendstreamaction (and says so) but whose
+    // last page lost its final lines, the end action among them: every
+    // line that arrived is whole
+    val asked = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    scripted { ex =>
+      asked.add(Option(ex.getRequestHeaders.getFirst("delta-sharing-capabilities")).orNull)
+      val query = Option(ex.getRequestURI.getQuery).getOrElse("")
+      val body =
+        if (query.contains("pageToken=p2")) Seq(protoP, metaP("A"), addP("f2", 2L))
+        else Seq(protoP, metaP("A"), addP("f1", 1L), esaP("p2"))
+      reply(ex, 200, body.mkString("\n"), Map("Delta-Table-Version" -> "2",
+        "delta-sharing-capabilities" -> "responseformat=parquet;includeendstreamaction=true"))
+    } { url =>
+      val c = new GraftRestClient(url, numRetries = 0)
+      val e = intercept[graft.client.GraftClientException] {
+        c.changes("s", "d", "tp", Map("startingVersion" -> "0"))
+      }
+      assert(e.getMessage.contains("truncated response"), e.getMessage)
+      assert(asked.contains("includeendstreamaction=true"), asked)
+    }
+  }
+
+  test("429 is retried, waiting the Retry-After seconds") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    scripted { ex =>
+      if (calls.incrementAndGet() == 1) reply(ex, 429, "slow down", Map("Retry-After" -> "1"))
+      else reply(ex, 200, """{"items":[{"name":"s1"}]}""")
+    } { url =>
+      val c = new GraftRestClient(url, numRetries = 3)
+      val t0 = System.nanoTime()
+      assert(c.listShares() === Seq("s1"))
+      assert(System.nanoTime() - t0 >= 1000000000L, "the retry waited less than Retry-After")
+      assert(calls.get() === 2)
+    }
+  }
+
+  test("429s beyond numRetries end in a GraftClientException with status 429") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    scripted { ex =>
+      calls.incrementAndGet()
+      reply(ex, 429, "slow down", Map("Retry-After" -> "0"))
+    } { url =>
+      val c = new GraftRestClient(url, numRetries = 2)
+      val e = intercept[graft.client.GraftClientException] {
+        c.listShares()
+      }
+      assert(e.status === 429, e.getMessage)
+      assert(calls.get() === 3)
+    }
   }
 
   test("token checksum: fields are length-prefixed — no cross-field " +
