@@ -343,11 +343,13 @@ class GraftRestClient(
 
   /** Table metadata in the DELTA dialect — the entry point for tables
     * whose reader features make the parquet-dialect `/metadata` refuse
-    * (negotiation mirror of [[deltaQuery]]).
+    * (negotiation mirror of [[deltaQuery]]). A `timestamp` answers for the
+    * latest version committed at-or-before it.
     */
-  def deltaMetadata(share: String, schema: String, table: String)
-      : (wire.DeltaMetadataLine, Long) = {
+  def deltaMetadata(share: String, schema: String, table: String,
+      timestamp: Option[String] = None): (wire.DeltaMetadataLine, Long) = {
     val resp = request("GET", s"${tablePath(share, schema, table)}/metadata",
+      params = timestamp.map(t => Map("timestamp" -> t)).getOrElse(Map.empty),
       headers = DELTA_CAPABILITIES)
     val meta = resp.body().split("\n").filter(_.nonEmpty)
       .map(JsonUtils.fromJson[wire.DeltaLine](_))

@@ -787,7 +787,7 @@ object TableBuilder {
           DeletionVectors.resolveBytes(tablePath, dv, conf))
     }.toMap
     val bc = spark.sparkContext.broadcast(existing)
-    val layout = graft.sources.Layout.of(prev)
+    val layout = graft.sources.Layout.of(prev.metadata)
     layout.prepare(spark)
     layout.toLogical(
       spark.read.schema(layout.physical).parquet(prev.files.map(f => abs(f.path)): _*),

@@ -128,7 +128,8 @@ object SharingQueries {
 
     // §2.1 S4 + §3.3: CDF through the DataSource option — same history as
     // q34 but via `readChangeFeed`/`startingVersion` options and the
-    // PrunedFilteredScan relation (reference `RemoteDeltaCDFRelation`).
+    // PrunedFilteredScan relation `GraftChangeRelation` (reference
+    // `RemoteDeltaCDFRelation`).
     QuerySpec("q37_cdf_option", Fixture, (s, dir) => {
       graft.log.SharedFixtures.ensure(s, dir)
       val path = graft.log.GraftCatalog.location(s"${graft.log.SharedFixtures.SHARE}.orders_cdf")
@@ -1090,7 +1091,8 @@ object SharingQueries {
     // row-level changes CLIENT-side from the raw served actions — DV
     // merged-bitmap diffs per version (v1 deletes region-2 rows; v2
     // extends the SAME files' DVs so only regionkey>2 rows are new
-    // deletes), same classifier as the local GraftCDF.
+    // deletes), the change core's one classifier (`ChangeCore`) over the
+    // delta-dialect transport.
     QuerySpec("q118_remote_dv_cdf", Fixture, (s, dir) => {
       val url = graft.server.LocalShareServer.ensure(s, dir)
       s.read.format("graft")

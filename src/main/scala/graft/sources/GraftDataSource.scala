@@ -211,7 +211,9 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
     GraftLimitPushDown.enable(spark)
     if (parameters.contains("url")) return createRemoteRelation(spark, parameters)
     if (parameters.get("readChangeFeed").exists(_.toBoolean))
-      return new GraftCDFRelation(spark, resolvePath(parameters), parameters)
+      return new GraftChangeRelation(spark, new LocalChanges(spark,
+        new graft.log.GraftLog(resolvePath(parameters), spark.sessionState.newHadoopConf())),
+        parameters)
     val version = parameters.get("versionAsOf").map(_.toLong)
     val timestamp = parameters.get("timestampAsOf")
       .map(s => graft.model.StatsCodec.parseTimestamp(s).toEpochMilli)
@@ -246,15 +248,13 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
     val client = GraftDataSource.remoteClient(parameters)
     if (parameters.get("readChangeFeed").exists(_.toBoolean)) {
       // same dialect negotiation as the snapshot path: a DV/column-mapped
-      // table refuses the parquet /changes with the typed 400 — derive
-      // changes client-side from raw delta actions instead
-      return try {
-        val rel = new RemoteGraftCDFRelation(spark, client, share, schema, table, parameters)
-        rel.schema // forces the first /changes RPC — the negotiation probe
-        rel
-      } catch {
+      // table refuses the parquet /changes (the relation's first request)
+      // with the typed 400 — read its raw delta actions instead
+      def relation(delta: Boolean) = new GraftChangeRelation(spark,
+        new RemoteChanges(spark, client, share, schema, table, delta), parameters)
+      return try relation(delta = false) catch {
         case e: graft.client.GraftClientException if e.isUnsupportedOperation =>
-          new RemoteDeltaCDFRelation(spark, client, share, schema, table, parameters)
+          relation(delta = true)
       }
     }
     val versionAsOf = parameters.get("versionAsOf").map(_.toLong)

@@ -85,9 +85,9 @@ private[graft] final case class Layout(
 }
 
 private[graft] object Layout {
-  def of(snapshot: Snapshot): Layout =
-    Layout(snapshot.schema, snapshot.metadata.partitionColumns,
-      ColumnMapping.isIdMode(snapshot.metadata))
+  def of(meta: graft.model.Metadata): Layout =
+    Layout(DataType.fromJson(meta.schemaString).asInstanceOf[StructType], meta.partitionColumns,
+      ColumnMapping.isIdMode(meta))
 
   /** From served metadata (`configuration` may be null on the wire). */
   def ofWire(
@@ -136,7 +136,7 @@ private[graft] trait Listing {
 private[graft] final class SnapshotListing(
     spark: SparkSession, tablePath: String, val snapshot: Snapshot) extends Listing {
 
-  val layout: Layout = Layout.of(snapshot)
+  val layout: Layout = Layout.of(snapshot.metadata)
   private val root = new Path(tablePath)
   private lazy val conf = spark.sessionState.newHadoopConf()
   private lazy val qualifiedRoot = root.getFileSystem(conf).makeQualified(root)

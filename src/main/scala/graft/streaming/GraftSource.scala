@@ -5,7 +5,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.log.{GraftLog, Snapshot}
 import graft.model.{AddFile, ColumnMapping, RemoveFile}
-import graft.sources.{ScanCore, SnapshotListing}
+import graft.sources.{ChangeCommit, ChangeState, Layout, LocalChanges, ScanCore, SnapshotListing}
 
 /** Micro-batch streaming source over a LOCAL graft table: the
   * [[SharedTableSource]] contract read straight from the table's log.
@@ -16,7 +16,9 @@ import graft.sources.{ScanCore, SnapshotListing}
   * read-compatible with the start schema and keep the column-mapping mode;
   * files carrying deletion vectors cannot be tailed. Column-mapped tables
   * stream: batches are the scan core's live rows of the admitted files.
-  * CDF batches come from the batch CDF assembler.
+  * CDF batches are the change core's rows of the commits admission read,
+  * over the start layout; tables with deletion vectors stream their
+  * changes, and the change state is carried from one batch to the next.
   */
 class GraftSource(
     spark: SparkSession,
@@ -29,17 +31,18 @@ class GraftSource(
   private val tableLog = new GraftLog(tablePath, spark.sessionState.newHadoopConf())
 
   private val initialSnapshot: Snapshot = tableLog.snapshot(None)
-  // DV filtering is a batch-relation feature; tailing adds of a DV table
-  // would emit deleted rows
+  // tailing adds of a DV table would emit deleted rows; the change core
+  // classifies DV commits
   ColumnMapping.assertNoAdvancedFeatures(
-    initialSnapshot.metadata, s"streaming from $tablePath", allowCm = true)
+    initialSnapshot.metadata, s"streaming from $tablePath", allowCm = true, allowDv = cdfMode)
   private val cmMode = ColumnMapping.mode(initialSnapshot.metadata)
   // batches read the start snapshot's physical layout
   private val listing = new SnapshotListing(spark, tablePath, initialSnapshot)
+  private val changes = new LocalChanges(spark, tableLog)
 
   override protected def tableName: String = tablePath
   override protected val tableId: String = initialSnapshot.metadata.id
-  override protected val tableSchema: StructType = initialSnapshot.schema
+  override protected def layout: Layout = listing.layout
   override protected def versionAtStart: Long = initialSnapshot.version
   override protected def latestVersion(): Long = tableLog.latestVersion()
 
@@ -52,20 +55,9 @@ class GraftSource(
     index.pathOrder.toIndexedSeq.map(index)
   }
 
-  /** Commits in `[start, end]`, read one version at a time as the walk
-    * pulls. Bypasses [[GraftLog.changesIterator]], whose commit timestamps
-    * re-read every commit since the checkpoint into the memo.
-    */
-  private def versions(start: Long, end: Long): Iterator[(Long, Seq[graft.model.Action])] = {
-    val vs = tableLog.listVersions()
-    require(vs.nonEmpty && start >= vs.head,
-      s"startingVersion($start) before log start ${vs.headOption.getOrElse(-1L)}")
-    vs.iterator.dropWhile(_ < start).takeWhile(_ <= end).map(v => v -> tableLog.readVersion(v))
-  }
-
   override protected def commits(
       start: Long, end: Long): Iterator[(Long, Seq[AddFile], Boolean)] =
-    versions(start, end).map { case (v, actions) =>
+    changes.versions(start, end).map { case (v, actions) =>
       // T7 schema-drift guard: every metadata commit consumed mid-stream
       // must stay read-compatible with the analysis-time schema, else
       // rows would silently decode wrong (reference checks each fetched
@@ -90,26 +82,23 @@ class GraftSource(
       (v, adds, actions.exists { case r: RemoveFile => r.dataChange; case _ => false })
     }
 
-  /** cdc-priority: a version's CDC files when it has any, else its adds and removes. */
-  override protected def cdfUnits(start: Long, end: Long): Iterator[(Long, Int, Long)] =
-    versions(start, end).map { case (v, actions) =>
-      val cdc = actions.collect { case c: graft.model.AddCDCFile => c.size }
-      val sizes =
-        if (cdc.nonEmpty) cdc
-        else actions.collect {
-          case a: AddFile if a.dataChange    => a.size
-          case r: RemoveFile if r.dataChange => r.size
-        }
-      (v, sizes.size, sizes.sum)
+  override protected def changeCommits(start: Long, end: Long): Iterator[ChangeCommit] =
+    changes.commits(start, end, cmMode)
+
+  /** The state the last batch left, when this batch follows it. */
+  @volatile private var heldState: Option[ChangeState] = None
+
+  override protected def changeStateBefore(version: Long): ChangeState =
+    heldState.filter(_.next == version).getOrElse {
+      val state = changes.stateBefore(version)
+      heldState = Some(state)
+      state
     }
 
   override protected def sizeOf(file: AddFile): Long = file.size
 
   override protected def batchDF(files: Seq[AddFile]): DataFrame =
     ScanCore.liveRows(spark, listing.fixed(files), streaming = true)
-
-  override protected def cdfDF(fromV: Long, toV: Long): DataFrame =
-    graft.log.GraftCDF.tableChanges(spark, tablePath, fromV, Some(toV))
 
   override protected def releaseBelow(version: Long): Unit =
     tableLog.forgetCommitsBelow(version)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.client.{GraftRestClient, GraftUrlCache}
 import graft.model.SchemaCompat
-import graft.sources.{FixedListing, GraftFileSystem, Layout, ListedFile, RemoteDeltaCDF, ScanCore}
+import graft.sources.{ChangeCommit, ChangeState, FixedListing, GraftFileSystem, Layout, ListedFile, RemoteChanges, ScanCore}
 
 /** Streaming source over a REMOTE shared table: the [[SharedTableSource]]
   * contract over REST — snapshot query + version-range queries, scan bytes
@@ -54,23 +54,23 @@ class RemoteGraftSource(
     * whose reader features refuse the flat dialect answers the protocol's
     * typed 400, and the stream renegotiates in `responseformat=delta`.
     */
-  private val (tableIdAtStart, layout, deltaDialect, metaVersion, deltaMetaLine) =
+  private val (tableIdAtStart, startLayout, deltaDialect, metaVersion) =
     try {
       val (m, v) = client.metadata(share, schemaName, table)
       (m.id, Layout(DataType.fromJson(m.schemaString).asInstanceOf[StructType],
-        m.partitionColumns, idMode = false), false, v,
-        null.asInstanceOf[graft.server.wire.DeltaMetadataLine])
+        m.partitionColumns, idMode = false), false, v)
     } catch {
       case e: graft.client.GraftClientException if e.isUnsupportedOperation =>
         val (dm, v) = client.deltaMetadata(share, schemaName, table)
         val meta = dm.deltaMetadata
         (meta.id, Layout.ofWire(meta.schemaString, meta.partitionColumns, meta.configuration),
-          true, v, dm)
+          true, v)
     }
+  private val changes = new RemoteChanges(spark, client, share, schemaName, table, deltaDialect)
 
   override protected def tableName: String = s"$share.$schemaName.$table"
   override protected def tableId: String = tableIdAtStart
-  override protected def tableSchema: StructType = layout.logical
+  override protected def layout: Layout = startLayout
   override protected def versionAtStart: Long = metaVersion
 
   override protected def latestVersion(): Long = {
@@ -143,7 +143,7 @@ class RemoteGraftSource(
       .map { case (v, (adds, hasRemoves)) => (v, adds, hasRemoves) }
 
   /** Window-lazy version iterator over a per-version memo — the ONE
-    * shape behind the range/cdf/cdf-delta walks: pulling into an
+    * shape behind the range and change walks: pulling into an
     * uncached version fetches one window of at most `maxVersionsPerRpc`
     * versions (`fetchWindow(v, windowEnd)` must populate the memo for
     * every version of the window); memoized versions read straight
@@ -236,103 +236,32 @@ class RemoteGraftSource(
 
   // ----------------------------------------------------------- CDF mode
 
-  /** One version's change files as served by `/changes` (cdc-priority). */
-  private case class CdfCommit(
-      adds: Seq[graft.server.wire.AddFileW],
-      cdfs: Seq[graft.server.wire.CdcFileW],
-      removes: Seq[graft.server.wire.RemoveFileW]) {
-    def nFiles: Int = if (cdfs.nonEmpty) cdfs.size else adds.size + removes.size
-    def bytes: Long =
-      if (cdfs.nonEmpty) cdfs.map(_.size).sum else adds.map(_.size).sum + removes.map(_.size).sum
-  }
-
   /** Per-version memo of fetched `/changes` windows (same immutability
     * argument as [[fetchedCommits]]): admission counting AND batch
     * assembly share one RPC per version window.
     */
-  private val fetchedCdf = scala.collection.concurrent.TrieMap.empty[Long, CdfCommit]
+  private val fetchedChanges = scala.collection.concurrent.TrieMap.empty[Long, ChangeCommit]
 
-  /** Delta-dialect sibling of [[fetchedCdf]]: per-version raw delta
-    * action groups for DV/column-mapped tables (change derivation happens
-    * in [[graft.sources.RemoteDeltaCDF.assemble]] at batch time).
-    */
-  private val fetchedCdfDelta = scala.collection.concurrent.TrieMap
-    .empty[Long, RemoteDeltaCDF.Group]
+  override protected def changeCommits(start: Long, end: Long): Iterator[ChangeCommit] =
+    windowedVersions(start, end, fetchedChanges)(fetchChangesWindow).map(_._2)
 
-  override protected def cdfUnits(start: Long, end: Long): Iterator[(Long, Int, Long)] =
-    if (deltaDialect)
-      windowedVersions(start, end, fetchedCdfDelta)(fetchCdfDeltaWindow)
-        .map { case (v, g) => (v, g.nFiles, g.bytes) }
-    else
-      windowedVersions(start, end, fetchedCdf)(fetchCdfWindow)
-        .map { case (v, c) => (v, c.nFiles, c.bytes) }
-
-  private def cdfRangeParams(v: Long, e: Long) =
-    Map("startingVersion" -> v.toString, "endingVersion" -> e.toString)
-
-  private def fetchCdfDeltaWindow(v: Long, e: Long): Unit = {
-    val res = client.deltaChanges(share, schemaName, table, cdfRangeParams(v, e))
-    res.metas.foreach(m => assertReadCompatible(m.deltaMetadata.schemaString, m.version))
-    val groups = RemoteDeltaCDF.groupsOf(res.files)
-    registerUrls(s"cdfdelta@$v-$e", RemoteDeltaCDF.urlEntries(groups),
-      () => RemoteDeltaCDF.urlEntries(RemoteDeltaCDF.groupsOf(
-        client.deltaChanges(share, schemaName, table, cdfRangeParams(v, e)).files)),
-      lastVersion = e)
-    val byV = groups.map(g => g.version -> g).toMap
+  private def fetchChangesWindow(v: Long, e: Long): Unit = {
+    val res = changes.fetch(v, Some(e))
+    res.schemas.foreach { case (schema, version) => assertReadCompatible(schema, version) }
+    registerUrls(s"cdf@$v-$e", res.urls, () => changes.fetch(v, Some(e)).urls, lastVersion = e)
+    val byV = res.commits.map(c => c.version -> c).toMap
     (v to e).foreach { vv =>
-      fetchedCdfDelta.putIfAbsent(vv,
-        byV.getOrElse(vv, RemoteDeltaCDF.Group(vv, 0L, Nil, Nil, Nil)))
+      fetchedChanges.putIfAbsent(vv, byV.getOrElse(vv, ChangeCommit(vv, 0L, Nil, Nil, Nil)))
     }
   }
 
-  private def fetchCdfWindow(v: Long, e: Long): Unit = {
-    val res = client.changes(share, schemaName, table, cdfRangeParams(v, e))
-    res.metas.foreach(m => assertReadCompatible(m.schemaString, m.version))
-    def urlsOf(r: client.ChangesResult) =
-      (r.adds.map(a => GraftUrlCache.entry(a.id, a.url, a.expirationTimestamp)) ++
-        r.cdfs.map(c => GraftUrlCache.entry(c.id, c.url, c.expirationTimestamp)) ++
-        r.removes.map(x => GraftUrlCache.entry(x.id, x.url, x.expirationTimestamp))).toMap
-    registerUrls(s"cdf@$v-$e", urlsOf(res),
-      () => urlsOf(client.changes(share, schemaName, table, cdfRangeParams(v, e))),
-      lastVersion = e)
-    val addsBy = res.adds.groupBy(_.version)
-    val cdfsBy = res.cdfs.groupBy(_.version)
-    val removesBy = res.removes.groupBy(_.version)
-    (v to e).foreach { vv =>
-      fetchedCdf.putIfAbsent(vv, CdfCommit(
-        addsBy.getOrElse(vv, Nil).sortBy(_.id),
-        cdfsBy.getOrElse(vv, Nil).sortBy(_.id),
-        removesBy.getOrElse(vv, Nil).sortBy(_.id)))
-    }
-  }
-
-  /** Row changes of `[fromV, toV]`, assembled from the per-version memo
-    * (zero extra RPCs). In the delta dialect they are derived client-side
-    * from the raw served actions ([[graft.sources.RemoteDeltaCDF]]); the
-    * pre-batch DV state comes from one snapshot query below the batch
-    * start, so assembly is deterministic however versions were split
-    * across micro-batches (restart-safe).
+  /** Asked afresh per batch (in the delta dialect one `/query` below the
+    * batch start), so assembly is deterministic however versions were
+    * split across micro-batches (restart-safe).
     */
-  override protected def cdfDF(fromV: Long, toV: Long): DataFrame = {
-    GraftFileSystem.register(spark)
-    if (deltaDialect) {
-      val dvState = scala.collection.mutable.HashMap
-        .empty[String, Option[graft.server.wire.DeltaDvW]]
-      if (fromV > 0)
-        client.deltaQuery(share, schemaName, table,
-          graft.server.wire.QueryRequest(version = fromV - 1)).files.foreach { f =>
-          dvState(f.id) = Option(f.deltaSingleAction.add.deletionVector)
-        }
-      val groups = windowedVersions(fromV, toV, fetchedCdfDelta)(fetchCdfDeltaWindow)
-        .map(_._2).toVector // bounded by the batch
-      RemoteDeltaCDF.assemble(spark, deltaMetaLine, groups, dvState)
-    } else {
-      val commits = windowedVersions(fromV, toV, fetchedCdf)(fetchCdfWindow)
-        .map(_._2).toVector // bounded by the batch
-      graft.sources.RemoteGraftCDF.assemble(spark, tableSchema,
-        graft.sources.RemoteGraftCDF.groupsOf(
-          commits.flatMap(_.adds), commits.flatMap(_.cdfs), commits.flatMap(_.removes)))
-    }
+  override protected def changeStateBefore(version: Long): ChangeState = {
+    GraftFileSystem.register(spark) // the batch reads graft:// paths
+    changes.stateBefore(version)
   }
 
   // ------------------------------------------------------------ batches
@@ -354,13 +283,12 @@ class RemoteGraftSource(
     */
   override protected def releaseBelow(version: Long): Unit = {
     fetchedCommits.filterInPlace((k, _) => k >= version)
-    fetchedCdf.filterInPlace((k, _) => k >= version)
-    fetchedCdfDelta.filterInPlace((k, _) => k >= version)
+    fetchedChanges.filterInPlace((k, _) => k >= version)
     registeredWindows.filterInPlace { (key, last) =>
       if (last < version) { GraftUrlCache.unregister(key); false } else true
     }
   }
 
   override private[graft] def heldCommitVersions: Iterable[Long] =
-    fetchedCommits.keys ++ fetchedCdf.keys ++ fetchedCdfDelta.keys
+    fetchedCommits.keys ++ fetchedChanges.keys
 }

@@ -8,6 +8,8 @@ import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsAdmissi
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.types.StructType
 
+import graft.sources.{ChangeCommit, ChangeCore, ChangeState, Layout}
+
 /** The one streaming contract behind [[GraftSource]] (local log) and
   * [[RemoteGraftSource]] (REST): the reference's `DeltaSharingSource`
   * (`client/.../DeltaSharingSource.scala:93-1207`), written once over a
@@ -50,7 +52,9 @@ abstract class SharedTableSource[F](spark: SparkSession, options: Map[String, St
   /** The table as error messages and `toString` name it. */
   protected def tableName: String
   protected def tableId: String
-  protected def tableSchema: StructType
+  /** How the table's files spell its columns, as of the source's start. */
+  protected def layout: Layout
+  protected def tableSchema: StructType = layout.logical
   /** The table's version when the source was created. */
   protected def versionAtStart: Long
   protected def latestVersion(): Long
@@ -64,13 +68,13 @@ abstract class SharedTableSource[F](spark: SparkSession, options: Map[String, St
     * transport's mid-stream metadata and protocol guards run here.
     */
   protected def commits(start: Long, end: Long): Iterator[(Long, Seq[F], Boolean)]
-  /** Per version in `[start, end]`, lazily: (version, change files, bytes). */
-  protected def cdfUnits(start: Long, end: Long): Iterator[(Long, Int, Long)]
+  /** Per version in `[start, end]`, lazily: its change commit. */
+  protected def changeCommits(start: Long, end: Long): Iterator[ChangeCommit]
+  /** The change core's state below `version`. */
+  protected def changeStateBefore(version: Long): ChangeState
   protected def sizeOf(file: F): Long
   /** The streaming micro-batch over `files`. */
   protected def batchDF(files: Seq[F]): DataFrame
-  /** Row-level changes of versions `[fromV, toV]` (a batch DataFrame). */
-  protected def cdfDF(fromV: Long, toV: Long): DataFrame
   /** Drop per-version state below `version`: it can never be read again. */
   protected def releaseBelow(version: Long): Unit
   /** Test hook: versions whose commit actions the transport holds. */
@@ -91,7 +95,7 @@ abstract class SharedTableSource[F](spark: SparkSession, options: Map[String, St
       case (None, Some(ts)) => Some(versionAtOrAfter(ts))
       case _ => None
     }
-  private val cdfMode: Boolean = options.get("readChangeFeed").exists(_.toBoolean)
+  protected val cdfMode: Boolean = options.get("readChangeFeed").exists(_.toBoolean)
   private val maxFilesPerTrigger: Int =
     options.get("maxFilesPerTrigger").map(_.toInt).getOrElse(GraftSource.DEFAULT_MAX_FILES)
   private val maxBytesPerTrigger: Option[Long] = options.get("maxBytesPerTrigger").map(_.toLong)
@@ -215,7 +219,9 @@ abstract class SharedTableSource[F](spark: SparkSession, options: Map[String, St
     val last =
       if (cdfMode) {
         val startV = from.map(_.tableVersion).getOrElse(cdfStartVersion)
-        val units = if (startV > endVersion) Iterator.empty else cdfUnits(startV, endVersion)
+        val units =
+          if (startV > endVersion) Iterator.empty
+          else changeCommits(startV, endVersion).map(c => (c.version, c.nFiles, c.bytes))
         Admission.admitVersions(units, limit).lastOption.map(v =>
           GraftSourceOffset(tableId, v + 1, VERSION_CONSUMED, isStartingVersion = false))
       } else {
@@ -240,15 +246,15 @@ abstract class SharedTableSource[F](spark: SparkSession, options: Map[String, St
       .flatMap(_.file).toVector) // bounded by the batch
   }
 
-  /** CDF micro-batch: the transport's row changes handed to the stream
-    * execution as a streaming-flagged RDD (every getBatch result must
-    * satisfy the engine's isStreaming assertion).
+  /** CDF micro-batch: the change core's rows of the transport's commits
+    * handed to the stream execution as a streaming-flagged RDD (every
+    * getBatch result must satisfy the engine's isStreaming assertion).
     */
   private def cdfBatch(fromV: Long, toV: Long): DataFrame = {
     val rows =
       if (fromV > toV) spark.sparkContext.emptyRDD[InternalRow]
-      else cdfDF(fromV, toV).selectExpr(schema.fieldNames.map(n => s"`$n`").toIndexedSeq: _*)
-        .queryExecution.toRdd
+      else ChangeCore.rows(spark, layout, changeCommits(fromV, toV).toVector, // bounded by the batch
+        changeStateBefore(fromV)).queryExecution.toRdd
     GraftSqlBridge.streamingDataFrameFromRdd(spark, rows, schema)
   }
 

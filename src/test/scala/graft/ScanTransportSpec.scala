@@ -7,10 +7,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.log.{GraftCatalog, TableBuilder}
+import graft.log.{GraftCatalog, GraftCDF, TableBuilder}
 import graft.server.{GraftServer, ServerConfig}
 import graft.sources.{GraftFileIndex, GraftScanRelation}
 
@@ -19,7 +20,9 @@ import graft.sources.{GraftFileIndex, GraftScanRelation}
   * local `path`, over `url` (the parquet dialect, or the delta dialect the
   * server negotiates for DV and column-mapped tables) and by SQL name in
   * the local catalog. Each read must return the same rows, prune the same
-  * partitions, and honor a limit on live rows.
+  * partitions, and honor a limit on live rows. The change feed of each
+  * shape, read in batch and as a stream by `path` and over `url`, must
+  * equal the local change feed.
   */
 class ScanTransportSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -53,9 +56,10 @@ class ScanTransportSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.stop()
   }
 
-  /** One table shape. Rows: ids 1..40 in four single-task batches of ten;
-    * with `dv`, every id not divisible by 5 is deleted by deletion
-    * vector, so each unpartitioned file keeps 2 live rows of 10.
+  /** One table shape, Change Data Feed on. Rows: ids 1..40 in four
+    * single-task batches of ten (versions 0-3); with `dv`, every id not
+    * divisible by 5 is deleted by deletion vector (version 4), so each
+    * unpartitioned file keeps 2 live rows of 10.
     */
   private case class Shape(
       name: String, partitioned: Boolean = false, mapped: Boolean = false, dv: Boolean = false) {
@@ -77,8 +81,10 @@ class ScanTransportSpec extends AnyFunSuite with BeforeAndAfterAll {
       (k * 10 + 1 to k * 10 + 10).map(i => (i.toLong, s"g${i % 4}", i * 1.5))
         .toDF("id", "grp", "v").repartition(1)
     val partitionCols = if (s.partitioned) Seq("grp") else Nil
-    if (s.mapped) TableBuilder.createColumnMapped(spark, batch(0), dir, partitionCols)
-    else TableBuilder.create(spark, batch(0), dir, partitionCols)
+    val cdf = Map("enableChangeDataFeed" -> "true")
+    if (s.mapped)
+      TableBuilder.createColumnMapped(spark, batch(0), dir, partitionCols, configuration = cdf)
+    else TableBuilder.create(spark, batch(0), dir, partitionCols, configuration = cdf)
     (1 to 3).foreach(k => TableBuilder.append(spark, batch(k), dir))
     if (s.dv) TableBuilder.deleteWhereDV(spark, dir, col("id") % 5 =!= 0)
     GraftCatalog.register(s.fqn, dir)
@@ -112,6 +118,39 @@ class ScanTransportSpec extends AnyFunSuite with BeforeAndAfterAll {
       case LogicalRelation(rel: GraftScanRelation, _, _, _, _) => rel.limitHint
     }.flatten
 
+  /** Where a shape is read from: its table root, or the server. */
+  private def located(s: Shape, where: String): Map[String, String] = where match {
+    case "path" => Map("path" -> GraftCatalog.location(s.fqn))
+    case "url" => Map("url" -> server.url, "token" -> "tkn", "table" -> s.fqn,
+      "queryTableVersionIntervalSeconds" -> "0")
+  }
+
+  /** The change feed of a shape from a start version: (transport, reader). */
+  private val changeTransports: Seq[(String, (Shape, Long) => DataFrame)] =
+    for (where <- Seq("path", "url"); streaming <- Seq(false, true)) yield {
+      val options = (s: Shape, start: Long) =>
+        located(s, where) ++ Map("readChangeFeed" -> "true", "startingVersion" -> start.toString)
+      val read: (Shape, Long) => DataFrame =
+        if (!streaming) (s, start) => spark.read.format("graft").options(options(s, start)).load()
+        else (s, start) => {
+          val name = s"changes_${s.name}_${where}_$start"
+          val checkpoint = java.nio.file.Files.createTempDirectory("graft_changes").toString
+          val q = spark.readStream.format("graft").options(options(s, start))
+            .option("maxFilesPerTrigger", "1").load()
+            .writeStream.format("memory").queryName(name)
+            .option("checkpointLocation", checkpoint)
+            .trigger(Trigger.AvailableNow()).start()
+          try assert(q.awaitTermination(120000), s"stream $name timed out")
+          finally q.stop()
+          spark.table(name)
+        }
+      s"${if (streaming) "stream" else "batch"} $where" -> read
+    }
+
+  private def changeRows(df: DataFrame): Seq[Row] =
+    df.select("id", "grp", GraftCDF.CHANGE_TYPE, GraftCDF.COMMIT_VERSION).collect().toSeq
+      .sortBy(r => (r.getLong(3), r.getLong(0), r.getString(2)))
+
   for (shape <- shapes) {
     test(s"${shape.name}: every transport reads the same live rows") {
       create(shape)
@@ -128,6 +167,20 @@ class ScanTransportSpec extends AnyFunSuite with BeforeAndAfterAll {
         // one partition of four holds ids 1, 5, 9, ... 37: ten rows
         read.foreach { case (t, n) => assert(n === 10L, s"transport $t read $n rows") }
       }
+
+    test(s"${shape.name}: every transport reads the same change feed") {
+      if (!registered.contains(shape.fqn)) create(shape)
+      for (start <- Seq(0L, 2L)) {
+        val expected = changeRows(GraftCDF.tableChanges(spark, GraftCatalog.location(shape.fqn), start))
+        // inserts of every appended version, and the deletion-vector deletes
+        val inserted = (start * 10 + 1 to 40L).map(i => (i, "insert"))
+        val deleted = (1L to 40L).filter(i => shape.dv && i % 5 != 0).map(i => (i, "delete"))
+        assert(expected.map(r => (r.getLong(0), r.getString(2))).sorted === (inserted ++ deleted).sorted)
+        assert(expected.forall(r => r.getString(1) == s"g${r.getLong(0) % 4}"))
+        for ((transport, read) <- changeTransports)
+          assert(changeRows(read(shape, start)) === expected, s"$transport from version $start")
+      }
+    }
 
     if (shape.dv)
       test(s"${shape.name}: limit counts live rows, not physical ones") {
